@@ -1737,6 +1737,52 @@ def _frame_from_cum(op: str, v: Column, cum) -> Column:
     return F.when(n > 1, (sxy - sx * sy / n) / (n - 1))
 
 
+def _dlit(x) -> str:
+    """SQL double literal for parsed F.expr strings: CAST('repr' AS
+    DOUBLE) round-trips bit-exact, a bare decimal literal may not."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _pctl_bucket_count(total_rows: int, approx: bool,
+                       requested: int = 0) -> int:
+    """Value-bucket count V of the global running-percentile paths,
+    capped at 64. Exact: floored by DATA MASS only, >= ~10k elements
+    per bucket (round-13, r12 verdict next #2 — the former
+    shuffle.partitions term collapsed V to 8 on an 8-core session and
+    the selection kernel's per-bucket O((n/V + q/S) log^2(n/V)) work
+    blew up super-linearly: window_median_percentile 91.4 s @8 cores
+    vs 2.2 s @32, BENCH_r12_c8; exact results are V-independent).
+    Approximate: the answer interpolates within one bucket, so rank
+    error is bounded by the largest bucket's mass (~n/V x sketch
+    skew) — ~1k rows per bucket by default, or `requested`
+    (spark.maggma.windowPctl.approxBuckets). The 64 cap is hard: the
+    V-term cumulative projection crossed janino's 64 KB method limit
+    past ~64 and ran interpreted (12 s -> 43 s at 4M rows going
+    64 -> 128, round-9)."""
+    if not approx:
+        return max(2, min(64, total_rows // 10_000 + 2))
+    return max(2, min(64, requested or total_rows // 1024 + 2))
+
+
+def _equi_depth_splits(sketch: list, V: int) -> list:
+    """<= V-1 ascending, de-duplicated bucket splits thinned from a
+    sorted value sketch (equi-depth up to the sketch's own error)."""
+    if not sketch:
+        return []
+    return sorted({sketch[(len(sketch) * i) // V] for i in range(1, V)})
+
+
+def _cum_bucket_offsets(counts, dir_: str):
+    """Per-range incoming offsets of the running-percentile kernels
+    from a (ranges x buckets) count matrix in range order: cumulative
+    along the bucket axis, then exclusive-cumulative along the range
+    axis — 'fwd' accumulates EARLIER ranges, 'bwd' LATER ones."""
+    sc = counts.cumsum(axis=1)
+    if dir_ == "fwd":
+        return sc.cumsum(axis=0) - sc
+    return sc[::-1].cumsum(axis=0)[::-1] - sc
+
+
 # group-chunk size for the percentile kernels' cumulative traversal:
 # bounds every per-chunk matrix to CHUNK x V (64k x 64 x 8 B = 32 MB)
 # regardless of how many rows one scaffold range holds — see
@@ -1753,18 +1799,18 @@ def _pctl_group_traversal(g, ax, mode: str, dir_: str, axn=None):
 
     Null sort keys form their OWN peer group via an explicit null
     flag as the primary sort key — nulls first on the ascending
-    range axis, nulls last on the mirrored one, exactly the SQL
-    assemblies' 'asc nulls first' / 'desc nulls last' (round-11; the
-    former -inf/+inf SENTINELS merged a genuine IEEE infinity axis
-    value into the null peer group, silently diverging from the SQL
-    window form on data containing infinite sort keys — r10 ADVICE).
+    range axis, nulls last on the mirrored one, exactly SQL's
+    'asc nulls first' / 'desc nulls last' (round-11; the former
+    -inf/+inf SENTINELS merged a genuine IEEE infinity axis value into
+    the null peer group, silently diverging from SQL window semantics
+    on data containing infinite sort keys — r10 ADVICE).
     `axn` is the Spark-side is-null mask for the axis (round-12, r11
     ADVICE): the Arrow transfer erases nullity (double + null ->
     float64 NaN), so without it a genuine IEEE NaN sort key is
     indistinguishable from SQL NULL — but Spark's ordering puts NaN
     in its own peer group AFTER +inf (asc) / FIRST on the mirrored
     axis, not with the nulls. With the mask, NaN keys get their own
-    flag level matching the SQL forms; axn=None keeps the legacy
+    flag level matching Spark's ordering; axn=None keeps the legacy
     NaN==null reading for callers that cannot supply a mask.
     rows-mode frames traverse the unique global row number, so every
     tie group degenerates to one row.
@@ -1814,24 +1860,118 @@ def _pctl_group_traversal(g, ax, mode: str, dir_: str, axn=None):
     return order, gid, starts
 
 
-def _approx_bucket_prep(df: DataFrame, specs: list, srcs: list,
-                        vmode: list, vdir: list, vsketch: list,
-                        V: int):
-    """Shared head of the two approximate global running-percentile
-    assemblies (wide / kernel): thin each input's piggybacked value
-    sketch to <=V-1 bucket splits (outer edges from the boundary
-    aggregate's min/max), stamp a per-input integer bucket index on
-    the frame, and derive the per-range cumulative bucket offsets
-    (distributed groupBy histogram -> O(ranges x V) single-partition
-    numpy fold -> broadcast-able one-row-per-range frame). Everything
-    lazy — no driver action."""
+def _bucket_index(col_sql: str, splits: list) -> Column:
+    """Integer value-bucket index of a double SQL expression against
+    ascending `splits` (number of splits it exceeds; null stays null)
+    — one parsed comparison ladder, literals bit-exact via _dlit."""
+    ladder = " + ".join(
+        f"cast({col_sql} > {_dlit(x)} as int)" for x in splits) or "0"
+    return F.expr(f"case when {col_sql} is not null then {ladder} end")
+
+
+def _check_bucket_mass(totals) -> None:
+    """Task-OOM guard of the EXACT running-percentile path (house
+    style: raise, never truncate): one selection-kernel group holds
+    one value-bucket's elements; past ~64 x the cap a GLOBAL running
+    percentile needs a hierarchical second bucketing level this
+    operator does not implement."""
+    biggest = int(totals.max(initial=0))
+    if biggest > MAX_PCTL_BUCKET_ELEMENTS:
+        raise ValueError(
+            f"unpartitioned running $median/$percentile: a "
+            f"value bucket holds {biggest} elements (> "
+            f"MAX_PCTL_BUCKET_ELEMENTS="
+            f"{MAX_PCTL_BUCKET_ELEMENTS}); the selection "
+            "kernel materializes one bucket per task. Add "
+            "partitionBy, or pre-aggregate the value domain.")
+
+
+def _offsets_schema(nv: int) -> str:
+    return "__gw_pid int, " + ", ".join(
+        f"__pq_off{vi} array<bigint>" for vi in range(nv))
+
+
+def _local_offsets(spark, hists: list, nb: list, vdir: list,
+                   guard: bool) -> DataFrame:
+    """Per-range cumulative bucket offsets from histograms that rode
+    the caller's boundary aggregate (round-12; `hists[vi]` = [(pid,
+    counts), ...]): folded driver-side and shipped as a zero-job
+    LocalRelation — no hist groupBy + coalesce(1) mapInPandas fold on
+    the critical path. `guard` applies _check_bucket_mass."""
+    import numpy as np
+
+    pids = [int(p) for p, _ in hists[0]]
+    offs = []
+    for vi, hc in enumerate(hists):
+        c = np.asarray([cnts for _, cnts in hc],
+                       dtype=np.int64).reshape(len(pids), nb[vi])
+        if guard:
+            _check_bucket_mass(c.sum(axis=0))
+        offs.append(_cum_bucket_offsets(c, vdir[vi]))
+    return spark.createDataFrame(
+        [tuple([pids[i]] + [[int(x) for x in off[i]] for off in offs])
+         for i in range(len(pids))],
+        _offsets_schema(len(hists)))
+
+
+def _folded_offsets(bucketed: DataFrame, nb: list, vdir: list,
+                    guard: bool) -> DataFrame:
+    """Per-range cumulative bucket offsets computed DISTRIBUTED from
+    the `__pq_b{vi}` bucket-index columns (round-9: was a collect +
+    driver fold, one extra driver action per pass): groupBy histogram
+    -> one single-partition numpy fold. The offset frame is
+    O(ranges) rows, so it is scale-safe by construction. `guard`
+    applies _check_bucket_mass inside the fold."""
     import pandas as pd
 
+    # one parsed F.expr per bucket count, not ~7 Column-API py4j
+    # roundtrips each: at nv x V = 128 columns the Column form cost
+    # ~0.5 s of pure driver chatter per compile (round-12)
+    hist = bucketed.groupBy("__gw_pid").agg(*[
+        F.expr(f"sum(case when __pq_b{vi} = {b} then 1L else 0L end) "
+               f"as `__pq_c_{vi}_{b}`")
+        for vi in range(len(nb)) for b in range(nb[vi])])
+    nb_l, vdir_l = list(nb), list(vdir)
+
+    def fold_offsets(batches):
+        # numpy double-cumsum over the O(ranges x buckets) histogram.
+        # NOT SQL expressions: the nb overlapping prefix-sum ADD chains
+        # sent Catalyst's subexpression-elimination codegen into
+        # gigabyte string recursion at nb >= ~33 (measured JVM OOM
+        # building the generated source, round-9).
+        import numpy as np
+
+        pdfs = [p for p in batches if len(p)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True) \
+            .sort_values("__gw_pid").reset_index(drop=True)
+        out = {"__gw_pid": pdf["__gw_pid"].to_numpy()}
+        for vi in range(len(nb_l)):
+            c = np.stack([pdf[f"__pq_c_{vi}_{b}"].to_numpy()
+                          for b in range(nb_l[vi])], axis=1)
+            if guard:
+                _check_bucket_mass(c.sum(axis=0))
+            out[f"__pq_off{vi}"] = list(
+                _cum_bucket_offsets(c, vdir_l[vi]))
+        yield pd.DataFrame(out)
+
+    # coalesce, not repartition (round-12): the histogram's own
+    # exchange already exists; coalesce(1) folds the final agg +
+    # mapInPandas into ONE post-shuffle task instead of paying a
+    # second full exchange round just to get a single partition
+    return hist.coalesce(1).mapInPandas(fold_offsets,
+                                        _offsets_schema(len(nb)))
+
+
+def _approx_bucket_prep(df: DataFrame, specs: list, srcs: list,
+                        vdir: list, vsketch: list, V: int):
+    """Head of the approximate global running-percentile kernel: thin
+    each input's value sketch to <=V-1 bucket splits (outer edges from
+    the value min/max), stamp a per-input integer bucket index on the
+    frame, and derive the per-range cumulative bucket offsets.
+    Everything lazy — no driver action."""
     nv = len(srcs)
-
-    def dlit(x):
-        return f"CAST('{float(x)!r}' AS DOUBLE)"
-
     sp0_by_vi = {vi: next(sp for sp in specs if sp["vi"] == vi)
                  for vi in range(nv)}
     # round-12: all-or-nothing probe precomputation (see _swf_global)
@@ -1846,9 +1986,7 @@ def _approx_bucket_prep(df: DataFrame, specs: list, srcs: list,
         if sp0.get("vbs") is not None:
             vbs = list(sp0["vbs"])
         else:
-            sk = vsketch[vi]
-            vbs = sorted({sk[(len(sk) * i) // V]
-                          for i in range(1, V)}) if sk else []
+            vbs = _equi_depth_splits(vsketch[vi], V)
         nb.append(len(vbs) + 1)
         lo = sp0.get("lo")
         hi = sp0.get("hi")
@@ -1861,79 +1999,16 @@ def _approx_bucket_prep(df: DataFrame, specs: list, srcs: list,
             out_df = out_df.withColumn(f"__pq_b{vi}",
                                        F.col(sp0["bcol"]))
             continue
-        ladder = " + ".join(
-            f"cast(`{srcs[vi]}` > {dlit(x)} as int)" for x in vbs) \
-            or "0"
-        out_df = out_df.withColumn(
-            f"__pq_b{vi}",
-            F.expr(f"case when `{srcs[vi]}` is not null "
-                   f"then {ladder} end"))
+        out_df = out_df.withColumn(f"__pq_b{vi}",
+                                   _bucket_index(f"`{srcs[vi]}`", vbs))
 
     if pre_offsets:
-        # per-range bucket counts rode the caller's boundary
-        # aggregate — fold to cumulative offsets driver-side and ship
-        # them as a zero-job LocalRelation (drops the hist groupBy +
-        # coalesce(1) mapInPandas fold from the critical path)
-        import numpy as np
-
-        spark = df.sparkSession
-        pids = [int(p) for p, _ in sp0_by_vi[0]["histcounts"]]
-        off_by_vi = []
-        for vi in range(nv):
-            c = np.asarray(
-                [cnts for _, cnts in sp0_by_vi[vi]["histcounts"]],
-                dtype=np.int64).reshape(len(pids), nb[vi])
-            sc = c.cumsum(axis=1)
-            if vdir[vi] == "fwd":
-                off = sc.cumsum(axis=0) - sc
-            else:
-                off = sc[::-1].cumsum(axis=0)[::-1] - sc
-            off_by_vi.append(off)
-        odf = spark.createDataFrame(
-            [tuple([pids[i]] + [[int(x) for x in off_by_vi[vi][i]]
-                                for vi in range(nv)])
-             for i in range(len(pids))],
-            "__gw_pid int, " + ", ".join(
-                f"__pq_off{vi} array<bigint>" for vi in range(nv)))
-        return out_df, nb, edges_by_vi, odf
-
-    # one parsed F.expr per bucket count, not ~7 Column-API py4j
-    # roundtrips each: at nv x V = 128 columns the Column form cost
-    # ~0.5 s of pure driver chatter per compile (round-12)
-    hist = out_df.groupBy("__gw_pid").agg(*[
-        F.expr(f"sum(case when __pq_b{vi} = {b} then 1L else 0L end) "
-               f"as `__pq_c_{vi}_{b}`")
-        for vi in range(nv) for b in range(nb[vi])])
-    nb_l, vdir_l = list(nb), list(vdir)
-
-    def fold_offsets(batches):
-        import numpy as np
-
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) \
-            .sort_values("__gw_pid").reset_index(drop=True)
-        out = {"__gw_pid": pdf["__gw_pid"].to_numpy()}
-        for vi in range(len(nb_l)):
-            c = np.stack([pdf[f"__pq_c_{vi}_{b}"].to_numpy()
-                          for b in range(nb_l[vi])], axis=1)
-            sc = c.cumsum(axis=1)
-            if vdir_l[vi] == "fwd":
-                off = sc.cumsum(axis=0) - sc
-            else:
-                off = sc[::-1].cumsum(axis=0)[::-1] - sc
-            out[f"__pq_off{vi}"] = list(off)
-        yield pd.DataFrame(out)
-
-    # coalesce, not repartition (round-12): the histogram's own
-    # exchange already exists; coalesce(1) folds the final agg +
-    # mapInPandas into ONE post-shuffle task instead of paying a
-    # second full exchange round just to get a single partition
-    odf = hist.coalesce(1).mapInPandas(
-        fold_offsets,
-        "__gw_pid int, " + ", ".join(
-            f"__pq_off{vi} array<bigint>" for vi in range(nv)))
+        odf = _local_offsets(
+            df.sparkSession,
+            [sp0_by_vi[vi]["histcounts"] for vi in range(nv)],
+            nb, vdir, guard=False)
+    else:
+        odf = _folded_offsets(out_df, nb, vdir, guard=False)
     return out_df, nb, edges_by_vi, odf
 
 
@@ -1941,23 +2016,23 @@ def _global_running_pctl_approx_kernel(
         df: DataFrame, total_rows: int, specs: list, srcs: list,
         vmode: list, vdir: list, vsketch: list, V: int) -> DataFrame:
     """Approximate global running $median/$percentile via ONE
-    vectorized numpy kernel per scaffold range (round-10 — the
-    default assembly, conf spark.maggma.windowPctl.approxAssembly).
+    vectorized numpy kernel per scaffold range (round-10), the single
+    physical form of spark.maggma.windowPctl.method=approximate.
 
-    The wide-frame SQL form's cost center was V cumulative window
-    sums + a V-term interpolation ladder per target: at V=64 the
-    stage blows past whole-stage codegen's field budget and janino's
-    method limit, so WindowExec + the ladder projection evaluate
-    interpreted — measured 140-165 s at 10M rows vs ~36 s for this
-    kernel on the same machine (SCALE.md round-10). Here the slim
+    The wide-frame SQL form it replaced spent its time in V cumulative
+    window sums + a V-term interpolation ladder per target: at V=64
+    the stage blows past whole-stage codegen's field budget and
+    janino's method limit and evaluates interpreted — 140-165 s at
+    10M rows vs ~36 s for this kernel (SCALE.md round-10), and it lost
+    at every probed size after round-11 (5k: 3.1 vs 2.6 s, 100k: 10.7
+    vs 5.3, 2M: 13.6 vs 8.2), so it was deleted. Here the slim
     (pid, g, [ax], bucket-index) projection cogroups with the
-    broadcast per-range offsets; one applyInPandas kernel per range
-    computes the per-row cumulative bucket vector as a numpy onehot
-    cumsum (SIMD, not per-row-per-bucket aggregate updates), locates
-    the target rank's bucket vectorized, and interpolates within the
-    bucket's value edges — identical arithmetic and rank-error bound
-    (largest bucket's mass + sketch error) to the wide form, pinned
-    by the same oracle row and property test.
+    per-range offsets; one applyInPandas kernel per range computes the
+    per-row cumulative bucket vector as a numpy onehot cumsum (SIMD,
+    not per-row-per-bucket aggregate updates), locates the target
+    rank's bucket vectorized, and interpolates within the bucket's
+    value edges — rank error bounded by the largest bucket's mass +
+    sketch error.
 
     A FUSED form (one applyInPandas over the FULL frame grouped by
     range id, offsets riding the __gw_rn == 1 rows, no cogroup and no
@@ -1965,7 +2040,7 @@ def _global_running_pctl_approx_kernel(
     Arrow round-trip of the whole frame through the Python worker
     costs more than the JVM-side join-back shuffle it saves — 50 s vs
     28 s at 10M, 36.8 s vs 20.9 s on the tied-range shape, a wash
-    below 200k (scripts/scale_probe_r11.py). The slim-projection
+    below 200k (SCALE.md round-11). The slim-projection
     cogroup + join-back stays.
 
     Forward/reverse and documents/range frames unify in the kernel:
@@ -1982,7 +2057,7 @@ def _global_running_pctl_approx_kernel(
 
     nv = len(srcs)
     out_df, nb, edges_by_vi, odf = _approx_bucket_prep(
-        df, specs, srcs, vmode, vdir, vsketch, V)
+        df, specs, srcs, vdir, vsketch, V)
     out_df = out_df.withColumn(
         "__pq_g",
         (F.col("__gw_rn") + F.col("__gw_off_rows")).cast("long"))
@@ -2010,29 +2085,31 @@ def _global_running_pctl_approx_kernel(
     # the kernel it would resolve against the WORKER's unpatched module
     CH = _PCTL_KERNEL_CHUNK_GROUPS
 
-    def _answers(pdf, off_for_vi):
-        """Shared per-range arithmetic of both kernel forms: the
-        chunked group-space traversal -> one Float64 answer column
-        per (spec, p). `off_for_vi(vi, nbv)` supplies the incoming
-        bucket-cumulative offset vector."""
+    def kernel(left, right):
+        # one scaffold range: the chunked group-space traversal -> one
+        # Float64 answer column per (spec, p); `right` holds the
+        # range's incoming bucket-cumulative offsets (none for an
+        # empty offsets group)
         import numpy as np
 
-        n_rows = len(pdf)
-        g = pdf["__pq_g"].to_numpy(dtype="int64")
-        ax = (pd.to_numeric(pdf["__gw_ax"], errors="coerce")
+        n_rows = len(left)
+        g = left["__pq_g"].to_numpy(dtype="int64")
+        ax = (pd.to_numeric(left["__gw_ax"], errors="coerce")
               .to_numpy(dtype="float64") if any_range else None)
-        axn = (pdf["__gw_axn"].to_numpy(dtype=bool)
+        axn = (left["__gw_axn"].to_numpy(dtype=bool)
                if any_range else None)
-        cols = {}
+        cols = {"__pq_g": g}
         for vi in range(nv):
             nbv = nb_l[vi]
-            j = pd.to_numeric(pdf[f"__pq_b{vi}"],
+            j = pd.to_numeric(left[f"__pq_b{vi}"],
                               errors="coerce").to_numpy(dtype="float64")
             order, gid, starts = _pctl_group_traversal(
                 g, ax, vmode_l[vi], vdir_l[vi], axn)
             js = j[order]
             G = len(starts)
-            off = off_for_vi(vi, nbv)
+            off = (np.asarray(right[f"__pq_off{vi}"].iloc[0],
+                              dtype=np.int64)
+                   if len(right) else np.zeros(nbv, dtype=np.int64))
             valid = ~np.isnan(js)
             jsi = np.where(valid, js, 0).astype(np.int64)
             e = np.asarray(edges_l[vi], dtype="float64")
@@ -2081,19 +2158,6 @@ def _global_running_pctl_approx_kernel(
                 out = pd.array(buf[inv], dtype="Float64")
                 out[empt] = pd.NA  # empty non-null prefix -> null
                 cols[f"__pq_r{si}_{pi}"] = out
-        return cols
-
-    def kernel(left, right):
-        import numpy as np
-
-        def off_for_vi(vi, nbv):
-            if len(right):
-                return np.asarray(right[f"__pq_off{vi}"].iloc[0],
-                                  dtype=np.int64)
-            return np.zeros(nbv, dtype=np.int64)
-
-        cols = {"__pq_g": left["__pq_g"].to_numpy(dtype="int64")}
-        cols.update(_answers(left, off_for_vi))
         return pd.DataFrame(cols)
 
     ans = (slim.groupBy("__gw_pid")
@@ -2121,116 +2185,8 @@ def _global_running_pctl_approx_kernel(
                       if c.startswith("__pq_")])
 
 
-def _global_running_pctl_approx_wide(
-        df: DataFrame, total_rows: int, specs: list, srcs: list,
-        vmode: list, vdir: list, vsketch: list, V: int) -> DataFrame:
-    """Approximate global running $median/$percentile as ONE lazy
-    plan over the (checkpointed) wide frame — see the dispatch note
-    in _global_running_pctl. Rank error is bounded by the largest
-    value-bucket's whole-dataset mass (+ sketch error): the answer
-    interpolates the target rank within its equi-depth bucket between
-    the bucket's value edges."""
-    nv = len(srcs)
-
-    def dlit(x):
-        return f"CAST('{float(x)!r}' AS DOUBLE)"
-
-    out_df, nb, edges_by_vi, odf = _approx_bucket_prep(
-        df, specs, srcs, vmode, vdir, vsketch, V)
-    out_df = (out_df.join(F.broadcast(odf), on="__gw_pid")
-              .withColumn("__pq_g",
-                          (F.col("__gw_rn") + F.col("__gw_off_rows"))
-                          .cast("long")))
-    if "range" in vmode:
-        out_df = out_df.withColumn("__pq_ax", F.col("__gw_ax"))
-    # explicit partition count for the cum-window stage: AQE's
-    # byte-based coalesce collapses this tiny-by-bytes but
-    # compute-heavy-per-byte stage into too few tasks (the exact
-    # path's sl.repartition carries the same note); an explicit
-    # numPartitions is exempt from AQE coalescing
-    npid = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    out_df = out_df.repartition(int(npid), F.col("__gw_pid"))
-
-    over_by = {
-        ("rows", "fwd"): ("over (partition by __gw_pid order by "
-                          "__pq_g rows between unbounded preceding "
-                          "and current row)"),
-        ("rows", "bwd"): ("over (partition by __gw_pid order by "
-                          "__pq_g desc rows between unbounded "
-                          "preceding and current row)"),
-        ("range", "fwd"): ("over (partition by __gw_pid order by "
-                           "__pq_ax asc nulls first range between "
-                           "unbounded preceding and current row)"),
-        ("range", "bwd"): ("over (partition by __gw_pid order by "
-                           "__pq_ax desc nulls last range between "
-                           "unbounded preceding and current row)"),
-    }
-    for vi in range(nv):
-        over = over_by[(vmode[vi], vdir[vi])]
-        out_df = out_df.select(
-            "*", *[F.expr(
-                f"(coalesce(sum(cast(__pq_b{vi} <= {b} as bigint)) "
-                f"{over}, 0L) + element_at(__pq_off{vi}, {b + 1})) "
-                f"as __pq_cum{vi}_{b}")
-                for b in range(nb[vi])])
-        # one array attribute per input for the dynamic bucket
-        # lookups (element_at on an attribute is plain codegen)
-        out_df = out_df.withColumn(
-            f"__pq_ca{vi}",
-            F.array(*[F.col(f"__pq_cum{vi}_{b}")
-                      for b in range(nb[vi])]))
-
-    # each target's bucket index materializes as its OWN column: b is
-    # a V-term comparison ladder referenced ~6x in the interpolation,
-    # and inlined it re-evaluates per reference once the tree falls
-    # out of codegen (no CSE interpreted). This took the PARTITIONED
-    # form from ~80 us/row to ~17 (round-11); here it measured
-    # neutral at 2M (the wide form's cost center is the V window sums
-    # themselves) but keeps the multiply-referenced ladder out of the
-    # interpreted-eval trap as V grows — CollapseProject cannot
-    # inline a non-cheap multiply-referenced alias
-    bcols: dict = {}
-    for si, sp in enumerate(specs):
-        vi = sp["vi"]
-        nvb = nb[vi]
-        m = F.col(f"__pq_cum{vi}_{nvb - 1}").cast("double")
-        for pi, pv in enumerate(sp["ps"]):
-            q = F.lit(float(pv)) * (m - 1) + F.lit(1.0)
-            bcols[f"__pq_bx{si}_{pi}"] = F.least(
-                sum((F.col(f"__pq_cum{vi}_{b_}").cast("double") < q)
-                    .cast("int") for b_ in range(nvb)),
-                F.lit(nvb - 1))
-    out_df = out_df.withColumns(bcols)
-    for si, sp in enumerate(specs):
-        vi = sp["vi"]
-        nvb = nb[vi]
-        e = edges_by_vi[vi]
-        earr = F.array(*[F.expr(dlit(x)) for x in e])
-        ca = F.col(f"__pq_ca{vi}")
-        m = F.col(f"__pq_cum{vi}_{nvb - 1}").cast("double")
-        outs = []
-        for pi, pv in enumerate(sp["ps"]):
-            q = F.lit(float(pv)) * (m - 1) + F.lit(1.0)
-            b = F.col(f"__pq_bx{si}_{pi}")
-            prior = F.when(b > 0,
-                           F.element_at(ca, b).cast("double")) \
-                .otherwise(F.lit(0.0))
-            cnt = F.element_at(ca, b + 1).cast("double") - prior
-            frac = F.when(cnt > 0,
-                          (q - prior) / F.greatest(cnt, F.lit(1.0))) \
-                .otherwise(F.lit(1.0))
-            e_lo = F.element_at(earr, b + 1)
-            e_hi = F.element_at(earr, b + 2)
-            outs.append(F.when(m > 0, e_lo + frac * (e_hi - e_lo)))
-        out_df = out_df.withColumn(
-            sp["out"], outs[0] if sp["scalar"] else F.array(*outs))
-    return out_df.drop(*[c for c in out_df.columns
-                         if c.startswith("__pq_")])
-
-
 def _global_running_pctl(df: DataFrame, total_rows: int,
-                         specs: list, n_ranges: int = 1,
-                         approx: bool = False) -> DataFrame:
+                         specs: list, approx: bool = False) -> DataFrame:
     """UNPARTITIONED running $median/$percentile (frame
     ["unbounded", "current"]) as distributed prefix order statistics
     — the last _swf_global raise (r7 verdict next #6). Exact
@@ -2238,19 +2194,24 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
     O(prefix)/row sliding re-scan:
 
     1. Bucket the VALUE domain into equi-depth ranges (thinned from
-       the 63-quantile sketch the scaffold's boundary aggregate
+       the value sketch the caller's probe or boundary aggregate
        already collected — zero extra actions; boundaries baked as
        literals).
-    2. Per-bucket RUNNING counts over the global document order: a
-       per-range value histogram folded to cumulative prefix offsets
-       — computed DISTRIBUTED (groupBy histogram -> O(ranges x
-       buckets) single-partition numpy fold -> broadcast join;
-       round-9, was a collect + driver fold, i.e. one extra driver
-       action per pass) + one WindowExec of per-bucket running sums.
-    3. Each row turns its target ranks (floor/ceil of p*(m-1) per
-       requested p) into (bucket, residual-rank) queries via the
-       cumulative bucket counts — a vectorized Arrow mapInPandas
-       router (see the in-body note for why not SQL expressions).
+    2. Per-range value histograms fold to cumulative per-range bucket
+       offsets — driver-side into a LocalRelation when the histograms
+       rode the boundary aggregate (round-12), else distributed
+       (groupBy histogram -> single-partition numpy fold).
+    3. ONE cogroup numpy kernel per scaffold range (round-10) computes
+       each row's cumulative bucket vector and turns its target ranks
+       (floor/ceil of p*(m-1) per requested p) into (bucket,
+       residual-rank) queries. It works in key-tie GROUP space
+       through _pctl_group_traversal (explicit null-flag sort — null
+       keys distinct from genuine infinities; chunked bincount
+       histograms — O(chunk x V + rows) memory however tied the
+       sortBy). The SQL form it replaced (V x nv cumulative window
+       sums + an Arrow router) ran past codegen's field budget and
+       janino's method cap into interpreted eval and lost 96 vs 81 s
+       at 10M rows (SCALE.md round-10), so it was deleted.
     4. A merge-sort-tree applyInPandas kernel per (value-bucket,
        g-chunk) group selects the residual rank among that bucket's
        elements with g <= query g. Elements replicate only to LATER
@@ -2266,55 +2227,30 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
     outputs that share an input expression and frame mode share
     buckets, histogram counts, and kernel elements. mode="rows" is
     the documents frame (prefix by document order); mode="range" is
-    the running VALUE-RANGE frame — same machinery with RANGE-framed
-    cumulative counts and the last tie's g as the query row number,
-    so ties by sort value enter each other's prefix. The sketch actions, the histogram, the query
-    window pass, and the kernel's element stream all read a slim
-    (pid, g, values) localCheckpoint — lineage truncation, 16-24
-    B/row — instead of re-analyzing and re-executing the full
-    upstream plan per action: the unfused, uncheckpointed form spent
-    ~25 s of DRIVER plan time per output on a 15k-row frame
-    (SCALE.md round-8). The wide frame is touched exactly once, in
-    the final join.
+    the running VALUE-RANGE frame — same machinery with cumulative
+    counts taken at the end of each key-tie group and the last tie's
+    g as the query row number, so ties by sort value enter each
+    other's prefix. The histogram, the router and the kernel's
+    element stream all read a slim (pid, g, values) localCheckpoint —
+    lineage truncation, 16-24 B/row — instead of re-analyzing and
+    re-executing the full upstream plan per action: the unfused,
+    uncheckpointed form spent ~25 s of DRIVER plan time per output on
+    a 15k-row frame (SCALE.md round-8). The wide frame is touched
+    exactly once, in the final join.
+
+    `approx` (spark.maggma.windowPctl.method=approximate) swaps steps
+    3-5 for _global_running_pctl_approx_kernel's in-bucket
+    interpolation.
 
     Nulls contribute nothing (Mongo/DuckDB quantile semantics); rows
     with an empty non-null prefix emit null. Ties in the sort key
     follow the scaffold's deterministic rn, like every documents
     frame (DEVIATIONS §16)."""
     import pandas as pd
-    from pyspark.sql import Window
 
     spark = df.sparkSession
-    # bucket count scales with input size (exact: >= ~10k elements per
-    # bucket — plan size is O(V) window functions and the kernel wants
-    # V x S groups of real work, so tiny inputs should not pay a
-    # 64-bucket window tree). The APPROXIMATE mode's answer is an
-    # interpolation within one bucket, so its rank error is bounded by
-    # the largest bucket's mass (~n/V x sketch skew) — it buys
-    # accuracy with more buckets instead of a selection kernel, and is
-    # not gated on shuffle.partitions (no kernel tasks to feed).
-    if approx:
-        # default: ~1k rows/bucket up to 64 buckets (rank error
-        # <= max bucket mass ~ total/V x sketch skew); overridable,
-        # but HARD-capped at 64: the V-term cumulative-array
-        # projection crosses janino's 64 KB method limit past ~64 and
-        # drops to InterpretedUnsafeProjection (measured 12 s -> 43 s
-        # at 4M rows going 64 -> 128, round-9)
-        V = int(spark.conf.get(
-            "spark.maggma.windowPctl.approxBuckets", "0")) \
-            or max(2, min(64, total_rows // 1024 + 2))
-        V = max(2, min(64, V))
-    else:
-        # V floored by DATA MASS only (round-13, r12 verdict next #2):
-        # the old `min(..., shuffle.partitions, ...)` term tied bucket
-        # count to session parallelism, so an 8-core session collapsed
-        # V to 8, made every bucket 4x heavier, and the selection
-        # kernel's per-bucket O((n/V + q/S) log^2(n/V)) work blew up
-        # super-linearly (window_median_percentile 91.4 s @8 cores vs
-        # 2.2 s @32, BENCH_r12_c8). Task parallelism is set by the
-        # V x S group fan-out, not V alone, and exact results are
-        # V-independent — only per-bucket mass matters.
-        V = max(2, min(64, total_rows // 10_000 + 2))
+    V = _pctl_bucket_count(total_rows, approx, int(spark.conf.get(
+        "spark.maggma.windowPctl.approxBuckets", "0")))
     # query-chunk fan: elements replicate to ~S/2 later g-chunks so a
     # query-heavy bucket splits across S tasks instead of funneling
     # through one. S=1 was measured SLOWER at bench SF (round-10:
@@ -2344,37 +2280,17 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
             vhist.append(sp.get("histcounts"))
             vbcol.append(sp.get("bcol"))
         sp["vi"] = vi
+    if approx:
+        # Mongo's window $median/$percentile only OFFER
+        # method:"approximate"; the engine conf licenses the
+        # in-bucket interpolation kernel
+        return _global_running_pctl_approx_kernel(
+            df, total_rows, specs, srcs, vmode, vdir, vsketch, V)
     nv = len(srcs)
     any_range = "range" in vmode
     # all-or-nothing: the caller attaches probe-derived splits and
     # boundary-aggregate histograms to every spec or to none
     pre_offsets = all(h is not None for h in vhist) and nv > 0
-
-    if approx:
-        # APPROXIMATE fast path (Mongo's window $median/$percentile
-        # only OFFER method:"approximate"). Assembly choice: the
-        # vectorized numpy kernel — the wide SQL form's V cumulative
-        # window sums + V-term interpolation ladders blow codegen's
-        # field/method budgets as V grows and run interpreted
-        # (140-165 s at 10M V=64 vs ~36 s for the kernel; SCALE.md
-        # round-10). Round-10's auto picked wide below ~1M rows
-        # because the kernel's fixed Python-stage costs dominated
-        # there; after the round-11 group-space rewrite the kernel
-        # wins at EVERY probed size (5k: 2.6 vs 3.1 s; 100k: 5.3 vs
-        # 10.7; 2M: 8.2 vs 13.6 — same-session best-of-2), so `auto`
-        # now always picks it. approxAssembly=wide remains the
-        # explicit escape for user frames so wide that the kernel's
-        # join-back shuffle of the full frame would dominate, and is
-        # pinned bit-equal by test_global_pctl_approx_assemblies_agree.
-        assembly = spark.conf.get(
-            "spark.maggma.windowPctl.approxAssembly", "auto")
-        if assembly == "auto":
-            assembly = "kernel"
-        if assembly == "wide":
-            return _global_running_pctl_approx_wide(
-                df, total_rows, specs, srcs, vmode, vdir, vsketch, V)
-        return _global_running_pctl_approx_kernel(
-            df, total_rows, specs, srcs, vmode, vdir, vsketch, V)
 
     slim = df.select(
         "__gw_pid",
@@ -2391,470 +2307,193 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
         *[F.col(vbcol[vi]).alias(f"__pq_b{vi}")
           for vi in range(nv) if vbcol[vi] is not None]) \
         .localCheckpoint(eager=False)
-    # ^ lineage truncation for the histogram/window/element branches:
+    # ^ lineage truncation for the histogram/router/element branches:
     # measured round-9 against skipping it when the caller already
     # checkpointed the scaffolded frame — re-running the (cheap)
     # block-read + ladder projection per branch still lost ~0.4 s at
     # bench SF to the one slim materialization, so it stays. LAZY
-    # (round-10): the first downstream sub-job (the broadcast-offsets
-    # exchange) materializes the blocks — no dedicated action.
+    # (round-10): the first downstream sub-job materializes the
+    # blocks — no dedicated action.
 
     # every compound expression below is ONE parsed F.expr string:
     # building them per-term through the Column API cost ~27k py4j
     # roundtrips = 14 s of driver time for a two-output spec at V=32
-    # (SCALE.md round-8). Float literals go through
-    # CAST('repr' AS DOUBLE) so they round-trip bit-exact.
-    def dlit(x):
-        return f"CAST('{float(x)!r}' AS DOUBLE)"
+    # (SCALE.md round-8).
 
     # bucket boundaries: probe-derived splits when the caller ran the
     # round-12 combined probe (spec["vbs"]), else thinned from the
     # boundary aggregate's piggybacked 63-quantile sketch — either
     # way balance is approximate, the histogram offsets stay exact
     nb: list = []
-    vbs_all: list = []
     slb = slim
     for vi in range(nv):
         if vvbs[vi] is not None:
             vbs = list(vvbs[vi])
         else:
-            sk = vsketch[vi]
-            vbs = sorted({sk[(len(sk) * i) // V]
-                          for i in range(1, V)}) if sk else []
-        vbs_all.append(vbs)
+            vbs = _equi_depth_splits(vsketch[vi], V)
         nb.append(len(vbs) + 1)
         if vbcol[vi] is not None:
             continue  # __pq_b{vi} already rides the slim projection
-        ladder = " + ".join(
-            f"cast(__pq_v{vi} > {dlit(x)} as int)" for x in vbs) or "0"
-        slb = slb.withColumn(
-            f"__pq_b{vi}",
-            F.expr(f"case when __pq_v{vi} is not null "
-                   f"then {ladder} end"))
+        slb = slb.withColumn(f"__pq_b{vi}",
+                             _bucket_index(f"__pq_v{vi}", vbs))
 
+    # per-range CUMULATIVE prefix offsets: cumulative across BOTH the
+    # range axis (fwd accumulates EARLIER pids, bwd LATER pids) and
+    # the bucket axis. Prior/later pids hold strictly smaller/larger
+    # keys (the scaffold's range partitioner co-locates ties), so the
+    # offsets stitch every mode.
     if pre_offsets:
-        # Round-12: the per-range bucket histograms rode the boundary
-        # aggregate; fold them to cumulative offsets HERE (same
-        # arithmetic as fold_offsets below) and ship the result as a
-        # zero-job LocalRelation — the dedicated hist groupBy +
-        # coalesce(1) mapInPandas fold stages disappear from the
-        # critical path. Same worker-OOM guard, now driver-side.
-        import numpy as np
-
-        pids = [int(p) for p, _ in vhist[0]]
-        off_by_vi = []
-        for vi in range(nv):
-            c = np.asarray([cnts for _, cnts in vhist[vi]],
-                           dtype=np.int64).reshape(len(pids), nb[vi])
-            biggest = int(c.sum(axis=0).max(initial=0))
-            if biggest > MAX_PCTL_BUCKET_ELEMENTS:
-                raise ValueError(
-                    f"unpartitioned running $median/$percentile: a "
-                    f"value bucket holds {biggest} elements (> "
-                    f"MAX_PCTL_BUCKET_ELEMENTS="
-                    f"{MAX_PCTL_BUCKET_ELEMENTS}); the selection "
-                    "kernel materializes one bucket per task. Add "
-                    "partitionBy, or pre-aggregate the value domain.")
-            sc = c.cumsum(axis=1)
-            if vdir[vi] == "fwd":
-                off = sc.cumsum(axis=0) - sc
-            else:
-                off = sc[::-1].cumsum(axis=0)[::-1] - sc
-            off_by_vi.append(off)
-        odf = spark.createDataFrame(
-            [tuple([pids[i]] + [[int(x) for x in off_by_vi[vi][i]]
-                                for vi in range(nv)])
-             for i in range(len(pids))],
-            "__gw_pid int, " + ", ".join(
-                f"__pq_off{vi} array<bigint>" for vi in range(nv)))
-
-    # per-range value histograms -> per-range CUMULATIVE prefix
-    # offsets, computed DISTRIBUTED and broadcast-joined (round-9:
-    # this was a collect + Python fold + createDataFrame — a whole
-    # extra driver action whose job latency dwarfed the histogram's
-    # compute). The offset frame is O(ranges) rows, so the
-    # single-partition windows over it are scale-safe by
-    # construction. Cumulative across BOTH the range axis (exclusive
-    # running sum over pid order — fwd accumulates EARLIER pids, bwd
-    # LATER pids) and the bucket axis, so cum_at[b] below stays a
-    # single one-term window sum.
-    # parsed-expr form — same py4j-chatter cut as the approximate
-    # prep's histogram (round-12). Only built when the round-12
-    # probe/boundary-aggregate precomputation above did not run.
-    hist = None if pre_offsets else slb.groupBy("__gw_pid").agg(*[
-        F.expr(f"sum(case when __pq_b{vi} = {b} then 1L else 0L end) "
-               f"as `__pq_c_{vi}_{b}`")
-        for vi in range(nv) for b in range(nb[vi])])
-    nb_l, vdir_l = list(nb), list(vdir)
-
-    def fold_offsets(batches):
-        # numpy double-cumsum over the O(ranges x buckets) histogram
-        # (single-partition input, a few KB at any data scale). NOT
-        # SQL expressions: the nb overlapping prefix-sum ADD chains
-        # sent Catalyst's subexpression-elimination codegen into
-        # gigabyte string recursion at nb >= ~33 (measured JVM OOM
-        # building the generated source, round-9).
-        import numpy as np
-
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) \
-            .sort_values("__gw_pid").reset_index(drop=True)
-        out = {"__gw_pid": pdf["__gw_pid"].to_numpy()}
-        for vi in range(len(nb_l)):
-            c = np.stack([pdf[f"__pq_c_{vi}_{b}"].to_numpy()
-                          for b in range(nb_l[vi])], axis=1)
-            tot = c.sum(axis=0)
-            biggest = int(tot.max(initial=0))
-            if biggest > MAX_PCTL_BUCKET_ELEMENTS:
-                # task-OOM guard (house style: raise, never
-                # truncate): one kernel group holds one value-
-                # bucket's elements; past ~64 x the cap a GLOBAL
-                # running percentile needs a hierarchical second
-                # bucketing level this operator does not implement
-                raise ValueError(
-                    f"unpartitioned running $median/$percentile: a "
-                    f"value bucket holds {biggest} elements (> "
-                    f"MAX_PCTL_BUCKET_ELEMENTS="
-                    f"{MAX_PCTL_BUCKET_ELEMENTS}); the selection "
-                    "kernel materializes one bucket per task. Add "
-                    "partitionBy, or pre-aggregate the value domain.")
-            sc = c.cumsum(axis=1)  # bucket-cumulative within a range
-            if vdir_l[vi] == "fwd":
-                off = sc.cumsum(axis=0) - sc        # earlier pids
-            else:
-                off = sc[::-1].cumsum(axis=0)[::-1] - sc  # later pids
-            out[f"__pq_off{vi}"] = list(off)
-        yield pd.DataFrame(out)
-
-    if not pre_offsets:
-        # coalesce, not repartition — same one-exchange shape as the
-        # approximate prep (round-12)
-        odf = F.broadcast(hist.coalesce(1).mapInPandas(
-            fold_offsets,
-            "__gw_pid int, " + ", ".join(
-                f"__pq_off{vi} array<bigint>" for vi in range(nv))))
+        odf = _local_offsets(spark, vhist, nb, vdir, guard=True)
+    else:
+        odf = F.broadcast(_folded_offsets(slb, nb, vdir, guard=True))
 
     plist = [(si, sp["vi"], pi, float(pv))
              for si, sp in enumerate(specs)
              for pi, pv in enumerate(sp["ps"])]
-    vmodes = list(vmode)
     T1 = total_rows + 1
     qschema = ("vi int, b int, c int, g long, rank long, qid long, "
                "si int, pi int, side int, m long")
+    nbl2, vdl2, vml2 = list(nb), list(vdir), list(vmode)
+    # chunk size captured at PLAN time (driver) so tests can shrink it
+    # and force multi-chunk traversals on small frames — read inside
+    # the kernel it would resolve against the WORKER's unpatched module
+    CH2 = _PCTL_KERNEL_CHUNK_GROUPS
+    q_empty = pd.DataFrame({
+        "vi": pd.Series(dtype="int32"),
+        "b": pd.Series(dtype="int32"),
+        "c": pd.Series(dtype="int32"),
+        "g": pd.Series(dtype="int64"),
+        "rank": pd.Series(dtype="int64"),
+        "qid": pd.Series(dtype="int64"),
+        "si": pd.Series(dtype="int32"),
+        "pi": pd.Series(dtype="int32"),
+        "side": pd.Series(dtype="int32"),
+        "m": pd.Series(dtype="int64")})
 
-    def _emit_queries(g, gcmp_by_vi, cums_by_vi):
-        """Shared rank->(bucket, residual) routing: numpy primitives
-        over NONDECREASING cumulative bucket vectors; emits only the
-        surviving queries (m > 0, hi != lo dedup)."""
+    def route_kernel(left, right):
+        # per range: cumulative bucket vectors in key-tie group space,
+        # then three numpy primitives per (p, side) — cums is
+        # NONDECREASING along the bucket axis, so bucket =
+        # (cums < q).sum(axis=1) and prior = cums[bucket-1] —
+        # O(groups x V) in C, emitting only the surviving queries
+        # (m > 0, hi != lo dedup)
         import numpy as np
 
+        n_rows = len(left)
+        if not n_rows:
+            return q_empty
+        g = left["__pq_g"].to_numpy(dtype="int64")
+        ax = (pd.to_numeric(left["__pq_ax"], errors="coerce")
+              .to_numpy(dtype="float64")
+              if "range" in vml2 else None)
+        axn = (left["__pq_axn"].to_numpy(dtype=bool)
+               if "range" in vml2 else None)
         out = []
-        for si, vi, pi, pv in plist:
-            cums = cums_by_vi[vi]
-            gc = gcmp_by_vi[vi]
-            c_all = ((gc - 1) * S // total_rows).astype("int32")
-            m = cums[:, -1]
-            r = pv * (m - 1).astype("float64")
-            lo = np.floor(r).astype("int64")
-            hi = np.ceil(r).astype("int64")
-            for side, q in ((0, lo + 1), (1, hi + 1)):
-                mask = m > 0
-                if side == 1:
-                    # the hi rank only differs when p*(m-1) is
-                    # fractional — skipping the duplicate halves
-                    # query volume for on-grid percentiles (the
-                    # assembly coalesces hi->lo)
-                    mask &= hi != lo
-                if not mask.any():
-                    continue
-                qv = q[mask]
-                b = (cums[mask] < qv[:, None]).sum(
-                    axis=1).astype("int64")
-                prior = np.where(
-                    b > 0,
-                    np.take_along_axis(
-                        cums[mask],
-                        np.maximum(b - 1, 0)[:, None],
-                        axis=1)[:, 0],
-                    0)
-                out.append(pd.DataFrame({
-                    "vi": np.int32(vi), "b": b.astype("int32"),
-                    "c": c_all[mask],
-                    "g": gc[mask], "rank": qv - prior,
-                    "qid": g[mask],
-                    "si": np.int32(si), "pi": np.int32(pi),
-                    "side": np.int32(side),
-                    "m": m[mask]}))
-        return out
+        for vi in range(len(nbl2)):
+            nbv = nbl2[vi]
+            j = pd.to_numeric(left[f"__pq_b{vi}"],
+                              errors="coerce") \
+                .to_numpy(dtype="float64")
+            order, gid, starts = _pctl_group_traversal(
+                g, ax, vml2[vi], vdl2[vi], axn)
+            js = j[order]
+            gs = g[order]
+            G = len(starts)
+            off = (np.asarray(right[f"__pq_off{vi}"].iloc[0],
+                              dtype=np.int64)
+                   if len(right) else
+                   np.zeros(nbv, dtype=np.int64))
+            valid = ~np.isnan(js)
+            jsi = np.where(valid, js, 0).astype(np.int64)
+            myps = [(si, pi, pv) for si, pvi, pi, pv in plist
+                    if pvi == vi]
+            base = np.zeros(nbv, dtype=np.int64)
+            for g0 in range(0, G, CH2):
+                g1 = min(g0 + CH2, G)
+                r0 = int(starts[g0])
+                r1 = int(starts[g1]) if g1 < G else n_rows
+                K = g1 - g0
+                sl_ = slice(r0, r1)
+                gl = gid[sl_] - g0
+                vm = valid[sl_]
+                H = np.bincount(gl[vm] * nbv + jsi[sl_][vm],
+                                minlength=K * nbv).reshape(K, nbv)
+                Cg = H.cumsum(axis=0) + base
+                base = Cg[-1].copy()
+                # frame runs to the END of each key-tie group;
+                # incoming offset is bucket-cumulative already
+                ce = Cg.cumsum(axis=1) + off
+                m_g = ce[:, -1]
+                # the comparison row number the selection kernel
+                # sees: g is increasing within every tie group,
+                # so max g over the frame = g at the tie end and
+                # min g over the mirrored frame = g at the tie
+                # start
+                ends = np.empty(K, dtype=np.int64)
+                ends[:-1] = starts[g0 + 1:g1] - 1
+                ends[-1] = r1 - 1
+                if vml2[vi] == "rows":
+                    gc_g = (gs[sl_] if vdl2[vi] == "fwd"
+                            else T1 - gs[sl_])
+                elif vdl2[vi] == "fwd":
+                    gc_g = gs[ends]
+                else:
+                    gc_g = T1 - gs[starts[g0:g1]]
+                c_g = ((gc_g - 1) * S // total_rows) \
+                    .astype("int32")
+                qid_rows = gs[sl_]
+                for si, pi, pv in myps:
+                    r = pv * (m_g - 1).astype("float64")
+                    lo = np.floor(r).astype("int64")
+                    hi = np.ceil(r).astype("int64")
+                    for side, qarr in ((0, lo + 1), (1, hi + 1)):
+                        gm = m_g > 0
+                        if side == 1:
+                            # hi only differs when p*(m-1) is
+                            # fractional — skipping the duplicate
+                            # halves query volume (the assembly
+                            # coalesces hi->lo)
+                            gm &= hi != lo
+                        if not gm.any():
+                            continue
+                        qv = qarr[gm]
+                        b = (ce[gm] < qv[:, None]).sum(
+                            axis=1).astype("int64")
+                        prior = np.where(
+                            b > 0,
+                            np.take_along_axis(
+                                ce[gm],
+                                np.maximum(b - 1, 0)[:, None],
+                                axis=1)[:, 0],
+                            0)
+                        # group-level results -> per-row queries
+                        bf = np.zeros(K, dtype=np.int64)
+                        bf[gm] = b
+                        rk = np.zeros(K, dtype=np.int64)
+                        rk[gm] = qv - prior
+                        rm = gm[gl]
+                        gi = gl[rm]
+                        out.append(pd.DataFrame({
+                            "vi": np.int32(vi),
+                            "b": bf[gi].astype("int32"),
+                            "c": c_g[gi],
+                            "g": gc_g[gi],
+                            "rank": rk[gi],
+                            "qid": qid_rows[rm],
+                            "si": np.int32(si),
+                            "pi": np.int32(pi),
+                            "side": np.int32(side),
+                            "m": m_g[gi]}))
+        return (pd.concat(out, ignore_index=True)
+                if out else q_empty)
 
-    router = spark.conf.get("spark.maggma.windowPctl.exactRouter",
-                            "kernel")
-    if router == "kernel":
-        # Round-10 DEFAULT router: ONE cogroup numpy kernel per
-        # scaffold range computes the cumulative bucket vectors AND
-        # routes the target ranks, replacing the V x nv cumulative
-        # window sums, the gc windows, the offsets broadcast join,
-        # and the separate Arrow router pass. Those window stages
-        # were the codegen cliff the in-code notes below document
-        # (field budget + janino method cap -> interpreted eval).
-        # Round-11: the kernel works in key-tie GROUP space through
-        # _pctl_group_traversal (explicit null-flag sort — null keys
-        # distinct from genuine infinities; chunked bincount
-        # histograms — O(chunk x V + rows) memory however tied the
-        # sortBy; per-group rank routing expanded to per-row queries
-        # at the end). exactRouter=window keeps the one-plan SQL
-        # form.
-        nbl2, vdl2, vml2 = list(nb), list(vdir), list(vmodes)
-        # plan-time capture — see the approx kernel's CH note
-        CH2 = _PCTL_KERNEL_CHUNK_GROUPS
-        q_empty = pd.DataFrame({
-            "vi": pd.Series(dtype="int32"),
-            "b": pd.Series(dtype="int32"),
-            "c": pd.Series(dtype="int32"),
-            "g": pd.Series(dtype="int64"),
-            "rank": pd.Series(dtype="int64"),
-            "qid": pd.Series(dtype="int64"),
-            "si": pd.Series(dtype="int32"),
-            "pi": pd.Series(dtype="int32"),
-            "side": pd.Series(dtype="int32"),
-            "m": pd.Series(dtype="int64")})
-
-        def route_kernel(left, right):
-            import numpy as np
-
-            n_rows = len(left)
-            if not n_rows:
-                return q_empty
-            g = left["__pq_g"].to_numpy(dtype="int64")
-            ax = (pd.to_numeric(left["__pq_ax"], errors="coerce")
-                  .to_numpy(dtype="float64")
-                  if "range" in vml2 else None)
-            axn = (left["__pq_axn"].to_numpy(dtype=bool)
-                   if "range" in vml2 else None)
-            out = []
-            for vi in range(len(nbl2)):
-                nbv = nbl2[vi]
-                j = pd.to_numeric(left[f"__pq_b{vi}"],
-                                  errors="coerce") \
-                    .to_numpy(dtype="float64")
-                order, gid, starts = _pctl_group_traversal(
-                    g, ax, vml2[vi], vdl2[vi], axn)
-                js = j[order]
-                gs = g[order]
-                G = len(starts)
-                off = (np.asarray(right[f"__pq_off{vi}"].iloc[0],
-                                  dtype=np.int64)
-                       if len(right) else
-                       np.zeros(nbv, dtype=np.int64))
-                valid = ~np.isnan(js)
-                jsi = np.where(valid, js, 0).astype(np.int64)
-                myps = [(si, pi, pv) for si, pvi, pi, pv in plist
-                        if pvi == vi]
-                base = np.zeros(nbv, dtype=np.int64)
-                for g0 in range(0, G, CH2):
-                    g1 = min(g0 + CH2, G)
-                    r0 = int(starts[g0])
-                    r1 = int(starts[g1]) if g1 < G else n_rows
-                    K = g1 - g0
-                    sl_ = slice(r0, r1)
-                    gl = gid[sl_] - g0
-                    vm = valid[sl_]
-                    H = np.bincount(gl[vm] * nbv + jsi[sl_][vm],
-                                    minlength=K * nbv).reshape(K, nbv)
-                    Cg = H.cumsum(axis=0) + base
-                    base = Cg[-1].copy()
-                    # frame runs to the END of each key-tie group;
-                    # incoming offset is bucket-cumulative already
-                    ce = Cg.cumsum(axis=1) + off
-                    m_g = ce[:, -1]
-                    # the comparison row number the selection kernel
-                    # sees: g is increasing within every tie group,
-                    # so max g over the frame = g at the tie end and
-                    # min g over the mirrored frame = g at the tie
-                    # start
-                    ends = np.empty(K, dtype=np.int64)
-                    ends[:-1] = starts[g0 + 1:g1] - 1
-                    ends[-1] = r1 - 1
-                    if vml2[vi] == "rows":
-                        gc_g = (gs[sl_] if vdl2[vi] == "fwd"
-                                else T1 - gs[sl_])
-                    elif vdl2[vi] == "fwd":
-                        gc_g = gs[ends]
-                    else:
-                        gc_g = T1 - gs[starts[g0:g1]]
-                    c_g = ((gc_g - 1) * S // total_rows) \
-                        .astype("int32")
-                    qid_rows = gs[sl_]
-                    for si, pi, pv in myps:
-                        r = pv * (m_g - 1).astype("float64")
-                        lo = np.floor(r).astype("int64")
-                        hi = np.ceil(r).astype("int64")
-                        for side, qarr in ((0, lo + 1), (1, hi + 1)):
-                            gm = m_g > 0
-                            if side == 1:
-                                # hi only differs when p*(m-1) is
-                                # fractional — skipping the duplicate
-                                # halves query volume (the assembly
-                                # coalesces hi->lo)
-                                gm &= hi != lo
-                            if not gm.any():
-                                continue
-                            qv = qarr[gm]
-                            b = (ce[gm] < qv[:, None]).sum(
-                                axis=1).astype("int64")
-                            prior = np.where(
-                                b > 0,
-                                np.take_along_axis(
-                                    ce[gm],
-                                    np.maximum(b - 1, 0)[:, None],
-                                    axis=1)[:, 0],
-                                0)
-                            # group-level results -> per-row queries
-                            bf = np.zeros(K, dtype=np.int64)
-                            bf[gm] = b
-                            rk = np.zeros(K, dtype=np.int64)
-                            rk[gm] = qv - prior
-                            rm = gm[gl]
-                            gi = gl[rm]
-                            out.append(pd.DataFrame({
-                                "vi": np.int32(vi),
-                                "b": bf[gi].astype("int32"),
-                                "c": c_g[gi],
-                                "g": gc_g[gi],
-                                "rank": rk[gi],
-                                "qid": qid_rows[rm],
-                                "si": np.int32(si),
-                                "pi": np.int32(pi),
-                                "side": np.int32(side),
-                                "m": m_g[gi]}))
-            return (pd.concat(out, ignore_index=True)
-                    if out else q_empty)
-
-        queries = (slb.select(
-            "__gw_pid", "__pq_g",
-            *(["__pq_ax", "__pq_axn"] if "range" in vmodes else []),
-            *[f"__pq_b{vi}" for vi in range(nv)])
-            .groupBy("__gw_pid")
-            .cogroup(odf.groupBy("__gw_pid"))
-            .applyInPandas(route_kernel, qschema))
-    if router != "kernel":
-        sl = slb.join(odf, on="__gw_pid")
-        # pin the cumulative-count window + router stage at the scaffold's
-        # range count: the checkpointed slim frame loses its partitioning
-        # metadata, so the window re-shuffles, and AQE's byte-based
-        # coalesce collapsed the tiny-by-bytes but compute-heavy-per-byte
-        # stage (V window sums per row + the numpy router) into ONE task
-        # (measured: a 2.9 s single-task stage inside a 6.6 s query at
-        # bench SF). An explicit numPartitions is exempt from AQE
-        # coalescing; at scale n_ranges == shuffle.partitions anyway.
-        sl = sl.repartition(max(1, n_ranges), F.col("__gw_pid"))
-        # cumulative bucket counts and the rank routing are PLAIN
-        # expressions over the window attributes — every higher-order
-        # function here (array fold, filter-count, element_at routing) is
-        # CodegenFallback in Spark, which drops the WHOLE projection to
-        # interpreted eval (~180 us/row, 1794 s of executor time at 10M —
-        # SCALE.md round-8). cum_at[b] = # rows with bucket <= b and
-        # g' <= g globally: one `bucket <= b` window sum plus the
-        # bucket-cumulative range offset — no chained-add trees. Each cum
-        # array materializes ONCE per input; routing references it
-        # through element_at on the ATTRIBUTE (CollapseProject cannot
-        # inline a non-cheap multiply-referenced alias, and
-        # element_at(attr, literal) is plain codegen).
-        # rows-mode frames count by global document order; range-mode
-        # frames count by sort VALUE (RANGE frame: ties ahead of the row
-        # enter its prefix — Mongo/SQL running-range semantics). The
-        # reverse ('bwd', ['current','unbounded']) forms run the SAME
-        # machinery over the reversed traversal: DESC windows, reverse
-        # pid offsets, and kernel row numbers T+1-g, so "suffix" is just
-        # a prefix of the mirrored axis. Null range keys keep SQL
-        # framing in both directions (asc nulls first <-> desc nulls
-        # last: a null row's forward frame is its null peer group, its
-        # backward frame the whole partition). Prior/later pids hold
-        # strictly smaller/larger keys (the scaffold's range partitioner
-        # co-locates ties), so cumulative pid offsets stitch every mode.
-        over_by = {
-            ("rows", "fwd"): ("over (partition by __gw_pid order by "
-                              "__pq_g rows between unbounded preceding "
-                              "and current row)"),
-            ("rows", "bwd"): ("over (partition by __gw_pid order by "
-                              "__pq_g desc rows between unbounded "
-                              "preceding and current row)"),
-            ("range", "fwd"): ("over (partition by __gw_pid order by "
-                               "__pq_ax asc nulls first range between "
-                               "unbounded preceding and current row)"),
-            ("range", "bwd"): ("over (partition by __gw_pid order by "
-                               "__pq_ax desc nulls last range between "
-                               "unbounded preceding and current row)"),
-        }
-        for vi in range(nv):
-            over = over_by[(vmode[vi], vdir[vi])]
-            # one LONG column per bucket, not one array column: the
-            # routers rebuild the (rows x V) matrix with np.stack over
-            # plain int64 columns at C speed — np.vstack over a per-row
-            # LIST column was a Python-loop copy that dominated the
-            # router at 10M rows (round-9), and UnsafeArrayData added an
-            # extra per-row copy JVM-side
-            sl = sl.select(
-                "*", *[F.expr(
-                    f"(coalesce(sum(cast(__pq_b{vi} <= {b} as bigint)) "
-                    f"{over}, 0L) + element_at(__pq_off{vi}, {b + 1})) "
-                    f"as __pq_cum{vi}_{b}")
-                    for b in range(nb[vi])])
-            # the comparison row number the kernel sees: raw g on the
-            # (possibly mirrored) axis for rows frames; for range frames
-            # the LAST tie's mirrored g (max over the same frame), so the
-            # kernel admits every element the value frame contains
-            if vmode[vi] == "range":
-                gexp = ("max(__pq_g)" if vdir[vi] == "fwd"
-                        else f"max({T1} - __pq_g)")
-                gc = f"{gexp} {over}"
-            else:
-                gc = "__pq_g" if vdir[vi] == "fwd" else f"{T1} - __pq_g"
-            sl = sl.withColumn(f"__pq_gc{vi}", F.expr(gc))
-
-        # target ranks -> (bucket, residual rank) queries: an Arrow
-        # mapInPandas ROUTER, not SQL expressions. Two generated-code
-        # shapes were tried and measured first (SCALE.md round-8): ~2V
-        # element_at comparisons per query struct inlined into one
-        # projection blew janino's 64 KB method cap — whole-stage codegen
-        # for Window->Project->Generate->Filter fuses into a single
-        # processNext(), and so did the per-operator fallback, landing on
-        # InterpretedUnsafeProjection at ~60 us/row (568-653 s at 10M);
-        # higher-order array functions are CodegenFallback and measured
-        # ~180 us/row. The router is three numpy primitives per
-        # (p, side): cums is NONDECREASING along the bucket axis, so
-        # bucket = (cums < q).sum(axis=1) and prior = cums[bucket-1] —
-        # O(rows x V) in C, no 64 KB cliff, and it emits only the
-        # surviving queries (m > 0, hi != lo dedup) instead of
-        # explode-then-filter.
-        def route(batches):
-            import numpy as np
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                g = pdf["__pq_g"].to_numpy()
-                gcmp_by_vi = {
-                    vi: pdf[f"__pq_gc{vi}"].to_numpy()
-                    for vi in sorted({v for _, v, _, _ in plist})}
-                cums_by_vi = {
-                    vi: np.stack([pdf[f"__pq_cum{vi}_{b}"].to_numpy()
-                                  for b in range(nb_l[vi])], axis=1)
-                    for vi in gcmp_by_vi}
-                out = _emit_queries(g, gcmp_by_vi, cums_by_vi)
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        queries = sl.select(
-            "__pq_g", *[f"__pq_cum{vi}_{b}" for vi in range(nv)
-                        for b in range(nb[vi])],
-            *[f"__pq_gc{vi}" for vi in range(nv)]
-        ).mapInPandas(
-            route,
-            "vi int, b int, c int, g long, rank long, qid long, "
-            "si int, pi int, side int, m long")
+    queries = (slb.select(
+        "__gw_pid", "__pq_g",
+        *(["__pq_ax", "__pq_axn"] if any_range else []),
+        *[f"__pq_b{vi}" for vi in range(nv)])
+        .groupBy("__gw_pid")
+        .cogroup(odf.groupBy("__gw_pid"))
+        .applyInPandas(route_kernel, qschema))
     # ONE scan + inline() instead of an nv-branch union (round-12):
     # the union form re-scanned the slim blocks once per input and
     # doubled the plan's branch count; inline(array(named_struct...))
@@ -2977,14 +2616,12 @@ def _bounded_broadcast(ans: DataFrame, total_rows: int,
 
 def _pctl_assemble(df: DataFrame, specs: list,
                    kout: DataFrame, total_rows: int) -> DataFrame:
-    """Shared tail of the exact and approximate running-percentile
-    paths: pivot the per-(spec, p, side) answer rows to one row per
-    global row number, left-join onto the PRE-WINDOW wide frame, and
-    interpolate lo/hi in-expression. Rows whose prefix is all-null
-    for an input generate no queries for that spec, so the joined
-    per-spec m is null and they emit null. The approximate path emits
-    side=0 only with the already-interpolated value — the hi->lo
-    coalesce below makes the frac interpolation a no-op there."""
+    """Tail of the exact running-percentile path: pivot the
+    per-(spec, p, side) answer rows to one row per global row number,
+    left-join onto the PRE-WINDOW wide frame, and interpolate lo/hi
+    in-expression. Rows whose prefix is all-null for an input generate
+    no queries for that spec, so the joined per-spec m is null and
+    they emit null."""
     # parsed-expr forms throughout (round-12 py4j-chatter cut): the
     # SQL strings replay the exact Column trees they replaced — same
     # IEEE op order (r - floor(r), lo + frac * (hi - lo)), double
@@ -3010,7 +2647,7 @@ def _pctl_assemble(df: DataFrame, specs: list,
     for si, sp in enumerate(specs):
         terms = []
         for pi, pv in enumerate(sp["ps"]):
-            p = f"CAST('{float(pv)!r}' AS DOUBLE)"
+            p = _dlit(pv)
             r = f"({p} * cast(__pq_m{si} - 1 as double))"
             frac = f"({r} - floor({r}))"
             lo = f"__pq_r{si}_{pi}_0"
@@ -3391,7 +3028,10 @@ def _swf_global(df: DataFrame, spec: dict, sort: dict,
                  if p["kind"] in ("pctl_run", "pctl_rrun")}
     presketch = None
     if pruns_pre and need_sort and bs is None and sort:
-        from maggma_spark.functions.partitioning import _numeric_key
+        from maggma_spark.functions.partitioning import (
+            _numeric_key,
+            thin_boundaries,
+        )
 
         first_key = next(iter(sort))
         nkey = _numeric_key(df, first_key)
@@ -3419,35 +3059,17 @@ def _swf_global(df: DataFrame, spec: dict, sort: dict,
                                    F.max(v).alias(f"__hi_{o}")]
             prow = df.agg(*probe_aggs).first()
             total_pre = prow["__n"]
-            # boundary thinning — same rule as range_boundaries
-            bvals = sorted({x for x in (prow["__bs"] or [])
-                            if x is not None})
-            mrr = _min_rows_per_range(spark)
-            if mrr and bvals:
-                want = max(8, min(n_tgt, total_pre // mrr))
-                if want < len(bvals) + 1:
-                    bvals = sorted({
-                        bvals[min(len(bvals) - 1,
-                                  round(j * (len(bvals) + 1) / want)
-                                  - 1)]
-                        for j in range(1, want)})
-            bs = bvals
-            if pctl_approx:
-                V = int(spark.conf.get(
-                    "spark.maggma.windowPctl.approxBuckets", "0")) \
-                    or max(2, min(64, total_pre // 1024 + 2))
-                V = max(2, min(64, V))
-            else:
-                # data-mass floor only — same round-13 decoupling
-                # from shuffle.partitions as _global_running_pctl
-                V = max(2, min(64, total_pre // 10_000 + 2))
-            vbs_by_ak = {}
-            for ak, o in ak_rep.items():
-                sk = sorted(x for x in (prow[f"__sk_{o}"] or [])
-                            if x is not None)
-                vbs_by_ak[ak] = sorted(
-                    {sk[(len(sk) * i) // V] for i in range(1, V)}) \
-                    if sk else []
+            bs = thin_boundaries(
+                sorted({x for x in (prow["__bs"] or []) if x is not None}),
+                total_pre, n_tgt, _min_rows_per_range(spark))
+            V = _pctl_bucket_count(total_pre, pctl_approx, int(
+                spark.conf.get("spark.maggma.windowPctl.approxBuckets",
+                               "0")))
+            vbs_by_ak = {
+                ak: _equi_depth_splits(
+                    sorted(x for x in (prow[f"__sk_{o}"] or [])
+                           if x is not None), V)
+                for ak, o in ak_rep.items()}
             presketch = {"V": V, "ak_rep": ak_rep,
                          "vbs": vbs_by_ak, "row": prow}
 
@@ -3512,15 +3134,10 @@ def _swf_global(df: DataFrame, spec: dict, sort: dict,
         # every per-bucket sum — O(V^2) expression evaluations per row
         # that doubled the 10M probe; this is the same
         # multiply-referenced-alias fix as the round-11 ladder work.
-        hbcols: dict = {}
-        for ak, rep in presketch["ak_rep"].items():
-            vd = f"cast(`__gw_v_{rep}` as double)"
-            ladder = " + ".join(
-                f"cast({vd} > CAST('{float(x)!r}' AS DOUBLE) as int)"
-                for x in presketch["vbs"][ak]) or "0"
-            hbcols[f"__gw_hb_{rep}"] = F.expr(
-                f"case when {vd} is not null then {ladder} end")
-        ranged = ranged.withColumns(hbcols)
+        ranged = ranged.withColumns({
+            f"__gw_hb_{rep}": _bucket_index(
+                f"cast(`__gw_v_{rep}` as double)", presketch["vbs"][ak])
+            for ak, rep in presketch["ak_rep"].items()})
 
     range_plans = {o: p for o, p in plans.items()
                    if p["kind"] in range_kinds}
@@ -4411,7 +4028,6 @@ def _swf_global(df: DataFrame, spec: dict, sort: dict,
                 sp["hi"] = max(his) if his else None
             specs.append(sp)
         ranged = _global_running_pctl(ranged, total_rows, specs,
-                                      n_ranges=len(parts),
                                       approx=pctl_approx)
     return ranged.drop(*[c for c in ranged.columns
                          if c.startswith("__gw_")])
@@ -4900,8 +4516,7 @@ def _partitioned_running_pctl_approx(
     # CSE to rescue it — measured ~80 us/row at G=16, round-11);
     # CollapseProject cannot inline a non-cheap multiply-referenced
     # alias, so the attribute form evaluates the ladder once per
-    # (row, p) — the same house trick as the exact router's cum
-    # arrays
+    # (row, p)
     bcols = {}
     for pi, pv in enumerate(ps):
         q = F.lit(float(pv)) * (m - 1) + F.lit(1.0)

@@ -58,6 +58,22 @@ def _numeric_key(df: DataFrame, field: str) -> Optional[Column]:
     return None
 
 
+def thin_boundaries(bs: list, total: int, num_ranges: int,
+                    min_rows_per_range: int | None) -> list:
+    """Thin ascending split values `bs` (the fine i/num_ranges grid)
+    so each range holds at least `min_rows_per_range` of `total` rows,
+    floored at 8 ranges and capped at `num_ranges`: keeps the
+    quantiles at j/want, j = 1..want-1 (closest index). A falsy
+    `min_rows_per_range` or an empty grid returns `bs` unchanged."""
+    if not min_rows_per_range or not bs:
+        return bs
+    want = max(8, min(num_ranges, total // min_rows_per_range))
+    if want >= len(bs) + 1:
+        return bs
+    return sorted({bs[min(len(bs) - 1, round(j * (len(bs) + 1) / want) - 1)]
+                   for j in range(1, want)})
+
+
 def range_boundaries(df: DataFrame, field: str, num_ranges: int,
                      min_rows_per_range: int | None = None,
                      with_total: bool = False):
@@ -68,36 +84,24 @@ def range_boundaries(df: DataFrame, field: str, num_ranges: int,
     a count to size the fraction, then the sample collect).
 
     `with_total` (round-13): return `(boundaries, total)` where
-    `total` is the row count the probe already computed (exact full
-    count on the numeric path; non-null-key count on the sample
-    path; None when the probe collapsed to no action). Callers use
-    it to bound broadcast decisions without paying a second action.
+    `total` is the full row count (null keys included) the probe
+    already computed — None when the probe collapsed to no action.
+    Callers use it to bound broadcast decisions without paying a
+    second action.
 
     `min_rows_per_range` (round-9): when set, the row count piggybacks
-    on the same action and the split grid is THINNED so each range
-    holds at least that many rows (floored at 8 ranges, capped at
-    `num_ranges`). Rationale: every downstream per-range stage
-    schedules one task per range, and at small data the fixed task
-    latency dominates the work — measured at sf0.1, 32 -> 8 ranges cut
-    the three global-window bench rows ~25-35% with identical results.
-    At large data `total / min_rows` exceeds `num_ranges`, so the cap
-    keeps full parallelism — the thinning only ever shrinks SMALL
-    jobs."""
+    on the same action and the split grid is THINNED (thin_boundaries)
+    so each range holds at least that many rows (floored at 8 ranges,
+    capped at `num_ranges`). Rationale: every downstream per-range
+    stage schedules one task per range, and at small data the fixed
+    task latency dominates the work — measured at sf0.1, 32 -> 8
+    ranges cut the three global-window bench rows ~25-35% with
+    identical results. At large data `total / min_rows` exceeds
+    `num_ranges`, so the cap keeps full parallelism — the thinning
+    only ever shrinks SMALL jobs. The sample path thins and sizes its
+    sample fraction by the non-null-key count."""
     if num_ranges < 2:
         return ([], None) if with_total else []
-
-    def thin(bs: list, total: int) -> list:
-        if not min_rows_per_range or not bs:
-            return bs
-        want = max(8, min(num_ranges, total // min_rows_per_range))
-        if want >= len(bs) + 1:
-            return bs
-        # keep the quantiles at j/want, j = 1..want-1, from the fine
-        # i/num_ranges grid (closest index)
-        picked = {bs[min(len(bs) - 1,
-                         round(j * (len(bs) + 1) / want) - 1)]
-                  for j in range(1, want)}
-        return sorted(picked)
 
     key = _numeric_key(df, field)
     if key is not None:
@@ -109,22 +113,25 @@ def range_boundaries(df: DataFrame, field: str, num_ranges: int,
             F.count(F.lit(1)).alias("n")).first()
         vals = row["qs"] if row and row["qs"] is not None else []
         n_total = row["n"] if row else 0
-        bs_out = thin(sorted({v for v in vals if v is not None}),
-                      n_total)
+        bs_out = thin_boundaries(sorted({v for v in vals if v is not None}),
+                                 n_total, num_ranges, min_rows_per_range)
         return (bs_out, n_total) if with_total else bs_out
+    counts = df.agg(F.count(F.lit(1)).alias("n"),
+                    F.count(F.col(field)).alias("nn")).first()
+    n_total, nn_total = counts["n"], counts["nn"]
+    if nn_total == 0:
+        return ([], n_total) if with_total else []
+    frac = min(1.0, _SAMPLE_ROWS / nn_total)
     nn = df.select(F.col(field).alias("k")).filter(F.col("k").isNotNull())
-    total = nn.count()
-    if total == 0:
-        return ([], total) if with_total else []
-    frac = min(1.0, _SAMPLE_ROWS / total)
     sample = sorted(r["k"] for r in nn.sample(False, frac, seed=42)
                     .collect())
     if not sample:
-        return ([], total) if with_total else []
+        return ([], n_total) if with_total else []
     bs = {sample[(len(sample) * i) // num_ranges]
           for i in range(1, num_ranges)}
-    bs_out = thin(sorted(bs), total)
-    return (bs_out, total) if with_total else bs_out
+    bs_out = thin_boundaries(sorted(bs), nn_total, num_ranges,
+                             min_rows_per_range)
+    return (bs_out, n_total) if with_total else bs_out
 
 
 def range_pid(df: DataFrame, field: str, boundaries: list,

@@ -785,7 +785,12 @@ def fuzzy_pairs(
          .filter(F.when(F.col("__bn") <= F.lit(max_block_rows),
                         F.lit(True))
                  .otherwise(F.raise_error(F.concat(
-                     F.lit("block "), F.col("__blk"),
+                     F.lit("block "),
+                     # a NULL block key would null the whole message
+                     # (the join's inferred not-null filter normally
+                     # drops NULL keys before this count)
+                     F.coalesce(F.col("__blk").cast("string"),
+                                F.lit("null")),
                      F.lit(" has "), F.col("__bn").cast("string"),
                      F.lit(f" rows (> max_block_rows="
                            f"{max_block_rows}); refine the blocking "

@@ -279,15 +279,9 @@ class MinHashIndex:
         # at bench SF but only after materializing both shuffle map
         # sides first (one extra job + exchange per join), and at
         # 100 TB the static hint is the difference between shuffling
-        # the corpus per micro-batch and not. Escape hatch:
-        # spark.maggma.index.ingestBroadcastHints=false restores the
-        # planner's choice (e.g. giant micro-batches).
-        hint_small = _keys_only and (
-            bsigs.sparkSession.conf.get(
-                "spark.maggma.index.ingestBroadcastHints", "true")
-            == "true")
+        # the corpus per micro-batch and not.
         pairs = (
-            (F.broadcast(b) if hint_small else b)
+            (F.broadcast(b) if _keys_only else b)
             .join(c, on=["band", "bhash"])
             .filter(F.col("key_new") != F.col("key_old"))
             # within-batch pairs: one orientation only (larger key is
@@ -319,7 +313,7 @@ class MinHashIndex:
         # it means the corpus sh_hashes arrays (sh_old) never shuffle,
         # which is the "signatures never shuffle" layout contract
         # applied to the verify join too
-        if hint_small:
+        if _keys_only:
             joined = F.broadcast(
                 pairs.join(F.broadcast(sh_new), on="key_new")
             ).join(sh_old, on="key_old")

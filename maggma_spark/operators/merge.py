@@ -694,7 +694,9 @@ def apply_cdc(
     checked = changes.withColumn(
         op_col,
         F.when(ok, F.col(op_col)).otherwise(F.raise_error(F.concat(
-            F.lit(f"unknown {op_col} value: "), F.col(op_col)))))
+            F.lit(f"unknown {op_col} value: "),
+            # a NULL op would null the whole message
+            F.coalesce(F.col(op_col).cast("string"), F.lit("null"))))))
     upserts = (checked.filter(F.col(op_col) != "delete")
                .drop(op_col)
                .select(*[c for c in changes.columns if c != op_col]))

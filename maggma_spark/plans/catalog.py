@@ -7087,13 +7087,7 @@ def window_pctl_approx_bound(spark, sf):
     reverse direction and the rank bound on random data are pinned by
     tests/test_global_window_property.py). The oracle pins zero
     violations plus both row counts. Confs flip around compile only:
-    routing and bucket edges bake in at compile time. The global leg
-    pins approxAssembly=kernel: round-11's auto picks the kernel at
-    every size anyway (the group-space rewrite made it uniformly
-    faster), so the pin now only guards against future auto changes —
-    the scale path stays oracle-checked every rotation; the wide
-    assembly stays pinned bit-equal by
-    test_global_pctl_approx_assemblies_agree."""
+    routing and bucket edges bake in at compile time."""
     from maggma_spark.functions.agg_pipeline import compile_pipeline
 
     orders = table_store(spark, sf, "orders").df
@@ -7105,11 +7099,9 @@ def window_pctl_approx_bound(spark, sf):
     # clear any user- or caller-set engine mode for the session
     prior = {c: spark.conf.get(c, None) for c in
              ("spark.maggma.windowPctl.method",
-              "spark.maggma.windowPctl.approxBuckets",
-              "spark.maggma.windowPctl.approxAssembly")}
+              "spark.maggma.windowPctl.approxBuckets")}
     spark.conf.set("spark.maggma.windowPctl.method", "approximate")
     spark.conf.set("spark.maggma.windowPctl.approxBuckets", "16")
-    spark.conf.set("spark.maggma.windowPctl.approxAssembly", "kernel")
     try:
         gout = compile_pipeline(gbase, [{"$setWindowFields": {
             "sortBy": {"k": 1},

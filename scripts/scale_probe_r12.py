@@ -1,5 +1,5 @@
 """Round-12 window-percentile scale probe (local[32], synthetic 10M
-rows) — successor to scale_probe_r11.py (r11 verdict next #3).
+rows) — successor to the round-11 probe (r11 verdict next #3).
 
 What changed in the methodology: the r11 probe timed each variant's
 FIRST execution in a fresh JVM, so its headline number was dominated
@@ -61,10 +61,8 @@ def main():
             .mode("overwrite").save()
         return round(time.perf_counter() - t0, 1)
 
-    # 1. approximate kernel (the default assembly): cold first run,
-    # then warm min-of-2
+    # 1. approximate kernel: cold first run, then warm min-of-2
     spark.conf.set("spark.maggma.windowPctl.method", "approximate")
-    spark.conf.set("spark.maggma.windowPctl.approxAssembly", "kernel")
     out["approx_kernel_cold_sec"] = run(frame(n), pipe)
     out["approx_kernel_warm_sec"] = min(
         run(frame(n), pipe) for _ in range(2))
@@ -83,9 +81,8 @@ def main():
         }}}]
     out["approx_tied_range_sec"] = run(tied, tpipe)
     spark.conf.unset("spark.maggma.windowPctl.method")
-    spark.conf.unset("spark.maggma.windowPctl.approxAssembly")
 
-    # 3. exact kernel router (the engine default), warm-ish by now
+    # 3. exact path (the engine default), warm-ish by now
     out["exact_kernel_sec"] = run(frame(n), pipe)
 
     out["loadavg"] = [round(x, 1) for x in os.getloadavg()]

@@ -25,6 +25,53 @@ rows_strategy = st.lists(
 )
 
 
+def _skey(k):
+    # Spark's double order: NaN sorts after +inf and ties other NaNs
+    return (1, 0.0) if k != k else (0, k)
+
+
+def _range_frame(got, r, fwd=True):
+    """Non-null values of row r's running value-range frame over
+    sortBy k under SQL framing (asc nulls first): UNBOUNDED PRECEDING
+    starts at the partition start, so leading null-key rows sit inside
+    every non-null row's forward frame, while a null-key row's forward
+    frame is just the null peer group and its reverse frame the whole
+    partition. (Mongo rejects null range sort keys, so DuckDB is the
+    semantic reference.)"""
+    if r["k"] is None:
+        rows = [x for x in got if x["k"] is None] if fwd else got
+    elif fwd:
+        rows = [x for x in got
+                if x["k"] is None or _skey(x["k"]) <= _skey(r["k"])]
+    else:
+        rows = [x for x in got if x["k"] is not None
+                and _skey(x["k"]) >= _skey(r["k"])]
+    return [x["v"] for x in rows if x["v"] is not None]
+
+
+def _rank_err(frame, val, p):
+    """Distance of `val`'s rank range in `frame` from the target rank
+    p*(n-1); 0 when a copy of val sits at the target."""
+    import numpy as np
+
+    a = np.sort(np.array(frame))
+    lo = np.searchsorted(a, val, side="left")
+    hi = np.searchsorted(a, val, side="right")
+    target = p * (len(a) - 1)
+    if lo <= target <= hi:
+        return 0.0
+    return min(abs(lo - target), abs(hi - target))
+
+
+def _approx_bound(rows, buckets=16):
+    # equi-depth thinning plus split dedup: a bucket holds ~n/V
+    # elements, except every copy of one tied value collapses into
+    # one bucket — the bound must cover the heaviest tie
+    nn = [r[-1] for r in rows if r[-1] is not None]
+    maxmult = max((nn.count(x) for x in set(nn)), default=0)
+    return max(len(nn) // buckets + 2, maxmult) + 1
+
+
 @given(rows=rows_strategy)
 @settings(max_examples=15, deadline=None)
 def test_swf_global_running_aggs_match_reference(spark, rows):
@@ -214,12 +261,8 @@ def test_swf_global_running_range_percentile_matches_reference(
         spark, rows):
     """Round-8 pctl_rrun: unpartitioned running $median over a VALUE
     RANGE frame ['unbounded','current'] — ties by sort value enter
-    each other's prefix. SQL null framing (Mongo rejects null range
-    sort keys, so DuckDB is the semantic reference, checked by hand):
-    UNBOUNDED PRECEDING starts at the partition start, so leading
-    null-key rows sit inside every non-null row's frame, while a
-    null-key row's own frame is just the null peer group. Replayed
-    sequentially with numpy."""
+    each other's prefix, under SQL null framing (see _range_frame).
+    Replayed sequentially with numpy."""
     import numpy as np
 
     df = spark.createDataFrame(rows, "k int, v double")
@@ -233,13 +276,7 @@ def test_swf_global_running_range_percentile_matches_reference(
         }}}])
     got = out.collect()
     for r in got:
-        if r["k"] is None:
-            frame = [x["v"] for x in got
-                     if x["k"] is None and x["v"] is not None]
-        else:
-            frame = [x["v"] for x in got
-                     if (x["k"] is None or x["k"] <= r["k"])
-                     and x["v"] is not None]
+        frame = _range_frame(got, r)
         if not frame:
             assert r["med"] is None, r
             continue
@@ -322,13 +359,7 @@ def test_swf_global_reverse_running_percentile_matches_reference(
     for idx, r in enumerate(got):
         check(r["mdoc"], [x["v"] for x in got[idx:]
                           if x["v"] is not None])
-        if r["k"] is None:
-            frame = [x["v"] for x in got if x["v"] is not None]
-        else:
-            frame = [x["v"] for x in got
-                     if x["k"] is not None and x["k"] >= r["k"]
-                     and x["v"] is not None]
-        check(r["mrange"], frame)
+        check(r["mrange"], _range_frame(got, r, fwd=False))
 
 
 @given(rows=rows_strategy)
@@ -377,8 +408,6 @@ def test_swf_global_running_percentile_approx_rank_bound(spark, rows):
     sit within one bucket's mass of the target rank — forward
     documents, reverse documents, and running range frames, fused.
     Nulls must align with the exact path's (empty prefix -> null)."""
-    import numpy as np
-
     df = spark.createDataFrame(rows, "k int, v double")
     pipe = [{"$setWindowFields": {
         "sortBy": {"k": 1},
@@ -404,39 +433,17 @@ def test_swf_global_running_percentile_approx_rank_bound(spark, rows):
         spark.conf.unset("spark.maggma.windowPctl.method")
         spark.conf.unset("spark.maggma.windowPctl.approxBuckets")
 
-    nn = [v for _, v in rows if v is not None]
-    # equi-depth thinning plus split dedup: a bucket holds ~n/16
-    # elements, except every copy of one tied value collapses into
-    # one bucket — the bound must cover the heaviest tie
-    maxmult = max((nn.count(x) for x in set(nn)), default=0)
-    bound = max(len(nn) // 16 + 2, maxmult) + 1
-
-    def rank_err(frame, val, p):
-        a = np.sort(np.array(frame))
-        lo = np.searchsorted(a, val, side="left")
-        hi = np.searchsorted(a, val, side="right")
-        target = p * (len(a) - 1)
-        if lo <= target <= hi:
-            return 0.0
-        return min(abs(lo - target), abs(hi - target))
-
+    bound = _approx_bound(rows)
     for i, r in enumerate(got):
         pref = [x["v"] for x in got[: i + 1] if x["v"] is not None]
         suf = [x["v"] for x in got[i:] if x["v"] is not None]
-        if r["k"] is None:
-            rng = [x["v"] for x in got
-                   if x["k"] is None and x["v"] is not None]
-        else:
-            rng = [x["v"] for x in got
-                   if (x["k"] is None or x["k"] <= r["k"])
-                   and x["v"] is not None]
         for col, frame in (("med", pref), ("med_rev", suf),
-                           ("med_rng", rng)):
+                           ("med_rng", _range_frame(got, r))):
             if not frame:
                 assert r[col] is None, (col, r)
                 continue
             assert r[col] is not None, (col, r)
-            assert rank_err(frame, r[col], 0.5) <= bound, \
+            assert _rank_err(frame, r[col], 0.5) <= bound, \
                 (col, r, frame, bound)
 
 
@@ -532,8 +539,6 @@ def test_partitioned_running_percentile_approx_rank_bound(spark, rows):
     running-percentile frame. The answer's RANK among the group
     frame's non-null values must sit within one bucket's mass of the
     target rank, forward AND reverse; empty frames emit null."""
-    import numpy as np
-
     data = [(k if k is not None else -9, i, v)
             for i, (k, v) in enumerate(rows)]
     df = spark.createDataFrame(data, "g int, i int, v double")
@@ -560,26 +565,15 @@ def test_partitioned_running_percentile_approx_rank_bound(spark, rows):
         spark.conf.unset("spark.maggma.windowPctl.method")
         spark.conf.unset("spark.maggma.windowPctl.approxBuckets")
 
-    def rank_err(frame, val, p):
-        a = np.sort(np.array(frame))
-        lo = np.searchsorted(a, val, side="left")
-        hi = np.searchsorted(a, val, side="right")
-        t = p * (len(a) - 1)
-        if lo <= t <= hi:
-            return 0.0
-        return min(abs(lo - t), abs(hi - t))
-
     groups: dict = {}
     for g, i, v in data:
         groups.setdefault(g, []).append((i, v))
     for g, items in groups.items():
         items.sort()
         vals = [v for _, v in items]
-        nn = [v for v in vals if v is not None]
-        maxmult = max((nn.count(x) for x in set(nn)), default=0)
         # sketch accuracy adds nothing at these sizes; ties collapse
         # into one bucket like the global path
-        bound = max(len(nn) // 8 + 2, maxmult) + 1
+        bound = _approx_bound(items, buckets=8)
         for idx, (i, _v) in enumerate(items):
             r = got[(g, i)]
             pref = [x for x in vals[:idx + 1] if x is not None]
@@ -590,13 +584,13 @@ def test_partitioned_running_percentile_approx_rank_bound(spark, rows):
                     assert r[col] is None, (g, i, col, r[col])
                     continue
                 assert r[col] is not None, (g, i, col)
-                assert rank_err(frame, r[col], p) <= bound, \
+                assert _rank_err(frame, r[col], p) <= bound, \
                     (g, i, col, r[col], frame, bound)
             # running RANGE frame: i is unique per group, so the
             # range prefix equals the documents prefix
             if pref:
                 assert r["q3_rng"] is not None
-                assert rank_err(pref, r["q3_rng"][0], 0.75) <= bound, \
+                assert _rank_err(pref, r["q3_rng"][0], 0.75) <= bound, \
                     (g, i, r["q3_rng"], pref, bound)
             else:
                 assert r["q3_rng"] is None \
@@ -717,107 +711,128 @@ def test_global_integral_tied_sort_keys_range_frames(spark):
                             rel_tol=1e-9, abs_tol=1e-9), (r, want_fin)
 
 
-def test_global_pctl_approx_assemblies_agree(spark):
-    """The two approximate global assemblies (wide SQL form vs the
-    round-10 numpy kernel) implement the SAME bucket interpolation
-    arithmetic in the same IEEE op order, so on identical inputs they
-    must agree bit-for-bit — forward, reverse, and range frames, with
-    null values and null sort keys in the mix."""
-    rows = [(i, i if i % 7 else None,
-             float((i * 13) % 101) if i % 5 else None)
-            for i in range(500)]
-    df = spark.createDataFrame(rows, "rid int, k int, v double")
-    pipe = [{"$setWindowFields": {
-        "sortBy": {"k": 1},
-        "output": {
-            "med": {"$median": {"input": "$v",
-                                "method": "approximate"},
-                    "window": {"documents": ["unbounded", "current"]}},
-            "qs_rev": {"$percentile": {"input": "$v",
-                                       "p": [0.25, 0.75],
-                                       "method": "approximate"},
-                       "window": {"documents": ["current",
-                                                "unbounded"]}},
-            "med_rng": {"$median": {"input": "$v",
-                                    "method": "approximate"},
-                        "window": {"range": ["unbounded", "current"]}},
-        }}}]
-    outs = {}
-    prior = {c: spark.conf.get(c, None) for c in
-             ("spark.maggma.windowPctl.method",
-              "spark.maggma.windowPctl.approxAssembly")}
-    spark.conf.set("spark.maggma.windowPctl.method", "approximate")
+APPROX = {"spark.maggma.windowPctl.method": "approximate",
+          "spark.maggma.windowPctl.approxBuckets": "16"}
+
+# requested percentiles per output of the replay pipelines below
+PCTL_PS = {"med": [0.5], "qs_rev": [0.25, 0.75], "med_rng": [0.5],
+           "med_rrev": [0.5]}
+
+
+def _run(spark, df, pipe, key, confs=None):
+    """compile + collect (as dicts sorted by `key`) under temporarily
+    set engine confs."""
+    confs = confs or {}
+    prior = {c: spark.conf.get(c, None) for c in confs}
+    for c, v in confs.items():
+        spark.conf.set(c, v)
     try:
-        for asm in ("kernel", "wide"):
-            spark.conf.set(
-                "spark.maggma.windowPctl.approxAssembly", asm)
-            outs[asm] = sorted(
-                compile_pipeline(df, pipe).collect(),
-                key=lambda r: r["rid"])
+        return sorted((r.asDict() for r in
+                       compile_pipeline(df, pipe).collect()),
+                      key=lambda r: r[key])
     finally:
         for c, v in prior.items():
             if v is None:
                 spark.conf.unset(c)
             else:
                 spark.conf.set(c, v)
-    assert len(outs["kernel"]) == len(outs["wide"]) == len(rows)
-    for a, b in zip(outs["kernel"], outs["wide"]):
-        assert a == b, (a, b)
 
 
-def test_global_exact_pctl_routers_agree(spark):
-    """Round-10 exact-path router: the cogroup numpy kernel (default)
-    and the SQL cumulative-window form (exactRouter=window) feed the
-    same selection kernel the same queries, so on identical inputs —
-    duplicate-heavy sort keys, null values, null sort keys, forward,
-    reverse, and value-range frames — the outputs must agree
-    bit-for-bit."""
+def _pctl_pipe(*cols):
+    frames = {"med": ("documents", ["unbounded", "current"]),
+              "qs_rev": ("documents", ["current", "unbounded"]),
+              "med_rng": ("range", ["unbounded", "current"]),
+              "med_rrev": ("range", ["current", "unbounded"])}
+    out = {"dn": {"$documentNumber": {}}}
+    for c in cols:
+        op = ({"$median": {"input": "$v", "method": "approximate"}}
+              if c != "qs_rev" else
+              {"$percentile": {"input": "$v", "p": PCTL_PS[c],
+                               "method": "approximate"}})
+        kind, frame = frames[c]
+        out[c] = {**op, "window": {kind: frame}}
+    return [{"$setWindowFields": {"sortBy": {"k": 1}, "output": out}}]
+
+
+def _check_pctl_replay(got, cols, bound=None):
+    """Replay every output of _pctl_pipe over `got` (in dn order):
+    null exactly when the frame holds no non-null value; otherwise
+    np.quantile's interpolation (exact mode, bound=None) or a rank
+    error within `bound` (approximate mode)."""
+    import numpy as np
+
+    for i, r in enumerate(got):
+        frames = {
+            "med": [x["v"] for x in got[:i + 1] if x["v"] is not None],
+            "qs_rev": [x["v"] for x in got[i:] if x["v"] is not None],
+            "med_rng": _range_frame(got, r),
+            "med_rrev": _range_frame(got, r, fwd=False)}
+        for c in cols:
+            vals = r[c] if isinstance(r[c], list) else [r[c]]
+            if not frames[c]:
+                assert r[c] is None or vals == [None] * len(vals), (c, r)
+                continue
+            for val, p in zip(vals, PCTL_PS[c]):
+                assert val is not None, (c, r)
+                if bound is None:
+                    exp = float(np.quantile(np.array(frames[c]), p))
+                    assert math.isclose(val, exp, rel_tol=1e-12,
+                                        abs_tol=1e-9), (c, r, exp)
+                else:
+                    assert _rank_err(frames[c], val, p) <= bound, \
+                        (c, r, frames[c], bound)
+
+
+def _pctl_replay_inputs(spark):
+    """Duplicate-heavy sort keys, null values and null sort keys, with
+    the same rows once under an int sortBy and once under a string
+    sortBy ("k0".."k8" order like 0..8). A string sortBy has no
+    numeric probe, so its value histograms take the distributed fold
+    instead of riding the boundary aggregate (documents frames only: a
+    range frame needs a numeric axis)."""
+    from pyspark.sql import functions as F
+
     rows = [(i, i % 9 if i % 7 else None,
              float((i * 13) % 101) if i % 5 else None)
             for i in range(400)]
     df = spark.createDataFrame(rows, "rid int, k int, v double")
-    pipe = [{"$setWindowFields": {
-        "sortBy": {"k": 1},
-        "output": {
-            "med": {"$median": {"input": "$v",
-                                "method": "approximate"},
-                    "window": {"documents": ["unbounded", "current"]}},
-            "qs_rev": {"$percentile": {"input": "$v",
-                                       "p": [0.25, 0.75],
-                                       "method": "approximate"},
-                       "window": {"documents": ["current",
-                                                "unbounded"]}},
-            "med_rng": {"$median": {"input": "$v",
-                                    "method": "approximate"},
-                        "window": {"range": ["unbounded", "current"]}},
-        }}}]
-    prior = spark.conf.get("spark.maggma.windowPctl.exactRouter", None)
-    outs = {}
-    try:
-        for router in ("kernel", "window"):
-            spark.conf.set("spark.maggma.windowPctl.exactRouter",
-                           router)
-            outs[router] = sorted(
-                compile_pipeline(df, pipe).collect(),
-                key=lambda r: r["rid"])
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.maggma.windowPctl.exactRouter")
-        else:
-            spark.conf.set("spark.maggma.windowPctl.exactRouter",
-                           prior)
-    assert len(outs["kernel"]) == len(outs["window"]) == len(rows)
-    for a, b in zip(outs["kernel"], outs["window"]):
-        assert a == b, (a, b)
+    sdf = df.withColumn("k", F.concat(F.lit("k"), F.col("k")))
+    return rows, ((df, tuple(PCTL_PS)), (sdf, ("med", "qs_rev")))
+
+
+def test_global_exact_pctl_routers_agree(spark):
+    """The exact global running-percentile kernel, routed through the
+    boundary-aggregate probe (int sortBy) and through the distributed
+    histogram fold (string sortBy), agrees with np.quantile's
+    interpolation in the sequential numpy replay — forward and reverse
+    documents frames, forward and reverse value ranges."""
+    _, legs = _pctl_replay_inputs(spark)
+    for frame, cols in legs:
+        pipe = _pctl_pipe(*cols)
+        _check_pctl_replay(_run(spark, frame, pipe, "dn"), cols)
+
+
+def test_global_pctl_approx_assemblies_agree(spark):
+    """The approximate global running-percentile kernel on the same
+    two routes agrees with the numpy replay: the same null pattern
+    (null iff the frame is empty) and a rank error within one
+    bucket's mass."""
+    rows, legs = _pctl_replay_inputs(spark)
+    for frame, cols in legs:
+        pipe = _pctl_pipe(*cols)
+        _check_pctl_replay(_run(spark, frame, pipe, "dn", APPROX), cols,
+                           bound=_approx_bound(rows))
 
 
 def test_global_pctl_infinite_sort_keys_peer_groups(spark):
     """Round-11 (r10 ADVICE): genuine IEEE infinities in the sort
     axis must stay DISTINCT peer groups from the null peer group in
     the percentile kernels — the former -inf/+inf null sentinels
-    merged them. Pins kernel == SQL form for BOTH the exact router
-    and the approximate assembly on forward and reverse value-range
-    frames over a key mix of -inf/+inf/null/NaN/tied finite values.
+    merged them. Checks both kernels on forward and reverse
+    value-range frames over a key mix of -inf/+inf/null/NaN/tied
+    finite values: the exact one against the replay and the closed
+    forms below, the approximate one against the same null pattern
+    and the one-bucket rank bound.
 
     Round-12 (r11 ADVICE): genuine IEEE NaN sort keys are their own
     peer group AFTER +inf (Spark orders NaN greater than any double),
@@ -843,63 +858,21 @@ def test_global_pctl_infinite_sort_keys_peer_groups(spark):
     keys = keys + [(nan, 50.0), (nan, 60.0)]
     rows = [(i, k, v) for i, (k, v) in enumerate(keys)]
     df = spark.createDataFrame(rows, "rid int, k double, v double")
-    pipe = [{"$setWindowFields": {
-        "sortBy": {"k": 1},
-        "output": {
-            "med_rng": {"$median": {"input": "$v",
-                                    "method": "approximate"},
-                        "window": {"range": ["unbounded", "current"]}},
-            "med_rev": {"$median": {"input": "$v",
-                                    "method": "approximate"},
-                        "window": {"range": ["current",
-                                             "unbounded"]}},
-        }}}]
-    prior = {c: spark.conf.get(c, None) for c in
-             ("spark.maggma.windowPctl.method",
-              "spark.maggma.windowPctl.approxAssembly",
-              "spark.maggma.windowPctl.exactRouter")}
-    outs = {}
-    try:
-        # exact: kernel router vs SQL window router
-        for router in ("kernel", "window"):
-            spark.conf.set("spark.maggma.windowPctl.exactRouter",
-                           router)
-            outs[f"x_{router}"] = sorted(
-                compile_pipeline(df, pipe).collect(),
-                key=lambda r: r["rid"])
-        spark.conf.unset("spark.maggma.windowPctl.exactRouter")
-        # approximate: numpy kernel assembly vs wide SQL assembly
-        spark.conf.set("spark.maggma.windowPctl.method", "approximate")
-        for asm in ("kernel", "wide"):
-            spark.conf.set(
-                "spark.maggma.windowPctl.approxAssembly", asm)
-            outs[f"a_{asm}"] = sorted(
-                compile_pipeline(df, pipe).collect(),
-                key=lambda r: r["rid"])
-    finally:
-        for c, v in prior.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
-    import math
-
-    def same(x, y):
-        # field-wise Row compare that treats NaN == NaN (the NaN-key
-        # rows make plain Row equality always-false)
-        return x == y or (isinstance(x, float) and isinstance(y, float)
-                          and math.isnan(x) and math.isnan(y))
-
-    for a, b in zip(outs["x_kernel"], outs["x_window"]):
-        assert all(same(x, y) for x, y in zip(a, b)), (a, b)
-    for a, b in zip(outs["a_kernel"], outs["a_wide"]):
-        assert all(same(x, y) for x, y in zip(a, b)), (a, b)
+    cols = ("med_rng", "med_rrev")
+    pipe = _pctl_pipe(*cols)
+    exact = _run(spark, df, pipe, "rid")
+    approx = _run(spark, df, pipe, "rid", APPROX)
+    _check_pctl_replay(exact, cols)
+    _check_pctl_replay(approx, cols, bound=_approx_bound(rows))
+    for a, x in zip(approx, exact):
+        for c in cols:
+            assert (a[c] is None) == (x[c] is None), (c, a, x)
     # SQL framing (asc nulls first): a null-key row's forward range
     # frame is the null PEER GROUP only (median 2.5) — under the old
     # sentinel merge it would also see the -inf values (median 4.0);
     # a -inf row's frame is nulls + -inf ties (unbounded preceding
     # covers the nulls-first block)
-    byrid = {r["rid"]: r for r in outs["x_kernel"]}
+    byrid = {r["rid"]: r for r in exact}
     assert byrid[3]["med_rng"] == 2.5
     assert byrid[0]["med_rng"] == 4.0  # median(1,2,3,4,100,200,300)
     # NaN peer group sorts after +inf: its reverse frame is itself
@@ -907,8 +880,8 @@ def test_global_pctl_infinite_sort_keys_peer_groups(spark):
     # inf ties + the NaN block (median(7, 50, 60) = 50.0) — under
     # the NaN==null fold both frames would cover the null block too
     for r in nan_rids:
-        assert byrid[r]["med_rev"] == 55.0
-    assert byrid[7]["med_rev"] == 50.0
+        assert byrid[r]["med_rrev"] == 55.0
+    assert byrid[7]["med_rrev"] == 50.0
 
 
 def test_swf_global_compile_two_driver_actions(spark, monkeypatch):
@@ -975,63 +948,29 @@ def test_pctl_kernels_chunk_boundaries(spark, monkeypatch):
     """The kernels' chunked group traversal must be invisible: with
     the chunk size shrunk to 7 groups (forcing many boundary
     crossings, including mid-tie-group carried bases) both the exact
-    router and the approximate assembly must still match their SQL
-    forms bit-for-bit. Guards the carried-base/offset arithmetic that
-    the default 65536-group chunk never exercises on test-sized
-    frames."""
+    and the approximate kernel must return bit-for-bit what the
+    default 65536-group chunk returns, and the exact one must still
+    match the replay. Guards the carried-base/offset arithmetic that
+    the default chunk never exercises on test-sized frames."""
     import maggma_spark.functions.agg_pipeline as ap
 
-    monkeypatch.setattr(ap, "_PCTL_KERNEL_CHUNK_GROUPS", 7)
     rows = [(i, i % 23 if i % 7 else None,
              float((i * 13) % 101) if i % 5 else None)
             for i in range(600)]
     df = spark.createDataFrame(rows, "rid int, k int, v double")
-    pipe = [{"$setWindowFields": {
-        "sortBy": {"k": 1},
-        "output": {
-            "med": {"$median": {"input": "$v",
-                                "method": "approximate"},
-                    "window": {"documents": ["unbounded", "current"]}},
-            "med_rng": {"$median": {"input": "$v",
-                                    "method": "approximate"},
-                        "window": {"range": ["unbounded", "current"]}},
-            "qs_rev": {"$percentile": {"input": "$v",
-                                       "p": [0.25, 0.75],
-                                       "method": "approximate"},
-                       "window": {"documents": ["current",
-                                                "unbounded"]}},
-        }}}]
-    prior = {c: spark.conf.get(c, None) for c in
-             ("spark.maggma.windowPctl.method",
-              "spark.maggma.windowPctl.approxAssembly",
-              "spark.maggma.windowPctl.exactRouter")}
+    cols = ("med", "med_rng", "qs_rev")
+    pipe = _pctl_pipe(*cols)
+    default = ap._PCTL_KERNEL_CHUNK_GROUPS
     outs = {}
-    try:
-        for router in ("kernel", "window"):
-            spark.conf.set("spark.maggma.windowPctl.exactRouter",
-                           router)
-            outs[f"x_{router}"] = sorted(
-                compile_pipeline(df, pipe).collect(),
-                key=lambda r: r["rid"])
-        spark.conf.unset("spark.maggma.windowPctl.exactRouter")
-        spark.conf.set("spark.maggma.windowPctl.method", "approximate")
-        for asm in ("kernel", "wide"):
-            spark.conf.set("spark.maggma.windowPctl.approxAssembly",
-                           asm)
-            outs[f"a_{asm}"] = sorted(
-                compile_pipeline(df, pipe).collect(),
-                key=lambda r: r["rid"])
-    finally:
-        for c, v in prior.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
-    assert len(outs["x_kernel"]) == len(rows)
-    for a, b in zip(outs["x_kernel"], outs["x_window"]):
-        assert a == b, (a, b)
-    for a, b in zip(outs["a_kernel"], outs["a_wide"]):
-        assert a == b, (a, b)
+    for chunk in (default, 7):
+        monkeypatch.setattr(ap, "_PCTL_KERNEL_CHUNK_GROUPS", chunk)
+        outs[chunk] = (_run(spark, df, pipe, "rid"),
+                       _run(spark, df, pipe, "rid", APPROX))
+    for leg in (0, 1):  # exact, approximate
+        assert len(outs[7][leg]) == len(rows)
+        for a, b in zip(outs[7][leg], outs[default][leg]):
+            assert a == b, (leg, a, b)
+    _check_pctl_replay(sorted(outs[7][0], key=lambda r: r["dn"]), cols)
 
 
 def test_fused_fill_shift_matches_sequential(spark):

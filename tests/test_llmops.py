@@ -723,3 +723,13 @@ def test_fuzzy_pairs_blocking_and_guard(spark):
     with pytest.raises(Exception, match="max_block_rows"):
         fuzzy_pairs(df, "k", "name", block=F.lit("x"),
                     max_block_rows=3).collect()
+    # the message names the block and its size
+    with pytest.raises(Exception, match=r"block x has 5 rows \(> "
+                       r"max_block_rows=3\); refine the blocking"):
+        fuzzy_pairs(df, "k", "name", block=F.lit("x"),
+                    max_block_rows=3).collect()
+    # NULL block keys never pair, and the join's inferred not-null
+    # filter drops them before the guard counts them
+    nulls = spark.createDataFrame(
+        [(i, None) for i in range(4)], "k long, name string")
+    assert fuzzy_pairs(nulls, "k", "name", max_block_rows=3).count() == 0

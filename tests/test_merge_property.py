@@ -71,6 +71,21 @@ def test_cdc_delta_apply_roundtrip_property(spark):
         apply_cdc(old, bad, "k").collect()
 
 
+def test_apply_cdc_null_op_message(spark):
+    """A NULL op value fails with a readable message: the in-plan
+    raise_error message must not collapse to NULL with its op."""
+    import pytest as _pt
+    from pyspark.sql import Row
+
+    from maggma_spark.operators.merge import apply_cdc
+
+    base = spark.createDataFrame([Row(k=1, v="a")])
+    bad = spark.createDataFrame([(2, "b", None)],
+                                "k long, v string, change_type string")
+    with _pt.raises(Exception, match="unknown change_type value: null"):
+        apply_cdc(base, bad, "k").collect()
+
+
 def test_table_checksums_detect_single_row_drift(spark):
     from pyspark.sql import Row, functions as F
 

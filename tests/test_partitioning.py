@@ -82,6 +82,20 @@ def test_timestamp_and_string_keys(spark):
         assert stats_s[p][1] < stats_s[q][0]
 
 
+def test_string_key_total_counts_null_keys(spark):
+    """with_total on the sample path (non-numeric keys) returns the
+    FULL row count — null keys included — because callers size
+    join-back broadcast bounds with it."""
+    df = spark.createDataFrame(
+        [Row(s=None if i % 4 else f"doc-{i:04d}") for i in range(400)],
+        "s string")
+    bs, total = range_boundaries(df, "s", 4, with_total=True)
+    assert total == df.count() == 400
+    assert bs and bs == sorted(bs)
+    nulls = spark.createDataFrame([Row(s=None)] * 5, "s string")
+    assert range_boundaries(nulls, "s", 4, with_total=True) == ([], 5)
+
+
 def test_token_budget_and_global_ids_still_exact(spark):
     """The carry consumers produce exactly the single-partition truth
     (they were silently boundary-corrupted under repartitionByRange
