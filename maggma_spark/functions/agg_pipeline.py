@@ -1472,6 +1472,91 @@ _RANGE_UNIT_MS = {"millisecond": 1, "second": 1000, "minute": 60_000,
                   "week": 7 * 86_400_000}
 
 
+def _unit_ms(unit, what: str = "range unit"):
+    """Width in ms of a Mongo window `unit`, None when there is none."""
+    if unit is None:
+        return None
+    if unit not in _RANGE_UNIT_MS:
+        raise ValueError(f"{what} {unit!r} has no fixed width "
+                         "(supported: millisecond..week)")
+    return _RANGE_UNIT_MS[unit]
+
+
+def _window_bounds(bounds) -> list:
+    """A window doc's [lo, hi] bounds. Booleans raise: Python counts
+    True as the int 1, and Mongo rejects non-numeric bounds."""
+    if any(isinstance(b, bool) for b in bounds):
+        raise ValueError("window bounds must be numbers, 'unbounded' or "
+                         f"'current', got {list(bounds)}")
+    return list(bounds)
+
+
+def _finite_bounds(bounds, documents: bool):
+    """(lo, hi) of a finite window frame, else None (an unbounded end or
+    a non-numeric bound). Documents frames take integer row offsets with
+    "current" as 0; range frames take int/float offsets and keep a
+    "current" end symbolic."""
+    lo, hi = _window_bounds(bounds)
+    if documents:
+        lo, hi = (0 if b == "current" else b for b in (lo, hi))
+    num = int if documents else (int, float)
+    return (lo, hi) if isinstance(lo, num) and isinstance(hi, num) else None
+
+
+def _sort_axis(sort: dict, what: str) -> str:
+    """The single ascending sortBy field `what` orders on — Mongo's rule
+    for range windows and the time axis of $derivative/$integral/
+    $linearFill (rangeBetween offsets would silently flip meaning under
+    a descending order)."""
+    if not sort or len(sort) != 1:
+        raise ValueError(f"{what} requires exactly one sortBy field")
+    (field, direction), = sort.items()
+    if direction <= 0:
+        raise ValueError(f"{what} requires an ascending sortBy")
+    return field
+
+
+def _time_axis(field: str, ms) -> Column:
+    """A sortBy field as a numeric axis: exact epoch-ms scaled to `ms`
+    (a unit's width) for timestamps, the raw value without a unit."""
+    if ms:
+        return (F.unix_millis(F.col(field).cast("timestamp"))
+                .cast("double") / F.lit(ms))
+    return F.col(field).cast("double")
+
+
+def _cov_pair(df: DataFrame, a, b) -> Column:
+    """$covariance* input as an (x, y) struct, null unless BOTH sides are
+    non-null, so counts and partials match covar_* skip semantics."""
+    xa = _value(df, a).cast("double")
+    xb = _value(df, b).cast("double")
+    return F.when(xa.isNotNull() & xb.isNotNull(),
+                  F.struct(xa.alias("x"), xb.alias("y")))
+
+
+def _window_agg(op: str, v: Column) -> Column:
+    """A window accumulator's aggregate; $covariance* reads the pair."""
+    if op == "$covariancePop":
+        return F.covar_pop(v["x"], v["y"])
+    if op == "$covarianceSamp":
+        return F.covar_samp(v["x"], v["y"])
+    return _ACCUMULATORS[op](v)
+
+
+def _ema_alpha(arg) -> float:
+    """$expMovingAvg smoothing factor from `alpha` or `N` (2 / (N+1))."""
+    a = arg if isinstance(arg, dict) else {}
+    if "alpha" in a:
+        alpha = float(a["alpha"])
+    elif "N" in a:
+        alpha = 2.0 / (float(a["N"]) + 1.0)
+    else:
+        raise ValueError("$expMovingAvg needs alpha or N")
+    if not 0 < alpha < 1:
+        raise ValueError("$expMovingAvg alpha must be in (0, 1)")
+    return alpha
+
+
 def _order_cols(sort: dict) -> list:
     return [F.col(k).asc() if v > 0 else F.col(k).desc()
             for k, v in sort.items()]
@@ -1622,6 +1707,16 @@ def _agg_type(df: DataFrame, col: Column):
     return df.select(col.alias("__t")).schema[0].dataType
 
 
+def _cum_diff(g_hi, g_lo):
+    """cum(fn, expr) as the difference of two growing frames: fn over
+    (.., hi] minus fn over (.., lo-1]."""
+    def cum(fn, expr):
+        z = F.lit(0)
+        return (F.coalesce(fn(expr).over(g_hi), z)
+                - F.coalesce(fn(expr).over(g_lo), z))
+    return cum
+
+
 def _growing_cum_rows(ordered, lo: int, hi: int):
     """Finite ROWS frame [lo, hi] as the difference of two GROWING
     frames: cum(ub, hi) - cum(ub, lo-1). Spark evaluates a growing
@@ -1635,14 +1730,8 @@ def _growing_cum_rows(ordered, lo: int, hi: int):
     identical for both terms and the difference is exact."""
     from pyspark.sql import Window
 
-    g_hi = ordered.rowsBetween(Window.unboundedPreceding, hi)
-    g_lo = ordered.rowsBetween(Window.unboundedPreceding, lo - 1)
-
-    def cum(fn, expr):
-        z = F.lit(0)
-        return (F.coalesce(fn(expr).over(g_hi), z)
-                - F.coalesce(fn(expr).over(g_lo), z))
-    return cum
+    return _cum_diff(ordered.rowsBetween(Window.unboundedPreceding, hi),
+                     ordered.rowsBetween(Window.unboundedPreceding, lo - 1))
 
 
 def _growing_cum_axis(wpart, axis: Column, lo: int, hi: int):
@@ -1653,14 +1742,8 @@ def _growing_cum_axis(wpart, axis: Column, lo: int, hi: int):
     from pyspark.sql import Window
 
     asc = wpart.orderBy(axis.asc())
-    g_hi = asc.rangeBetween(Window.unboundedPreceding, hi)
-    g_lo = asc.rangeBetween(Window.unboundedPreceding, lo - 1)
-
-    def cum(fn, expr):
-        z = F.lit(0)
-        return (F.coalesce(fn(expr).over(g_hi), z)
-                - F.coalesce(fn(expr).over(g_lo), z))
-    return cum
+    return _cum_diff(asc.rangeBetween(Window.unboundedPreceding, hi),
+                     asc.rangeBetween(Window.unboundedPreceding, lo - 1))
 
 
 def _growing_cum_range(wpart, axis: Column, alo: int, ahi: int):
@@ -1704,37 +1787,45 @@ def _growing_cum_range(wpart, axis: Column, alo: int, ahi: int):
     return cum
 
 
+def _moment_combine(op: str, n: Column, s: Column, q: Column = None,
+                    y: Column = None) -> Column:
+    """A window accumulator from its moments: n = count, s = Σv (Σx for
+    $covariance*), q = Σv² (Σxy), y = Σy. Each caller builds its own
+    moment expressions (growing-frame cumulatives, running carries);
+    the recombination carries the ~log10(mean^2/var)-digit cancellation
+    caveat of any sum-of-squares variance."""
+    if op == "$sum":
+        return s
+    if op == "$avg":
+        return F.when(n > 0, s / n)
+    if op == "$stdDevPop":
+        return F.sqrt(F.when(n > 0, F.greatest(
+            q / n - (s / n) * (s / n), F.lit(0.0))))
+    if op == "$stdDevSamp":
+        return F.sqrt(F.when(n > 1, F.greatest(
+            (q - s * s / n) / (n - 1), F.lit(0.0))))
+    if op == "$covariancePop":
+        return F.when(n > 0, q / n - (s / n) * (y / n))
+    return F.when(n > 1, (q - s * y / n) / (n - 1))
+
+
 def _frame_from_cum(op: str, v: Column, cum) -> Column:
     """Express an invertible window accumulator through `cum(fn,
     expr)` — the frame-restricted aggregate built from growing-frame
-    cumulatives. For $covariance* `v` is the pair struct (x, y),
-    null unless BOTH sides are non-null, matching covar_* skip
-    semantics. Moment recombination carries the same cancellation
-    caveat as the carry folds (~log10(mean^2/var) digits)."""
+    cumulatives. For $covariance* `v` is the pair struct (x, y) of
+    _cov_pair."""
     if op == "$sum":
         return cum(F.sum, v)
     if op == "$avg":
-        n = cum(F.count, v)
-        return F.when(n > 0, cum(F.sum, v.cast("double")) / n)
+        return _moment_combine(op, cum(F.count, v),
+                               cum(F.sum, v.cast("double")))
     if op in ("$stdDevPop", "$stdDevSamp"):
         vd = v.cast("double")
-        n = cum(F.count, vd).cast("double")
-        s = cum(F.sum, vd)
-        q = cum(F.sum, vd * vd)
-        if op == "$stdDevPop":
-            var = F.when(n > 0, F.greatest(
-                q / n - (s / n) * (s / n), F.lit(0.0)))
-        else:
-            var = F.when(n > 1, F.greatest(
-                (q - s * s / n) / (n - 1), F.lit(0.0)))
-        return F.sqrt(var)
-    n = cum(F.count, v).cast("double")
-    sx = cum(F.sum, v["x"])
-    sy = cum(F.sum, v["y"])
-    sxy = cum(F.sum, v["x"] * v["y"])
-    if op == "$covariancePop":
-        return F.when(n > 0, sxy / n - (sx / n) * (sy / n))
-    return F.when(n > 1, (sxy - sx * sy / n) / (n - 1))
+        return _moment_combine(op, cum(F.count, vd).cast("double"),
+                               cum(F.sum, vd), cum(F.sum, vd * vd))
+    return _moment_combine(op, cum(F.count, v).cast("double"),
+                           cum(F.sum, v["x"]), cum(F.sum, v["x"] * v["y"]),
+                           cum(F.sum, v["y"]))
 
 
 def _dlit(x) -> str:
@@ -2693,1342 +2784,1006 @@ def _fin_deriv_integ(op: str, vm, w_fin, w_lag, chain_key):
     return F.coalesce(total, F.lit(0.0))
 
 
-def _swf_global(df: DataFrame, spec: dict, sort: dict,
-                bs: list = None, total: int = None) -> DataFrame:
-    """Unpartitioned $setWindowFields WITHOUT the single-task global
-    window: per-partition windows over the range-partition scaffold,
-    stitched by driver-folded broadcast carries.
+_RANK_FNS = {"$rank": F.rank, "$denseRank": F.dense_rank,
+             "$documentNumber": F.row_number}
 
-    Distributed here: $rank/$denseRank/$documentNumber (per-partition
-    rank + prior-partition row/distinct offsets — sound because the
-    range partitioner co-locates equal sort keys); $sum/$avg/$min/
-    $max over documents frames ["unbounded","current"] (forward
-    carry), ["current","unbounded"] (reverse-order running frame +
-    backward carry — never Spark's O(n^2) unbounded-following frame),
-    ["unbounded","unbounded"] (fold the boundary rows to one scalar
-    literal), ["current","current"] (purely local); $first/$last over
-    any documents frame (an unbounded end is the GLOBAL first/last row
-    — one min_by/max_by scalar in the boundary aggregate, folded
-    driver-side; a current end is the row's own value); and $sum/$avg/
-    $min/$max over VALUE-RANGE frames on a numeric (or date-`unit`
-    timestamp) sortBy: running ranges (["unbounded","current"] /
-    ["current","unbounded"]) carry exactly like the documents frames
-    because equal sort keys share a range id, and finite [lo, hi]
-    frames replicate each row into the neighboring ranges whose spans
-    overlap [key-hi, key-lo] (boundaries are literals, so the
-    destination set is a pure row function; contributor copies carry a
-    masked value so they can never corrupt a foreign frame; fan-out is
-    guarded by MAX_RANGE_REPLICATION). Round 9 adds $expMovingAvg
-    (per-range pandas-ewm kernel + affine (1-α)^k state carries),
-    $derivative and $integral (finite frames via replication; running
-    frames via first/last edge structs and trapezoid pair-sum
-    carries; whole frames fold to literals). Order-dependent
-    accumulators ($push/$addToSet) still raise and ask for
-    partitionBy rather than silently funneling 100 TB through one
-    task (house guard style)."""
-    from pyspark.sql import Window
+# Per-range partials of the carry-decomposable window accumulators:
+# (suffix, aggregate over the value column, driver fold). The boundary
+# aggregate emits each as __{suffix}_{out}; the running kinds carry it
+# as __gw_c{suffix}_{out}. $stdDev* recombine from (count, sum,
+# sum-of-squares), $covariance* from (n, Σx, Σy, Σxy) over the (x, y)
+# pair struct — the naive recombination loses ~log10(mean^2/var) digits
+# to cancellation, fine at data-scale magnitudes.
+_SUM_PARTIALS = (("s", F.sum, "$sum"), ("c", F.count, "count"))
+_STD_PARTIALS = (
+    ("s", lambda v: F.sum(v.cast("double")), "$sum"),
+    ("q", lambda v: F.sum(v.cast("double") * v.cast("double")), "$sum"),
+    ("c", F.count, "count"))
+_COV_PARTIALS = (
+    ("s", lambda v: F.sum(v["x"]), "$sum"),
+    ("y", lambda v: F.sum(v["y"]), "$sum"),
+    ("q", lambda v: F.sum(v["x"] * v["y"]), "$sum"),
+    ("c", F.count, "count"))
+_MOMENT_PARTIALS = {
+    "$sum": _SUM_PARTIALS, "$avg": _SUM_PARTIALS,
+    "$min": (("s", F.min, "$min"),), "$max": (("s", F.max, "$max"),),
+    "$stdDevPop": _STD_PARTIALS, "$stdDevSamp": _STD_PARTIALS,
+    "$covariancePop": _COV_PARTIALS, "$covarianceSamp": _COV_PARTIALS}
 
-    spark = df.sparkSession
-    ranks = {"$rank", "$denseRank", "$documentNumber"}
+# plan kinds of _swf_plan that frame over the sortBy VALUE axis, and
+# the kinds whose frame is row-ordered (an empty sortBy raises)
+_SWF_RANGE_KINDS = {"rfwd", "rbwd", "rfin", "pctl_rrun", "deriv_rrun",
+                    "integ_rrun"}
+_SWF_SORTED_KINDS = {"rank", "firstlast", "ema", "fwd", "bwd", "self",
+                     "dfin", "pctl_run"}
+# kinds that read the broadcast carry frame joined on the range id
+_SWF_CARRIED_KINDS = {"rank", "fwd", "bwd", "rfwd", "rbwd", "self", "dfin",
+                      "pctl_run", "pctl_rrun", "ema", "integ_run",
+                      "integ_rrun"}
+_FRAME_SHAPES = {("unbounded", "current"): "fwd",
+                 ("current", "unbounded"): "bwd",
+                 ("unbounded", "unbounded"): "whole",
+                 ("current", "current"): "self"}
+_SHAPE_NAMES = {"fwd": "running ['unbounded','current']",
+                "bwd": "running ['current','unbounded']",
+                "whole": "whole-frame", "self": "['current','current']",
+                "fin": "finite [lo, hi]"}
+
+
+def _edge_kinds(stem: str) -> dict:
+    """(axis, frame shape) -> kind of $derivative ("deriv") or
+    $integral ("integ"): finite frames replicate, running frames carry
+    edge structs (and trapezoid pair sums), whole frames fold to
+    literals."""
+    return {("range", "fin"): "rfin", ("documents", "fin"): "dfin",
+            ("documents", "self"): "dfin",
+            ("range", "fwd"): f"{stem}_rrun", ("range", "bwd"): f"{stem}_rrun",
+            ("range", "whole"): f"{stem}_whole",
+            ("documents", "whole"): f"{stem}_whole",
+            ("documents", "fwd"): f"{stem}_run",
+            ("documents", "bwd"): f"{stem}_run"}
+
+
+# (axis, frame shape) -> plan kind, per operator family of the
+# unpartitioned path; a missing pair raises (add partitionBy)
+_SWF_FRAME_KINDS = {
+    "moment": {("range", "fwd"): "rfwd", ("range", "bwd"): "rbwd",
+               ("range", "fin"): "rfin", ("documents", "fwd"): "fwd",
+               ("documents", "bwd"): "bwd", ("documents", "whole"): "whole",
+               ("documents", "self"): "self", ("documents", "fin"): "dfin"},
+    "pctl": {("range", "fin"): "rfin", ("range", "fwd"): "pctl_rrun",
+             ("range", "bwd"): "pctl_rrun",
+             ("documents", "whole"): "pctl_whole",
+             ("documents", "fwd"): "pctl_run",
+             ("documents", "bwd"): "pctl_run",
+             ("documents", "self"): "dfin", ("documents", "fin"): "dfin"},
+    "firstlast": {("documents", s): "firstlast"
+                  for s in ("fwd", "bwd", "whole", "self")},
+    "deriv": _edge_kinds("deriv"),
+    "integ": _edge_kinds("integ"),
+}
+
+
+def _frame_shape(win: dict):
+    """Classify a window doc: (axis, shape, bounds, fin). axis is
+    "range" or "documents" (the default, whole frame); shape is "fwd"/
+    "bwd" (running), "whole", "self" (["current", "current"]), "fin"
+    (numeric, lo <= hi on documents) or None; fin is _finite_bounds'
+    (lo, hi)."""
+    axis = "range" if "range" in win else "documents"
+    bounds = _window_bounds(win.get(axis, ["unbounded", "unbounded"]))
+    key = tuple(bounds)
+    if axis == "range" and "unbounded" in key:
+        # next to an unbounded end, offset 0 is the current sort value
+        key = tuple("current" if b == 0 else b for b in key)
+    fin = _finite_bounds(bounds, axis == "documents")
+    shape = _FRAME_SHAPES.get(key)
+    if shape is None and fin and (axis == "range" or fin[0] <= fin[1]):
+        shape = "fin"
+    return axis, shape, bounds, fin
+
+
+def _swf_plan_output(op: str, arg, win: dict, sort: dict) -> dict:
+    """One output's plan dict (see _swf_plan)."""
+    if op in _RANK_FNS:
+        return {"kind": "rank", "op": op}
+    if op == "$expMovingAvg":
+        return {"kind": "ema", "op": op, "alpha": _ema_alpha(arg),
+                "arg": arg["input"]}
+    if op == "$count":  # Mongo window $count == $sum of 1
+        op, arg = "$sum", 1
+    p = {"op": op, "arg": arg}
+    if op in ("$median", "$percentile"):
+        family = "pctl"
+        p = {"op": "$pctl", "arg": arg["input"], "scalar": op == "$median",
+             "ps": [0.5] if op == "$median" else [float(x) for x in arg["p"]]}
+    elif op in ("$derivative", "$integral"):
+        family = "deriv" if op == "$derivative" else "integ"
+        p = {"op": f"${family}", "arg": arg["input"],
+             "tunit": arg.get("unit")}
+        _unit_ms(p["tunit"], f"{op} unit")
+        _sort_axis(sort, op)
+        if "range" not in win and "documents" not in win:
+            raise ValueError(f"{op} requires a window")
+    elif op in ("$first", "$last"):
+        family = "firstlast"
+    elif op in _MOMENT_PARTIALS:
+        family = "moment"
+    elif op in _ACCUMULATORS:
+        raise ValueError(f"unpartitioned {op} window is order-dependent "
+                         "and not distributable; add partitionBy")
+    else:
+        raise ValueError(f"unsupported unpartitioned window operator {op}"
+                         " — add partitionBy")
+    axis, shape, bounds, fin = _frame_shape(win)
+    if axis == "range":
+        p["unit"] = win.get("unit")
+        scale = _unit_ms(p["unit"]) or 1
+    p["kind"] = kind = _SWF_FRAME_KINDS[family].get((axis, shape))
+    if kind is None:
+        ok = [_SHAPE_NAMES[s] for (a, s) in _SWF_FRAME_KINDS[family]
+              if a == axis]
+        raise ValueError(
+            f"unpartitioned {op} over the {axis} frame {bounds} is not "
+            f"supported (supported: {', '.join(ok) or 'none'}) — add "
+            "partitionBy")
+    if shape in ("fwd", "bwd"):
+        p["dir"] = shape
+    if kind == "dfin":
+        p["frame"] = fin
+    elif kind == "firstlast":
+        p["frame"] = tuple(bounds)
+    elif kind == "rfin":
+        # rangeBetween takes long bounds: window-axis offsets (ms for
+        # unit frames, raw otherwise) must land on integers
+        alo, ahi = (float(b) * scale for b in fin)
+        if alo != int(alo) or ahi != int(ahi):
+            raise ValueError(f"range frame offsets {list(fin)} must scale "
+                             "to integers on the window axis")
+        p["range"], p["offsets"] = fin, (int(alo), int(ahi))
+    return p
+
+
+def _swf_plan(spec: dict, sort: dict) -> dict[str, dict]:
+    """Plan every output of an unpartitioned $setWindowFields from the
+    stage spec and sortBy alone — no DataFrame, no session — so every
+    shape error raises before any Spark work. Returns {out: plan}:
+    "kind" picks the assembler (see _swf_global), "op"/"arg" are the
+    operator and its input, plus per kind "dir" (fwd/bwd running
+    frames), "unit" (range frames), "range"/"offsets" (finite range
+    frames and their window-axis offsets), "frame" (finite row offsets,
+    or the $first/$last bounds), "ps"/"scalar" ($median/$percentile),
+    "tunit" ($derivative/$integral) and "alpha" ($expMovingAvg)."""
     plans: dict[str, dict] = {}
     for out, odoc in spec["output"].items():
         odoc = dict(odoc)
         win = odoc.pop("window", {})
         (op, arg), = odoc.items()
-        if op in ranks:
-            if not sort:
-                raise ValueError(f"{op} requires sortBy")
-            plans[out] = {"kind": "rank", "op": op}
-            continue
-        if op == "$count":  # Mongo window $count == $sum of 1
-            op, arg = "$sum", 1
-        if op in ("$median", "$percentile"):
-            # Mongo 7.0 window forms. No per-range partial recombines
-            # into a percentile, so: whole frame -> ONE dedicated
-            # exact-percentile action folded to a literal; finite
-            # range/documents frames -> the replication machinery
-            # (the percentile runs over the replicated frame
-            # directly); running frames raise.
-            a = dict(arg)
-            ps = [0.5] if op == "$median" else \
-                [float(x) for x in a["p"]]
-            inp = a["input"]
-            scalar = op == "$median"
-            if "range" in win:
-                rlo, rhi = win["range"]
-                unit = win.get("unit")
-                if unit is not None and unit not in _RANGE_UNIT_MS:
-                    raise ValueError(
-                        f"range unit {unit!r} has no fixed width")
-                if isinstance(rlo, (int, float)) \
-                        and isinstance(rhi, (int, float)):
-                    plans[out] = {"kind": "rfin", "op": "$pctl",
-                                  "arg": inp, "unit": unit,
-                                  "range": (rlo, rhi), "ps": ps,
-                                  "scalar": scalar}
-                    continue
-                if (rlo, rhi) in (("unbounded", "current"),
-                                  ("current", "unbounded")):
-                    # round-8: the prefix/suffix order-statistics path
-                    # with RANGE-framed cumulative counts (ties by
-                    # sort VALUE enter the frame) — see
-                    # _global_running_pctl; the reverse form runs the
-                    # same machinery over the DESC axis
-                    plans[out] = {"kind": "pctl_rrun", "op": "$pctl",
-                                  "arg": inp, "unit": unit, "ps": ps,
-                                  "dir": ("fwd" if rlo == "unbounded"
-                                          else "bwd"),
-                                  "scalar": scalar}
-                    continue
-                raise ValueError(
-                    f"unpartitioned {op} supports finite and running "
-                    "(['unbounded','current'] / "
-                    "['current','unbounded']) range frames only — "
-                    "add partitionBy")
-            frame = list(win.get("documents",
-                                 ["unbounded", "unbounded"]))
-            if tuple(frame) == ("unbounded", "unbounded"):
-                plans[out] = {"kind": "pctl_whole", "op": "$pctl",
-                              "arg": inp, "ps": ps, "scalar": scalar}
-                continue
-            if tuple(frame) in (("unbounded", "current"),
-                                ("current", "unbounded")):
-                # round-8: distributed prefix/suffix order statistics
-                # — see _global_running_pctl
-                if not sort:
-                    raise ValueError(
-                        f"documents frame {frame} requires sortBy")
-                plans[out] = {"kind": "pctl_run", "op": "$pctl",
-                              "arg": inp, "ps": ps, "scalar": scalar,
-                              "dir": ("fwd" if frame[0] == "unbounded"
-                                      else "bwd")}
-                continue
-            norm = [0 if b == "current" else b for b in frame]
-            if all(isinstance(b, int) for b in norm) \
-                    and norm[0] <= norm[1]:
-                if not sort:
-                    raise ValueError(
-                        f"documents frame {frame} requires sortBy")
-                plans[out] = {"kind": "dfin", "op": "$pctl",
-                              "arg": inp, "ps": ps, "scalar": scalar,
-                              "frame": (int(norm[0]), int(norm[1]))}
-                continue
-            raise ValueError(
-                f"unpartitioned {op} supports whole-frame, running "
-                "(['unbounded','current'] / ['current','unbounded']) "
-                "or finite documents frames only — add partitionBy")
-        if op == "$expMovingAvg":
-            # round-9: EMA is an AFFINE recurrence (e' = a·e + b), so
-            # a partition folds to one (a, b) = ((1-α)^k, local EMA
-            # terms) pair composed driver-side exactly like the sum
-            # carries: per-range pandas-ewm kernel computes the
-            # no-incoming-state series e0, then each row is fixed up
-            # by e = e0 + (1-α)^c · (s - v_first) where s is the
-            # carried state entering the range and c the running
-            # non-null count — algebraically the exact recurrence
-            a = dict(arg) if isinstance(arg, dict) else {}
-            if "alpha" in a:
-                alpha = float(a["alpha"])
-            elif "N" in a:
-                alpha = 2.0 / (float(a["N"]) + 1.0)
-            else:
-                raise ValueError("$expMovingAvg needs alpha or N")
-            if not 0 < alpha < 1:
-                raise ValueError("$expMovingAvg alpha must be in (0, 1)")
-            if not sort:
-                raise ValueError("$expMovingAvg requires sortBy")
-            plans[out] = {"kind": "ema", "op": op, "arg": a["input"],
-                          "alpha": alpha}
-            continue
-        if op in ("$derivative", "$integral"):
-            # round-9: finite frames ride the replication machinery
-            # (first/last resp. trapezoid pairs over the replicated
-            # frame); running frames decompose through per-range
-            # first/last edge structs and trapezoid-pair-sum carries;
-            # whole frames fold to literals from the same partials
-            a = dict(arg)
-            tunit = a.get("unit")
-            if tunit is not None and tunit not in _RANGE_UNIT_MS:
-                raise ValueError(
-                    f"{op} unit {tunit!r} has no fixed width "
-                    "(supported: millisecond..week)")
-            if not sort or len(sort) != 1:
-                raise ValueError(
-                    f"{op} requires exactly one sortBy field")
-            (_sfield, _sdir), = sort.items()
-            if _sdir <= 0:
-                raise ValueError(f"{op} requires an ascending sortBy")
-            if "range" not in win and "documents" not in win:
-                raise ValueError(f"{op} requires a window")
-            short = "$deriv" if op == "$derivative" else "$integ"
-            stem = short[1:]
-            if "range" in win:
-                rlo, rhi = win["range"]
-                runit = win.get("unit")
-                if runit is not None and runit not in _RANGE_UNIT_MS:
-                    raise ValueError(
-                        f"range unit {runit!r} has no fixed width")
-                if isinstance(rlo, (int, float)) \
-                        and isinstance(rhi, (int, float)):
-                    plans[out] = {"kind": "rfin", "op": short,
-                                  "arg": a["input"], "tunit": tunit,
-                                  "unit": runit, "range": (rlo, rhi)}
-                elif (rlo, rhi) == ("unbounded", "current"):
-                    plans[out] = {"kind": f"{stem}_rrun", "op": short,
-                                  "arg": a["input"], "tunit": tunit,
-                                  "unit": runit, "dir": "fwd"}
-                elif (rlo, rhi) == ("current", "unbounded"):
-                    plans[out] = {"kind": f"{stem}_rrun", "op": short,
-                                  "arg": a["input"], "tunit": tunit,
-                                  "unit": runit, "dir": "bwd"}
-                elif (rlo, rhi) == ("unbounded", "unbounded"):
-                    plans[out] = {"kind": f"{stem}_whole", "op": short,
-                                  "arg": a["input"], "tunit": tunit}
-                else:
-                    raise ValueError(
-                        f"unpartitioned {op} range frames support "
-                        "finite [lo, hi], running and unbounded "
-                        "bounds only — add partitionBy")
-            else:
-                frame = list(win["documents"])
-                norm = [0 if b == "current" else b for b in frame]
-                if tuple(frame) == ("unbounded", "unbounded"):
-                    plans[out] = {"kind": f"{stem}_whole", "op": short,
-                                  "arg": a["input"], "tunit": tunit}
-                elif tuple(frame) == ("unbounded", "current"):
-                    plans[out] = {"kind": f"{stem}_run", "op": short,
-                                  "arg": a["input"], "tunit": tunit,
-                                  "dir": "fwd"}
-                elif tuple(frame) == ("current", "unbounded"):
-                    plans[out] = {"kind": f"{stem}_run", "op": short,
-                                  "arg": a["input"], "tunit": tunit,
-                                  "dir": "bwd"}
-                elif all(isinstance(b, int) for b in norm) \
-                        and norm[0] <= norm[1]:
-                    plans[out] = {"kind": "dfin", "op": short,
-                                  "arg": a["input"], "tunit": tunit,
-                                  "frame": (int(norm[0]),
-                                            int(norm[1]))}
-                else:
-                    raise ValueError(
-                        f"unsupported documents frame {frame}")
-            continue
-        if op not in _ACCUMULATORS and \
-                op not in ("$covariancePop", "$covarianceSamp"):
-            raise ValueError(
-                f"unsupported unpartitioned window operator {op} — "
-                "add partitionBy")
-        if op in ("$first", "$last"):
-            if not sort:
-                raise ValueError(f"{op} requires sortBy")
-            if "range" in win:
-                raise ValueError(
-                    f"unpartitioned {op} over a range frame is not "
-                    "supported; add partitionBy")
-            frame = list(win.get("documents",
-                                 ["unbounded", "unbounded"]))
-            for end in frame:
-                if end not in ("unbounded", "current"):
-                    raise ValueError(
-                        f"unpartitioned {op} supports only unbounded/"
-                        f"current documents bounds, got {frame}")
-            plans[out] = {"kind": "firstlast", "op": op, "arg": arg,
-                          "frame": tuple(frame)}
-            continue
-        if op not in ("$sum", "$avg", "$min", "$max",
-                      "$stdDevPop", "$stdDevSamp",
-                      "$covariancePop", "$covarianceSamp"):
-            raise ValueError(
-                f"unpartitioned {op} window is order-dependent and "
-                "not distributable; add partitionBy")
-        if "range" in win:
-            rlo, rhi = win["range"]
-            unit = win.get("unit")
-            if unit is not None and unit not in _RANGE_UNIT_MS:
-                raise ValueError(
-                    f"range unit {unit!r} has no fixed width "
-                    "(supported: millisecond..week)")
-            if rlo == "unbounded" and rhi in ("current", 0):
-                kind = "rfwd"
-            elif rhi == "unbounded" and rlo in ("current", 0):
-                kind = "rbwd"
-            elif isinstance(rlo, (int, float)) \
-                    and isinstance(rhi, (int, float)):
-                kind = "rfin"
-            else:
-                raise ValueError(
-                    "unpartitioned range frames support "
-                    '["unbounded","current"], ["current","unbounded"] '
-                    "and finite [lo, hi] bounds; an unbounded end "
-                    "paired with a nonzero offset has no bounded "
-                    "carry decomposition — add partitionBy")
-            plans[out] = {"kind": kind, "op": op, "arg": arg,
-                          "unit": unit, "range": (rlo, rhi)}
-            continue
-        frame = list(win.get("documents", ["unbounded", "unbounded"]))
-        kind = {("unbounded", "current"): "fwd",
-                ("current", "unbounded"): "bwd",
-                ("unbounded", "unbounded"): "whole",
-                ("current", "current"): "self"}.get(tuple(frame))
-        if kind is None:
-            # finite row-offset frames ([-3, 0], [0, 5], ...) run
-            # through the same replication machinery as finite range
-            # frames, on the GLOBAL row-number axis (rn + carried
-            # prior-range row offsets)
-            norm = [0 if b == "current" else b for b in frame]
-            if all(isinstance(b, int) for b in norm) \
-                    and norm[0] <= norm[1]:
-                plans[out] = {"kind": "dfin", "op": op, "arg": arg,
-                              "frame": (int(norm[0]), int(norm[1]))}
-                if not sort:
-                    raise ValueError(
-                        f"documents frame {frame} requires sortBy")
-                continue
-            raise ValueError(f"unsupported documents frame {frame}")
-        if kind in ("fwd", "bwd", "self") and not sort:
-            raise ValueError(f"documents frame {frame} requires sortBy")
-        plans[out] = {"kind": kind, "op": op, "arg": arg}
-    range_kinds = {"rfwd", "rbwd", "rfin", "pctl_rrun",
-                   "deriv_rrun", "integ_rrun"}
-    if any(p["kind"] in range_kinds for p in plans.values()):
-        if len(sort) != 1:
-            raise ValueError("range windows require exactly one "
-                             "sortBy field")
-        (rf_field, rf_dir), = sort.items()
-        if rf_dir <= 0:
-            raise ValueError("range windows require an ascending "
-                             "sortBy")
+        plans[out] = p = _swf_plan_output(op, arg, win, sort)
+        if p["kind"] in _SWF_SORTED_KINDS and not sort:
+            raise ValueError(f"{op} requires sortBy")
+    ranged = [p for p in plans.values() if p["kind"] in _SWF_RANGE_KINDS]
+    if ranged:
+        _sort_axis(sort, "a range window")
+        if len({p["unit"] is None for p in ranged}) > 1:
+            raise ValueError("cannot mix `unit` and plain numeric range "
+                             "windows over one sortBy")
+    return plans
 
-    # Mongo's window $median/$percentile only OFFER method:
-    # "approximate" — the default here is still the exact order-
-    # statistics path (oracle bit-matchable); flipping the engine conf
-    # licenses the sketch-interpolation fast path (rank error bounded
-    # by the largest value-bucket's mass — see _global_running_pctl)
-    pctl_approx = spark.conf.get(
-        "spark.maggma.windowPctl.method", "exact") == "approximate"
 
-    need_sort = any(p["kind"] not in ("whole", "pctl_whole")
-                    for p in plans.values())
+def _quantile_grid(n: int) -> Column:
+    """The interior quantile grid [1/n, ..., (n-1)/n] as an array."""
+    return F.array(*[F.lit(i / n) for i in range(1, n)])
 
-    # Round-12 (guide §2.4, remove shuffles outright): when this call
-    # owns the range-boundary action anyway, fold the running-
-    # percentile VALUE sketches into that ONE probe instead of
-    # piggybacking them on the boundary aggregate. Knowing the bucket
-    # splits BEFORE the boundary aggregate lets per-range bucket
-    # histograms ride it too, so the driver computes the cumulative
-    # bucket offsets from partials it already collects — the
-    # percentile paths' hist groupBy -> coalesce(1) mapInPandas fold
-    # -> broadcast chain (3 execution stages on the critical path of
-    # every exact/approximate running percentile) collapses into a
-    # zero-job LocalRelation. Driver actions stay exactly 2 (probe +
-    # boundary aggregate; the ≤2-action pin still holds). Falls back
-    # to the legacy piggyback when the caller precomputed boundaries
-    # (multi-pass pipelines) or the sortBy is not numeric-keyed.
-    pruns_pre = {o: p for o, p in plans.items()
-                 if p["kind"] in ("pctl_run", "pctl_rrun")}
-    presketch = None
-    if pruns_pre and need_sort and bs is None and sort:
-        from maggma_spark.functions.partitioning import (
-            _numeric_key,
-            thin_boundaries,
-        )
 
-        first_key = next(iter(sort))
-        nkey = _numeric_key(df, first_key)
-        if nkey is not None:
-            n_tgt = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            G = 128 if pctl_approx else 64
-            ak_rep: dict = {}  # argkey -> representative output
-            for o, p in pruns_pre.items():
-                ak = (p["kind"], p["dir"], repr(p["arg"]))
-                ak_rep.setdefault(ak, o)
-            probe_aggs = [
-                F.percentile_approx(
-                    nkey,
-                    F.array(*[F.lit(i / n_tgt)
-                              for i in range(1, n_tgt)]),
-                    F.lit(10_000)).alias("__bs"),
-                F.count(F.lit(1)).alias("__n")]
-            for ak, o in ak_rep.items():
-                v = _value(df, pruns_pre[o]["arg"]).cast("double")
-                probe_aggs.append(F.percentile_approx(
-                    v, F.array(*[F.lit(i / G) for i in range(1, G)]),
-                    F.lit(10_000)).alias(f"__sk_{o}"))
-                if pctl_approx:
-                    probe_aggs += [F.min(v).alias(f"__lo_{o}"),
-                                   F.max(v).alias(f"__hi_{o}")]
-            prow = df.agg(*probe_aggs).first()
-            total_pre = prow["__n"]
-            bs = thin_boundaries(
-                sorted({x for x in (prow["__bs"] or []) if x is not None}),
-                total_pre, n_tgt, _min_rows_per_range(spark))
-            V = _pctl_bucket_count(total_pre, pctl_approx, int(
-                spark.conf.get("spark.maggma.windowPctl.approxBuckets",
-                               "0")))
-            vbs_by_ak = {
-                ak: _equi_depth_splits(
-                    sorted(x for x in (prow[f"__sk_{o}"] or [])
-                           if x is not None), V)
-                for ak, o in ak_rep.items()}
-            presketch = {"V": V, "ak_rep": ak_rep,
-                         "vbs": vbs_by_ak, "row": prow}
+def _pctl_argkey(p: dict) -> tuple:
+    """Running-percentile outputs with one argkey share one histogram."""
+    return (p["kind"], p["dir"], repr(p["arg"]))
 
-    if need_sort:
-        ranged, wloc, bs, scaffold_total = _global_scaffold(
-            df, sort, bs)
-    else:
-        ranged = df.withColumn("__gw_pid", F.spark_partition_id())
-        wloc, bs, scaffold_total = None, [], None
-    if presketch is not None:
-        # the combined probe already counted the rows exactly
-        scaffold_total = presketch["row"]["__n"]
-    if scaffold_total is None:
-        scaffold_total = total  # caller-precomputed (multi-pass)
 
-    accs = {o: p for o, p in plans.items() if p["kind"] != "rank"}
+def _swf_probe(df: DataFrame, plans: dict, sort: dict, approx: bool):
+    """Combined probe of a call that owns its range boundaries and runs
+    global running percentiles (round-12): ONE aggregate sketches the
+    sortBy boundaries and each percentile input's VALUE domain, so the
+    bucket splits are known before the boundary aggregate and the
+    per-range bucket histograms ride it — the percentile paths' hist/
+    fold/broadcast stages become a LocalRelation and driver actions
+    stay at 2. None when the sortBy is not numeric-keyed (the boundary
+    aggregate then carries the value sketches)."""
+    from maggma_spark.functions.partitioning import (
+        _numeric_key,
+        thin_boundaries,
+    )
+
+    nkey = _numeric_key(df, next(iter(sort)))
+    if nkey is None:
+        return None
+    spark = df.sparkSession
+    n_tgt = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ak_rep: dict = {}  # argkey -> representative output
+    for o, p in plans.items():
+        if p["kind"] in ("pctl_run", "pctl_rrun"):
+            ak_rep.setdefault(_pctl_argkey(p), o)
+    aggs = [F.percentile_approx(nkey, _quantile_grid(n_tgt),
+                                F.lit(10_000)).alias("__bs"),
+            F.count(F.lit(1)).alias("__n")]
+    for o in ak_rep.values():
+        v = _value(df, plans[o]["arg"]).cast("double")
+        aggs.append(F.percentile_approx(
+            v, _quantile_grid(128 if approx else 64),
+            F.lit(10_000)).alias(f"__sk_{o}"))
+        if approx:
+            aggs += [F.min(v).alias(f"__lo_{o}"), F.max(v).alias(f"__hi_{o}")]
+    row = df.agg(*aggs).first()
+    V = _pctl_bucket_count(row["__n"], approx, int(spark.conf.get(
+        "spark.maggma.windowPctl.approxBuckets", "0")))
+    return {"row": row, "ak_rep": ak_rep,
+            "bs": thin_boundaries(
+                sorted({x for x in (row["__bs"] or []) if x is not None}),
+                row["__n"], n_tgt, _min_rows_per_range(spark)),
+            "vbs": {ak: _equi_depth_splits(
+                sorted(x for x in (row[f"__sk_{o}"] or []) if x is not None),
+                V) for ak, o in ak_rep.items()}}
+
+
+def _swf_value(df: DataFrame, p: dict, sort_field) -> Column:
+    """An output's value column __gw_v_*: a (value, time) struct for
+    $derivative/$integral (time is the sortBy scaled to the operator's
+    own `unit`), an (x, y) pair for $covariance*, else the value."""
+    if p["op"] in ("$deriv", "$integ"):
+        x = _value(df, p["arg"]).cast("double")
+        t = _time_axis(sort_field, _unit_ms(p["tunit"]))
+        return F.struct(x.alias("x"), t.alias("t"))
+    if p["kind"] == "ema":
+        return _value(df, p["arg"]).cast("double")
+    if p["op"] in ("$covariancePop", "$covarianceSamp"):
+        return _cov_pair(df, *p["arg"])
+    return _value(df, p["arg"])
+
+
+def _swf_value_columns(ranged: DataFrame, plans: dict, sort: dict,
+                       presketch, total) -> DataFrame:
+    """Scaffold columns every assembler reads: the value columns (ONE
+    withColumns — a chained withColumn stacks one Project per output
+    that the analyzer re-walks on every driver action), the percentile
+    bucket indexes, the range-frame axis __gw_ax, the $integral
+    trapezoid pairs and the $expMovingAvg kernel columns."""
+    from pyspark.sql import Window
+
     sort_field = next(iter(sort)) if sort else None
-    # ONE withColumns per batch of independent columns (round-11):
-    # chained withColumn stacks one Project per output, and the
-    # analyzer walks the whole chain once per driver action — for the
-    # 9-output covariance bench shape that plan-depth tax was part of
-    # the ~1.5 s fixed plan-construction cost (SCALE.md round-10
-    # residual accounting)
-    vcols: dict = {}
-    for out, p in accs.items():
-        if p["op"] in ("$deriv", "$integ"):
-            # (value, time) pair: t is the sortBy axis scaled to the
-            # operator's own `unit` (independent of any range-frame
-            # unit) — the same sort_time rule as the partitioned path
-            x = _value(ranged, p["arg"]).cast("double")
-            scol = F.col(sort_field)
-            tu = p.get("tunit")
-            t = (F.unix_millis(scol.cast("timestamp")).cast("double")
-                 / F.lit(_RANGE_UNIT_MS[tu])) if tu \
-                else scol.cast("double")
-            vcols[f"__gw_v_{out}"] = F.struct(x.alias("x"),
-                                              t.alias("t"))
-            continue
-        if p["kind"] == "ema":
-            vcols[f"__gw_v_{out}"] = \
-                _value(ranged, p["arg"]).cast("double")
-            continue
-        if p["op"] in ("$covariancePop", "$covarianceSamp"):
-            # pair value: null unless BOTH sides are non-null, so
-            # counts/partials align with covar_* skip semantics
-            a, b = p["arg"]
-            xa = _value(ranged, a).cast("double")
-            xb = _value(ranged, b).cast("double")
-            vcols[f"__gw_v_{out}"] = \
-                F.when(xa.isNotNull() & xb.isNotNull(),
-                       F.struct(xa.alias("x"), xb.alias("y")))
-            continue
-        vcols[f"__gw_v_{out}"] = _value(ranged, p["arg"])
+    vcols = {f"__gw_v_{o}": _swf_value(ranged, p, sort_field)
+             for o, p in plans.items() if p["kind"] != "rank"}
     if vcols:
         ranged = ranged.withColumns(vcols)
-
     if presketch is not None:
-        # materialize each percentile input's bucket index ONCE as a
-        # column (round-12): the boundary aggregate's histogram sums
-        # and the percentile paths' slim projections all reuse it. An
-        # earlier form inlined the 63-term comparison ladder into
-        # every per-bucket sum — O(V^2) expression evaluations per row
-        # that doubled the 10M probe; this is the same
-        # multiply-referenced-alias fix as the round-11 ladder work.
+        # each percentile input's bucket index materializes ONCE: the
+        # boundary histograms and the kernels' slim projections reuse it
         ranged = ranged.withColumns({
             f"__gw_hb_{rep}": _bucket_index(
                 f"cast(`__gw_v_{rep}` as double)", presketch["vbs"][ak])
             for ak, rep in presketch["ak_rep"].items()})
-
-    range_plans = {o: p for o, p in plans.items()
-                   if p["kind"] in range_kinds}
-    if range_plans:
-        has_unit = {p["unit"] is not None for p in range_plans.values()}
-        if len(has_unit) > 1:
-            raise ValueError("cannot mix `unit` and plain numeric "
-                             "range windows over one sortBy")
-        if has_unit.pop():
-            # exact integer epoch-ms axis (a double epoch loses
-            # sub-ms bits); per-plan offsets scale by the unit width
-            axis = F.unix_millis(F.col(rf_field).cast("timestamp"))
-        else:
-            axis = F.col(rf_field).cast("double")
-        ranged = ranged.withColumn("__gw_ax", axis)
-
-    # Trapezoid pair term per row for $integral decompositions: the
-    # pair covering (t_{i-1}, t_i] belongs to row i; within a range
-    # the lag is the true global predecessor (the head row's pair is
-    # null — its true value is the driver-computed boundary-crossing
-    # term folded into the carry)
-    integ_kinds = ("integ_run", "integ_rrun", "integ_whole")
-    integs = {o: p for o, p in plans.items()
-              if p["kind"] in integ_kinds}
+    units = [p["unit"] for p in plans.values()
+             if p["kind"] in _SWF_RANGE_KINDS]
+    if units:
+        # exact integer epoch-ms axis for unit frames (a double epoch
+        # loses sub-ms bits); the plan offsets are already in ms
+        ranged = ranged.withColumn(
+            "__gw_ax", F.unix_millis(F.col(sort_field).cast("timestamp"))
+            if units[0] is not None else F.col(sort_field).cast("double"))
+    integs = [o for o, p in plans.items()
+              if p["kind"] in ("integ_run", "integ_rrun", "integ_whole")]
     if integs:
+        # the trapezoid pair covering (t_{i-1}, t_i] belongs to row i;
+        # a range head's pair is null — the boundary crossing term is
+        # folded driver-side into the carry
         w_rn = Window.partitionBy("__gw_pid").orderBy("__gw_rn")
         prcols: dict = {}
         for out in integs:
             v = F.col(f"__gw_v_{out}")
-            lx = F.lag(v["x"]).over(w_rn)
-            lt = F.lag(v["t"]).over(w_rn)
-            prcols[f"__gw_pr_{out}"] = (v["x"] + lx) / 2 \
-                * (v["t"] - lt)
+            prcols[f"__gw_pr_{out}"] = (
+                (v["x"] + F.lag(v["x"]).over(w_rn)) / 2
+                * (v["t"] - F.lag(v["t"]).over(w_rn)))
         ranged = ranged.withColumns(prcols)
-
-    # Global $expMovingAvg: per-range pandas-ewm kernel over a SLIM
-    # (pid, rn, value) projection — e0 is the EMA assuming no incoming
-    # state, ct the running non-null count; joined back on the
-    # deterministic (pid, rn) pair. The affine fix-up to the true
-    # global recurrence happens in the final column expression.
-    emas = {o: p for o, p in plans.items() if p["kind"] == "ema"}
+    emas = {o: p["alpha"] for o, p in plans.items() if p["kind"] == "ema"}
     if emas:
-        import pandas as pd
+        ranged = _swf_ema_kernel(ranged, emas, total)
+    return ranged
 
-        keys = ["__gw_pid", "__gw_rn"]
-        vcols = {o: f"__gw_v_{o}" for o in emas}
-        alphas = {o: p["alpha"] for o, p in emas.items()}
-        slim = ranged.select(*keys, *vcols.values())
-        fields = ", ".join(
-            ["`__gw_pid` int", "`__gw_rn` int"]
-            + [f"`__gw_e0_{o}` double, `__gw_ct_{o}` bigint"
-               for o in emas])
 
-        def _ema_kernel(pdf):
-            pdf = pdf.sort_values("__gw_rn", kind="mergesort")
-            cols = {"__gw_pid": pdf["__gw_pid"],
-                    "__gw_rn": pdf["__gw_rn"]}
-            for o, vc in vcols.items():
-                v = pdf[vc]
-                # pandas' C ewm kernel IS the Mongo recurrence
-                # (adjust=False, ignore_na=True — same contract as the
-                # partitioned _exp_moving_avg kernel)
-                cols[f"__gw_e0_{o}"] = v.ewm(
-                    alpha=alphas[o], adjust=False,
-                    ignore_na=True).mean()
-                cols[f"__gw_ct_{o}"] = v.notna().cumsum().astype(
-                    "int64")
-            return pd.DataFrame(cols)
+def _swf_ema_kernel(ranged: DataFrame, alphas: dict, total) -> DataFrame:
+    """Global $expMovingAvg kernel: per-range pandas ewm over a SLIM
+    (pid, rn, value) projection — e0 is the EMA assuming no incoming
+    state, ct the running non-null count — joined back on the
+    deterministic (pid, rn) pair. The affine fix-up to the true global
+    recurrence happens in the output column (_swf_ema)."""
+    import pandas as pd
 
-        ema_out = slim.groupBy("__gw_pid").applyInPandas(_ema_kernel,
-                                                         fields)
-        if scaffold_total is not None:
-            # Round-13 (r12 verdict next #3, guide §3.1): the kernel
-            # output is one slim row per input row, and its join-back
-            # onto the full-width frame was a SortMergeJoin that
-            # exchanged + sorted the wide side on (pid, rn) — the
-            # same shape the percentile join-back fixed in round-12.
-            # The scaffold's range probe already counted the rows, so
-            # the same bounded broadcast applies: hinted BHJ below
-            # the 64 MB estimate, shuffle past it (at 100 TB the
-            # kernel output is ~terabytes and must never broadcast).
-            ema_out = _bounded_broadcast(ema_out, scaffold_total,
-                                         2 * len(emas))
-        ranged = ranged.join(ema_out, on=keys)
+    keys = ["__gw_pid", "__gw_rn"]
+    slim = ranged.select(*keys, *[f"__gw_v_{o}" for o in alphas])
+    fields = ", ".join(["`__gw_pid` int", "`__gw_rn` int"] + [
+        f"`__gw_e0_{o}` double, `__gw_ct_{o}` bigint" for o in alphas])
 
-    # Multi-action passes (percentile selection, finite-frame
-    # replication, whole-frame percentile) re-execute the scaffold's
-    # WindowExec once per action AND once in the caller's final job —
-    # materialize the scaffolded frame ONCE so every later action and
-    # the final job read blocks (round-9; the plain running-sum pass
-    # stays uncheckpointed: its only extra action is the boundary
-    # aggregate, and a materialization write would cost what it
-    # saves). LAZY (round-10): the boundary aggregate collected just
-    # below is the materializing action, so the checkpoint no longer
-    # pays its own ~1 s dedicated job. Same conf escape hatch as the
-    # entry checkpoint.
-    multi_action = any(p["kind"] in ("pctl_run", "pctl_rrun",
-                                     "pctl_whole", "rfin", "dfin",
-                                     "ema")
-                       for p in plans.values())
-    ranged_ckpted = (need_sort and multi_action and spark.conf.get(
-        "spark.maggma.globalWindow.checkpoint", "auto") != "never")
-    if ranged_ckpted:
-        ranged = ranged.localCheckpoint(eager=False)
+    def _ema_kernel(pdf):
+        pdf = pdf.sort_values("__gw_rn", kind="mergesort")
+        cols = {"__gw_pid": pdf["__gw_pid"], "__gw_rn": pdf["__gw_rn"]}
+        for o, alpha in alphas.items():
+            v = pdf[f"__gw_v_{o}"]
+            # pandas' C ewm kernel IS the Mongo recurrence (adjust=False,
+            # ignore_na=True — same contract as _exp_moving_avg)
+            cols[f"__gw_e0_{o}"] = v.ewm(alpha=alpha, adjust=False,
+                                         ignore_na=True).mean()
+            cols[f"__gw_ct_{o}"] = v.notna().cumsum().astype("int64")
+        return pd.DataFrame(cols)
 
-    # ONE boundary aggregate: a single row per partition
+    ema_out = slim.groupBy("__gw_pid").applyInPandas(_ema_kernel, fields)
+    if total is not None:
+        # one slim row per input row: a bounded broadcast join-back
+        # keeps the wide side from an exchange + sort on (pid, rn)
+        ema_out = _bounded_broadcast(ema_out, total, 2 * len(alphas))
+    return ranged.join(ema_out, on=keys)
+
+
+def _swf_partials(out: str, p: dict, presketch, approx: bool) -> list:
+    """One output's columns in the boundary aggregate."""
+    kind, v = p["kind"], F.col(f"__gw_v_{out}")
+    if kind in ("rank", "rfin", "dfin", "pctl_whole"):
+        # ranks read only the row counts; finite frames replicate and
+        # whole-frame percentiles run their own action
+        return []
+    if kind in ("pctl_run", "pctl_rrun"):
+        if presketch is not None:
+            # per-range bucket histograms, one per distinct input; the
+            # driver folds them into the kernels' cumulative offsets
+            ak = _pctl_argkey(p)
+            if presketch["ak_rep"][ak] != out:
+                return []
+            return [F.expr(f"sum(case when `__gw_hb_{out}` = {b} then 1L "
+                           f"else 0L end) as `__ph_{out}_{b}`")
+                    for b in range(len(presketch["vbs"][ak]) + 1)]
+        # the equi-depth VALUE sketch (plus the extremes as outer bucket
+        # edges in approximate mode) rides this one aggregate
+        vd = v.cast("double")
+        aggs = [F.percentile_approx(vd, _quantile_grid(128 if approx else 64),
+                                    F.lit(10_000)).alias(f"__pqsk_{out}")]
+        if approx:
+            aggs += [F.min(vd).alias(f"__pqlo_{out}"),
+                     F.max(vd).alias(f"__pqhi_{out}")]
+        return aggs
+    if kind == "ema":
+        # non-null count, first non-null value (the kernel's seed) and
+        # the no-state kernel's end-of-range value
+        return [F.count(v).alias(f"__emk_{out}"),
+                F.min_by(v, F.when(v.isNotNull(), F.col("__gw_rn")))
+                .alias(f"__emv1_{out}"),
+                F.max_by(F.col(f"__gw_e0_{out}"), F.col("__gw_rn"))
+                .alias(f"__eml_{out}")]
+    if kind.startswith(("deriv_", "integ_")):
+        # first/last (value, time) edge structs; $integral adds the
+        # range's trapezoid pair sum
+        aggs = [F.min_by(v, F.col("__gw_rn")).alias(f"__ef_{out}"),
+                F.max_by(v, F.col("__gw_rn")).alias(f"__el_{out}")]
+        if kind.startswith("integ_"):
+            aggs.append(F.sum(F.col(f"__gw_pr_{out}")).alias(f"__ps_{out}"))
+        return aggs
+    if kind == "firstlast":
+        pick = F.min_by if p["op"] == "$first" else F.max_by
+        return [pick(v, F.col("__gw_rn")).alias(f"__s_{out}")]
+    return [agg(v).alias(f"__{sfx}_{out}")
+            for sfx, agg, _ in _MOMENT_PARTIALS[p["op"]]]
+
+
+def _swf_boundary(ranged: DataFrame, plans: dict, sort: dict, presketch,
+                  approx: bool):
+    """ONE boundary aggregate, a single row per scaffold range, collected
+    in range order: returns (parts, btypes) — the partial rows and their
+    column types."""
     aggs = [F.count(F.lit(1)).alias("__rows")]
-    if any(p.get("op") == "$denseRank" for p in plans.values()):
+    if any(p["op"] == "$denseRank" for p in plans.values()):
         aggs.append(F.countDistinct(
             F.struct(*[F.col(k) for k in sort])).alias("__dr"))
-    for out, p in accs.items():
-        v = F.col(f"__gw_v_{out}")
-        if p["kind"] in ("pctl_run", "pctl_rrun"):
-            if presketch is not None:
-                # round-12: splits are already known (the probe above
-                # sketched the value domain), so per-range BUCKET
-                # HISTOGRAMS ride this aggregate — the driver folds
-                # them into the cumulative offsets the percentile
-                # kernels need, and the dedicated hist/fold/broadcast
-                # stages disappear. One histogram per unique input
-                # (representative output), parsed-expr form. The
-                # ladder replays the slim projection's arithmetic
-                # (cast to double, > on CAST('repr') literals) so the
-                # bucket index is bit-identical to __pq_b downstream.
-                ak = (p["kind"], p["dir"], repr(p["arg"]))
-                if presketch["ak_rep"][ak] == out:
-                    nbv = len(presketch["vbs"][ak]) + 1
-                    aggs += [F.expr(
-                        f"sum(case when `__gw_hb_{out}` = {b} "
-                        f"then 1L else 0L end) as "
-                        f"`__ph_{out}_{b}`") for b in range(nbv)]
-                continue
-            # legacy piggyback (caller precomputed the boundaries, or
-            # non-numeric sortBy): the equi-depth VALUE sketch rides
-            # this one aggregate (fixed quantile grid, thinned to the
-            # bucket count later) so _global_running_pctl never pays
-            # its own boundary action — balance is all that matters,
-            # the histogram offsets stay exact. The approximate engine
-            # mode uses a finer grid (more buckets = tighter rank
-            # bound) and also needs the value extremes as outer
-            # bucket edges for interpolation.
-            G = 128 if pctl_approx else 64
-            aggs.append(F.percentile_approx(
-                v.cast("double"),
-                F.array(*[F.lit(i / G) for i in range(1, G)]),
-                F.lit(10_000)).alias(f"__pqsk_{out}"))
-            if pctl_approx:
-                aggs += [F.min(v.cast("double")).alias(f"__pqlo_{out}"),
-                         F.max(v.cast("double")).alias(f"__pqhi_{out}")]
-            continue
-        if p["kind"] in ("rfin", "dfin", "pctl_whole"):
-            # finite frames resolve by replication, whole-frame
-            # percentiles by a dedicated action — no partials here
-            continue
-        if p["kind"] == "ema":
-            # per-range EMA partials: non-null count k, first non-null
-            # value (the no-state kernel's seed), and the kernel's
-            # end-of-range state — the driver composes the affine
-            # (1-α)^k carries from exactly these three scalars
-            aggs += [
-                F.count(v).alias(f"__emk_{out}"),
-                F.min_by(v, F.when(v.isNotNull(),
-                                   F.col("__gw_rn")))
-                .alias(f"__emv1_{out}"),
-                F.max_by(F.col(f"__gw_e0_{out}"),
-                         F.col("__gw_rn")).alias(f"__eml_{out}")]
-            continue
-        if p["kind"].startswith("deriv_") or \
-                p["kind"].startswith("integ_"):
-            # first/last (value, time) edge structs per range; the
-            # integral also carries the range's trapezoid pair sum
-            aggs += [F.min_by(v, F.col("__gw_rn")).alias(f"__ef_{out}"),
-                     F.max_by(v, F.col("__gw_rn")).alias(f"__el_{out}")]
-            if p["kind"].startswith("integ_"):
-                aggs.append(F.sum(F.col(f"__gw_pr_{out}"))
-                            .alias(f"__ps_{out}"))
-            continue
-        if p["kind"] == "firstlast":
-            pick = F.min_by if p["op"] == "$first" else F.max_by
-            aggs.append(pick(v, F.col("__gw_rn")).alias(f"__s_{out}"))
-        elif p["op"] in ("$sum", "$avg"):
-            aggs += [F.sum(v).alias(f"__s_{out}"),
-                     F.count(v).alias(f"__c_{out}")]
-        elif p["op"] in ("$stdDevPop", "$stdDevSamp"):
-            # decomposes through (count, sum, sum-of-squares)
-            # partials; the naive recombination loses ~log10(mean^2/
-            # var) digits to cancellation — fine for data-scale
-            # magnitudes, same caveat as any sum-of-squares variance
-            vd = v.cast("double")
-            aggs += [F.sum(vd).alias(f"__s_{out}"),
-                     F.sum(vd * vd).alias(f"__q_{out}"),
-                     F.count(v).alias(f"__c_{out}")]
-        elif p["op"] in ("$covariancePop", "$covarianceSamp"):
-            # (n, Σx, Σy, Σxy) partials — the cross-moment analog of
-            # the stddev carries, same cancellation caveat
-            aggs += [F.sum(v["x"]).alias(f"__s_{out}"),
-                     F.sum(v["y"]).alias(f"__y_{out}"),
-                     F.sum(v["x"] * v["y"]).alias(f"__q_{out}"),
-                     F.count(v).alias(f"__c_{out}")]
-        elif p["op"] == "$min":
-            aggs.append(F.min(v).alias(f"__s_{out}"))
-        else:
-            aggs.append(F.max(v).alias(f"__s_{out}"))
+    for out, p in plans.items():
+        aggs += _swf_partials(out, p, presketch, approx)
     bdf = ranged.groupBy("__gw_pid").agg(*aggs)
     parts = sorted(bdf.collect(), key=lambda r: r["__gw_pid"])
-    btypes = {f.name: f.dataType for f in bdf.schema.fields}
+    return parts, {f.name: f.dataType for f in bdf.schema.fields}
 
-    def fold(values, op):
-        """Combine partition partials driver-side (skipping nulls)."""
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return None
-        if op in ("$sum", "$avg", "count"):
-            return sum(vals)
-        return min(vals) if op == "$min" else max(vals)
 
-    import math as _math
+def _fold(values, how: str):
+    """Driver-side fold of per-range partials, skipping nulls: "$sum"/
+    "$avg"/"count" add (a count of nothing is 0), "$min"/"$max" pick."""
+    vals = [v for v in values if v is not None]
+    if not vals:
+        return 0 if how == "count" else None
+    if how in ("$sum", "$avg", "count"):
+        return sum(vals)
+    return min(vals) if how == "$min" else max(vals)
 
-    def _nn(x):
-        """None-for-NaN: kernel floats use NaN as the missing value."""
-        return None if x is None or (
-            isinstance(x, float) and _math.isnan(x)) else x
 
-    # EMA: sequential driver fold of the per-range affine partials —
-    # state entering range i+1 = e_out0_i when no prior state, else
-    # e_out0_i + (1-α)^k_i · (s_i - v1_i) (the same fix-up each row
-    # applies; one float op pair per range, N_ranges total)
-    ema_states: dict[str, list] = {}
-    ema_v1s: dict[str, list] = {}
-    for out, p in plans.items():
-        if p["kind"] != "ema":
-            continue
-        beta = 1.0 - p["alpha"]
-        s, states, v1s = None, [], []
+def _nn(x):
+    """None-for-NaN: kernel floats use NaN as the missing value."""
+    return None if x is None or (isinstance(x, float) and x != x) else x
+
+
+def _cross(a, b):
+    """Trapezoid term between two (value, time) edge structs: the pair
+    crossing from one range's last row to the next range's first."""
+    if a is None or b is None:
+        return None
+    ax, at, bx, bt = a["x"], a["t"], b["x"], b["t"]
+    if None in (ax, at, bx, bt):
+        return None
+    return (bx + ax) / 2.0 * (bt - at)
+
+
+def _ema_states(out: str, p: dict, parts: list):
+    """EMA state entering each range (None before any value) and each
+    range's first non-null value: the state after range i is its kernel
+    end value e, fixed up to e + (1-α)^k · (s - v1) when state s came in
+    — the same fix-up each row applies, one float op pair per range."""
+    beta = 1.0 - p["alpha"]
+    s, states, v1s = None, [], []
+    for r in parts:
+        states.append(s)
+        v1 = _nn(r[f"__emv1_{out}"])
+        v1s.append(v1)
+        k = r[f"__emk_{out}"] or 0
+        if k > 0:
+            el = _nn(r[f"__eml_{out}"])
+            s = el if s is None else el + beta ** k * (s - v1)
+    return states, v1s
+
+
+def _integ_carries(out: str, p: dict, parts: list) -> list:
+    """$integral running carries: prefix (fwd) or suffix (bwd) sums of
+    the per-range pair sums plus the boundary-crossing terms the
+    in-range lag cannot see."""
+    ps = [r[f"__ps_{out}"] for r in parts]
+    crossings = [None] + [_cross(parts[i - 1][f"__el_{out}"],
+                                 parts[i][f"__ef_{out}"])
+                          for i in range(1, len(parts))]
+    carries, acc = [], 0.0
+    if p["dir"] == "fwd":
+        for i in range(len(parts)):
+            if i > 0:
+                acc += (ps[i - 1] or 0.0) + (crossings[i] or 0.0)
+            carries.append(acc)
+        return carries
+    for i in range(len(parts) - 1, -1, -1):
+        carries.append(acc)
+        if i > 0:
+            acc += (ps[i] or 0.0) + (crossings[i] or 0.0)
+    return carries[::-1]
+
+
+def _swf_carries(plans: dict, parts: list, btypes: dict):
+    """Carry columns, one value per scaffold range in range order:
+    prior-range row (and distinct-key) offsets; each running kind's
+    partials folded over the earlier (fwd) or later (bwd) ranges —
+    equal sort keys share a range, so every row of another range lies
+    wholly inside or outside a running frame; the $expMovingAvg entry
+    states; the $integral carries. Returns (rows, fields) for
+    _carry_df."""
+    from pyspark.sql.types import DoubleType, LongType
+
+    cols: dict = {}  # name -> (type, [value per range])
+
+    def offsets(key):
+        acc, vals = 0, []
         for r in parts:
-            states.append(s)
-            v1 = _nn(r[f"__emv1_{out}"])
-            v1s.append(v1)
-            k = r[f"__emk_{out}"] or 0
-            if k > 0:
-                el = _nn(r[f"__eml_{out}"])
-                s = el if s is None else el + beta ** k * (s - v1)
-        ema_states[out] = states
-        ema_v1s[out] = v1s
+            vals.append(acc)
+            acc += r[key]
+        return vals
 
-    # $integral running carries: prefix/suffix sums of per-range pair
-    # sums plus the boundary-crossing trapezoid terms the in-range
-    # lag cannot see (the pair between range q's last and range q+1's
-    # first row)
-    def _cross(a, b):
-        if a is None or b is None:
-            return None
-        ax, at, bx, bt = a["x"], a["t"], b["x"], b["t"]
-        if None in (ax, at, bx, bt):
-            return None
-        return (bx + ax) / 2.0 * (bt - at)
-
-    integ_carries: dict[str, list] = {}
-    for out, p in plans.items():
-        if p["kind"] not in ("integ_run", "integ_rrun"):
-            continue
-        ps = [r[f"__ps_{out}"] for r in parts]
-        efs = [r[f"__ef_{out}"] for r in parts]
-        els = [r[f"__el_{out}"] for r in parts]
-        crossings = [None] + [_cross(els[i - 1], efs[i])
-                              for i in range(1, len(parts))]
-        carries = []
-        if p["dir"] == "fwd":
-            acc = 0.0
-            for i in range(len(parts)):
-                if i > 0:
-                    acc += (ps[i - 1] or 0.0) + (crossings[i] or 0.0)
-                carries.append(acc)
-        else:
-            acc, rev_c = 0.0, []
-            for i in range(len(parts) - 1, -1, -1):
-                rev_c.append(acc)
-                if i > 0:
-                    acc += (ps[i] or 0.0) + (crossings[i] or 0.0)
-            carries = rev_c[::-1]
-        integ_carries[out] = carries
-
-    carry_rows, carry_fields, done = [], [], set()
-    for i, r in enumerate(parts):
-        row = {"__gw_pid": r["__gw_pid"]}
-        before, after = parts[:i], parts[i + 1:]
-        row["__gw_off_rows"] = sum(p["__rows"] for p in before)
-        if "__dr" in btypes:
-            row["__gw_off_dr"] = sum(p["__dr"] for p in before)
-        for out, p in accs.items():
-            if p["kind"] not in ("fwd", "bwd", "rfwd", "rbwd"):
-                continue
-            # rfwd/rbwd carry whole-partition partials exactly like the
-            # documents running frames: equal sort keys share a range
-            # id, so every row of a PRIOR range has key < x (frame
-            # boundary is the row's own key) — the partials are always
-            # fully inside the frame
-            side = before if p["kind"] in ("fwd", "rfwd") else after
-            moment_ops = ("$stdDevPop", "$stdDevSamp",
-                          "$covariancePop", "$covarianceSamp")
-            fold_op = "$sum" if p["op"] in moment_ops else p["op"]
-            row[f"__gw_cs_{out}"] = fold(
-                [q[f"__s_{out}"] for q in side], fold_op)
-            if p["op"] in ("$sum", "$avg") + moment_ops:
-                row[f"__gw_cc_{out}"] = fold(
-                    [q[f"__c_{out}"] for q in side], "count") or 0
-            if p["op"] in moment_ops:
-                row[f"__gw_cq_{out}"] = fold(
-                    [q[f"__q_{out}"] for q in side], "$sum")
-            if p["op"] in ("$covariancePop", "$covarianceSamp"):
-                row[f"__gw_cy_{out}"] = fold(
-                    [q[f"__y_{out}"] for q in side], "$sum")
-        for out in ema_states:
-            row[f"__gw_es_{out}"] = ema_states[out][i]
-            row[f"__gw_e1_{out}"] = ema_v1s[out][i]
-        for out in integ_carries:
-            row[f"__gw_ci_{out}"] = integ_carries[out][i]
-        carry_rows.append(row)
-    from pyspark.sql.types import LongType
-
-    carry_fields.append(("__gw_off_rows", LongType()))
+    cols["__gw_off_rows"] = (LongType(), offsets("__rows"))
     if "__dr" in btypes:
-        carry_fields.append(("__gw_off_dr", LongType()))
-    for out, p in accs.items():
-        if p["kind"] in ("fwd", "bwd", "rfwd", "rbwd"):
-            moment_ops = ("$stdDevPop", "$stdDevSamp",
-                          "$covariancePop", "$covarianceSamp")
-            carry_fields.append((f"__gw_cs_{out}", btypes[f"__s_{out}"]))
-            if p["op"] in ("$sum", "$avg") + moment_ops:
-                carry_fields.append((f"__gw_cc_{out}", LongType()))
-            if p["op"] in moment_ops:
-                carry_fields.append((f"__gw_cq_{out}",
-                                     btypes[f"__q_{out}"]))
-            if p["op"] in ("$covariancePop", "$covarianceSamp"):
-                carry_fields.append((f"__gw_cy_{out}",
-                                     btypes[f"__y_{out}"]))
-    from pyspark.sql.types import DoubleType
-
-    for out in ema_states:
-        carry_fields += [(f"__gw_es_{out}", DoubleType()),
-                         (f"__gw_e1_{out}", DoubleType())]
-    for out in integ_carries:
-        carry_fields.append((f"__gw_ci_{out}", DoubleType()))
-    # whole-frame-only specs fold to literals and need no carry join —
-    # and without the sort scaffold the pid is the NATURAL partition id,
-    # which is not stable across jobs (the deterministic-range guarantee
-    # only holds when the id is derived from the sort key), so an inner
-    # join on it could silently drop rows
-    if any(p["kind"] in ("rank", "fwd", "bwd", "rfwd", "rbwd", "self",
-                         "dfin", "pctl_run", "pctl_rrun", "ema",
-                         "integ_run", "integ_rrun")
-           for p in plans.values()):
-        ranged = ranged.join(_carry_df(spark, carry_rows, carry_fields),
-                             on="__gw_pid")
-
-    rank_fns = {"$rank": F.rank, "$denseRank": F.dense_rank,
-                "$documentNumber": F.row_number}
-    # Running frames order by the UNIQUE __gw_rn, not the raw sort
-    # keys: separate Window execs may traverse tied keys in different
-    # orders (a later pass re-sorts already-reordered rows with a
-    # stable sort), silently mismatching the row numbers assigned in
-    # the first pass. rank/denseRank keep the raw keys — they must
-    # see ties as ties, and their VALUES are traversal-independent.
-    back = (Window.partitionBy("__gw_pid").orderBy("__gw_rn")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            if need_sort else None)
-    rev = (Window.partitionBy("__gw_pid")
-           .orderBy(F.col("__gw_rn").desc())
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-           if need_sort else None)
-    # every output column below is INDEPENDENT (each reads only
-    # scaffold/value/carry columns), so they accumulate into ONE
-    # withColumns projection applied after the loop (round-11) —
-    # 18 chained Projects collapsed to one, shrinking the plan the
-    # analyzer re-walks on every downstream action
-    pending: dict = {}
+        cols["__gw_off_dr"] = (LongType(), offsets("__dr"))
     for out, p in plans.items():
-        if p["kind"] == "rank":
-            off = F.col("__gw_off_dr" if p["op"] == "$denseRank"
-                        else "__gw_off_rows")
-            # documentNumber reuses the scaffold's row number instead
-            # of re-evaluating row_number() in a later pass, whose tie
-            # traversal could differ from the first pass's
-            base = (F.col("__gw_rn") if p["op"] == "$documentNumber"
-                    else rank_fns[p["op"]]().over(wloc))
-            pending[out] = (base + off).cast("long")
+        if p["kind"] not in ("fwd", "bwd", "rfwd", "rbwd"):
             continue
-        v = F.col(f"__gw_v_{out}")
-        if p["kind"] in ("rfin", "dfin", "pctl_run",
-                         "pctl_rrun"):
-            continue  # handled below (replication / two-pass select)
+        fwd = p["kind"] in ("fwd", "rfwd")
+        # carry columns keep the s, c, q, y order
+        for sfx, _, how in sorted(_MOMENT_PARTIALS[p["op"]],
+                                  key=lambda t: "scqy".index(t[0])):
+            vals = [r[f"__{sfx}_{out}"] for r in parts]
+            cols[f"__gw_c{sfx}_{out}"] = (btypes[f"__{sfx}_{out}"], [
+                _fold(vals[:i] if fwd else vals[i + 1:], how)
+                for i in range(len(parts))])
+    for out, p in plans.items():
         if p["kind"] == "ema":
-            # affine fix-up of the no-state kernel series: rows before
-            # the range's first non-null carry the incoming state
-            e0 = F.col(f"__gw_e0_{out}")
-            c = F.col(f"__gw_ct_{out}")
-            s = F.col(f"__gw_es_{out}")
-            v1 = F.col(f"__gw_e1_{out}")
-            beta = F.lit(1.0 - p["alpha"])
-            fixed = F.when(
-                s.isNotNull(),
-                e0 + F.pow(beta, c.cast("double")) * (s - v1)
-            ).otherwise(e0)
-            pending[out] = F.when(c > 0, fixed).otherwise(s)
-            continue
-        if p["kind"] in ("deriv_whole", "integ_whole"):
-            if p["kind"] == "deriv_whole":
-                f0 = parts[0][f"__ef_{out}"] if parts else None
-                l0 = parts[-1][f"__el_{out}"] if parts else None
-                val = None
-                if (f0 is not None and l0 is not None
-                        and f0["t"] is not None and l0["t"] is not None
-                        and l0["t"] != f0["t"]
-                        and f0["x"] is not None
-                        and l0["x"] is not None):
-                    val = (l0["x"] - f0["x"]) / (l0["t"] - f0["t"])
-            else:
-                ps_tot = sum(r[f"__ps_{out}"] or 0.0 for r in parts)
-                for i in range(1, len(parts)):
-                    ps_tot += _cross(parts[i - 1][f"__el_{out}"],
-                                     parts[i][f"__ef_{out}"]) or 0.0
-                val = ps_tot if parts else 0.0
-            pending[out] = F.lit(val).cast("double")
-            continue
-        if p["kind"] in ("deriv_run", "deriv_rrun"):
-            # running derivative: one frame end is the GLOBAL first
-            # (fwd) / last (bwd) row's (value, time) — a folded
-            # literal; the other end is the current row (documents
-            # frame) or its sort-key tie group's last/first row
-            # (value-range frame, RANGE BETWEEN CURRENT AND CURRENT)
-            edge = (parts[0][f"__ef_{out}"] if p["dir"] == "fwd"
-                    else parts[-1][f"__el_{out}"]) if parts else None
-            ex = F.lit(None if edge is None else edge["x"]) \
-                .cast("double")
-            et = F.lit(None if edge is None else edge["t"]) \
-                .cast("double")
-            if p["kind"] == "deriv_rrun":
-                tie = (Window.partitionBy("__gw_pid")
-                       .orderBy(F.col("__gw_ax").asc())
-                       .rangeBetween(0, 0))
-                if p["dir"] == "fwd":
-                    cx = F.last(v["x"], ignorenulls=False).over(tie)
-                    ct_ = F.last(v["t"], ignorenulls=False).over(tie)
-                else:
-                    cx = F.first(v["x"], ignorenulls=False).over(tie)
-                    ct_ = F.first(v["t"], ignorenulls=False).over(tie)
-            else:
-                cx, ct_ = v["x"], v["t"]
-            dv = (cx - ex) if p["dir"] == "fwd" else (ex - cx)
-            dt = (ct_ - et) if p["dir"] == "fwd" else (et - ct_)
-            pending[out] = F.when(dt != F.lit(0), dv / dt)
-            continue
+            states, v1s = _ema_states(out, p, parts)
+            cols[f"__gw_es_{out}"] = (DoubleType(), states)
+            cols[f"__gw_e1_{out}"] = (DoubleType(), v1s)
+    for out, p in plans.items():
         if p["kind"] in ("integ_run", "integ_rrun"):
-            pr = F.col(f"__gw_pr_{out}")
-            ci = F.coalesce(F.col(f"__gw_ci_{out}"), F.lit(0.0))
-            if p["kind"] == "integ_run":
-                if p["dir"] == "fwd":
-                    local = F.coalesce(F.sum(pr).over(back), F.lit(0.0))
-                else:
-                    # suffix pairs j > i: the reverse running sum
-                    # includes the row's own pair (which covers the
-                    # span BEFORE it — outside the frame), subtract it
-                    local = (F.coalesce(F.sum(pr).over(rev), F.lit(0.0))
-                             - F.coalesce(pr, F.lit(0.0)))
-            else:
-                if p["dir"] == "fwd":
-                    wr = (Window.partitionBy("__gw_pid")
-                          .orderBy(F.col("__gw_ax").asc())
-                          .rangeBetween(Window.unboundedPreceding, 0))
-                    local = F.coalesce(F.sum(pr).over(wr), F.lit(0.0))
-                else:
-                    wrd = (Window.partitionBy("__gw_pid")
-                           .orderBy(F.col("__gw_ax").desc())
-                           .rangeBetween(Window.unboundedPreceding, 0))
-                    tie = (Window.partitionBy("__gw_pid")
-                           .orderBy(F.col("__gw_ax").asc())
-                           .rangeBetween(0, 0))
-                    # frame starts at the tie group's CHAIN-first row
-                    # (min rn — the lag chain's order); its pair
-                    # covers the span before the frame — subtract it.
-                    # first() over the ax-only ordering is ambiguous
-                    # under ties and could pick a zero-width tie pair
-                    fp = F.min_by(pr, F.col("__gw_rn")).over(tie)
-                    local = (F.coalesce(F.sum(pr).over(wrd), F.lit(0.0))
-                             - F.coalesce(fp, F.lit(0.0)))
-            pending[out] = local + ci
-            continue
-        if p["kind"] == "pctl_whole":
-            # ONE dedicated action: percentile has no per-range
-            # partial decomposition, so the whole frame is a single
-            # percentile aggregate folded to a literal (exact by
-            # default; the approximate engine mode uses the mergeable
-            # percentile_approx sketch — same one-action shape)
-            pfn = (F.percentile_approx if pctl_approx else F.percentile)
-            qrow = ranged.agg(pfn(
-                v.cast("double"),
-                F.array(*[F.lit(x) for x in p["ps"]])).alias("q")
-            ).first()
-            vals = qrow["q"]
-            if p["scalar"]:
-                col = F.lit(vals[0] if vals else None).cast("double")
-            elif vals is None:
-                col = F.lit(None).cast("array<double>")
-            else:
-                col = F.array(*[F.lit(float(x)).cast("double")
-                                for x in vals])
-            pending[out] = col
-            continue
-        if p["kind"] == "firstlast":
-            lo_b, hi_b = p["frame"]
-            if (p["op"] == "$first" and lo_b == "current") or \
-                    (p["op"] == "$last" and hi_b == "current"):
-                # frame starts (ends) at the current row -> own value
-                pending[out] = v
-            else:
-                # unbounded end -> the GLOBAL first/last row's value,
-                # folded driver-side from the per-range min_by/max_by
-                val = None
-                if parts:
-                    val = (parts[0] if p["op"] == "$first"
-                           else parts[-1])[f"__s_{out}"]
-                pending[out] = F.lit(val).cast(btypes[f"__s_{out}"])
-            continue
-        if p["kind"] == "whole":
-            if p["op"] in ("$covariancePop", "$covarianceSamp"):
-                sx = fold([r[f"__s_{out}"] for r in parts], "$sum") or 0.0
-                sy = fold([r[f"__y_{out}"] for r in parts], "$sum") or 0.0
-                sxy = fold([r[f"__q_{out}"] for r in parts], "$sum") or 0.0
-                c = fold([r[f"__c_{out}"] for r in parts], "count") or 0
-                if p["op"] == "$covariancePop":
-                    val = (sxy / c - (sx / c) * (sy / c)) if c > 0 \
-                        else None
-                else:
-                    val = ((sxy - sx * sy / c) / (c - 1)) if c > 1 \
-                        else None
-                pending[out] = F.lit(val).cast("double")
-                continue
-            if p["op"] in ("$stdDevPop", "$stdDevSamp"):
-                s = fold([r[f"__s_{out}"] for r in parts], "$sum") or 0.0
-                q = fold([r[f"__q_{out}"] for r in parts], "$sum") or 0.0
-                c = fold([r[f"__c_{out}"] for r in parts], "count") or 0
-                if p["op"] == "$stdDevPop":
-                    val = (max(q / c - (s / c) ** 2, 0.0) ** 0.5
-                           if c > 0 else None)
-                else:
-                    val = (max((q - s * s / c) / (c - 1), 0.0) ** 0.5
-                           if c > 1 else None)
-                pending[out] = F.lit(val).cast("double")
-                continue
-            tot = fold([r[f"__s_{out}"] for r in parts], p["op"])
-            if p["op"] == "$avg":
-                cnt = fold([r[f"__c_{out}"] for r in parts], "count") or 0
-                tot = (float(tot) / cnt) if cnt else None
-                col = F.lit(tot).cast("double")
-            else:
-                if p["op"] == "$sum" and tot is None:
-                    tot = 0  # Mongo: $sum over an all-null frame is 0
-                col = F.lit(tot).cast(btypes[f"__s_{out}"])
-            pending[out] = col
-            continue
-        if p["kind"] == "self":
-            frame_w = wloc.rowsBetween(Window.currentRow, Window.currentRow)
-            if p["op"] in ("$covariancePop", "$covarianceSamp"):
-                fn = (F.covar_pop if p["op"] == "$covariancePop"
-                      else F.covar_samp)
-                pending[out] = fn(v["x"], v["y"]).over(frame_w)
-            else:
-                pending[out] = _ACCUMULATORS[p["op"]](v).over(frame_w)
-            continue
-        if p["kind"] == "rfwd":
-            loc_w = (Window.partitionBy("__gw_pid")
-                     .orderBy(F.col("__gw_ax").asc())
-                     .rangeBetween(Window.unboundedPreceding, 0))
-        elif p["kind"] == "rbwd":
-            # reverse axis order: the frame "keys >= x" becomes a
-            # running range over the descending traversal
-            loc_w = (Window.partitionBy("__gw_pid")
-                     .orderBy(F.col("__gw_ax").desc())
-                     .rangeBetween(Window.unboundedPreceding, 0))
-        else:
-            loc_w = back if p["kind"] == "fwd" else rev
-        cs = F.col(f"__gw_cs_{out}")
-        if p["op"] in ("$min", "$max"):
-            comb = F.least if p["op"] == "$min" else F.greatest
-            local = (F.min if p["op"] == "$min" else F.max)(v).over(loc_w)
-            pending[out] = comb(local, cs)
-            continue
-        if p["op"] in ("$covariancePop", "$covarianceSamp"):
-            n = (F.count(v).over(loc_w)
-                 + F.col(f"__gw_cc_{out}")).cast("double")
-            sx = (F.coalesce(F.sum(v["x"]).over(loc_w), F.lit(0.0))
-                  + F.coalesce(F.col(f"__gw_cs_{out}"), F.lit(0.0)))
-            sy = (F.coalesce(F.sum(v["y"]).over(loc_w), F.lit(0.0))
-                  + F.coalesce(F.col(f"__gw_cy_{out}"), F.lit(0.0)))
-            sxy = (F.coalesce(F.sum(v["x"] * v["y"]).over(loc_w),
-                              F.lit(0.0))
-                   + F.coalesce(F.col(f"__gw_cq_{out}"), F.lit(0.0)))
-            if p["op"] == "$covariancePop":
-                cov = F.when(n > 0, sxy / n - (sx / n) * (sy / n))
-            else:
-                cov = F.when(n > 1, (sxy - sx * sy / n) / (n - 1))
-            pending[out] = cov
-            continue
-        if p["op"] in ("$stdDevPop", "$stdDevSamp"):
-            vd = v.cast("double")
-            n = (F.count(v).over(loc_w)
-                 + F.col(f"__gw_cc_{out}")).cast("double")
-            s = (F.coalesce(F.sum(vd).over(loc_w), F.lit(0.0))
-                 + F.coalesce(cs, F.lit(0.0)))
-            q = (F.coalesce(F.sum(vd * vd).over(loc_w), F.lit(0.0))
-                 + F.coalesce(F.col(f"__gw_cq_{out}"), F.lit(0.0)))
-            if p["op"] == "$stdDevPop":
-                var = F.when(n > 0, F.greatest(
-                    q / n - (s / n) * (s / n), F.lit(0.0)))
-            else:
-                var = F.when(n > 1, F.greatest(
-                    (q - s * s / n) / (n - 1), F.lit(0.0)))
-            pending[out] = F.sqrt(var)
-            continue
-        local_s = F.sum(v).over(loc_w)
-        cnt_tot = F.count(v).over(loc_w) + F.col(f"__gw_cc_{out}")
-        sum_tot = F.coalesce(local_s, F.lit(0)) + F.coalesce(cs, F.lit(0))
-        if p["op"] == "$avg":
-            pending[out] = F.when(cnt_tot > 0, sum_tot / cnt_tot)
-        else:
-            # Mongo window $sum: 0 over empty/all-null frames (sum_tot
-            # is already 0 there — no empty-frame null gate)
-            pending[out] = sum_tot.cast(btypes[f"__s_{out}"])
-    if pending:
-        ranged = ranged.withColumns(pending)
+            cols[f"__gw_ci_{out}"] = (DoubleType(),
+                                      _integ_carries(out, p, parts))
+    rows = [{"__gw_pid": r["__gw_pid"],
+             **{c: vals[i] for c, (_, vals) in cols.items()}}
+            for i, r in enumerate(parts)]
+    return rows, [(c, t) for c, (t, _) in cols.items()]
 
+
+def _gw_running(axis: str, desc: bool = False):
+    """Per-range running frame from the range head to the current row:
+    ROWS over the unique row number __gw_rn, RANGE (sort-key ties
+    included) over the value axis __gw_ax; `desc` runs it backwards.
+    Documents frames order by __gw_rn, not the raw sort keys: separate
+    Window execs may traverse tied keys in different orders."""
+    from pyspark.sql import Window
+
+    col = F.col(axis).desc() if desc else F.col(axis).asc()
+    w = Window.partitionBy("__gw_pid").orderBy(col)
+    if axis == "__gw_rn":
+        return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return w.rangeBetween(Window.unboundedPreceding, 0)
+
+
+def _gw_ties():
+    """Per-range frame of the current row's sort-key tie group."""
+    from pyspark.sql import Window
+
+    return (Window.partitionBy("__gw_pid")
+            .orderBy(F.col("__gw_ax").asc()).rangeBetween(0, 0))
+
+
+def _swf_rank(out, p, ctx):
+    # documentNumber reuses the scaffold's row number: a later pass's
+    # row_number() could traverse ties differently
+    off = F.col("__gw_off_dr" if p["op"] == "$denseRank"
+                else "__gw_off_rows")
+    base = (F.col("__gw_rn") if p["op"] == "$documentNumber"
+            else _RANK_FNS[p["op"]]().over(ctx["wloc"]))
+    return (base + off).cast("long")
+
+
+def _swf_ema(out, p, ctx):
+    # affine fix-up of the no-state kernel series; rows before the
+    # range's first non-null carry the incoming state
+    e0, c = F.col(f"__gw_e0_{out}"), F.col(f"__gw_ct_{out}")
+    s, v1 = F.col(f"__gw_es_{out}"), F.col(f"__gw_e1_{out}")
+    beta = F.lit(1.0 - p["alpha"])
+    fixed = F.when(s.isNotNull(),
+                   e0 + F.pow(beta, c.cast("double")) * (s - v1)
+                   ).otherwise(e0)
+    return F.when(c > 0, fixed).otherwise(s)
+
+
+def _swf_edge_whole(out, p, ctx):
+    # whole-frame literals: the global first/last (value, time) slope,
+    # or every pair sum plus the crossings between ranges
+    parts = ctx["parts"]
+    if p["kind"] == "deriv_whole":
+        f0 = parts[0][f"__ef_{out}"] if parts else None
+        l0 = parts[-1][f"__el_{out}"] if parts else None
+        val = None
+        if (f0 is not None and l0 is not None
+                and None not in (f0["t"], l0["t"], f0["x"], l0["x"])
+                and l0["t"] != f0["t"]):
+            val = (l0["x"] - f0["x"]) / (l0["t"] - f0["t"])
+    else:
+        val = sum(r[f"__ps_{out}"] or 0.0 for r in parts)
+        for i in range(1, len(parts)):
+            val += _cross(parts[i - 1][f"__el_{out}"],
+                          parts[i][f"__ef_{out}"]) or 0.0
+        val = val if parts else 0.0
+    return F.lit(val).cast("double")
+
+
+def _swf_deriv_run(out, p, ctx):
+    # one frame end is the GLOBAL first (fwd) / last (bwd) row — a
+    # folded literal; the other is the current row (documents) or its
+    # sort-key tie group's last/first row (range)
+    parts, v, fwd = ctx["parts"], F.col(f"__gw_v_{out}"), p["dir"] == "fwd"
+    edge = (parts[0][f"__ef_{out}"] if fwd
+            else parts[-1][f"__el_{out}"]) if parts else None
+    ex = F.lit(None if edge is None else edge["x"]).cast("double")
+    et = F.lit(None if edge is None else edge["t"]).cast("double")
+    if p["kind"] == "deriv_rrun":
+        pick = F.last if fwd else F.first
+        cx = pick(v["x"], ignorenulls=False).over(_gw_ties())
+        ct = pick(v["t"], ignorenulls=False).over(_gw_ties())
+    else:
+        cx, ct = v["x"], v["t"]
+    dv = (cx - ex) if fwd else (ex - cx)
+    dt = (ct - et) if fwd else (et - ct)
+    return F.when(dt != F.lit(0), dv / dt)
+
+
+def _swf_integ_run(out, p, ctx):
+    pr, z = F.col(f"__gw_pr_{out}"), F.lit(0.0)
+    fwd = p["dir"] == "fwd"
+    axis = "__gw_rn" if p["kind"] == "integ_run" else "__gw_ax"
+    local = F.coalesce(F.sum(pr).over(_gw_running(axis, not fwd)), z)
+    if not fwd:
+        # the frame's first row's pair covers the span BEFORE the frame:
+        # the row's own pair, or on a range axis the pair of the tie
+        # group's chain-first row (min rn — first() over the ax-only
+        # order could pick a zero-width tie pair)
+        head = pr if p["kind"] == "integ_run" else \
+            F.min_by(pr, F.col("__gw_rn")).over(_gw_ties())
+        local = local - F.coalesce(head, z)
+    return local + F.coalesce(F.col(f"__gw_ci_{out}"), z)
+
+
+def _swf_pctl_whole(out, p, ctx):
+    # ONE dedicated action folded to a literal: a percentile has no
+    # per-range partial (approximate mode: the percentile_approx sketch)
+    pfn = F.percentile_approx if ctx["approx"] else F.percentile
+    vals = ctx["ranged"].agg(pfn(
+        F.col(f"__gw_v_{out}").cast("double"),
+        F.array(*[F.lit(x) for x in p["ps"]])).alias("q")).first()["q"]
+    if p["scalar"]:
+        return F.lit(vals[0] if vals else None).cast("double")
+    if vals is None:
+        return F.lit(None).cast("array<double>")
+    return F.array(*[F.lit(float(x)).cast("double") for x in vals])
+
+
+def _swf_first_last(out, p, ctx):
+    lo_b, hi_b = p["frame"]
+    if (p["op"] == "$first" and lo_b == "current") or \
+            (p["op"] == "$last" and hi_b == "current"):
+        return F.col(f"__gw_v_{out}")  # the row's own value
+    # an unbounded end is the GLOBAL first/last row's value
+    parts = ctx["parts"]
+    val = ((parts[0] if p["op"] == "$first" else parts[-1])[f"__s_{out}"]
+           if parts else None)
+    return F.lit(val).cast(ctx["btypes"][f"__s_{out}"])
+
+
+def _moment_value(op: str, t: dict):
+    """Driver-side twin of _moment_combine over folded whole-frame
+    partials `t` (suffix -> value, see _MOMENT_PARTIALS)."""
+    n = t["c"]
+    if op == "$avg":
+        return float(t["s"]) / n if n else None
+    s, q = t["s"] or 0.0, t["q"] or 0.0
+    if op == "$stdDevPop":
+        return max(q / n - (s / n) ** 2, 0.0) ** 0.5 if n > 0 else None
+    if op == "$stdDevSamp":
+        return max((q - s * s / n) / (n - 1), 0.0) ** 0.5 if n > 1 else None
+    y = t["y"] or 0.0
+    if op == "$covariancePop":
+        return q / n - (s / n) * (y / n) if n > 0 else None
+    return (q - s * y / n) / (n - 1) if n > 1 else None
+
+
+def _swf_whole(out, p, ctx):
+    op = p["op"]
+    t = {sfx: _fold([r[f"__{sfx}_{out}"] for r in ctx["parts"]], how)
+         for sfx, _, how in _MOMENT_PARTIALS[op]}
+    if op not in ("$sum", "$min", "$max"):
+        return F.lit(_moment_value(op, t)).cast("double")
+    # Mongo: $sum over an all-null frame is 0
+    tot = 0 if op == "$sum" and t["s"] is None else t["s"]
+    return F.lit(tot).cast(ctx["btypes"][f"__s_{out}"])
+
+
+def _swf_self(out, p, ctx):
+    from pyspark.sql import Window
+
+    return _window_agg(p["op"], F.col(f"__gw_v_{out}")).over(
+        ctx["wloc"].rowsBetween(Window.currentRow, Window.currentRow))
+
+
+def _swf_running(out, p, ctx):
+    # the running frame inside the range, combined with the carried
+    # partials of every earlier (fwd) or later (bwd) range
+    op, v = p["op"], F.col(f"__gw_v_{out}")
+    loc_w = _gw_running(
+        "__gw_ax" if p["kind"] in ("rfwd", "rbwd") else "__gw_rn",
+        desc=p["kind"] in ("bwd", "rbwd"))
+    if op in ("$min", "$max"):
+        (_, agg, _), = _MOMENT_PARTIALS[op]
+        return (F.least if op == "$min" else F.greatest)(
+            agg(v).over(loc_w), F.col(f"__gw_cs_{out}"))
+    z = F.lit(0) if op in ("$sum", "$avg") else F.lit(0.0)
+    m = {}
+    for sfx, agg, _ in _MOMENT_PARTIALS[op]:
+        local, carry = agg(v).over(loc_w), F.col(f"__gw_c{sfx}_{out}")
+        m[sfx] = (local + carry if sfx == "c"
+                  else F.coalesce(local, z) + F.coalesce(carry, z))
+    if op == "$sum":
+        # Mongo's window $sum is 0 over empty/all-null frames, which the
+        # coalesced sum already is
+        return m["s"].cast(ctx["btypes"][f"__s_{out}"])
+    n = m["c"] if op == "$avg" else m["c"].cast("double")
+    return _moment_combine(op, n, m["s"], m.get("q"), m.get("y"))
+
+
+# per-family output assemblers of _swf_global: (out, plan, ctx) ->
+# Column; rfin/dfin and the running percentiles assemble separately
+_SWF_ASSEMBLERS = {
+    "rank": _swf_rank, "ema": _swf_ema,
+    "deriv_whole": _swf_edge_whole, "integ_whole": _swf_edge_whole,
+    "deriv_run": _swf_deriv_run, "deriv_rrun": _swf_deriv_run,
+    "integ_run": _swf_integ_run, "integ_rrun": _swf_integ_run,
+    "pctl_whole": _swf_pctl_whole, "firstlast": _swf_first_last,
+    "whole": _swf_whole, "self": _swf_self,
+    "fwd": _swf_running, "bwd": _swf_running,
+    "rfwd": _swf_running, "rbwd": _swf_running,
+}
+
+
+def _check_fanout(frame: str, fanout: float) -> None:
+    if fanout > MAX_RANGE_REPLICATION:
+        raise ValueError(
+            f"{frame} spans ~{fanout:.0f} ranges (> MAX_RANGE_REPLICATION="
+            f"{MAX_RANGE_REPLICATION}): the replication fan-out would "
+            "multiply shuffle volume — add partitionBy, or use "
+            "fewer/wider ranges")
+
+
+def _replicate_finite(rep: DataFrame, fins: dict, ladders: dict, tag: str,
+                      owner: str, dest: str, axis: Column, offsets: dict,
+                      growing_cum, order: tuple, chain_key) -> DataFrame:
+    """Shared assembler of the finite-frame kinds (rfin, dfin): copy
+    each row into every destination range between its lowest and
+    highest ladder index (explode over a sequence), window each output
+    per destination over `axis`, and keep the owner copies — they carry
+    every earlier column 1:1, so the filtered frame IS the result, no
+    join-back. Copies outside an output's own contributor interval
+    carry a MASKED (null) value: they hold axis positions harmlessly and
+    never corrupt a foreign frame.
+
+    `ladders` maps each output to its (lo, hi) destination expressions,
+    stored as __gw_{tag}lo_/__gw_{tag}hi_ columns; `offsets` to its
+    [lo, hi] frame on `axis`; `growing_cum` builds the invertible ops'
+    cumulatives; `order`/`chain_key` are the $derivative/$integral lag
+    chain (see _fin_deriv_integ)."""
+    from pyspark.sql import Window
+    from pyspark.sql.types import DecimalType
+
+    lo_cols, hi_cols = [F.col(owner)], [F.col(owner)]
+    for out, (lo, hi) in ladders.items():
+        rep = (rep.withColumn(f"__gw_{tag}lo_{out}", lo)
+               .withColumn(f"__gw_{tag}hi_{out}", hi))
+        lo_cols.append(F.col(f"__gw_{tag}lo_{out}"))
+        hi_cols.append(F.col(f"__gw_{tag}hi_{out}"))
+    rep = rep.withColumn(dest, F.explode(F.sequence(F.least(*lo_cols),
+                                                    F.greatest(*hi_cols))))
+    wdest = Window.partitionBy(dest)
+    for out, p in fins.items():
+        op, (lo, hi) = p["op"], offsets[out]
+        vm = F.when(F.col(dest).between(F.col(f"__gw_{tag}lo_{out}"),
+                                        F.col(f"__gw_{tag}hi_{out}")),
+                    F.col(f"__gw_v_{out}"))
+        if op in _INVERTIBLE_WINDOW_OPS and not (
+                op == "$avg" and isinstance(_agg_type(rep, vm), DecimalType)):
+            # growing-frame differencing instead of the O(width)/row
+            # sliding frame; decimal $avg keeps the sliding path so
+            # Spark's decimal-average precision rules apply unchanged
+            col = _frame_from_cum(op, vm, growing_cum(wdest, axis, lo, hi))
+            if op == "$sum":
+                col = col.cast(_agg_type(rep, F.sum(vm)))
+        else:
+            # the window runs BEFORE the owner filter — filtering first
+            # would drop the contributor copies from the frame
+            w_fin = wdest.orderBy(axis.asc()).rangeBetween(lo, hi)
+            if op in ("$deriv", "$integ"):
+                col = _fin_deriv_integ(op, vm, w_fin, wdest.orderBy(*order),
+                                       chain_key)
+            elif op == "$pctl":
+                pc = F.percentile(vm.cast("double"), F.array(
+                    *[F.lit(x) for x in p["ps"]])).over(w_fin)
+                col = F.element_at(pc, 1) if p["scalar"] else pc
+            else:
+                col = _window_agg(op, vm).over(w_fin)
+        rep = rep.withColumn(out, col)
+    return rep.filter(F.col(dest) == F.col(owner))
+
+
+def _swf_rfin(ranged: DataFrame, rfins: dict, sort: dict,
+              bs: list) -> DataFrame:
+    """Finite [lo, hi] VALUE-RANGE frames: a row with key x contributes
+    to the frames of rows y in [x-hi, x-lo], so it is copied into every
+    scaffold range whose span overlaps that interval. The boundaries
+    are literals, so the destinations are a pure row function — the
+    carry scaffold's soundness rule. Fan-out ~ frame width / range
+    span."""
+    from maggma_spark.functions.partitioning import _numeric_key
+
+    rf_field = next(iter(sort))
+    span = ((float(bs[-1]) - float(bs[0])) / (len(bs) - 1)
+            if len(bs) >= 2 else None)
+    bkey = _numeric_key(ranged, rf_field)
+    if bkey is None:
+        bkey = F.col(rf_field)
+
+    def pid_ladder(col):
+        pid = F.lit(0)
+        for b in bs:
+            pid = pid + (col > F.lit(b)).cast("int")
+        # null sort keys keep their own range (their frame only ever
+        # matches other nulls)
+        return F.when(F.col(rf_field).isNull(),
+                      F.col("__gw_pid")).otherwise(pid.cast("int"))
+
+    ladders = {}
+    for out, p in rfins.items():
+        rlo, rhi = (float(x) for x in p["range"])
+        ms = _unit_ms(p["unit"])
+        bscale = ms * 1000.0 if ms else 1.0  # boundary units: micros
+        if span and span > 0:
+            _check_fanout(f"range frame {p['range']}",
+                          (rhi - rlo) * bscale / span)
+        ladders[out] = (pid_ladder(bkey - F.lit(rhi * bscale)),
+                        pid_ladder(bkey - F.lit(rlo * bscale)))
+    ax, rn = F.col("__gw_ax"), F.col("__gw_rn")
+    return _replicate_finite(
+        ranged, rfins, ladders, "p", "__gw_pid", "__gw_dest", ax,
+        {o: p["offsets"] for o, p in rfins.items()}, _growing_cum_range,
+        (ax.asc(), rn.asc()), F.struct(ax, rn))
+
+
+def _swf_dfin(ranged: DataFrame, dfins: dict, parts: list) -> DataFrame:
+    """Finite ROW-OFFSET frames by the same replication on the GLOBAL
+    row-number axis g = rn + prior-range row offset: the per-range
+    cumulative row counts are driver scalars, so "which range holds
+    global row g+k" is a literal ladder, and rangeBetween over the
+    unique integer g equals the row-offset frame exactly. Tied sort keys
+    follow the scaffold's deterministic rn (Mongo's tie traversal is
+    likewise unspecified — DEVIATIONS §16)."""
+    cums, acc = [], 0
+    for r in parts:
+        acc += r["__rows"]
+        cums.append(acc)
+    avg_rows = acc / max(1, len(parts))
+
+    def idx_ladder(col):
+        idx = F.lit(0)
+        for c in cums[:-1]:
+            idx = idx + (col > F.lit(int(c))).cast("int")
+        return idx
+
+    g = F.col("__gw_g")
+    rep = (ranged.withColumn("__gw_g",
+                             F.col("__gw_rn") + F.col("__gw_off_rows"))
+           .withColumn("__gw_oidx", idx_ladder(g)))
+    ladders = {}
+    for out, p in dfins.items():
+        dlo, dhi = p["frame"]
+        if avg_rows > 0:
+            _check_fanout(f"documents frame {list(p['frame'])}",
+                          (dhi - dlo + 1) / avg_rows)
+        ladders[out] = (idx_ladder(g - F.lit(dhi)), idx_ladder(g - F.lit(dlo)))
+    return _replicate_finite(
+        rep, dfins, ladders, "d", "__gw_oidx", "__gw_gdest", g,
+        {o: p["frame"] for o, p in dfins.items()}, _growing_cum_axis,
+        (g.asc(),), g)
+
+
+def _swf_pctl_specs(pruns: dict, parts: list, presketch,
+                    approx: bool) -> list:
+    """_global_running_pctl specs of the running-percentile outputs: the
+    probe's splits plus the boundary histograms when the combined probe
+    ran (the kernels then skip their hist/fold/broadcast stages), else
+    the value sketches that rode the boundary aggregate."""
+    specs = []
+    for o, p in pruns.items():
+        ak = _pctl_argkey(p)
+        sp = {"out": o, "ps": p["ps"], "scalar": p["scalar"],
+              "mode": "range" if p["kind"] == "pctl_rrun" else "rows",
+              "dir": p["dir"], "argkey": ak}
+        if presketch is not None:
+            rep, vbs = presketch["ak_rep"][ak], presketch["vbs"][ak]
+            sp["vbs"], sp["bcol"] = vbs, f"__gw_hb_{rep}"
+            sp["histcounts"] = [
+                (r["__gw_pid"], [r[f"__ph_{rep}_{b}"] or 0
+                                 for b in range(len(vbs) + 1)])
+                for r in parts]
+            if approx:
+                sp["lo"] = presketch["row"][f"__lo_{rep}"]
+                sp["hi"] = presketch["row"][f"__hi_{rep}"]
+        else:
+            sp["sketch"] = sorted(x for r in parts
+                                  for x in (r[f"__pqsk_{o}"] or [])
+                                  if x is not None)
+            if approx:
+                sp["lo"] = min((r[f"__pqlo_{o}"] for r in parts
+                                if r[f"__pqlo_{o}"] is not None),
+                               default=None)
+                sp["hi"] = max((r[f"__pqhi_{o}"] for r in parts
+                                if r[f"__pqhi_{o}"] is not None),
+                               default=None)
+        specs.append(sp)
+    return specs
+
+
+def _swf_global(df: DataFrame, spec: dict, sort: dict,
+                bs: list = None, total: int = None) -> DataFrame:
+    """Unpartitioned $setWindowFields WITHOUT the single-task global
+    window: per-range windows over the range-partition scaffold,
+    stitched by driver-folded broadcast carries (round history:
+    SCALE.md). Support matrix, by _swf_plan kind:
+
+    - $rank/$denseRank/$documentNumber (rank): per-range rank plus
+      prior-range row/distinct offsets — the range partitioner
+      co-locates equal sort keys.
+    - $sum/$avg/$min/$max/$stdDev*/$covariance* over documents frames
+      ["unbounded","current"] (fwd carry), ["current","unbounded"]
+      (bwd: reverse running frame + backward carry, never Spark's
+      O(n^2) unbounded-following frame), ["unbounded","unbounded"]
+      (whole: one literal), ["current","current"] (self) and finite
+      [lo, hi] (dfin); over VALUE-RANGE frames on a numeric or
+      date-`unit` timestamp sortBy: running (rfwd/rbwd) and finite
+      [lo, hi] (rfin).
+    - $first/$last over documents frames of unbounded/current ends
+      (firstlast: an unbounded end is the global first/last row).
+    - $median/$percentile: whole frame (pctl_whole, one extra action),
+      running documents/range frames (pctl_run/pctl_rrun, see
+      _global_running_pctl), finite frames (dfin/rfin).
+    - $expMovingAvg (ema): per-range pandas-ewm kernel + affine
+      (1-α)^k state carries.
+    - $derivative/$integral: finite frames (dfin/rfin), running frames
+      (deriv_run/integ_run, *_rrun: edge structs + trapezoid pair-sum
+      carries), whole frames (*_whole: literals).
+
+    dfin/rfin replicate rows into neighbouring ranges (_replicate_finite,
+    fan-out guarded by MAX_RANGE_REPLICATION). Order-dependent
+    accumulators ($push/$addToSet) raise and ask for partitionBy rather
+    than silently funneling the data through one task."""
+    spark = df.sparkSession
+    plans = _swf_plan(spec, sort)
+    kinds = {p["kind"] for p in plans.values()}
+    # Mongo's window $median/$percentile only OFFER method "approximate";
+    # the default stays the exact (oracle bit-matchable) order-statistics
+    # path and the engine conf licenses the sketch path
+    approx = spark.conf.get(
+        "spark.maggma.windowPctl.method", "exact") == "approximate"
+    need_sort = not kinds <= {"whole", "pctl_whole"}
+    presketch = None
+    if kinds & {"pctl_run", "pctl_rrun"} and need_sort and bs is None \
+            and sort:
+        presketch = _swf_probe(df, plans, sort, approx)
+        if presketch is not None:
+            bs = presketch["bs"]
+    if need_sort:
+        ranged, wloc, bs, scaffold_total = _global_scaffold(df, sort, bs)
+    else:
+        ranged = df.withColumn("__gw_pid", F.spark_partition_id())
+        wloc, bs, scaffold_total = None, [], None
+    if presketch is not None:
+        scaffold_total = presketch["row"]["__n"]
+    if scaffold_total is None:
+        scaffold_total = total  # caller-precomputed (multi-pass)
+    ranged = _swf_value_columns(ranged, plans, sort, presketch,
+                                scaffold_total)
+    # multi-action passes (percentile selection, replication, whole
+    # percentiles, the EMA kernel) would re-run the scaffold's window
+    # per action: a LAZY checkpoint, materialized by the boundary
+    # aggregate below, lets every later action read blocks
+    if need_sort and kinds & {"pctl_run", "pctl_rrun", "pctl_whole",
+                              "rfin", "dfin", "ema"} and spark.conf.get(
+            "spark.maggma.globalWindow.checkpoint", "auto") != "never":
+        ranged = ranged.localCheckpoint(eager=False)
+    parts, btypes = _swf_boundary(ranged, plans, sort, presketch, approx)
+    # whole-frame-only specs fold to literals and need no carry join —
+    # without the sort scaffold the pid is the NATURAL partition id,
+    # not stable across jobs, so an inner join on it could drop rows
+    if kinds & _SWF_CARRIED_KINDS:
+        ranged = ranged.join(
+            _carry_df(spark, *_swf_carries(plans, parts, btypes)),
+            on="__gw_pid")
+    # every output column is independent: ONE withColumns for all
+    ctx = {"ranged": ranged, "parts": parts, "btypes": btypes,
+           "wloc": wloc, "approx": approx}
+    outs = {o: _SWF_ASSEMBLERS[p["kind"]](o, p, ctx)
+            for o, p in plans.items() if p["kind"] in _SWF_ASSEMBLERS}
+    if outs:
+        ranged = ranged.withColumns(outs)
     rfins = {o: p for o, p in plans.items() if p["kind"] == "rfin"}
     if rfins:
-        # Finite [lo, hi] value-range frames by boundary-overlap
-        # replication: a row with key x contributes to the frames of
-        # rows y in [x-hi, x-lo], so it is copied into every range
-        # whose span overlaps that interval (the boundary list is
-        # literals — the destination set is a pure row function, the
-        # same soundness rule as the carry scaffold). Copies outside an
-        # output's own contributor interval carry a MASKED (null)
-        # value, so they occupy axis positions harmlessly and can
-        # never corrupt a foreign frame. Fan-out ~ frame_width /
-        # range_span, guarded by MAX_RANGE_REPLICATION; results join
-        # back on the deterministic (range id, row number) pair.
-        from maggma_spark.functions.partitioning import _numeric_key
-
-        span = ((float(bs[-1]) - float(bs[0])) / (len(bs) - 1)
-                if len(bs) >= 2 else None)
-        bkey = _numeric_key(ranged, rf_field)
-        if bkey is None:
-            bkey = F.col(rf_field)
-
-        def pid_ladder(col):
-            pid = F.lit(0)
-            for b in bs:
-                pid = pid + (col > F.lit(b)).cast("int")
-            # null sort keys have no numeric frame: keep them in their
-            # own range (their frame only ever matches other nulls)
-            return F.when(F.col(rf_field).isNull(),
-                          F.col("__gw_pid")).otherwise(pid.cast("int"))
-
-        rep = ranged
-        offsets = {}
-        lo_cols, hi_cols = [F.col("__gw_pid")], [F.col("__gw_pid")]
-        for out, p in rfins.items():
-            rlo, rhi = (float(x) for x in p["range"])
-            unit = p["unit"]
-            # window-axis offsets (ms for unit frames, raw otherwise)
-            # must land on integers: rangeBetween takes long bounds
-            alo, ahi = rlo * (_RANGE_UNIT_MS[unit] if unit else 1), \
-                rhi * (_RANGE_UNIT_MS[unit] if unit else 1)
-            if alo != int(alo) or ahi != int(ahi):
-                raise ValueError(
-                    f"range frame offsets {p['range']} must scale to "
-                    "integers on the window axis")
-            offsets[out] = (int(alo), int(ahi))
-            # boundary-unit offsets (micros for timestamps)
-            bscale = (_RANGE_UNIT_MS[unit] * 1000.0) if unit else 1.0
-            width = (rhi - rlo) * bscale
-            if span and span > 0 and width / span > MAX_RANGE_REPLICATION:
-                raise ValueError(
-                    f"range frame {p['range']} spans ~{width / span:.0f}"
-                    f" ranges (> MAX_RANGE_REPLICATION="
-                    f"{MAX_RANGE_REPLICATION}): the replication fan-out "
-                    "would multiply shuffle volume — add partitionBy, "
-                    "or use fewer/wider ranges")
-            rep = (rep
-                   .withColumn(f"__gw_plo_{out}",
-                               pid_ladder(bkey - F.lit(rhi * bscale)))
-                   .withColumn(f"__gw_phi_{out}",
-                               pid_ladder(bkey - F.lit(rlo * bscale))))
-            lo_cols.append(F.col(f"__gw_plo_{out}"))
-            hi_cols.append(F.col(f"__gw_phi_{out}"))
-        rep = rep.withColumn(
-            "__gw_dest",
-            F.explode(F.sequence(F.least(*lo_cols),
-                                 F.greatest(*hi_cols))))
-        from pyspark.sql.types import DecimalType
-
-        wdest = Window.partitionBy("__gw_dest")
-        for out, p in rfins.items():
-            alo, ahi = offsets[out]
-            vm = F.when(
-                F.col("__gw_dest").between(F.col(f"__gw_plo_{out}"),
-                                           F.col(f"__gw_phi_{out}")),
-                F.col(f"__gw_v_{out}"))
-            if p["op"] in _INVERTIBLE_WINDOW_OPS and not (
-                    p["op"] == "$avg" and isinstance(
-                        _agg_type(rep, vm), DecimalType)):
-                # growing-frame differencing instead of the O(width)/
-                # row sliding frame; decimal $avg keeps the sliding
-                # path so Spark's own decimal-average precision rules
-                # apply unchanged
-                cum = _growing_cum_range(wdest, F.col("__gw_ax"),
-                                         alo, ahi)
-                col = _frame_from_cum(p["op"], vm, cum)
-                if p["op"] == "$sum":
-                    col = col.cast(_agg_type(rep, F.sum(vm)))
-                rep = rep.withColumn(out, col)
-                continue
-            w_fin = (wdest.orderBy(F.col("__gw_ax").asc())
-                     .rangeBetween(alo, ahi))
-            if p["op"] in ("$deriv", "$integ"):
-                rep = rep.withColumn(out, _fin_deriv_integ(
-                    p["op"], vm, w_fin,
-                    wdest.orderBy(F.col("__gw_ax").asc(),
-                                  F.col("__gw_rn").asc()),
-                    F.struct(F.col("__gw_ax"), F.col("__gw_rn"))))
-                continue
-            if p["op"] == "$pctl":
-                pc = F.percentile(
-                    vm.cast("double"),
-                    F.array(*[F.lit(x) for x in p["ps"]])).over(w_fin)
-                col = F.element_at(pc, 1) if p["scalar"] else pc
-            elif p["op"] in ("$covariancePop", "$covarianceSamp"):
-                fn = (F.covar_pop if p["op"] == "$covariancePop"
-                      else F.covar_samp)
-                col = fn(vm["x"], vm["y"]).over(w_fin)
-            else:
-                col = _ACCUMULATORS[p["op"]](vm).over(w_fin)
-            if p["op"] == "$sum":
-                col = F.coalesce(col, F.lit(0))
-            # the window must run BEFORE the owner filter — filtering
-            # first would drop the contributor copies from the frame
-            rep = rep.withColumn(out, col)
-        # owner copies carry every earlier column 1:1 (the explode
-        # duplicates rows, dest==pid restores exactly the original
-        # set), so the result IS the filtered frame — no join-back
-        ranged = rep.filter(F.col("__gw_dest") == F.col("__gw_pid"))
-
+        ranged = _swf_rfin(ranged, rfins, sort, bs)
     dfins = {o: p for o, p in plans.items() if p["kind"] == "dfin"}
     if dfins:
-        # Finite ROW-OFFSET documents frames ([-3, 0], [0, 5], ...)
-        # by the same replication trick, on the GLOBAL row-number axis
-        # g = per-range rn + carried prior-range row offset. The
-        # per-range cumulative row counts are driver scalars, so "which
-        # range holds global row g+k" is a literal comparison ladder;
-        # rangeBetween over the UNIQUE integer g equals the row-offset
-        # frame exactly. Ties in the sort key follow the scaffold's
-        # deterministic rn (Mongo's tie traversal is likewise
-        # unspecified — DEVIATIONS §16).
-        cums, acc = [], 0
-        for r in parts:
-            acc += r["__rows"]
-            cums.append(acc)
-        total_rows, nparts = acc, len(parts)
-        avg_rows = total_rows / max(1, nparts)
-
-        def idx_ladder(col):
-            idx = F.lit(0)
-            for c in cums[:-1]:
-                idx = idx + (col > F.lit(int(c))).cast("int")
-            return idx
-
-        rep = ranged.withColumn(
-            "__gw_g", F.col("__gw_rn") + F.col("__gw_off_rows"))
-        rep = rep.withColumn("__gw_oidx", idx_ladder(F.col("__gw_g")))
-        lo_cols, hi_cols = [F.col("__gw_oidx")], [F.col("__gw_oidx")]
-        for out, p in dfins.items():
-            dlo, dhi = p["frame"]
-            width = dhi - dlo + 1
-            if avg_rows > 0 and width / avg_rows > MAX_RANGE_REPLICATION:
-                raise ValueError(
-                    f"documents frame {list(p['frame'])} spans "
-                    f"~{width / avg_rows:.0f} ranges (> "
-                    f"MAX_RANGE_REPLICATION={MAX_RANGE_REPLICATION}): "
-                    "the replication fan-out would multiply shuffle "
-                    "volume — add partitionBy, or use fewer/wider "
-                    "ranges")
-            rep = (rep
-                   .withColumn(f"__gw_dlo_{out}",
-                               idx_ladder(F.col("__gw_g") - F.lit(dhi)))
-                   .withColumn(f"__gw_dhi_{out}",
-                               idx_ladder(F.col("__gw_g") - F.lit(dlo))))
-            lo_cols.append(F.col(f"__gw_dlo_{out}"))
-            hi_cols.append(F.col(f"__gw_dhi_{out}"))
-        rep = rep.withColumn(
-            "__gw_gdest",
-            F.explode(F.sequence(F.least(*lo_cols),
-                                 F.greatest(*hi_cols))))
-        from pyspark.sql.types import DecimalType
-
-        wgdest = Window.partitionBy("__gw_gdest")
-        for out, p in dfins.items():
-            dlo, dhi = p["frame"]
-            vm = F.when(
-                F.col("__gw_gdest").between(F.col(f"__gw_dlo_{out}"),
-                                            F.col(f"__gw_dhi_{out}")),
-                F.col(f"__gw_v_{out}"))
-            if p["op"] in _INVERTIBLE_WINDOW_OPS and not (
-                    p["op"] == "$avg" and isinstance(
-                        _agg_type(rep, vm), DecimalType)):
-                # __gw_g is a unique non-null integer axis: two-term
-                # growing-frame differencing, one ordering, one sort
-                cum = _growing_cum_axis(wgdest, F.col("__gw_g"),
-                                        dlo, dhi)
-                col = _frame_from_cum(p["op"], vm, cum)
-                if p["op"] == "$sum":
-                    col = col.cast(_agg_type(rep, F.sum(vm)))
-                rep = rep.withColumn(out, col)
-                continue
-            w_fin = (wgdest.orderBy(F.col("__gw_g").asc())
-                     .rangeBetween(dlo, dhi))
-            if p["op"] in ("$deriv", "$integ"):
-                rep = rep.withColumn(out, _fin_deriv_integ(
-                    p["op"], vm, w_fin,
-                    wgdest.orderBy(F.col("__gw_g").asc()),
-                    F.col("__gw_g")))
-                continue
-            if p["op"] == "$pctl":
-                pc = F.percentile(
-                    vm.cast("double"),
-                    F.array(*[F.lit(x) for x in p["ps"]])).over(w_fin)
-                col = F.element_at(pc, 1) if p["scalar"] else pc
-            elif p["op"] in ("$covariancePop", "$covarianceSamp"):
-                fn = (F.covar_pop if p["op"] == "$covariancePop"
-                      else F.covar_samp)
-                col = fn(vm["x"], vm["y"]).over(w_fin)
-            else:
-                col = _ACCUMULATORS[p["op"]](vm).over(w_fin)
-            if p["op"] == "$sum":
-                col = F.coalesce(col, F.lit(0))
-            rep = rep.withColumn(out, col)
-        ranged = rep.filter(F.col("__gw_gdest") == F.col("__gw_oidx"))
-
+        ranged = _swf_dfin(ranged, dfins, parts)
     pruns = {o: p for o, p in plans.items()
              if p["kind"] in ("pctl_run", "pctl_rrun")}
     if pruns:
-        total_rows = sum(r["__rows"] for r in parts)
-        specs = []
-        for o, p in pruns.items():
-            ak = (p["kind"], p["dir"], repr(p["arg"]))
-            sp = {"out": o, "ps": p["ps"], "scalar": p["scalar"],
-                  "mode": ("range" if p["kind"] == "pctl_rrun"
-                           else "rows"),
-                  "dir": p["dir"], "argkey": ak}
-            if presketch is not None:
-                # round-12: splits came from the probe; the per-range
-                # bucket counts rode the boundary aggregate — attach
-                # both so _global_running_pctl skips its hist/fold/
-                # broadcast stages (offsets become a LocalRelation)
-                rep = presketch["ak_rep"][ak]
-                vbs = presketch["vbs"][ak]
-                sp["vbs"] = vbs
-                sp["bcol"] = f"__gw_hb_{rep}"
-                sp["histcounts"] = [
-                    (r["__gw_pid"],
-                     [r[f"__ph_{rep}_{b}"] or 0
-                      for b in range(len(vbs) + 1)])
-                    for r in parts]
-                if pctl_approx:
-                    sp["lo"] = presketch["row"][f"__lo_{rep}"]
-                    sp["hi"] = presketch["row"][f"__hi_{rep}"]
-                specs.append(sp)
-                continue
-            sk: list = []
-            for r in parts:
-                sk.extend(x for x in (r[f"__pqsk_{o}"] or [])
-                          if x is not None)
-            sk.sort()
-            sp["sketch"] = sk
-            if pctl_approx:
-                los = [r[f"__pqlo_{o}"] for r in parts
-                       if r[f"__pqlo_{o}"] is not None]
-                his = [r[f"__pqhi_{o}"] for r in parts
-                       if r[f"__pqhi_{o}"] is not None]
-                sp["lo"] = min(los) if los else None
-                sp["hi"] = max(his) if his else None
-            specs.append(sp)
-        ranged = _global_running_pctl(ranged, total_rows, specs,
-                                      approx=pctl_approx)
+        ranged = _global_running_pctl(
+            ranged, sum(r["__rows"] for r in parts),
+            _swf_pctl_specs(pruns, parts, presketch, approx), approx=approx)
     return ranged.drop(*[c for c in ranged.columns
                          if c.startswith("__gw_")])
 
@@ -4130,47 +3885,15 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
         return out_df
     w = Window.partitionBy(_value(df, spec["partitionBy"]))
     ordered = w.orderBy(*_order_cols(sort))
-    ranks = {"$rank": F.rank, "$denseRank": F.dense_rank,
-             "$documentNumber": F.row_number}
-
-    def sort_time(unit):
-        """The sortBy field as a numeric axis: exact epoch-ms scaled
-        to `unit` for timestamps, the raw value for numerics."""
-        if len(sort) != 1:
-            raise ValueError("requires exactly one sortBy field")
-        (sf_field, sdir), = sort.items()
-        if sdir <= 0:
-            raise ValueError("requires an ascending sortBy")
-        if unit:
-            if unit not in _RANGE_UNIT_MS:
-                raise ValueError(
-                    f"unit {unit!r} has no fixed width "
-                    "(supported: millisecond..week)")
-            return (F.unix_millis(F.col(sf_field).cast("timestamp"))
-                    .cast("double") / F.lit(_RANGE_UNIT_MS[unit]))
-        return F.col(sf_field).cast("double")
 
     def build_frame(win, frame):
         if "range" in win:
-            if len(sort) != 1:
-                raise ValueError(
-                    "range window requires exactly one sortBy field")
-            (sf_field, sdir), = sort.items()
-            if sdir <= 0:
-                # Mongo's own rule — and Spark's rangeBetween offsets
-                # would silently flip meaning under a descending order
-                raise ValueError(
-                    "range windows require an ascending sortBy")
-            unit = win.get("unit")
-            rlo, rhi = win["range"]
-            scale = 1
+            sf_field = _sort_axis(sort, "a range window")
+            ms = _unit_ms(win.get("unit"))
+            rlo, rhi = _window_bounds(win["range"])
+            scale = ms or 1
             base = ordered
-            if unit:
-                if unit not in _RANGE_UNIT_MS:
-                    raise ValueError(
-                        f"range unit {unit!r} has no fixed width "
-                        "(supported: millisecond..week)")
-                scale = _RANGE_UNIT_MS[unit]
+            if ms:
                 # unix_millis is exact integer milliseconds — going
                 # through a double epoch loses sub-ms bits at 2024-era
                 # magnitudes and shifts range boundaries by 1 ms
@@ -4184,6 +3907,7 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
             return base.rangeBetween(lo, hi), rlo == "unbounded"
         # Mongo documents bounds: "unbounded", "current", or integer
         # row offsets (negative = preceding)
+        frame = _window_bounds(frame)
         lo = Window.unboundedPreceding if frame[0] == "unbounded" \
             else Window.currentRow if frame[0] == "current" \
             else int(frame[0])
@@ -4204,24 +3928,19 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
         Callers run build_frame FIRST so its validation/raises stay
         the single source of frame-shape errors."""
         if "range" in win:
-            rlo, rhi = win["range"]
-            if not (isinstance(rlo, (int, float))
-                    and isinstance(rhi, (int, float))):
+            fin = _finite_bounds(win["range"], documents=False)
+            if fin is None:
                 return None
-            unit = win.get("unit")
-            scale = _RANGE_UNIT_MS[unit] if unit else 1
-            alo, ahi = rlo * scale, rhi * scale
+            ms = _unit_ms(win.get("unit"))
+            alo, ahi = fin[0] * (ms or 1), fin[1] * (ms or 1)
             if float(alo) != int(alo) or float(ahi) != int(ahi):
                 return None  # non-integral offsets: sliding path
             (sf_field, _), = sort.items()
             axis = (F.unix_millis(F.col(sf_field).cast("timestamp"))
-                    if unit else F.col(sf_field))
+                    if ms else F.col(sf_field))
             return ("range", int(alo), int(ahi), axis)
-        norm = [0 if b == "current" else b for b in frame]
-        if all(isinstance(b, int) and not isinstance(b, bool)
-               for b in norm):
-            return ("rows", int(norm[0]), int(norm[1]), None)
-        return None
+        fin = _finite_bounds(frame, documents=True)
+        return ("rows", *fin, None) if fin else None
 
     def finite_cum(fin):
         if fin[0] == "rows":
@@ -4235,10 +3954,10 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
         win = odoc.pop("window", {})
         frame = win.get("documents", ["unbounded", "unbounded"])
         (op, arg), = odoc.items()
-        if op in ranks:
+        if op in _RANK_FNS:
             if not sort:
                 raise ValueError(f"{op} requires sortBy")
-            df = df.withColumn(out, ranks[op]().over(ordered))
+            df = df.withColumn(out, _RANK_FNS[op]().over(ordered))
             continue
         if op == "$shift":
             if not sort:
@@ -4256,14 +3975,11 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
                 _value(df, arg), ignorenulls=True).over(running))
             continue
         if op == "$linearFill":
-            try:
-                x = sort_time(None)
-            except ValueError as ex:
-                raise ValueError(f"$linearFill {ex}") from None
+            lf_field = _sort_axis(sort, "$linearFill")
+            x = _time_axis(lf_field, None)
             v = _value(df, arg).cast("double")
-            # sort_time validated a single ascending sortBy, so the
-            # reverse scan is simply that field descending
-            (lf_field, _), = sort.items()
+            # a single ascending sortBy: the reverse scan is simply that
+            # field descending
             rev_run = (w.orderBy(F.col(lf_field).desc())
                        .rowsBetween(Window.unboundedPreceding,
                                     Window.currentRow))
@@ -4282,10 +3998,8 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
         if op == "$derivative":
             if "range" not in win and "documents" not in win:
                 raise ValueError("$derivative requires a window")
-            try:
-                t = sort_time(arg.get("unit"))
-            except ValueError as ex:
-                raise ValueError(f"$derivative {ex}") from None
+            t = _time_axis(_sort_axis(sort, "$derivative"),
+                           _unit_ms(arg.get("unit"), "$derivative unit"))
             spec_w, _ = build_frame(win, frame)
             v = _value(df, arg["input"]).cast("double")
             dv = F.last(v, ignorenulls=False).over(spec_w) \
@@ -4296,10 +4010,8 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
         if op == "$integral":
             if "range" not in win and "documents" not in win:
                 raise ValueError("$integral requires a window")
-            try:
-                t = sort_time(arg.get("unit"))
-            except ValueError as ex:
-                raise ValueError(f"$integral {ex}") from None
+            t = _time_axis(_sort_axis(sort, "$integral"),
+                           _unit_ms(arg.get("unit"), "$integral unit"))
             spec_w, from_start = build_frame(win, frame)
             v = _value(df, arg["input"]).cast("double")
             # trapezoid term covering (t_{i-1}, t_i]; the frame's own
@@ -4323,12 +4035,8 @@ def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
             spec_w, _ = build_frame(win, frame)
             fin = finite_desc(win, frame)
             if fin is not None:
-                xa = _value(df, a).cast("double")
-                xb = _value(df, b).cast("double")
-                pair = F.when(xa.isNotNull() & xb.isNotNull(),
-                              F.struct(xa.alias("x"), xb.alias("y")))
                 df = df.withColumn(out, _frame_from_cum(
-                    op, pair, finite_cum(fin)))
+                    op, _cov_pair(df, a, b), finite_cum(fin)))
                 continue
             df = df.withColumn(out, fn(
                 _value(df, a).cast("double"),
@@ -4557,14 +4265,7 @@ def _exp_moving_avg(df: DataFrame, partition_by, sort: dict,
     history bounds each group exactly like the window operators."""
     if not sort:
         raise ValueError("$expMovingAvg requires sortBy")
-    if "alpha" in arg:
-        alpha = float(arg["alpha"])
-    elif "N" in arg:
-        alpha = 2.0 / (float(arg["N"]) + 1.0)
-    else:
-        raise ValueError("$expMovingAvg needs alpha or N")
-    if not 0 < alpha < 1:
-        raise ValueError("$expMovingAvg alpha must be in (0, 1)")
+    alpha = _ema_alpha(arg)
     tagged = (df.withColumn("__ew_p", _value(df, partition_by))
               .withColumn("__ew_v", _value(df, arg["input"])
                           .cast("double")))

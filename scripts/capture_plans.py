@@ -1,15 +1,24 @@
-"""Capture .explain("formatted") for named catalog queries into
-plans/r13/<query>_<tag>.txt (round-13 deliverable: the judge checks
-plan claims against these files).
+"""Capture .explain("formatted") for named catalog queries and time each
+row's two phases:
 
-Usage: python scripts/capture_plans_r13.py <tag> [query ...]
-       (no queries -> the default heavy set)
+  compile  — driver-side plan build, including any driver actions the
+             operators issue while compiling (boundary aggregates,
+             range-boundary sketches);
+  execute  — materializing the result into the noop sink.
+
+Each plan is written to <out_dir>/<row>_<tag>.txt; one line per row
+reports the seconds of both phases. The catalog reads its tables from
+the scale-factor directory named by SPARK_GRAFT_SF_DIR.
+
+Usage: python scripts/capture_plans.py <out_dir> <tag> [row ...]
+       (no rows -> the default heavy set)
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -35,11 +44,11 @@ HEAVY = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    rows = sys.argv[2:] or HEAVY
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    rows = sys.argv[3:] or HEAVY
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(here, "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)
 
     from maggma_spark.plans.catalog import QUERIES
@@ -51,16 +60,23 @@ def main() -> None:
 
     for row in rows:
         spark.sparkContext.setJobDescription(f"plan-capture: {row}")
+        t0 = time.perf_counter()
         try:
             df = QUERIES[row](spark, sf_dir)
+            t1 = time.perf_counter()
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
+            t2 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            timing = (f"compile={t1 - t0:.2f}s "
+                      f"execute={time.perf_counter() - t2:.2f}s")
         except Exception as exc:  # capture the failure, keep going
             plan = f"EXPLAIN FAILED: {type(exc).__name__}: {exc}"
+            timing = "failed"
         path = os.path.join(out_dir, f"{row}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
-        print(f"wrote {path} ({len(plan)} chars)", flush=True)
+        print(f"{row}: {timing} -> {path} ({len(plan)} chars)", flush=True)
 
 
 if __name__ == "__main__":

@@ -489,6 +489,24 @@ def test_replace_with_and_documents_stages(spark):
                               {"$documents": [{"v": 1}]}])
 
 
+def test_partitioned_window_rejects_boolean_bounds(spark):
+    """Python counts True as the int 1, so a boolean bound used to
+    compile as a row or range offset; Mongo rejects non-numeric bounds
+    and so does the partitioned compile (the unpartitioned planner's
+    twin cases live in tests/test_swf_plan.py)."""
+    import pytest as _pt
+
+    from maggma_spark.functions.agg_pipeline import compile_pipeline
+
+    df = spark.createDataFrame([("a", 1, 10)], "g string, x int, v int")
+    for win in ({"documents": [True, 5]}, {"range": [False, 3]},
+                {"documents": ["unbounded", False]}):
+        with _pt.raises(ValueError, match="window bounds must be numbers"):
+            compile_pipeline(df, [{"$setWindowFields": {
+                "partitionBy": "$g", "sortBy": {"x": 1},
+                "output": {"s": {"$sum": "$v", "window": win}}}}])
+
+
 def test_set_window_fields_range_frame(spark):
     """Value-based `range` window: sum over sortBy-field offsets
     [-2, 0] — rows within value distance 2, not row positions."""
