@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from pyspark import InheritableThread
+
 from maggma_spark.api.query_ops import (
     QueryOperator,
     execute_store_params,
@@ -26,15 +28,37 @@ def serve_query(store, operators: list[QueryOperator], request_params: dict,
                 max_rows: int = 10_000) -> dict:
     """Framework-free request handler: merge operator fragments, run the
     DataFrame chain, return a JSON-shaped response dict. This is what a
-    FastAPI route delegates to."""
+    FastAPI route delegates to.
+
+    `total_doc` is counted on a second driver thread while the page
+    collects, so the two Spark actions overlap instead of running one
+    after the other. The thread is a `pyspark.InheritableThread`: the
+    count's jobs carry the caller's job group and tags. A failure of
+    either action is raised after both have finished."""
     fragments = [op.query(**request_params) for op in operators]
     params = merge_queries(fragments)
-    df, meta = execute_store_params(store, params, with_meta=True)
+    df = execute_store_params(store, params)
     for op in operators:  # post-hoc DataFrame transforms before serving
         df = op.post_process(df, params)
     limit = params.get("limit") or max_rows
-    rows = [r.asDict(recursive=True) for r in df.limit(min(limit, max_rows)).collect()]
-    return {"data": rows, "meta": meta}
+    page = df.limit(min(limit, max_rows))
+    total: dict = {}
+
+    def count() -> None:
+        try:
+            total["doc"] = store.count(params.get("criteria"))
+        except BaseException as exc:  # re-raised on the calling thread
+            total["error"] = exc
+
+    counter = InheritableThread(target=count)
+    counter.start()
+    try:
+        rows = [r.asDict(recursive=True) for r in page.collect()]
+    finally:
+        counter.join()
+    if "error" in total:
+        raise total["error"]
+    return {"data": rows, "meta": {"total_doc": total["doc"]}}
 
 
 def heartbeat(version: str = "v0.0.0",

@@ -25,10 +25,14 @@ Write path / scale design:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import threading
+from collections import OrderedDict
 from typing import Any, Optional, Sequence, Union
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from maggma_spark.operators.merge import (
@@ -39,21 +43,109 @@ from maggma_spark.operators.merge import (
 from maggma_spark.store import SparkStore
 
 
-def _nanos_ts_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark cannot scan
-    them natively; we read them as int64 nanos and convert."""
-    try:
-        import pyarrow.dataset as ds
-        import pyarrow as pa
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# session confs that change the schema parquet inference returns; their
+# values are part of a cached schema's fingerprint
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_CACHE_ENTRIES = 256
+# path -> (fingerprint, reader-side schema, ns-timestamp columns)
+_schema_cache: "OrderedDict[str, tuple]" = OrderedDict()
+_schema_lock = threading.Lock()
 
-        schema = ds.dataset(path, format="parquet").schema
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for a URI path."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _listing(spark: SparkSession, path: str) -> Optional[tuple]:
+    """Every file under `path` as sorted (name, size, mtime) triples, or
+    None when the path does not exist or changes while it is listed.
+    Local paths go through `os`, URIs through the Hadoop FileSystem API
+    (one recursive LIST; on an object store that is one request per
+    1,000 keys)."""
+    if "://" not in path:
+        try:
+            if os.path.isfile(path):
+                st = os.stat(path)
+                return ((path, st.st_size, st.st_mtime_ns),)
+            if not os.path.isdir(path):
+                return None
+            out = []
+            for root, _dirs, names in os.walk(path):
+                for name in names:
+                    full = os.path.join(root, name)
+                    st = os.stat(full)
+                    out.append((full, st.st_size, st.st_mtime_ns))
+        except OSError:  # a writer removed a file mid-listing
+            return None
+        return tuple(sorted(out))
+    fs, hpath = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    out = []
+    try:
+        files = fs.listFiles(hpath, True)
+        while files.hasNext():
+            st = files.next()
+            out.append((st.getPath().toString(), st.getLen(),
+                        st.getModificationTime()))
+    except Py4JJavaError:  # a writer removed a file mid-listing
+        return None
+    return tuple(sorted(out))
+
+
+def _nanos_ts_cols(files: Sequence[tuple]) -> list[str]:
+    """Top-level columns stored as parquet TIMESTAMP(NANOS) — Spark
+    cannot scan them natively; we read them as int64 nanos and convert.
+    Judged by the physical type in the footer of the first data file,
+    the file Spark's own inference reads: INT96 columns (Spark's default
+    timestamp encoding, which Arrow also reports as ns) are not NANOS."""
+    data = [f for f, _size, _mtime in files
+            if not os.path.basename(f).startswith(("_", "."))]
+    if not data:
+        return []
+    try:
+        import pyarrow.parquet as pq
+        from pyarrow import fs
+
+        fsys, fpath = ((None, data[0]) if os.path.exists(data[0])
+                       else fs.FileSystem.from_uri(data[0]))
+        schema = pq.read_metadata(fpath, filesystem=fsys).schema
     except Exception:
         return []
+    out = []
+    for i in range(len(schema)):
+        col = schema.column(i)
+        if (col.path == col.name and col.physical_type == "INT64"
+                and col.logical_type.type == "TIMESTAMP"
+                and json.loads(col.logical_type.to_json())["timeUnit"]
+                == "nanoseconds"):
+            out.append(col.name)
+    return out
+
+
+def _cached_schema(path: str, fingerprint: tuple) -> Optional[tuple]:
+    with _schema_lock:
+        entry = _schema_cache.get(path)
+        if entry is None or entry[0] != fingerprint:
+            return None
+        _schema_cache.move_to_end(path)
+        return entry[1], entry[2]
+
+
+def _remember_schema(path: str, fingerprint: tuple, schema,
+                     ns_cols: list[str]) -> None:
+    with _schema_lock:
+        _schema_cache[path] = (fingerprint, schema, ns_cols)
+        _schema_cache.move_to_end(path)
+        while len(_schema_cache) > _SCHEMA_CACHE_ENTRIES:
+            _schema_cache.popitem(last=False)
 
 
 def dataset_exists(spark: SparkSession, path: str) -> bool:
@@ -63,9 +155,7 @@ def dataset_exists(spark: SparkSession, path: str) -> bool:
     upserting — so URI paths go through the Hadoop FileSystem API."""
     if "://" not in path:
         return os.path.exists(path)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -77,41 +167,49 @@ def dataset_size_bytes(spark: SparkSession, path: str) -> int:
             f.stat().st_size
             for f in __import__("pathlib").Path(path).rglob("*.parquet")
         )
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return 0
     return int(fs.getContentSummary(hpath).getLength())
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet with nanosecond-timestamp tolerance: ns columns
-    are read as int64 (`nanosAsLong`) then truncated to microseconds —
-    the same truncation DuckDB/Arrow apply when casting ns->us."""
-    ns_cols = _nanos_ts_cols(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
+    """spark.read.parquet with a schema cache and nanosecond-timestamp
+    tolerance.
 
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    Schema cache: Spark's parquet schema inference is a job of its own
+    (~120 ms on a warm local session, against ~20 ms and no job for a
+    reader given the schema). The reader-side schema and the ns column
+    list are kept per path, keyed on a fingerprint of every file under
+    the path (name, size, mtime) plus the session confs that change
+    inference. Any write — this store, another instance, pyarrow, an
+    outside process — changes the listing, so the next read infers
+    again, once. Rows and DataFrames are never cached.
+
+    ns columns are read as int64 (`nanosAsLong`) then truncated to
+    microseconds — the same truncation DuckDB/Arrow apply when casting
+    ns->us."""
+    files = _listing(spark, path)
+    fingerprint = None if files is None else (
+        files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    hit = None if fingerprint is None else _cached_schema(path, fingerprint)
+    schema, ns_cols = hit or (None, _nanos_ts_cols(files or ()))
+    if ns_cols:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    df = (spark.read if schema is None
+          else spark.read.schema(schema)).parquet(path)
+    if hit is None and fingerprint is not None:
+        _remember_schema(path, fingerprint, df.schema, ns_cols)
     for c in ns_cols:
-        # INT96 timestamps also surface as ns in the Arrow schema but Spark
-        # scans them as TIMESTAMP natively — only true TIMESTAMP(NANOS)
-        # columns arrive as int64 under nanosAsLong and need conversion.
-        if isinstance(dtypes.get(c), LongType):
-            # ns -> us MUST be exact INTEGER division: epoch nanoseconds
-            # (~1.7e18) exceed double's 2^53 exact range, so a float
-            # divide can shift timestamps by 1 us. `div` is the JVM
-            # integral division (toward zero, matching Arrow's ns->us
-            # cast); the identifier is backtick-escaped so hostile
-            # column names stay inert in the expression string.
-            ident = "`" + c.replace("`", "``") + "`"
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"{ident} div 1000")))
+        # ns -> us MUST be exact INTEGER division: epoch nanoseconds
+        # (~1.7e18) exceed double's 2^53 exact range, so a float
+        # divide can shift timestamps by 1 us. `div` is the JVM
+        # integral division (toward zero, matching Arrow's ns->us
+        # cast); the identifier is backtick-escaped so hostile
+        # column names stay inert in the expression string.
+        ident = "`" + c.replace("`", "``") + "`"
+        df = df.withColumn(
+            c, F.timestamp_micros(F.expr(f"{ident} div 1000")))
     return df
 
 

@@ -139,13 +139,16 @@ class SparkStore:
         except ValueError:  # MemoryStore "holds no data yet"
             return None
         except AnalysisException as ex:
-            # prefer the structured error class when the Spark version
-            # provides it; fall back to message text, including the
-            # pre-3.4 "Path does not exist" wording, so a missing path
-            # maps to None on every Spark line instead of re-raising
-            # and breaking first-write incremental sinks
+            # prefer the structured error condition when the Spark
+            # version provides it (getCondition from 4.0, where
+            # getErrorClass warns; getErrorClass from 3.4); fall back to
+            # message text, including the pre-3.4 "Path does not exist"
+            # wording, so a missing path maps to None on every Spark
+            # line instead of re-raising and breaking first-write
+            # incremental sinks
             klass = ""
-            get_klass = getattr(ex, "getErrorClass", None)
+            get_klass = (getattr(ex, "getCondition", None)
+                         or getattr(ex, "getErrorClass", None))
             if callable(get_klass):
                 klass = get_klass() or ""
             not_exists = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")

@@ -11,6 +11,28 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def jobs_of(spark):
+    """jobs_of(fn) -> (fn(), ids of the Spark jobs fn launched), counted
+    through a job group of its own and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # jobs reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

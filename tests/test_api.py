@@ -96,13 +96,14 @@ def test_numeric_string_coercion(store):
     assert resp["meta"]["total_doc"] == 2
 
 
+class Doubler(NumericQuery):
+    def post_process(self, df, params):
+        from pyspark.sql import functions as F
+
+        return df.withColumn("n", F.col("n") * 2)
+
+
 def test_post_process_applies(store):
-    from pyspark.sql import functions as F
-
-    class Doubler(NumericQuery):
-        def post_process(self, df, params):
-            return df.withColumn("n", F.col("n") * 2)
-
     resp = serve_query(store, [Doubler(["n"]), PaginationQuery()], {"n_min": "8"})
     assert sorted(d["n"] for d in resp["data"]) == [16, 18]
 
@@ -143,3 +144,87 @@ def test_heartbeat_payload():
     assert hb["status"] == "OK" and hb["version"] == "v1.2.3"
     assert hb["db"] == "sf0.01"
     assert "T" in hb["time"]  # ISO timestamp
+
+
+def _jobs_by_id(sc) -> dict:
+    """{job id: job group or None} for every job the status store holds."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    out = {}
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        out[j.jobId()] = j.jobGroup().get() if j.jobGroup().isDefined() \
+            else None
+    return out
+
+
+def test_serve_query_jobs_carry_caller_job_group(spark, store):
+    """The concurrent total_doc count runs on an InheritableThread, so
+    every job the call launches — page and count — carries the
+    caller's job group."""
+    sc = spark.sparkContext
+    before = _jobs_by_id(sc)
+    sc.setJobGroup("serve-query-group", "serve-query-group")
+    try:
+        resp = serve_query(store, [NumericQuery(["n"]), PaginationQuery()],
+                           {"n_min": "3", "_limit": 2})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    new = {j: g for j, g in _jobs_by_id(sc).items() if j not in before}
+    assert resp["meta"]["total_doc"] == 7 and len(resp["data"]) == 2
+    assert len(new) >= 2  # at least the page and the count
+    assert set(new.values()) == {"serve-query-group"}
+
+
+@pytest.mark.parametrize("params,n_data,total", [
+    ({"n_min": "6", "_limit": 10}, 4, 4),              # short page
+    ({"n_min": "2", "_limit": 3}, 3, 8),               # full page
+    ({"n_min": "100"}, 0, 0),                          # empty result
+    ({"n_min": "2", "_skip": 20, "_limit": 5}, 0, 8),  # skip past the end
+    ({"n_min": "2", "_skip": 6, "_limit": 5}, 2, 8),   # last, short page
+])
+def test_serve_query_total_doc_exact(store, params, n_data, total):
+    resp = serve_query(store, [NumericQuery(["n"]), PaginationQuery()],
+                       params)
+    assert len(resp["data"]) == n_data
+    assert resp["meta"]["total_doc"] == total
+
+
+def test_serve_query_total_doc_with_post_process(store):
+    resp = serve_query(store, [Doubler(["n"]), PaginationQuery()],
+                       {"n_min": "5", "_limit": 3})
+    assert resp["meta"]["total_doc"] == 5
+    assert [d["n"] for d in resp["data"]] == [10, 12, 14]
+
+
+def test_serve_query_failures_surface_and_join(spark, store):
+    """A count that raises is the call's exception; a page collect that
+    fails still joins the count thread. No thread is left alive."""
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+
+    class BrokenCount(MemoryStore):
+        def count(self, criteria=None):
+            raise RuntimeError("count failed")
+
+    class SlowCount(MemoryStore):  # still counting when the page fails
+        def count(self, criteria=None):
+            time.sleep(1.0)
+            return super().count(criteria)
+
+    class FailingPage(NumericQuery):
+        def post_process(self, df, params):
+            return df.withColumn("n", F.raise_error(F.lit("page failed")))
+
+    alive = set(threading.enumerate())
+    broken = BrokenCount(spark, store.df, key="task_id")
+    with pytest.raises(RuntimeError, match="count failed"):
+        serve_query(broken, [NumericQuery(["n"])], {"n_min": "3"})
+    assert set(threading.enumerate()) <= alive
+    slow = SlowCount(spark, store.df, key="task_id")
+    with pytest.raises(Exception, match="page failed"):
+        serve_query(slow, [FailingPage(["n"])], {"n_min": "3"})
+    assert set(threading.enumerate()) <= alive

@@ -657,3 +657,157 @@ def test_parquet_small_new_merge_matches_window_merge(spark, tmp_path):
     assert rows_a == rows_b
     assert rows_b[3]["v"] == "new3" and rows_b[2]["w"] == 20
     assert rows_b[0]["v"] == "old0" and rows_b[0].get("w") is None
+
+
+def test_parquet_schema_cache_unchanged_path_launches_no_job(
+        spark, tmp_path, jobs_of):
+    """The first read of a path infers its schema (one job); a second
+    read of the unchanged path takes the cached schema and launches
+    none, for local paths and for URIs (Hadoop FileSystem listing)."""
+    from maggma_spark.sources.parquet import ParquetStore
+
+    for path in (str(tmp_path / "local"), "file://" + str(tmp_path / "uri")):
+        store = ParquetStore(spark, path, key="k")
+        store.update([{"k": 1, "a": 10}, {"k": 2, "a": 20}])
+        first, jobs = jobs_of(lambda: store.df)
+        assert len(jobs) == 1, path
+        second, jobs = jobs_of(lambda: store.df)
+        assert jobs == [], path
+        assert second.schema == first.schema
+        assert sorted(r["k"] for r in second.collect()) == [1, 2]
+        # a write through the URI path changes its Hadoop listing too
+        store.update([{"k": 3, "b": "x"}])
+        third, jobs = jobs_of(lambda: store.df)
+        assert len(jobs) == 1, path
+        assert "b" in third.columns and third.count() == 3
+
+
+def test_parquet_schema_cache_sees_every_writer(spark, tmp_path, jobs_of):
+    """Every kind of write changes the file listing, so the first
+    store's next read infers the new schema and rows — exactly one
+    inference job — whoever wrote: a second store instance, pyarrow,
+    remove_docs, compact."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from maggma_spark.sources.parquet import ParquetStore
+
+    path = str(tmp_path / "shared")
+    store = ParquetStore(spark, path, key="k")
+    store.update([{"k": i, "a": i * 10} for i in range(4)])
+    store.df  # warm the cache
+
+    def next_read():
+        df, jobs = jobs_of(lambda: store.df)
+        assert len(jobs) == 1
+        rows = {r["k"]: r.asDict() for r in df.collect()}
+        again, jobs = jobs_of(lambda: store.df)
+        assert jobs == [] and again.schema == df.schema
+        return df.columns, rows
+
+    # 1. a second store instance on the same path adds column b
+    ParquetStore(spark, path, key="k").update([{"k": 9, "b": "nine"}])
+    cols, rows = next_read()
+    assert "b" in cols and rows[9]["b"] == "nine" and rows[0]["a"] == 0
+
+    # 2. pyarrow adds a file with the known columns plus a new one, c.
+    # Without mergeSchema, Spark infers from the first data file by
+    # path; the name sorts first, so an uncached read sees c as well
+    pq.write_table(pa.table({"k": pa.array([20], pa.int64()),
+                             "a": pa.array([None], pa.int64()),
+                             "b": pa.array([None], pa.string()),
+                             "c": pa.array([2.5])}),
+                   os.path.join(path, "0-extra.parquet"))
+    cols, rows = next_read()
+    assert cols == spark.read.parquet(path).columns
+    assert rows[20]["c"] == 2.5 and rows[0]["c"] is None
+    assert rows[0]["a"] == 0 and rows[9]["b"] == "nine"
+
+    # 3. remove_docs through the first store
+    store.remove_docs({"k": {"$in": [0, 20]}})
+    cols, rows = next_read()
+    assert set(rows) == {1, 2, 3, 9}
+
+    # 4. compact rewrites the same rows into new files
+    store.compact()
+    cols, after = next_read()
+    assert after == rows
+
+
+def test_read_parquet_nanos_timestamps_exact(spark, tmp_path):
+    """A pyarrow-written timestamp[ns] column (TIMESTAMP(NANOS)) reads
+    back as the exactly truncated microseconds, also past 2^53 ns where
+    a float divide would round; a cached re-read agrees."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from maggma_spark.sources.parquet import read_parquet
+
+    ns = [1_700_000_000_123_456_789, 2 ** 53 + 999, 1_000]
+    path = tmp_path / "ns"
+    path.mkdir()
+    pq.write_table(pa.table({"i": list(range(len(ns))),
+                             "ts": pa.array(ns, pa.timestamp("ns"))}),
+                   str(path / "part-0.parquet"))
+    for _ in range(2):  # miss, then cache hit
+        got = {r["i"]: r["us"] for r in read_parquet(spark, str(path))
+               .select("i", F.unix_micros("ts").alias("us")).collect()}
+        assert got == {i: v // 1000 for i, v in enumerate(ns)}
+
+
+def test_read_parquet_int96_leaves_session_conf_unset(spark, tmp_path):
+    """Spark writes timestamps as INT96, which Arrow reports as ns;
+    reading such a store must not flip nanosAsLong for the session."""
+    from pyspark.sql.types import TimestampType
+
+    from maggma_spark.sources.parquet import read_parquet
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    path = str(tmp_path / "int96")
+    spark.range(3).selectExpr("id", "current_timestamp() AS ts") \
+        .write.parquet(path)
+    df = read_parquet(spark, path)
+    assert isinstance(df.schema["ts"].dataType, TimestampType)
+    assert df.count() == 3
+    assert spark.conf.get(key, None) is None
+
+
+def test_schema_cache_bounded_and_consistent_under_threads():
+    """The page and count threads of a REST read share read_parquet's
+    schema cache: under many threads and a short switch interval every
+    lookup returns what its own thread stored (or a miss after
+    eviction), nothing raises, and the entry bound holds."""
+    import sys
+    import threading
+
+    from maggma_spark.sources import parquet as pqs
+
+    bound = pqs._SCHEMA_CACHE_ENTRIES
+    errors = []
+
+    def worker(w):
+        try:
+            for i in range(2 * bound):
+                path, fp = f"/cache-stress/{w}/{i % (bound // 2)}", (w, i)
+                pqs._remember_schema(path, fp, f"schema-{w}-{i}", [])
+                got = pqs._cached_schema(path, fp)
+                if got not in (None, (f"schema-{w}-{i}", [])):
+                    errors.append(got)
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(w,)) for w in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(pqs._schema_cache) <= bound

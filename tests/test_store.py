@@ -373,14 +373,26 @@ def test_parquet_optimize_zorder_narrows_both_columns(spark, sf_dir, tmp_path):
         st.optimize(["o_custkey"], method="hilbertish")
 
 
-def test_try_df_not_exists_classification(spark):
+@pytest.mark.filterwarnings("error::FutureWarning")
+def test_try_df_not_exists_classification(spark, tmp_path):
     """try_df maps NOT-EXISTS to None across Spark error wordings —
-    error class, message substring, and the pre-3.4 'Path does not
-    exist' text — while any other AnalysisException re-raises."""
+    error condition, message substring, and the pre-3.4 'Path does not
+    exist' text — while any other AnalysisException re-raises. Runs
+    with FutureWarning as an error: Spark 4 deprecates getErrorClass,
+    so the classification must ask for getCondition first."""
     import pytest as _pt
     from pyspark.errors import AnalysisException
 
+    from maggma_spark.sources.parquet import ParquetStore
     from maggma_spark.store import SparkStore
+
+    # JVM-raised conditions: a path that does not exist, and an empty
+    # directory (no files to infer a schema from)
+    assert ParquetStore(spark, str(tmp_path / "nope"), key="k").try_df() \
+        is None
+    (tmp_path / "empty").mkdir()
+    assert ParquetStore(spark, str(tmp_path / "empty"), key="k").try_df() \
+        is None
 
     def raiser(msg):
         def _p():
