@@ -813,23 +813,24 @@ def _vector_search(df: DataFrame, spec: dict) -> DataFrame:
             .limit(k))
 
 
-def _compile_search(df: DataFrame, spec: dict, materialize: bool = False):
-    """Shared $search/$searchMeta compiler: returns (predicate, score),
-    plus two helper-column dicts when ``materialize`` is set.
+def _compile_search(df: DataFrame, spec: dict):
+    """Shared $search/$searchMeta compiler: returns (base, predicate,
+    score, helpers) — `base` is `df` with the helper columns added,
+    `helpers` their names, for the caller to drop after the filter/
+    score projection.
 
-    ``materialize`` (round-13, guide §1.2 per-task work): the scoring
+    Helper columns (round-13, guide §1.2 per-task work): the scoring
     expressions reference the tokenized text and each term's fuzzy
     tf count SEVERAL times (tf twice inside every bm25 term, the
     token array once per term plus once for dl, the padded text once
     per autocomplete token), and the higher-order filter/exists calls
     are CodegenFallback — Catalyst neither fuses nor CSEs them, so
     every reference re-tokenizes (and re-runs the per-token
-    levenshtein) per row. With ``materialize`` the compiler registers
-    those subtrees as named helper columns and references the
-    columns instead; callers stack them with two ``withColumns``
-    calls (level 2 references level 1) and drop them after the
-    filter/score projection. Measured ×1.4 on the fuzzy-scoring scan
-    fragment; values are bit-identical (same trees, evaluated once).
+    levenshtein) per row. The compiler registers those subtrees as
+    named helper columns, added by two ``withColumns`` calls (level 2
+    references level 1), and references the columns instead.
+    Measured ×1.4 on the fuzzy-scoring scan fragment; values are
+    bit-identical (same trees, evaluated once).
 
     Atlas lexical search (the reference compiles $text into Atlas
     $search pipelines, reference:src/maggma/api/resource/utils.py:69-115)
@@ -962,12 +963,11 @@ def _compile_search(df: DataFrame, spec: dict, materialize: bool = False):
         return F.concat(F.lit(" "),
                         normalized_text(_value(df, f"${p}")), F.lit(" "))
 
-    # helper-column registries (materialize mode). Level 1 holds the
-    # tokenized / padded text per path; level 2 holds per-(path, term,
-    # fuzzy) tf counts, whose exprs reference level-1 COLUMNS — the
-    # caller must apply them as two consecutive withColumns calls.
-    # The stats aggregate below deliberately keeps the inline trees:
-    # it is ONE pass either way.
+    # helper-column registries. Level 1 holds the tokenized / padded
+    # text per path; level 2 holds per-(path, term, fuzzy) tf counts,
+    # whose exprs reference level-1 COLUMNS — so they apply as two
+    # consecutive withColumns calls. The stats aggregate below
+    # deliberately keeps the inline trees: it is ONE pass either way.
     base_cols: dict = {}
     tf_cols: dict = {}
     _toks_names: dict = {}
@@ -975,8 +975,6 @@ def _compile_search(df: DataFrame, spec: dict, materialize: bool = False):
     _tf_names: dict = {}
 
     def toks_ref(p):
-        if not materialize:
-            return toks_of(p)
         nm = _toks_names.get(p)
         if nm is None:
             nm = f"__srch_toks_{len(_toks_names)}"
@@ -985,8 +983,6 @@ def _compile_search(df: DataFrame, spec: dict, materialize: bool = False):
         return F.col(nm)
 
     def pad_ref(p):
-        if not materialize:
-            return padded_of(p)
         nm = _pad_names.get(p)
         if nm is None:
             nm = f"__srch_pad_{len(_pad_names)}"
@@ -996,8 +992,6 @@ def _compile_search(df: DataFrame, spec: dict, materialize: bool = False):
 
     def tf_ref(p, t, fzkey):
         expr = F.size(F.filter(toks_ref(p), _tok_match(t, fzkey)))
-        if not materialize:
-            return expr
         key = (p, t, fzkey)
         nm = _tf_names.get(key)
         if nm is None:
@@ -1235,9 +1229,11 @@ def _compile_search(df: DataFrame, spec: dict, materialize: bool = False):
         raise ValueError(f"unsupported $search operator {op!r}")
 
     pred0, score0 = clause(op0, args0)
-    if materialize:
-        return pred0, score0, base_cols, tf_cols
-    return pred0, score0
+    base = df
+    for cols in (base_cols, tf_cols):
+        if cols:
+            base = base.withColumns(cols)
+    return base, pred0, score0, [*base_cols, *tf_cols]
 
 
 def _search(df: DataFrame, spec: dict) -> DataFrame:
@@ -1251,14 +1247,9 @@ def _search(df: DataFrame, spec: dict) -> DataFrame:
     `sort` option replaces the score ordering with a field sort
     (score ties broken Atlas-style is index-internal; here the field
     sort is total if the caller makes it so)."""
-    pred, score, p1, p2 = _compile_search(df, spec, materialize=True)
-    base = df
-    if p1:
-        base = base.withColumns(p1)
-    if p2:
-        base = base.withColumns(p2)
+    base, pred, score, helpers = _compile_search(df, spec)
     out = (base.filter(pred).withColumn("__search_score", score)
-           .drop(*p1, *p2))
+           .drop(*helpers))
     sort = spec.get("sort") if isinstance(spec, dict) else None
     if sort:
         order = [F.col(k).asc() if d > 0 else F.col(k).desc()
@@ -1291,14 +1282,8 @@ def _search_meta(df: DataFrame, spec: dict) -> DataFrame:
             raise ValueError(
                 f"$searchMeta facet options {sorted(unknown)}")
         if fs.get("operator"):
-            pred, _sc, p1, p2 = _compile_search(
-                df, fs["operator"], materialize=True)
-            base = df
-            if p1:
-                base = base.withColumns(p1)
-            if p2:
-                base = base.withColumns(p2)
-            base = base.filter(pred).drop(*p1, *p2)
+            base, pred, _sc, helpers = _compile_search(df, fs["operator"])
+            base = base.filter(pred).drop(*helpers)
         else:
             base = df.filter(F.lit(True))
         out = base.agg(F.count(F.lit(1)).alias("__total"))
@@ -1371,12 +1356,7 @@ def _search_meta(df: DataFrame, spec: dict) -> DataFrame:
                         "array<struct<_id:string,count:bigint>>"))
                     .alias("buckets")).alias(n)
                 for n in facet_cols]).alias("facet"))
-    pred, _sc, p1, p2 = _compile_search(df, spec, materialize=True)
-    base = df
-    if p1:
-        base = base.withColumns(p1)
-    if p2:
-        base = base.withColumns(p2)
+    base, pred, _sc, _helpers = _compile_search(df, spec)
     cnt = F.count(F.lit(1))
     return base.filter(pred).agg(
         F.struct(F.struct(cnt.alias("lowerBound"),

@@ -40,6 +40,7 @@ predicate participates in whole-stage codegen and parquet pushdown.
 from __future__ import annotations
 
 import datetime as _dt
+import re
 from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, functions as F
@@ -368,30 +369,13 @@ def _field_pred(col: Column, opdoc: dict, ftype: Optional[DataType],
 # $expr aggregation-expression mini-language
 # (reference:src/maggma/api/query_operator/submission.py:27-35 uses
 #  {"$expr": {"$gt": [{"$arrayElemAt": ["$state", -1]}, v]}})
+#
+# Every operator is one key of _EXPR_OPS: op -> builder(op, args, c),
+# where c(sub) compiles a sub-expression with the current resolver and
+# c(sub, scope) with lambda/let variables bound over it. Operators of
+# one shape (unary, binary, n-ary, left fold) are rows of one table
+# and share one builder.
 # --------------------------------------------------------------------------
-
-_EXPR_BINOPS = {
-    "$gt": lambda a, b: a > b,
-    "$gte": lambda a, b: a >= b,
-    "$lt": lambda a, b: a < b,
-    "$lte": lambda a, b: a <= b,
-    "$eq": lambda a, b: a.eqNullSafe(b),
-    "$ne": lambda a, b: ~a.eqNullSafe(b),
-    "$add": lambda a, b: a + b,
-    "$subtract": lambda a, b: a - b,
-    "$multiply": lambda a, b: a * b,
-    "$divide": lambda a, b: a / b,
-}
-
-# Mongo trigonometric expression operators -> the JVM math functions.
-# Deviation: Mongo RAISES on out-of-domain inputs (e.g. $asin of 2);
-# the JVM functions return NaN — same rows, different failure mode.
-_EXPR_TRIG = {
-    "$sin": F.sin, "$cos": F.cos, "$tan": F.tan,
-    "$asin": F.asin, "$acos": F.acos, "$atan": F.atan,
-    "$sinh": F.sinh, "$cosh": F.cosh, "$tanh": F.tanh,
-    "$asinh": F.asinh, "$acosh": F.acosh, "$atanh": F.atanh,
-}
 
 
 def _let1(bound: Column, body: Callable[[Column], Column]) -> Column:
@@ -413,11 +397,9 @@ def _regex_group_count(pat: str) -> int:
     pattern parses (it shares Java's group syntax for the common
     subset), else a mechanical count of unescaped '(' not followed
     by '?'."""
-    import re as _re
-
     try:
-        return _re.compile(pat).groups
-    except _re.error:
+        return re.compile(pat).groups
+    except re.error:
         n, i = 0, 0
         while i < len(pat):
             if pat[i] == "\\":
@@ -511,8 +493,744 @@ def _mongo_fmt_to_java(fmt: str) -> str:
     return "".join(out)
 
 
+def _cast(to: str) -> Callable[[Column], Column]:
+    return lambda a: a.cast(to)
+
+
+def _is_number(a: Column) -> Column:
+    t = F.typeof(a)
+    return t.isin("tinyint", "smallint", "int", "bigint", "float",
+                  "double") | t.startswith("decimal")
+
+
+# One-argument operators: op -> (Column -> Column). Trig deviation:
+# Mongo RAISES on out-of-domain inputs (e.g. $asin of 2); the JVM
+# functions return NaN — same rows, different failure mode.
+_EXPR_UNARY = {
+    "$not": lambda a: ~a,
+    "$abs": F.abs, "$sqrt": F.sqrt, "$exp": F.exp, "$ln": F.log,
+    "$log10": F.log10, "$floor": F.floor, "$ceil": F.ceil,
+    "$sin": F.sin, "$cos": F.cos, "$tan": F.tan,
+    "$asin": F.asin, "$acos": F.acos, "$atan": F.atan,
+    "$sinh": F.sinh, "$cosh": F.cosh, "$tanh": F.tanh,
+    "$asinh": F.asinh, "$acosh": F.acosh, "$atanh": F.atanh,
+    "$degreesToRadians": F.radians, "$radiansToDegrees": F.degrees,
+    "$bitNot": F.bitwise_not,
+    "$toLower": F.lower, "$toUpper": F.upper, "$strLenCP": F.length,
+    "$strLenBytes": F.octet_length,
+    "$binarySize": lambda a: F.octet_length(a).cast("long"),
+    "$toString": _cast("string"), "$toInt": _cast("long"),
+    "$toLong": _cast("long"), "$toDouble": _cast("double"),
+    "$toDecimal": _cast("double"), "$toBool": _cast("boolean"),
+    "$toDate": _cast("timestamp"),
+    "$year": F.year, "$month": F.month, "$dayOfMonth": F.dayofmonth,
+    "$hour": F.hour, "$minute": F.minute, "$second": F.second,
+    "$millisecond":
+        lambda a: (F.unix_millis(a.cast("timestamp")) % 1000).cast("int"),
+    "$dayOfWeek": F.dayofweek,  # Mongo: 1 (Sunday) .. 7, as dayofweek
+    "$dayOfYear": F.dayofyear,
+    "$isoDayOfWeek": lambda a: F.weekday(a) + 1,  # Monday=1 .. Sunday=7
+    "$isoWeek": F.weekofyear,
+    "$isoWeekYear":
+        lambda a: F.date_part(F.lit("YEAROFWEEK"), a).cast("long"),
+    # Mongo/strftime %U: Sunday-start weeks, days before the first
+    # Sunday are week 0
+    "$week": lambda d: F.floor(
+        (F.dayofyear(d) + 7 - F.dayofweek(d)) / 7).cast("int"),
+    "$size": F.size, "$reverseArray": F.reverse,
+    "$first": lambda a: F.element_at(a, 1),
+    "$last": lambda a: F.element_at(a, -1),
+    "$isArray": lambda a: F.typeof(a).startswith("array"),
+    "$isNumber": _is_number,
+    "$anyElementTrue": lambda a: F.exists(a, lambda x: x.cast("boolean")),
+    "$allElementsTrue": lambda a: F.forall(a, lambda x: x.cast("boolean")),
+    # documents-as-MapType (the VariantJSONStore / dynamic-doc shape)
+    # <-> array<struct<k,v>> via JVM map_entries. StructType inputs
+    # would need schema introspection the expression dialect
+    # deliberately avoids — convert to a map upstream.
+    "$objectToArray": lambda m: F.transform(
+        F.map_entries(m),
+        lambda e: F.struct(e["key"].alias("k"), e["value"].alias("v"))),
+    "$arrayToObject": lambda a: F.map_from_entries(
+        F.transform(a, lambda e: F.struct(e["k"], e["v"]))),
+}
+
+
+def _cmp(a: Column, b: Column) -> Column:
+    # null sorts lowest, as in the sort comparator
+    return (F.when(a.eqNullSafe(b), 0)
+            .when(a.isNull(), -1).when(b.isNull(), 1)
+            .when(a < b, -1).otherwise(1))
+
+
+_EXPR_BINOPS = {
+    "$gt": lambda a, b: a > b,
+    "$gte": lambda a, b: a >= b,
+    "$lt": lambda a, b: a < b,
+    "$lte": lambda a, b: a <= b,
+    "$eq": lambda a, b: a.eqNullSafe(b),
+    "$ne": lambda a, b: ~a.eqNullSafe(b),
+    "$cmp": _cmp,
+    "$strcasecmp": lambda a, b: _cmp(F.upper(a), F.upper(b)),
+    "$add": lambda a, b: a + b,
+    "$subtract": lambda a, b: a - b,
+    "$multiply": lambda a, b: a * b,
+    "$divide": lambda a, b: a / b,
+    "$mod": lambda a, b: a % b,
+    "$pow": F.pow,
+    # ln(x)/ln(b) — the identity both engines use; supports expression
+    # bases, unlike F.log's literal-only base
+    "$log": lambda x, base: F.log(x) / F.log(base),
+    "$atan2": F.atan2,
+    "$in": lambda needle, arr: F.array_contains(arr, needle),
+    "$setDifference": F.array_except,
+    "$setIsSubset": lambda a, b: F.size(F.array_except(a, b)) == 0,
+}
+
+
+def _set_equals(*arrs: Column) -> Column:
+    sets = [F.array_distinct(a) for a in arrs]
+    out = F.lit(True)
+    for s in sets[1:]:
+        out = out & (F.size(F.array_except(sets[0], s)) == 0) \
+            & (F.size(F.array_except(s, sets[0])) == 0)
+    return out
+
+
+def _merge_objects(*maps: Column) -> Column:
+    # expression form over MapType documents, later-wins (the
+    # ACCUMULATOR form lives in the pipeline compiler)
+    rev = F.reverse(F.concat(*[F.map_entries(m) for m in maps]))
+    ks = F.array_distinct(F.transform(rev, lambda e: e["key"]))
+    return F.map_from_arrays(
+        ks,
+        F.transform(ks, lambda k: F.element_at(
+            F.filter(rev, lambda e: e["key"] == k), 1)["value"]))
+
+
+# Operators over an argument list: op -> (*Columns -> Column).
+_EXPR_NARY = {
+    "$ifNull": F.coalesce, "$max": F.greatest, "$min": F.least,
+    "$concat": F.concat, "$concatArrays": F.concat,
+    "$setEquals": _set_equals, "$mergeObjects": _merge_objects,
+}
+
+# Left folds over the argument list: op -> (seed, step). A constant
+# seed starts the fold before the first argument; a callable seed
+# wraps the first argument and the fold runs over the rest. Mongo set
+# operators ALWAYS dedupe, even with one argument.
+_EXPR_FOLDS = {
+    "$and": (True, lambda a, b: a & b),
+    "$or": (False, lambda a, b: a | b),
+    "$setUnion": (F.array_distinct, F.array_union),
+    "$setIntersection": (F.array_distinct, F.array_intersect),
+    "$bitAnd": (lambda a: a, lambda a, b: a.bitwiseAND(b)),
+    "$bitOr": (lambda a: a, lambda a, b: a.bitwiseOR(b)),
+    "$bitXor": (lambda a: a, lambda a, b: a.bitwiseXOR(b)),
+}
+
+
+def _unary(op: str, args: Any, c) -> Column:
+    # Mongo's one-element argument list: {op: [x]} is {op: x}
+    if isinstance(args, list):
+        if len(args) != 1:
+            raise ValueError(f"{op} takes one argument, got {len(args)}")
+        (args,) = args
+    return _EXPR_UNARY[op](c(args))
+
+
+def _binary(op: str, args: Any, c) -> Column:
+    a, b = args
+    return _EXPR_BINOPS[op](c(a), c(b))
+
+
+def _nary(op: str, args: Any, c) -> Column:
+    return _EXPR_NARY[op](*[c(a) for a in args])
+
+
+def _fold(op: str, args: Any, c) -> Column:
+    seed, step = _EXPR_FOLDS[op]
+    cols = [c(a) for a in args]
+    if callable(seed):
+        out, cols = seed(cols[0]), cols[1:]
+    else:
+        out = F.lit(seed)
+    for col in cols:
+        out = step(out, col)
+    return out
+
+
+def _scoped(resolve: Resolver, scope: dict) -> Resolver:
+    """Child resolver for lambda and $let bodies. A variable "$$x"
+    reaches the resolver as "$x": it and its "$x.field" paths resolve
+    off the bound Column; every other name DELEGATES to the enclosing
+    resolver, so nested bodies still see outer variables and row
+    fields."""
+
+    def r(name: str) -> Column:
+        head, _, rest = name.partition(".")
+        if head not in scope:
+            return resolve(name)
+        col = scope[head]
+        for fld in rest.split(".") if rest else ():
+            col = col.getField(fld)
+        return col
+
+    return r
+
+
+def _array_hof(op: str, args: Any, c) -> Column:
+    """$map/$filter/$reduce -> JVM lambda functions (transform/filter/
+    aggregate). The body binds "$$this" and "$$value" (or the `as`
+    name) to the lambda columns."""
+    arr = c(args["input"])
+    if op == "$reduce":
+        init = c(args["initialValue"])
+        # Spark's aggregate() needs the merge output type to EQUAL
+        # the accumulator type; widen integer seeds to long so
+        # summing a bigint array over initialValue 0 resolves
+        if isinstance(args["initialValue"], int) \
+                and not isinstance(args["initialValue"], bool):
+            init = init.cast("long")
+        return F.aggregate(arr, init, lambda acc, el: c(
+            args["in"], {"$value": acc, "$this": el}))
+    var = args.get("as", "this")
+    body = args["in"] if op == "$map" else args["cond"]
+
+    def hof(el):  # exactly one parameter: PySpark inspects arity
+        return c(body, {f"${var}": el, "$this": el})
+
+    return F.transform(arr, hof) if op == "$map" else F.filter(arr, hof)
+
+
+def _let(op: str, args: Any, c) -> Column:
+    scope = {f"${k}": c(v) for k, v in args["vars"].items()}
+    return c(args["in"], scope)
+
+
+def _array_elem_at(op: str, args: Any, c) -> Column:
+    arr, idx = args
+    arr_c = c(arr)
+    # Mongo is 0-based (negative = from end); element_at is 1-based.
+    if isinstance(idx, int):
+        return F.element_at(arr_c, idx + 1 if idx >= 0 else idx)
+    idx_c = c(idx)
+    return F.element_at(arr_c, F.when(idx_c >= 0, idx_c + 1).otherwise(idx_c))
+
+
+def _cond(op: str, args: Any, c) -> Column:
+    if isinstance(args, dict):
+        cond, then, els = args["if"], args["then"], args["else"]
+    else:
+        cond, then, els = args
+    return F.when(c(cond).cast("boolean"), c(then)).otherwise(c(els))
+
+
+def _switch(op: str, args: Any, c) -> Column:
+    out = c(args.get("default")) if "default" in args else F.lit(None)
+    for br in reversed(args["branches"]):
+        out = F.when(c(br["case"]).cast("boolean"),
+                     c(br["then"])).otherwise(out)
+    return out
+
+
+def _value_place(op: str, args: Any) -> tuple:
+    """$round/$trunc arguments: value, [value] or [value, place]."""
+    if not isinstance(args, list):
+        val, place = args, 0
+    elif len(args) == 1:
+        val, place = args[0], 0
+    elif len(args) == 2:
+        val, place = args
+    else:
+        raise ValueError(f"{op} takes [value] or [value, place]")
+    if not isinstance(place, int):
+        raise ValueError(f"{op} place must be a literal integer")
+    return val, place
+
+
+def _round(op: str, args: Any, c) -> Column:
+    val, place = _value_place(op, args)
+    return F.round(c(val), place)
+
+
+def _trunc(op: str, args: Any, c) -> Column:
+    # Mongo truncates toward zero, optionally at `place` decimal
+    # digits (place>0) or left of the decimal point (place<0).
+    val, place = _value_place(op, args)
+    e = c(val)
+    if place == 0:
+        return e.cast("long")
+    scale = 10 ** abs(place)
+    if place > 0:
+        return (e * F.lit(scale)).cast("long") / F.lit(float(scale))
+    return (e / F.lit(scale)).cast("long") * F.lit(scale)
+
+
+def _substr(op: str, args: Any, c) -> Column:
+    # Mongo is 0-based, substring 1-based. Character-based for all
+    # three: identical to $substrBytes for ASCII (Mongo $substrBytes
+    # counts UTF-8 bytes — multibyte inputs differ)
+    s, start, length = args
+    return F.substring(c(s), c(start) + 1, c(length))
+
+
+def _split(op: str, args: Any, c) -> Column:
+    s, delim = args
+    if not isinstance(delim, str):
+        raise ValueError("$split delimiter must be a literal string")
+    return F.split(c(s), re.escape(delim))
+
+
+def _trim(op: str, args: Any, c) -> Column:
+    spec = args if isinstance(args, dict) else {"input": args}
+    inp = c(spec["input"])
+    chars = spec.get("chars")
+    if chars is None:
+        return {"$trim": F.trim, "$ltrim": F.ltrim, "$rtrim": F.rtrim}[op](inp)
+    if not isinstance(chars, str) or not chars:
+        raise ValueError(f"{op} chars must be a literal string")
+    # Mongo trims ANY char in the set; re.escape leaves alphanumerics
+    # bare (escaping a letter inside a class flips its meaning — \d,
+    # \b...) and escapes the class metachars
+    cls = "[" + "".join(re.escape(ch) for ch in chars) + "]+"
+    pat = {"$trim": f"^{cls}|{cls}$", "$ltrim": "^" + cls,
+           "$rtrim": cls + "$"}[op]
+    return F.regexp_replace(inp, pat, "")
+
+
+def _replace(op: str, args: Any, c) -> Column:
+    inp = c(args["input"])
+    find, repl = args["find"], args["replacement"]
+    if not isinstance(find, str):
+        raise ValueError(f"{op} find must be a literal string")
+    if op == "$replaceAll":
+        return F.replace(inp, F.lit(find), _lit(repl))
+    pos = F.locate(find, inp)  # literal find: non-regex, first hit
+    return F.when(pos == 0, inp).otherwise(F.concat(
+        F.substr(inp, F.lit(1), pos - 1), c(repl),
+        F.substr(inp, pos + len(find), F.length(inp))))
+
+
+def _index_of_cp(op: str, args: Any, c) -> Column:
+    # codepoint-based for both; identical for ASCII ($indexOfBytes
+    # counts UTF-8 bytes in Mongo — same caveat as $substrBytes).
+    # The needle must be a literal (locate's contract); start/end
+    # are literal codepoint offsets, end EXCLUSIVE for the match
+    # end. -1 = absent, null input -> null (Mongo semantics).
+    s = c(args[0])
+    needle = args[1]
+    if not isinstance(needle, str):
+        raise ValueError(f"{op} substring must be a literal string")
+    start = args[2] if len(args) > 2 else 0
+    end = args[3] if len(args) > 3 else None
+    if not isinstance(start, int) or (
+            end is not None and not isinstance(end, int)):
+        raise ValueError(f"{op} start/end must be literal integers")
+    hay = s if end is None else F.substring(s, 1, end)
+    pos = F.locate(needle, hay, start + 1)
+    return F.when(s.isNull(), F.lit(None).cast("long")) \
+        .otherwise(F.when(pos > 0, pos - 1).otherwise(-1).cast("long"))
+
+
+def _regex_match(op: str, args: Any, c) -> Column:
+    pat = args["regex"]
+    if not isinstance(pat, str):
+        raise ValueError("$regexMatch regex must be a literal string")
+    if "i" in (args.get("options") or ""):
+        pat = f"(?i){pat}"
+    return c(args["input"]).rlike(pat)
+
+
+def _regex_find(op: str, args: Any, c) -> Column:
+    # {match, idx, captures} of the FIRST match, null when none.
+    # Deviation: a capture group that did not participate in the
+    # match yields "" (regexp_extract), not Mongo's null.
+    pat = _regex_pat(args, op)
+    inp = c(args["input"])
+    ng = _regex_group_count(args["regex"])
+    caps = F.array(*[F.regexp_extract(inp, pat, g)
+                     for g in range(1, ng + 1)]) if ng else \
+        F.array().cast("array<string>")
+    return F.when(inp.rlike(pat), F.struct(
+        F.regexp_extract(inp, pat, 0).alias("match"),
+        (F.regexp_instr(inp, F.lit(pat)) - 1).cast("int").alias("idx"),
+        caps.alias("captures")))
+
+
+def _regex_find_all(op: str, args: Any, c) -> Column:
+    # array of {match, idx, captures}; [] when no match or null
+    # input (Mongo). idx comes from a left-to-right position scan
+    # over the extracted match strings (F.aggregate + F.position):
+    # exact for self-delimiting patterns; a lookaround that makes
+    # an identical EARLIER substring a non-match can mis-index.
+    pat = _regex_pat(args, op)
+    inp = c(args["input"])
+    ng = _regex_group_count(args["regex"])
+    matches = F.regexp_extract_all(inp, F.lit(pat), F.lit(0))
+    groups = [F.regexp_extract_all(inp, F.lit(pat), F.lit(g))
+              for g in range(1, ng + 1)]
+    idxs = F.aggregate(
+        matches,
+        F.struct(F.lit(1).alias("pos"),
+                 F.array().cast("array<int>").alias("out")),
+        lambda acc, m: F.struct(
+            (F.position(m, inp, acc["pos"])
+             + F.greatest(F.length(m), F.lit(1))).alias("pos"),
+            F.concat(acc["out"], F.array(
+                (F.position(m, inp, acc["pos"]) - 1).cast("int")))
+            .alias("out")),
+        lambda acc: acc["out"])
+    # bind the extraction + position-scan arrays ONCE (_let1):
+    # referencing them per output element re-ran the O(m) scans
+    # per match = O(m^2)/row
+    packed = F.struct(
+        matches.alias("m"), idxs.alias("ix"),
+        *[g.alias(f"g{j}") for j, g in enumerate(groups, 1)])
+
+    def build(t):
+        m = t["m"]
+        n_m = F.size(m)
+        seq = F.when(n_m > 0, F.sequence(F.lit(0), n_m - 1)) \
+            .otherwise(F.array().cast("array<int>"))
+
+        def row(i):
+            return F.struct(
+                F.get(m, i).alias("match"),
+                F.get(t["ix"], i).alias("idx"),
+                (F.array(*[F.get(t[f"g{j}"], i)
+                           for j in range(1, ng + 1)]) if ng
+                 else F.array().cast("array<string>"))
+                .alias("captures"))
+
+        return F.transform(seq, row)
+
+    out = _let1(packed, build)
+    empty = "array<struct<match:string,idx:int,captures:array<string>>>"
+    return F.when(inp.isNull(), F.array().cast(empty)).otherwise(out)
+
+
+def _slice(op: str, args: Any, c) -> Column:
+    # [array, n] (first n / last n if n<0) or [array, position, n];
+    # position is 0-based (F.slice is 1-based)
+    if len(args) == 2:
+        arr, n = args
+        if not isinstance(n, int):
+            raise ValueError("$slice n must be a literal integer")
+        arr_c = c(arr)
+        if n >= 0:
+            return F.slice(arr_c, 1, n)
+        # "last |n|": Mongo returns the WHOLE array when |n| exceeds
+        # its length, so clamp the (negative) start at -size; on an
+        # EMPTY array that clamp is 0 and Spark's slice raises
+        # (INVALID_PARAMETER_VALUE.START), where Mongo returns []
+        return F.when(F.size(arr_c) == 0, arr_c).otherwise(
+            F.slice(arr_c, F.greatest(F.lit(n), -F.size(arr_c)), F.lit(-n)))
+    arr, pos, n = args
+    if not isinstance(pos, int) or not isinstance(n, int) or n <= 0:
+        raise ValueError("$slice [arr, position, n]: literal ints, n>0")
+    return F.slice(c(arr), pos + 1 if pos >= 0 else pos, n)
+
+
+def _index_of_array(op: str, args: Any, c) -> Column:
+    if len(args) > 2:
+        # Mongo's optional start/end range would silently change
+        # the answer if ignored — fail loudly instead
+        raise ValueError(
+            "$indexOfArray start/end range arguments are not "
+            "supported; $slice the array first")
+    # array_position: 1-based, 0 when absent -> Mongo 0-based, -1
+    return (F.array_position(c(args[0]), c(args[1])) - F.lit(1)).cast("long")
+
+
+def _range(op: str, args: Any, c) -> Column:
+    start = c(args[0]).cast("long")
+    end = c(args[1]).cast("long")
+    step = (c(args[2]).cast("long") if len(args) > 2
+            else F.lit(1).cast("long"))
+    # Mongo end is EXCLUSIVE and empty ranges yield []; sequence is
+    # inclusive and raises on inverted bounds — guard per row
+    # (CaseWhen evaluates only the matching branch)
+    last = F.when(step > 0, end - 1).otherwise(end + 1)
+    nonempty = ((step > 0) & (start < end)) | ((step < 0) & (start > end))
+    return F.when(nonempty, F.sequence(start, last, step)) \
+        .otherwise(F.array().cast("array<bigint>"))
+
+
+def _sort_array(op: str, args: Any, c) -> Column:
+    arr = c(args["input"])
+    by = args["sortBy"]
+    if isinstance(by, int):
+        return F.sort_array(arr, asc=by > 0)
+    return F.array_sort(arr, struct_comparator(by))
+
+
+def _zip(op: str, args: Any, c) -> Column:
+    arrs = [c(a) for a in args["inputs"]]
+    longest = bool(args.get("useLongestLength"))
+    defaults = args.get("defaults")
+    sizes = [F.size(a) for a in arrs]
+    n = (F.greatest(*sizes) if longest else F.least(*sizes)) \
+        if len(arrs) > 1 else sizes[0]
+    # F.get is 0-based and null-safe past the end (element_at
+    # raises under ANSI); sequence guards the empty case
+    idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)) \
+        .otherwise(F.array().cast("array<int>"))
+
+    def row(i):
+        elems = []
+        for j, a in enumerate(arrs):
+            e = F.get(a, i)
+            if longest and defaults is not None:
+                e = F.coalesce(e, _lit(defaults[j]))
+            elems.append(e)
+        return F.array(*elems)
+
+    return F.transform(idx, row)
+
+
+def _sum_avg(op: str, args: Any, c) -> Column:
+    # EXPRESSION form (Mongo also uses these names as accumulators
+    # — the pipeline compiler dispatches those separately): a list
+    # of expressions, or a single array-valued expression. Nulls
+    # are ignored (Mongo ignores non-numeric operands); empty
+    # $sum is 0, empty $avg is null.
+    if isinstance(args, list):
+        cols = [c(a).cast("double") for a in args]
+        cnt = sum((x.isNotNull().cast("int") for x in cols), F.lit(0))
+        tot = sum((F.coalesce(x, F.lit(0.0)) for x in cols), F.lit(0.0))
+    else:
+        nn = F.filter(c(args), lambda x: x.isNotNull())
+        cnt = F.size(nn)
+        tot = F.aggregate(nn, F.lit(0.0), lambda a, x: a + x.cast("double"))
+    return tot if op == "$sum" else F.when(cnt > 0, tot / cnt)
+
+
+def _n_elements(op: str, args: Any, c) -> Column:
+    # EXPRESSION forms over an array operand (the accumulator forms
+    # live in the pipeline compiler). $maxN/$minN ignore nulls
+    # (Mongo); $firstN/$lastN keep order and nulls.
+    n = args.get("n")
+    if not isinstance(n, int) or n < 1:
+        raise ValueError(f"{op} n must be a literal integer >= 1")
+    arr = c(args["input"])
+    if op in ("$maxN", "$minN"):
+        ordered = F.array_sort(F.filter(arr, lambda x: x.isNotNull()))
+        if op == "$maxN":
+            ordered = F.reverse(ordered)
+        return F.slice(ordered, 1, n)
+    if op == "$firstN":
+        return F.slice(arr, 1, n)
+    sz = F.size(arr)
+    return F.when(sz <= 0, arr).otherwise(
+        F.slice(arr, F.greatest(F.lit(-n), -sz), F.least(F.lit(n), sz)))
+
+
+def _quantiles(op: str, args: Any, c) -> Column:
+    # EXPRESSION forms over an array operand: exact continuous
+    # interpolation (identical to F.percentile / DuckDB
+    # quantile_cont) — a strictly-deterministic stand-in for
+    # Mongo's t-digest "approximate" method; nulls ignored,
+    # empty -> null.
+    if not (isinstance(args, dict) and "input" in args):
+        raise ValueError(f"Unsupported $expr operator: {op}")
+    sorted_nn = F.array_sort(F.filter(
+        c(args["input"]), lambda x: x.isNotNull()).cast("array<double>"))
+
+    # bind the sorted array ONCE (_let1): each interpolation
+    # references it ~5x (size twice, lo/hi element lookups), and
+    # without the binding every reference re-filtered and
+    # re-sorted the operand per row
+    def q(nn: Column, p: float) -> Column:
+        n = F.size(nn)
+        r = (n - 1) * F.lit(float(p))
+        lo = F.floor(r).cast("int")
+        frac = r - lo
+        lo_v = F.element_at(nn, lo + 1)
+        # p=1.0 lands on the last element: lo+2 is past the end
+        hi_v = F.coalesce(F.try_element_at(nn, lo + 2), lo_v)
+        return F.when(n > 0, lo_v * (1.0 - frac) + hi_v * frac)
+
+    if op == "$median":
+        return _let1(sorted_nn, lambda nn: q(nn, 0.5))
+    ps = args["p"]
+    if not (isinstance(ps, list) and
+            all(isinstance(p, (int, float)) for p in ps)):
+        raise ValueError("$percentile p must be a list of literal numbers")
+    return _let1(sorted_nn, lambda nn: F.array(*[q(nn, float(p)) for p in ps]))
+
+
+def _on_null(args: dict, inp: Column, out: Column) -> Column:
+    """Mongo's `onNull`: a null input yields the literal instead."""
+    if "onNull" in args:
+        return F.when(inp.isNull(), _lit(args["onNull"])).otherwise(out)
+    return out
+
+
+def _convert(op: str, args: Any, c) -> Column:
+    casts = {"int": "int", "long": "long", "double": "double",
+             "decimal": "decimal(38,9)", "string": "string",
+             "bool": "boolean", "date": "timestamp"}
+    to = args["to"]
+    if to not in casts:
+        raise ValueError(f"$convert to {to!r} not supported")
+    inp = c(args["input"])
+    if "onError" in args:
+        out = inp.try_cast(casts[to])
+        out = F.when(inp.isNotNull() & out.isNull(),
+                     _lit(args["onError"])).otherwise(out)
+    else:
+        out = inp.cast(casts[to])
+    return _on_null(args, inp, out)
+
+
+def _date_from_string(op: str, args: Any, c) -> Column:
+    ds = c(args["dateString"])
+    if "onError" in args:
+        raise ValueError("$dateFromString onError is not supported")
+    fmt = args.get("format")
+    if fmt is None:
+        parsed = ds.cast("timestamp")  # ISO-8601 and friends
+    else:
+        parsed = F.to_timestamp(ds, _mongo_fmt_to_java(fmt))
+    return _on_null(args, ds, parsed)
+
+
+def _date_to_string(op: str, args: Any, c) -> Column:
+    d = c(args["date"])
+    fmt = args.get("format", "%Y-%m-%dT%H:%M:%S.%LZ")
+    return _on_null(args, d, F.date_format(d, _mongo_fmt_to_java(fmt)))
+
+
+def _date_add(op: str, args: Any, c) -> Column:
+    amount = c(args["amount"])
+    return F.timestamp_add(
+        args["unit"].upper(), -amount if op == "$dateSubtract" else amount,
+        c(args["startDate"]))
+
+
+def _date_diff(op: str, args: Any, c) -> Column:
+    # Mongo counts UNIT BOUNDARY CROSSINGS, not elapsed units —
+    # trunc both ends to the unit, then diff in whole units.
+    # Boundaries follow the SESSION timezone; the engine pins it to
+    # UTC (session.py), which is also Mongo's $dateDiff default. A
+    # DST-shifted session timezone would miscount day/hour
+    # crossings around transitions — keep the UTC pin.
+    unit = args["unit"]
+    s = c(args["startDate"])
+    e = c(args["endDate"])
+    if unit == "year":
+        return (F.year(e) - F.year(s)).cast("long")
+    if unit == "month":
+        return ((F.year(e) - F.year(s)) * 12
+                + (F.month(e) - F.month(s))).cast("long")
+    secs = {"day": 86400, "hour": 3600, "minute": 60, "second": 1}
+    if unit not in secs:
+        raise ValueError(f"$dateDiff unit {unit!r} not supported")
+    ts, te = F.date_trunc(unit, s), F.date_trunc(unit, e)
+    return ((te.cast("long") - ts.cast("long"))
+            / F.lit(secs[unit])).cast("long")
+
+
+def _date_from_parts(op: str, args: Any, c) -> Column:
+    if "isoWeekYear" in args:
+        raise ValueError("$dateFromParts ISO-week form is not supported")
+
+    def part(name, dflt):
+        return c(args[name]) if name in args else F.lit(dflt)
+
+    return F.make_timestamp(
+        part("year", 1970), part("month", 1), part("day", 1),
+        part("hour", 0), part("minute", 0),
+        part("second", 0).cast("double")
+        + part("millisecond", 0).cast("double") / 1000.0)
+
+
+def _date_to_parts(op: str, args: Any, c) -> Column:
+    if isinstance(args, dict) and args.get("iso8601"):
+        raise ValueError("$dateToParts iso8601 form is not supported")
+    d = c(args["date"] if isinstance(args, dict) else args)
+    return F.struct(
+        F.year(d).alias("year"), F.month(d).alias("month"),
+        F.dayofmonth(d).alias("day"), F.hour(d).alias("hour"),
+        F.minute(d).alias("minute"), F.second(d).alias("second"),
+        _EXPR_UNARY["$millisecond"](d).alias("millisecond"))
+
+
+def _get_field(op: str, args: Any, c) -> Column:
+    if not isinstance(args, dict) or not isinstance(args.get("field"), str):
+        raise ValueError(
+            '$getField requires {"field": <literal str>, "input": <expr>}')
+    # works for struct fields AND map keys; unlike a dotted path it
+    # tolerates dots INSIDE the field name
+    return c(args["input"]).getItem(args["field"])
+
+
+def _set_field(op: str, args: Any, c) -> Column:
+    # documents-as-MapType (same convention as $objectToArray);
+    # $setField value $$REMOVE == $unsetField. map_concat would
+    # raise on a duplicate key (mapKeyDedupPolicy=EXCEPTION), so
+    # the existing key is filtered out first.
+    field = args.get("field")
+    if not isinstance(field, str):
+        raise ValueError(f"{op} field must be a literal string")
+    cleaned = F.map_filter(c(args["input"]), lambda k, v: k != F.lit(field))
+    if op == "$unsetField" or args.get("value") == "$$REMOVE":
+        return cleaned
+    return F.map_concat(cleaned, F.create_map(F.lit(field), c(args["value"])))
+
+
+def _meta(op: str, args: Any, c) -> Column:
+    if args == "vectorSearchScore":
+        return F.col("__vector_search_score")  # set by $vectorSearch
+    if args in ("searchScore", "textScore"):
+        return F.col("__search_score")  # set by $search
+    raise ValueError(f"$meta {args!r} not supported")
+
+
+def _rand(op: str, args: Any, c) -> Column:
+    if args != {}:
+        raise ValueError("$rand takes {}")
+    return F.rand()
+
+
+# op -> builder(op, args, c): the one list of supported operators.
+_EXPR_OPS: dict = {
+    **dict.fromkeys(_EXPR_UNARY, _unary),
+    **dict.fromkeys(_EXPR_BINOPS, _binary),
+    **dict.fromkeys(_EXPR_NARY, _nary),
+    **dict.fromkeys(_EXPR_FOLDS, _fold),
+    "$literal": lambda op, args, c: _lit(args),
+    "$cond": _cond, "$switch": _switch, "$let": _let,
+    "$map": _array_hof, "$filter": _array_hof, "$reduce": _array_hof,
+    "$arrayElemAt": _array_elem_at, "$slice": _slice,
+    "$indexOfArray": _index_of_array, "$range": _range,
+    "$sortArray": _sort_array, "$zip": _zip,
+    "$sum": _sum_avg, "$avg": _sum_avg,
+    "$maxN": _n_elements, "$minN": _n_elements,
+    "$firstN": _n_elements, "$lastN": _n_elements,
+    "$median": _quantiles, "$percentile": _quantiles,
+    "$round": _round, "$trunc": _trunc,
+    "$substrCP": _substr, "$substr": _substr, "$substrBytes": _substr,
+    "$split": _split, "$trim": _trim, "$ltrim": _trim, "$rtrim": _trim,
+    "$replaceAll": _replace, "$replaceOne": _replace,
+    "$indexOfCP": _index_of_cp, "$indexOfBytes": _index_of_cp,
+    "$regexMatch": _regex_match, "$regexFind": _regex_find,
+    "$regexFindAll": _regex_find_all, "$convert": _convert,
+    "$dateFromString": _date_from_string, "$dateToString": _date_to_string,
+    "$dateAdd": _date_add, "$dateSubtract": _date_add,
+    "$dateDiff": _date_diff,
+    "$dateTrunc": lambda op, args, c: F.date_trunc(args["unit"],
+                                                   c(args["date"])),
+    "$dateFromParts": _date_from_parts, "$dateToParts": _date_to_parts,
+    "$getField": _get_field, "$setField": _set_field,
+    "$unsetField": _set_field, "$meta": _meta, "$rand": _rand,
+}
+
+
 def compile_expr(expr: Any, resolve: Resolver) -> Column:
-    """Compile the `$expr` aggregation-operator subset into a Column."""
+    """Compile the `$expr` aggregation-operator subset into a Column;
+    the supported operators are the keys of `_EXPR_OPS`."""
     if isinstance(expr, str) and expr.startswith("$"):
         return resolve(expr[1:])
     if isinstance(expr, list):
@@ -524,770 +1242,15 @@ def compile_expr(expr: Any, resolve: Resolver) -> Column:
     if len(expr) != 1:
         raise ValueError(f"$expr operator doc must have one key: {expr}")
     op, args = next(iter(expr.items()))
-    if op == "$literal":
-        return _lit(args)
-    if op == "$arrayElemAt":
-        arr, idx = args
-        arr_c = compile_expr(arr, resolve)
-        # Mongo is 0-based (negative = from end); element_at is 1-based.
-        if isinstance(idx, int):
-            return F.element_at(arr_c, idx + 1 if idx >= 0 else idx)
-        idx_c = compile_expr(idx, resolve)
-        return F.element_at(arr_c, F.when(idx_c >= 0, idx_c + 1).otherwise(idx_c))
-    if op in _EXPR_BINOPS:
-        a, b = args
-        return _EXPR_BINOPS[op](compile_expr(a, resolve), compile_expr(b, resolve))
-    if op == "$and":
-        out = F.lit(True)
-        for a in args:
-            out = out & compile_expr(a, resolve)
-        return out
-    if op == "$or":
-        out = F.lit(False)
-        for a in args:
-            out = out | compile_expr(a, resolve)
-        return out
-    if op == "$not":
-        (a,) = args if isinstance(args, list) else (args,)
-        return ~compile_expr(a, resolve)
-    if op == "$ifNull":
-        return F.coalesce(*[compile_expr(a, resolve) for a in args])
-    if op == "$abs":
-        return F.abs(compile_expr(args, resolve))
-    if op == "$size":
-        return F.size(compile_expr(args, resolve))
-    if op == "$max":
-        return F.greatest(*[compile_expr(a, resolve) for a in args])
-    if op == "$min":
-        return F.least(*[compile_expr(a, resolve) for a in args])
-    if op == "$concat":
-        return F.concat(*[compile_expr(a, resolve) for a in args])
-    if op == "$cond":
-        if isinstance(args, dict):
-            cond, then, els = args["if"], args["then"], args["else"]
-        else:
-            cond, then, els = args
-        return F.when(
-            compile_expr(cond, resolve).cast("boolean"),
-            compile_expr(then, resolve),
-        ).otherwise(compile_expr(els, resolve))
-    if op == "$toLower":
-        return F.lower(compile_expr(args, resolve))
-    if op == "$toUpper":
-        return F.upper(compile_expr(args, resolve))
-    if op == "$strLenCP":
-        return F.length(compile_expr(args, resolve))
-    if op == "$trim":
-        inp = args["input"] if isinstance(args, dict) else args
-        return F.trim(compile_expr(inp, resolve))
-    if op == "$mod":
-        a, b = args
-        return compile_expr(a, resolve) % compile_expr(b, resolve)
-    if op == "$year":
-        return F.year(compile_expr(args, resolve))
-    if op == "$month":
-        return F.month(compile_expr(args, resolve))
-    if op == "$dayOfMonth":
-        return F.dayofmonth(compile_expr(args, resolve))
-    if op == "$hour":
-        return F.hour(compile_expr(args, resolve))
-    if op == "$minute":
-        return F.minute(compile_expr(args, resolve))
-    if op == "$second":
-        return F.second(compile_expr(args, resolve))
-    if op == "$dayOfWeek":  # Mongo: 1 (Sunday) .. 7 — matches dayofweek
-        return F.dayofweek(compile_expr(args, resolve))
-    if op == "$dayOfYear":
-        return F.dayofyear(compile_expr(args, resolve))
-    if op == "$floor":
-        return F.floor(compile_expr(args, resolve))
-    if op == "$ceil":
-        return F.ceil(compile_expr(args, resolve))
-    if op == "$round":
-        if isinstance(args, list):
-            if len(args) == 1:
-                val, place = args[0], 0
-            elif len(args) == 2:
-                val, place = args
-            else:
-                raise ValueError("$round takes [value] or [value, place]")
-        else:
-            val, place = args, 0
-        if not isinstance(place, int):
-            raise ValueError("$round place must be a literal integer")
-        return F.round(compile_expr(val, resolve), place)
-    if op == "$trunc":
-        # Mongo truncates toward zero, optionally at `place` decimal
-        # digits (place>0) or left of the decimal point (place<0).
-        if isinstance(args, list):
-            if len(args) == 1:
-                val, place = args[0], 0
-            elif len(args) == 2:
-                val, place = args
-            else:
-                raise ValueError("$trunc takes [value] or [value, place]")
-        else:
-            val, place = args, 0
-        if not isinstance(place, int):
-            raise ValueError("$trunc place must be a literal integer")
-        e = compile_expr(val, resolve)
-        if place == 0:
-            return e.cast("long")
-        if place > 0:
-            scale = 10 ** place
-            return (e * F.lit(scale)).cast("long") / F.lit(float(scale))
-        scale = 10 ** (-place)
-        return (e / F.lit(scale)).cast("long") * F.lit(scale)
-    if op == "$sqrt":
-        return F.sqrt(compile_expr(args, resolve))
-    if op == "$pow":
-        a, b = args
-        return F.pow(compile_expr(a, resolve), compile_expr(b, resolve))
-    if op == "$exp":
-        return F.exp(compile_expr(args, resolve))
-    if op == "$ln":
-        return F.log(compile_expr(args, resolve))
-    if op == "$log10":
-        return F.log10(compile_expr(args, resolve))
-    if op == "$substrCP":
-        s, start, length = args
-        # Mongo is 0-based; substring is 1-based
-        return F.substring(
-            compile_expr(s, resolve),
-            compile_expr(start, resolve) + 1 if isinstance(start, int)
-            else compile_expr(start, resolve) + F.lit(1),
-            compile_expr(length, resolve))
-    if op == "$split":
-        s, delim = args
-        if not isinstance(delim, str):
-            raise ValueError("$split delimiter must be a literal string")
-        import re as _re
+    if op not in _EXPR_OPS:
+        raise ValueError(f"Unsupported $expr operator: {op}")
 
-        return F.split(compile_expr(s, resolve), _re.escape(delim))
-    if op == "$toString":
-        return compile_expr(args, resolve).cast("string")
-    if op in ("$toInt", "$toLong"):
-        return compile_expr(args, resolve).cast("long")
-    if op in ("$toDouble", "$toDecimal"):
-        return compile_expr(args, resolve).cast("double")
-    if op == "$toBool":
-        return compile_expr(args, resolve).cast("boolean")
-    if op == "$in":
-        needle, arr = args
-        return F.array_contains(compile_expr(arr, resolve),
-                                compile_expr(needle, resolve))
-    if op == "$switch":
-        out = None
-        branches = args["branches"]
-        default = compile_expr(args.get("default"), resolve) \
-            if "default" in args else F.lit(None)
-        for br in reversed(branches):
-            case = compile_expr(br["case"], resolve).cast("boolean")
-            then = compile_expr(br["then"], resolve)
-            out = F.when(case, then).otherwise(default if out is None else out)
-        return out if out is not None else default
-    if op in ("$map", "$filter", "$reduce"):
-        # array HOFs -> JVM lambda functions (transform/filter/
-        # aggregate). The body compiles with a CHILD resolver: lambda
-        # variables ("$$x", "$$this", "$$value") bind to the lambda
-        # columns, "$$x.field" walks struct fields off the variable,
-        # and unknown "$"-names DELEGATE to the enclosing resolver so
-        # nested HOFs can reference outer lambda variables.
-        def lam_resolver(bindings):
-            def r2(name):
-                for vname, col in bindings.items():
-                    if name == vname:
-                        return col
-                    if name.startswith(vname + "."):
-                        out = col
-                        for fld in name[len(vname) + 1:].split("."):
-                            out = out.getField(fld)
-                        return out
-                return resolve(name)  # outer lambda vars / row fields
+    def c(sub: Any, scope: Optional[dict] = None) -> Column:
+        # a sub-expression, under `scope`'s variables when given
+        return compile_expr(
+            sub, resolve if scope is None else _scoped(resolve, scope))
 
-            return r2
-
-        arr = compile_expr(args["input"], resolve)
-        if op == "$reduce":
-            init = compile_expr(args["initialValue"], resolve)
-            # Spark's aggregate() needs the merge output type to EQUAL
-            # the accumulator type; widen integer seeds to long so
-            # summing a bigint array over initialValue 0 resolves
-            if isinstance(args["initialValue"], int) \
-                    and not isinstance(args["initialValue"], bool):
-                init = init.cast("long")
-
-            def merge(acc, el):
-                return compile_expr(args["in"], lam_resolver(
-                    {"$value": acc, "$this": el}))
-
-            return F.aggregate(arr, init, merge)
-        var = args.get("as", "this")
-        body = args["in"] if op == "$map" else args["cond"]
-
-        def hof(el):  # exactly one parameter: PySpark inspects arity
-            return compile_expr(body, lam_resolver(
-                {f"${var}": el, "$this": el}))
-
-        return F.transform(arr, hof) if op == "$map" else F.filter(arr, hof)
-    if op == "$concatArrays":
-        return F.concat(*[compile_expr(a, resolve) for a in args])
-    if op == "$setUnion":
-        # Mongo set operators ALWAYS dedupe, even with one argument
-        out = F.array_distinct(compile_expr(args[0], resolve))
-        for a in args[1:]:
-            out = F.array_union(out, compile_expr(a, resolve))
-        return out
-    if op == "$setIntersection":
-        out = F.array_distinct(compile_expr(args[0], resolve))
-        for a in args[1:]:
-            out = F.array_intersect(out, compile_expr(a, resolve))
-        return out
-    if op == "$setDifference":
-        a, b = args
-        return F.array_except(compile_expr(a, resolve),
-                              compile_expr(b, resolve))
-    if op == "$slice":
-        # [array, n] (first n / last n if n<0) or [array, position, n];
-        # position is 0-based (F.slice is 1-based)
-        if len(args) == 2:
-            arr, n = args
-            if not isinstance(n, int):
-                raise ValueError("$slice n must be a literal integer")
-            arr_c = compile_expr(arr, resolve)
-            if n >= 0:
-                return F.slice(arr_c, 1, n)
-            # "last |n|": Mongo returns the WHOLE array when |n| exceeds
-            # its length, so clamp the (negative) start at -size; on an
-            # EMPTY array that clamp is 0 and Spark's slice raises
-            # (INVALID_PARAMETER_VALUE.START), where Mongo returns []
-            return F.when(F.size(arr_c) == 0, arr_c).otherwise(
-                F.slice(arr_c,
-                        F.greatest(F.lit(n), -F.size(arr_c)), F.lit(-n)))
-        arr, pos, n = args
-        if not isinstance(pos, int) or not isinstance(n, int) or n <= 0:
-            raise ValueError("$slice [arr, position, n]: literal ints, n>0")
-        return F.slice(compile_expr(arr, resolve),
-                       pos + 1 if pos >= 0 else pos, n)
-    if op == "$indexOfArray":
-        if len(args) > 2:
-            # Mongo's optional start/end range would silently change
-            # the answer if ignored — fail loudly instead
-            raise ValueError(
-                "$indexOfArray start/end range arguments are not "
-                "supported; $slice the array first")
-        arr, needle = args[0], args[1]
-        # array_position: 1-based, 0 when absent -> Mongo 0-based, -1
-        return (F.array_position(compile_expr(arr, resolve),
-                                 compile_expr(needle, resolve))
-                - F.lit(1)).cast("long")
-    if op == "$meta":
-        if args == "vectorSearchScore":
-            # populated by the $vectorSearch stage
-            return F.col("__vector_search_score")
-        if args in ("searchScore", "textScore"):
-            # populated by the $search stage
-            return F.col("__search_score")
-        raise ValueError(f"$meta {args!r} not supported")
-    if op == "$objectToArray":
-        # documents-as-MapType (the VariantJSONStore / dynamic-doc
-        # shape) -> array<struct<k,v>> via JVM map_entries. StructType
-        # inputs would need schema introspection the expression dialect
-        # deliberately avoids — convert to a map upstream.
-        m = compile_expr(args, resolve)
-        return F.transform(
-            F.map_entries(m),
-            lambda e: F.struct(e["key"].alias("k"), e["value"].alias("v")))
-    if op == "$arrayToObject":
-        arr = compile_expr(args, resolve)
-        return F.map_from_entries(
-            F.transform(arr, lambda e: F.struct(e["k"], e["v"])))
-    if op == "$getField":
-        if not isinstance(args, dict) or not isinstance(
-                args.get("field"), str):
-            raise ValueError(
-                '$getField requires {"field": <literal str>, '
-                '"input": <expr>}')
-        inp = compile_expr(args["input"], resolve)
-        # works for struct fields AND map keys; unlike a dotted path
-        # it tolerates dots INSIDE the field name
-        return inp.getItem(args["field"])
-    if op == "$sortArray":
-        arr = compile_expr(args["input"], resolve)
-        by = args["sortBy"]
-        if isinstance(by, int):
-            return F.sort_array(arr, asc=by > 0)
-        return F.array_sort(arr, struct_comparator(by))
-    if op == "$zip":
-        arrs = [compile_expr(a, resolve) for a in args["inputs"]]
-        longest = bool(args.get("useLongestLength"))
-        defaults = args.get("defaults")
-        sizes = [F.size(a) for a in arrs]
-        n = (F.greatest(*sizes) if longest else F.least(*sizes)) \
-            if len(arrs) > 1 else sizes[0]
-        # F.get is 0-based and null-safe past the end (element_at
-        # raises under ANSI); sequence guards the empty case
-        idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)) \
-            .otherwise(F.array().cast("array<int>"))
-
-        def row(i):
-            elems = []
-            for j, a in enumerate(arrs):
-                e = F.get(a, i)
-                if longest and defaults is not None:
-                    e = F.coalesce(e, _lit(defaults[j]))
-                elems.append(e)
-            return F.array(*elems)
-
-        return F.transform(idx, row)
-    if op == "$dateFromString":
-        ds = compile_expr(args["dateString"], resolve)
-        if "onError" in args:
-            raise ValueError("$dateFromString onError is not supported")
-        fmt = args.get("format")
-        if fmt is None:
-            parsed = ds.cast("timestamp")  # ISO-8601 and friends
-        else:
-            parsed = F.to_timestamp(ds, _mongo_fmt_to_java(fmt))
-        if "onNull" in args:
-            parsed = F.when(ds.isNull(),
-                            _lit(args["onNull"])).otherwise(parsed)
-        return parsed
-    if op == "$toDate":
-        return compile_expr(args, resolve).cast("timestamp")
-    if op == "$dateToString":
-        d = compile_expr(args["date"], resolve)
-        fmt = args.get("format", "%Y-%m-%dT%H:%M:%S.%LZ")
-        out = F.date_format(d, _mongo_fmt_to_java(fmt))
-        if "onNull" in args:
-            out = F.when(d.isNull(), _lit(args["onNull"])).otherwise(out)
-        return out
-    if op in ("$replaceAll", "$replaceOne"):
-        inp = compile_expr(args["input"], resolve)
-        find, repl = args["find"], args["replacement"]
-        if not isinstance(find, str):
-            raise ValueError(f"{op} find must be a literal string")
-        if op == "$replaceAll":
-            return F.replace(inp, F.lit(find), _lit(repl))
-        pos = F.locate(find, inp)  # literal find: non-regex, first hit
-        repl_c = compile_expr(repl, resolve)
-        return F.when(pos == 0, inp).otherwise(F.concat(
-            F.substr(inp, F.lit(1), pos - 1), repl_c,
-            F.substr(inp, pos + len(find), F.length(inp))))
-    if op in ("$ltrim", "$rtrim"):
-        inp = compile_expr(args["input"], resolve)
-        chars = args.get("chars")
-        if chars is None:
-            return (F.ltrim if op == "$ltrim" else F.rtrim)(inp)
-        if not isinstance(chars, str) or not chars:
-            raise ValueError(f"{op} chars must be a literal string")
-        # Mongo trims ANY char in the set; re.escape leaves
-        # alphanumerics bare (escaping a letter inside a class flips
-        # its meaning — \d, \b...) and escapes the class metachars
-        import re as _re
-
-        cls = "[" + "".join(_re.escape(c) for c in chars) + "]+"
-        pat = ("^" + cls) if op == "$ltrim" else (cls + "$")
-        return F.regexp_replace(inp, pat, "")
-    if op == "$log":
-        num, base = args
-        # ln(x)/ln(b) — the identity both engines use; supports
-        # expression bases, unlike F.log's literal-only base
-        return (F.log(compile_expr(num, resolve))
-                / F.log(compile_expr(base, resolve)))
-    if op == "$log10":
-        return F.log10(compile_expr(args, resolve))
-    if op == "$reverseArray":
-        return F.reverse(compile_expr(args, resolve))
-    if op == "$setIsSubset":
-        a, b = args
-        return F.size(F.array_except(
-            compile_expr(a, resolve), compile_expr(b, resolve))) == 0
-    if op in ("$anyElementTrue", "$allElementsTrue"):
-        arg = args[0] if isinstance(args, list) and len(args) == 1 \
-            else args
-        arr = compile_expr(arg, resolve)
-        hof = F.exists if op == "$anyElementTrue" else F.forall
-        return hof(arr, lambda x: x.cast("boolean"))
-    if op == "$isoWeek":
-        return F.weekofyear(compile_expr(args, resolve))
-    if op == "$isoDayOfWeek":  # Monday=1 .. Sunday=7
-        return (F.weekday(compile_expr(args, resolve)) + 1)
-    if op == "$millisecond":
-        return (F.unix_millis(compile_expr(args, resolve)
-                              .cast("timestamp")) % 1000).cast("int")
-    if op == "$range":
-        start = compile_expr(args[0], resolve).cast("long")
-        end = compile_expr(args[1], resolve).cast("long")
-        step = (compile_expr(args[2], resolve).cast("long")
-                if len(args) > 2 else F.lit(1).cast("long"))
-        # Mongo end is EXCLUSIVE and empty ranges yield []; sequence is
-        # inclusive and raises on inverted bounds — guard per row
-        # (CaseWhen evaluates only the matching branch)
-        last = F.when(step > 0, end - 1).otherwise(end + 1)
-        nonempty = ((step > 0) & (start < end)) | ((step < 0) & (start > end))
-        return F.when(nonempty, F.sequence(start, last, step)) \
-            .otherwise(F.array().cast("array<bigint>"))
-    if op == "$first":
-        return F.element_at(compile_expr(args, resolve), 1)
-    if op == "$last":
-        return F.element_at(compile_expr(args, resolve), -1)
-    if op == "$regexMatch":
-        pat = args["regex"]
-        if not isinstance(pat, str):
-            raise ValueError("$regexMatch regex must be a literal string")
-        if "i" in (args.get("options") or ""):
-            pat = f"(?i){pat}"
-        return compile_expr(args["input"], resolve).rlike(pat)
-    if op == "$dateTrunc":
-        return F.date_trunc(args["unit"],
-                            compile_expr(args["date"], resolve))
-    if op == "$dateAdd":
-        return F.timestamp_add(
-            args["unit"].upper(),
-            compile_expr(args["amount"], resolve),
-            compile_expr(args["startDate"], resolve))
-    if op == "$dateDiff":
-        # Mongo counts UNIT BOUNDARY CROSSINGS, not elapsed units —
-        # trunc both ends to the unit, then diff in whole units.
-        # Boundaries follow the SESSION timezone; the engine pins it to
-        # UTC (session.py), which is also Mongo's $dateDiff default. A
-        # DST-shifted session timezone would miscount day/hour
-        # crossings around transitions — keep the UTC pin.
-        unit = args["unit"]
-        s = compile_expr(args["startDate"], resolve)
-        e = compile_expr(args["endDate"], resolve)
-        if unit == "year":
-            return (F.year(e) - F.year(s)).cast("long")
-        if unit == "month":
-            return ((F.year(e) - F.year(s)) * 12
-                    + (F.month(e) - F.month(s))).cast("long")
-        secs = {"day": 86400, "hour": 3600, "minute": 60, "second": 1}
-        if unit not in secs:
-            raise ValueError(f"$dateDiff unit {unit!r} not supported")
-        ts, te = F.date_trunc(unit, s), F.date_trunc(unit, e)
-        return ((te.cast("long") - ts.cast("long"))
-                / F.lit(secs[unit])).cast("long")
-    # ---- round-7 wave -----------------------------------------------
-    if op in ("$sum", "$avg"):
-        # EXPRESSION form (Mongo also uses these names as accumulators
-        # — the pipeline compiler dispatches those separately): a list
-        # of expressions, or a single array-valued expression. Nulls
-        # are ignored (Mongo ignores non-numeric operands); empty
-        # $sum is 0, empty $avg is null.
-        if isinstance(args, list):
-            cols = [compile_expr(a, resolve).cast("double")
-                    for a in args]
-            cnt = sum((c.isNotNull().cast("int") for c in cols),
-                      F.lit(0))
-            tot = sum((F.coalesce(c, F.lit(0.0)) for c in cols),
-                      F.lit(0.0))
-        else:
-            arr = compile_expr(args, resolve)
-            nn = F.filter(arr, lambda x: x.isNotNull())
-            cnt = F.size(nn)
-            tot = F.aggregate(nn, F.lit(0.0),
-                              lambda a, x: a + x.cast("double"))
-        if op == "$sum":
-            return tot
-        return F.when(cnt > 0, tot / cnt)
-    if op in ("$cmp", "$strcasecmp"):
-        a, b = (compile_expr(x, resolve) for x in args)
-        if op == "$strcasecmp":
-            a, b = F.upper(a), F.upper(b)
-        # null sorts lowest, as in the sort comparator
-        return (F.when(a.eqNullSafe(b), 0)
-                .when(a.isNull(), -1).when(b.isNull(), 1)
-                .when(a < b, -1).otherwise(1))
-    if op in ("$substr", "$substrBytes"):
-        # character-based here; identical to $substrBytes for ASCII
-        # (Spark substring counts codepoints, Mongo $substrBytes
-        # counts UTF-8 bytes — multibyte inputs differ)
-        s, start, length = args
-        return F.substring(compile_expr(s, resolve),
-                           compile_expr(start, resolve) + 1,
-                           compile_expr(length, resolve))
-    if op == "$strLenBytes":
-        return F.octet_length(compile_expr(args, resolve))
-    if op in ("$isArray", "$isNumber"):
-        (a,) = args if isinstance(args, list) else (args,)
-        t = F.typeof(compile_expr(a, resolve))
-        if op == "$isArray":
-            return t.startswith("array")
-        return t.isin("tinyint", "smallint", "int", "bigint", "float",
-                      "double") | t.startswith("decimal")
-    if op == "$convert":
-        casts = {"int": "int", "long": "long", "double": "double",
-                 "decimal": "decimal(38,9)", "string": "string",
-                 "bool": "boolean", "date": "timestamp"}
-        to = args["to"]
-        if to not in casts:
-            raise ValueError(f"$convert to {to!r} not supported")
-        inp = compile_expr(args["input"], resolve)
-        out = inp.try_cast(casts[to]) if "onError" in args \
-            else inp.cast(casts[to])
-        if "onError" in args:
-            out = F.when(inp.isNotNull() & out.isNull(),
-                         _lit(args["onError"])).otherwise(out)
-        if "onNull" in args:
-            out = F.when(inp.isNull(), _lit(args["onNull"])) \
-                .otherwise(out)
-        return out
-    if op == "$degreesToRadians":
-        return F.radians(compile_expr(args, resolve))
-    if op == "$radiansToDegrees":
-        return F.degrees(compile_expr(args, resolve))
-    if op == "$week":
-        # Mongo/strftime %U: Sunday-start weeks, days before the first
-        # Sunday are week 0
-        d = compile_expr(args, resolve)
-        return F.floor((F.dayofyear(d) + 7 - F.dayofweek(d)) / 7) \
-            .cast("int")
-    if op == "$isoWeekYear":
-        return F.date_part(F.lit("YEAROFWEEK"),
-                           compile_expr(args, resolve)).cast("long")
-    if op == "$let":
-        vars_c = {k: compile_expr(v, resolve)
-                  for k, v in args["vars"].items()}
-
-        def let_resolve(name: str) -> Column:
-            # "$$var" reaches the resolver as "$var" (one $ consumed)
-            if name.startswith("$"):
-                head, *rest = name[1:].split(".")
-                if head in vars_c:
-                    col = vars_c[head]
-                    for p in rest:
-                        col = col[p]
-                    return col
-            return resolve(name)
-
-        return compile_expr(args["in"], let_resolve)
-    if op == "$setEquals":
-        cols = [F.array_distinct(compile_expr(a, resolve))
-                for a in args]
-        out = F.lit(True)
-        for c in cols[1:]:
-            out = out & (F.size(F.array_except(cols[0], c)) == 0) \
-                & (F.size(F.array_except(c, cols[0])) == 0)
-        return out
-    if op in ("$bitAnd", "$bitOr", "$bitXor"):
-        cols = [compile_expr(a, resolve) for a in args]
-        out = cols[0]
-        for c in cols[1:]:
-            out = (out.bitwiseAND(c) if op == "$bitAnd" else
-                   out.bitwiseOR(c) if op == "$bitOr" else
-                   out.bitwiseXOR(c))
-        return out
-    if op == "$bitNot":
-        return F.bitwise_not(compile_expr(args, resolve))
-    if op == "$mergeObjects":
-        # expression form over MapType documents, later-wins (the
-        # ACCUMULATOR form lives in the pipeline compiler)
-        entries = F.concat(*[F.map_entries(compile_expr(a, resolve))
-                             for a in args])
-        rev = F.reverse(entries)
-        ks = F.array_distinct(F.transform(rev, lambda e: e["key"]))
-        return F.map_from_arrays(
-            ks,
-            F.transform(ks, lambda k: F.element_at(
-                F.filter(rev, lambda e: e["key"] == k), 1)["value"]))
-    if op == "$dateSubtract":
-        return F.timestamp_add(
-            args["unit"].upper(),
-            -compile_expr(args["amount"], resolve),
-            compile_expr(args["startDate"], resolve))
-    if op == "$dateFromParts":
-        if "isoWeekYear" in args:
-            raise ValueError("$dateFromParts ISO-week form is not "
-                             "supported")
-        def part(name, dflt):
-            return compile_expr(args[name], resolve) if name in args \
-                else F.lit(dflt)
-        return F.make_timestamp(
-            part("year", 1970), part("month", 1), part("day", 1),
-            part("hour", 0), part("minute", 0),
-            part("second", 0).cast("double")
-            + part("millisecond", 0).cast("double") / 1000.0)
-    if op == "$dateToParts":
-        if isinstance(args, dict) and args.get("iso8601"):
-            raise ValueError("$dateToParts iso8601 form is not "
-                             "supported")
-        d = compile_expr(args["date"] if isinstance(args, dict)
-                         else args, resolve)
-        return F.struct(
-            F.year(d).alias("year"), F.month(d).alias("month"),
-            F.dayofmonth(d).alias("day"), F.hour(d).alias("hour"),
-            F.minute(d).alias("minute"), F.second(d).alias("second"),
-            (F.unix_millis(d.cast("timestamp")) % 1000).cast("int")
-            .alias("millisecond"))
-    # ---- round-7b wave ----------------------------------------------
-    if op in _EXPR_TRIG:
-        (a,) = args if isinstance(args, list) else (args,)
-        return _EXPR_TRIG[op](compile_expr(a, resolve))
-    if op == "$atan2":
-        y, x = args
-        return F.atan2(compile_expr(y, resolve), compile_expr(x, resolve))
-    if op in ("$indexOfCP", "$indexOfBytes"):
-        # codepoint-based for both; identical for ASCII ($indexOfBytes
-        # counts UTF-8 bytes in Mongo — same caveat as $substrBytes).
-        # The needle must be a literal (locate's contract); start/end
-        # are literal codepoint offsets, end EXCLUSIVE for the match
-        # end. -1 = absent, null input -> null (Mongo semantics).
-        s = compile_expr(args[0], resolve)
-        needle = args[1]
-        if not isinstance(needle, str):
-            raise ValueError(f"{op} substring must be a literal string")
-        start = args[2] if len(args) > 2 else 0
-        end = args[3] if len(args) > 3 else None
-        if not isinstance(start, int) or (
-                end is not None and not isinstance(end, int)):
-            raise ValueError(f"{op} start/end must be literal integers")
-        hay = s if end is None else F.substring(s, 1, end)
-        pos = F.locate(needle, hay, start + 1)
-        return F.when(s.isNull(), F.lit(None).cast("long")) \
-            .otherwise(F.when(pos > 0, pos - 1).otherwise(-1)
-                       .cast("long"))
-    if op == "$regexFind":
-        # {match, idx, captures} of the FIRST match, null when none.
-        # Deviation: a capture group that did not participate in the
-        # match yields "" (regexp_extract), not Mongo's null.
-        pat = _regex_pat(args, op)
-        inp = compile_expr(args["input"], resolve)
-        ng = _regex_group_count(args["regex"])
-        caps = F.array(*[F.regexp_extract(inp, pat, g)
-                         for g in range(1, ng + 1)]) if ng else \
-            F.array().cast("array<string>")
-        return F.when(inp.rlike(pat), F.struct(
-            F.regexp_extract(inp, pat, 0).alias("match"),
-            (F.regexp_instr(inp, F.lit(pat)) - 1).cast("int")
-            .alias("idx"),
-            caps.alias("captures")))
-    if op == "$regexFindAll":
-        # array of {match, idx, captures}; [] when no match or null
-        # input (Mongo). idx comes from a left-to-right position scan
-        # over the extracted match strings (F.aggregate + F.position):
-        # exact for self-delimiting patterns; a lookaround that makes
-        # an identical EARLIER substring a non-match can mis-index.
-        pat = _regex_pat(args, op)
-        inp = compile_expr(args["input"], resolve)
-        ng = _regex_group_count(args["regex"])
-        matches = F.regexp_extract_all(inp, F.lit(pat), F.lit(0))
-        groups = [F.regexp_extract_all(inp, F.lit(pat), F.lit(g))
-                  for g in range(1, ng + 1)]
-        idxs = F.aggregate(
-            matches,
-            F.struct(F.lit(1).alias("pos"),
-                     F.array().cast("array<int>").alias("out")),
-            lambda acc, m: F.struct(
-                (F.position(m, inp, acc["pos"])
-                 + F.greatest(F.length(m), F.lit(1))).alias("pos"),
-                F.concat(acc["out"], F.array(
-                    (F.position(m, inp, acc["pos"]) - 1).cast("int")))
-                .alias("out")),
-            lambda acc: acc["out"])
-        # bind the extraction + position-scan arrays ONCE (_let1):
-        # referencing them per output element re-ran the O(m) scans
-        # per match = O(m^2)/row
-        packed = F.struct(
-            matches.alias("m"), idxs.alias("ix"),
-            *[g.alias(f"g{j}") for j, g in enumerate(groups, 1)])
-
-        def build(t):
-            m = t["m"]
-            n_m = F.size(m)
-            seq = F.when(n_m > 0, F.sequence(F.lit(0), n_m - 1)) \
-                .otherwise(F.array().cast("array<int>"))
-
-            def row(i):
-                return F.struct(
-                    F.get(m, i).alias("match"),
-                    F.get(t["ix"], i).alias("idx"),
-                    (F.array(*[F.get(t[f"g{j}"], i)
-                               for j in range(1, ng + 1)]) if ng
-                     else F.array().cast("array<string>"))
-                    .alias("captures"))
-
-            return F.transform(seq, row)
-
-        out = _let1(packed, build)
-        empty = ("array<struct<match:string,idx:int,"
-                 "captures:array<string>>>")
-        return F.when(inp.isNull(), F.array().cast(empty)).otherwise(out)
-    if op in ("$setField", "$unsetField"):
-        # documents-as-MapType (same convention as $objectToArray);
-        # $setField value $$REMOVE == $unsetField. map_concat would
-        # raise on a duplicate key (mapKeyDedupPolicy=EXCEPTION), so
-        # the existing key is filtered out first.
-        field = args.get("field")
-        if not isinstance(field, str):
-            raise ValueError(f"{op} field must be a literal string")
-        inp = compile_expr(args["input"], resolve)
-        cleaned = F.map_filter(inp, lambda k, v: k != F.lit(field))
-        if op == "$unsetField" or args.get("value") == "$$REMOVE":
-            return cleaned
-        return F.map_concat(cleaned, F.create_map(
-            F.lit(field), compile_expr(args["value"], resolve)))
-    if op in ("$maxN", "$minN", "$firstN", "$lastN"):
-        # EXPRESSION forms over an array operand (the accumulator
-        # forms live in the pipeline compiler). $maxN/$minN ignore
-        # nulls (Mongo); $firstN/$lastN keep order and nulls.
-        n = args.get("n")
-        if not isinstance(n, int) or n < 1:
-            raise ValueError(f"{op} n must be a literal integer >= 1")
-        arr = compile_expr(args["input"], resolve)
-        if op in ("$maxN", "$minN"):
-            nn = F.filter(arr, lambda x: x.isNotNull())
-            ordered = F.array_sort(nn)
-            if op == "$maxN":
-                ordered = F.reverse(ordered)
-            return F.slice(ordered, 1, n)
-        if op == "$firstN":
-            return F.slice(arr, 1, n)
-        sz = F.size(arr)
-        return F.when(sz <= 0, arr).otherwise(
-            F.slice(arr, F.greatest(F.lit(-n), -sz),
-                    F.least(F.lit(n), sz)))
-    if op in ("$median", "$percentile") and isinstance(args, dict) \
-            and "input" in args:
-        # EXPRESSION forms over an array operand: exact continuous
-        # interpolation (identical to F.percentile / DuckDB
-        # quantile_cont) — a strictly-deterministic stand-in for
-        # Mongo's t-digest "approximate" method; nulls ignored,
-        # empty -> null.
-        arr = compile_expr(args["input"], resolve)
-        sorted_nn = F.array_sort(F.filter(
-            arr, lambda x: x.isNotNull()).cast("array<double>"))
-
-        # bind the sorted array ONCE (_let1): each interpolation
-        # references it ~5x (size twice, lo/hi element lookups), and
-        # without the binding every reference re-filtered and
-        # re-sorted the operand per row
-        def q(nn: Column, p: float) -> Column:
-            n = F.size(nn)
-            r = (n - 1) * F.lit(float(p))
-            lo = F.floor(r).cast("int")
-            frac = r - lo
-            lo_v = F.element_at(nn, lo + 1)
-            # p=1.0 lands on the last element: lo+2 is past the end
-            hi_v = F.coalesce(F.try_element_at(nn, lo + 2), lo_v)
-            return F.when(n > 0, lo_v * (1.0 - frac) + hi_v * frac)
-
-        if op == "$median":
-            return _let1(sorted_nn, lambda nn: q(nn, 0.5))
-        ps = args["p"]
-        if not (isinstance(ps, list) and
-                all(isinstance(p, (int, float)) for p in ps)):
-            raise ValueError("$percentile p must be a list of literal "
-                             "numbers")
-        return _let1(sorted_nn, lambda nn: F.array(
-            *[q(nn, float(p)) for p in ps]))
-    if op == "$binarySize":
-        return F.octet_length(compile_expr(args, resolve)).cast("long")
-    if op == "$rand":
-        if args not in ({},):
-            raise ValueError("$rand takes {}")
-        return F.rand()
-    raise ValueError(f"Unsupported $expr operator: {op}")
+    return _EXPR_OPS[op](op, args, c)
 
 
 def _text_pred(spec: Any, schema: Optional[StructType], resolve: Resolver) -> Column:

@@ -356,15 +356,11 @@ class MinHashIndex:
         this method doesn't pay an unconditional checkpoint of the
         wide frame.
 
-        ``upsert_into`` (round-12, r11 verdict next #2): a writable
-        store to receive the survivors. When given together with
-        ``add_survivors``, the signature append and the store upsert
-        run CONCURRENTLY on two scheduler threads — they write
-        disjoint paths (index dir vs store dir) and read only the
-        already-checkpointed drop-key/signature frames, so the
-        micro-batch pays max(append, upsert) wall time instead of
-        their sum (the streaming ingest path's per-batch job-count
-        cut).
+        ``upsert_into`` (round-12): a writable store to receive the
+        survivors, upserted after the signature append. Stores
+        exposing the ``_small_new`` merge (broadcast anti-join — the
+        store side is never exchanged) take it, since survivors are
+        micro-batch-bounded; others get the plain upsert.
         """
         # LAZY signing checkpoint (round-11): the drop-key set's eager
         # checkpoint just below consumes bsigs through the band+verify
@@ -391,22 +387,15 @@ class MinHashIndex:
         # was worse still — caching compiles the band+verify subtree
         # without AQE's runtime broadcast conversions. The
         # checkpointed-tiny-frame anti-join stays.
-        # LAZY when the writes below run sequentially (the default,
-        # round-13): the first write's action materializes the
-        # drop-key blocks as a side effect, so the increment no
-        # longer pays a dedicated checkpoint job per micro-batch
-        # (each action has a ~0.3-0.5 s fixed floor). Kept EAGER when
-        # the concurrent-writes conf is on: two threads racing to
-        # materialize the same lazy checkpoint would compute its
-        # partitions twice.
-        conc = (self.spark.conf.get(
-            "spark.maggma.index.concurrentIngestWrites",
-            "false") == "true")
+        # LAZY (round-13): the first write's action materializes the
+        # drop-key blocks as a side effect, so the increment does not
+        # pay a dedicated checkpoint job per micro-batch (each action
+        # has a ~0.3-0.5 s fixed floor).
         dropped = self.query_candidates(
             batch, jaccard_threshold=jaccard_threshold,
             _presigned=bsigs, _sigs=sigs_snap, _keys_only=True,
         ).select(F.col("key_new").alias("__drop_key")) \
-            .localCheckpoint(eager=conc)
+            .localCheckpoint(eager=False)
         # dropped <= the batch's keys (micro-batch-bounded): hint the
         # anti-joins' build side statically so neither the raw batch
         # nor the signature frame waits on an AQE materialization
@@ -426,46 +415,8 @@ class MinHashIndex:
             surv_sigs = bsigs.join(
                 dropped, bsigs["key"] == dropped["__drop_key"],
                 "left_anti")
-            if upsert_into is not None:
-                # survivors are micro-batch-bounded: stores exposing
-                # the _small_new merge (broadcast anti-join — the
-                # store side is never exchanged) take it; others get
-                # the plain upsert
-                import inspect
-
-                try:
-                    small_ok = "_small_new" in inspect.signature(
-                        upsert_into.update).parameters
-                except (TypeError, ValueError):
-                    small_ok = False
-                up_fn = ((lambda df: upsert_into.update(
-                    df, _small_new=True)) if small_ok
-                    else upsert_into.update)
-                # Concurrent two-thread writes are conf-gated OFF by
-                # default (round-13, r12 verdict next #1): the r12
-                # driver run — a LOADED 32-core box — measured this
-                # row x0.59 slower with the overlap on, while the
-                # builder's idle-machine A/B said x0.76 faster. Two
-                # simultaneous jobs contending for cores/AQE planning
-                # can make max(two slowed jobs) exceed sum(two fast
-                # sequential ones); overlap only pays when the
-                # cluster has idle capacity during each job's tail,
-                # so it is an explicit opt-in, not a default.
-                if conc:
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(max_workers=2) as ex:
-                        f_sig = ex.submit(self._add_sigs, surv_sigs,
-                                          sigs_snap)
-                        f_up = ex.submit(up_fn, survivors)
-                        f_sig.result()
-                        f_up.result()
-                else:
-                    self._add_sigs(surv_sigs, sigs_snap)
-                    up_fn(survivors)
-                return survivors
             self._add_sigs(surv_sigs, sigs_snap)
-        elif upsert_into is not None:
+        if upsert_into is not None:
             import inspect
 
             try:

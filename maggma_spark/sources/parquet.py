@@ -184,7 +184,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     the path (name, size, mtime) plus the session confs that change
     inference. Any write — this store, another instance, pyarrow, an
     outside process — changes the listing, so the next read infers
-    again, once. Rows and DataFrames are never cached.
+    again, once. Rows and DataFrames are never cached. A miss infers
+    with `mergeSchema`: Spark's default reads the first file's footer
+    only, so a column that another writer adds in a file sorting
+    later would be invisible, and the next `ParquetStore.update`
+    would rewrite the store without it. Merging still runs one job.
 
     ns columns are read as int64 (`nanosAsLong`) then truncated to
     microseconds — the same truncation DuckDB/Arrow apply when casting
@@ -196,7 +200,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema, ns_cols = hit or (None, _nanos_ts_cols(files or ()))
     if ns_cols:
         spark.conf.set(_NANOS_AS_LONG, "true")
-    df = (spark.read if schema is None
+    df = (spark.read.option("mergeSchema", "true") if schema is None
           else spark.read.schema(schema)).parquet(path)
     if hit is None and fingerprint is not None:
         _remember_schema(path, fingerprint, df.schema, ns_cols)

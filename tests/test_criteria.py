@@ -809,3 +809,225 @@ def test_expr_round7b_wave(spark):
         val({"$percentile": {"input": "$arr", "p": "x"}})
     with _pt.raises(ValueError):
         val({"$maxN": {"n": 0, "input": "$arr"}})
+
+
+def test_expr_unary_list_unwrap_and_trim_chars(spark):
+    """Every one-argument operator takes Mongo's one-element argument
+    list ({op: [x]} is {op: x}), and $trim honours `chars` like
+    $ltrim/$rtrim."""
+    from maggma_spark.functions.criteria import compile_expr
+
+    df = spark.createDataFrame([("xxhixx", "Mixed", [1, 2, 3])],
+                               "p string, t string, arr array<bigint>")
+
+    def val(expr):
+        return df.select(compile_expr(
+            expr, lambda nm: df[nm]).alias("v")).first()["v"]
+
+    assert val({"$trim": {"input": "$p", "chars": "x"}}) == "hi"
+    assert val({"$trim": {"input": " a b ", "chars": " "}}) == "a b"
+    assert val({"$size": ["$arr"]}) == 3
+    assert val({"$toLower": ["$t"]}) == "mixed"
+    assert val({"$first": ["$arr"]}) == 1
+    assert val({"$sin": [0]}) == 0.0
+    with pytest.raises(ValueError, match="takes one argument"):
+        val({"$abs": [1, 2]})
+
+
+_EXPR_ROW_DDL = (
+    "n bigint, q bigint, x double, f double, s string, u string, "
+    "p string, t string, num string, ds string, z string, "
+    "bits bigint, bits2 bigint, arr array<bigint>, ys array<bigint>, "
+    "bs array<boolean>, d timestamp, m map<string,bigint>, "
+    "m2 map<string,bigint>, kv array<struct<k:string,v:bigint>>, "
+    "__search_score double")
+
+
+def _expr_row():
+    import datetime as dt
+
+    return (4, 7, -2.5, 0.5, "Hello, World", "héllo", "xxhixx",
+            "Mixed Case", "42", "2024-03-10", None, 12, 10, [3, 1, 2],
+            [2, 5], [True, False],
+            dt.datetime(2024, 3, 10, 14, 35, 21, 250000),
+            {"a": 1, "b": 2}, {"b": 20, "c": 30}, [("a", 1), ("b", 2)], 1.5)
+
+
+def _expr_cases() -> dict:
+    """op -> (expression over _expr_row(), expected value from Python)."""
+    import datetime as dt
+    import math
+
+    d = _expr_row()[16]
+    day = dt.datetime(2024, 3, 10)
+    cases = {
+        "$not": ([{"$gt": ["$n", 5]}], True),
+        "$abs": ("$x", 2.5), "$sqrt": ("$n", 2.0),
+        "$exp": ("$f", math.exp(0.5)), "$ln": ("$n", math.log(4)),
+        "$log10": (1000, 3.0), "$floor": ("$x", -3), "$ceil": ("$x", -2),
+        "$acosh": ("$n", math.acosh(4)),
+        "$degreesToRadians": (180, math.pi),
+        "$radiansToDegrees": ("$f", math.degrees(0.5)),
+        "$bitNot": ("$bits", ~12),
+        "$toLower": ("$t", "mixed case"), "$toUpper": ("$t", "MIXED CASE"),
+        "$strLenCP": ("$u", 5), "$strLenBytes": ("$u", 6),
+        "$binarySize": ("$u", 6),
+        "$toString": ("$n", "4"), "$toInt": ("$num", 42),
+        "$toLong": ("$num", 42), "$toDouble": ("$num", 42.0),
+        "$toDecimal": ("$num", 42.0), "$toBool": ("$n", True),
+        "$toDate": ("$ds", day),
+        "$year": ("$d", 2024), "$month": ("$d", 3),
+        "$dayOfMonth": ("$d", 10), "$hour": ("$d", 14),
+        "$minute": ("$d", 35), "$second": ("$d", 21),
+        "$millisecond": ("$d", 250),
+        "$dayOfWeek": ("$d", d.isoweekday() % 7 + 1),
+        "$dayOfYear": ("$d", d.timetuple().tm_yday),
+        "$isoDayOfWeek": ("$d", d.isoweekday()),
+        "$isoWeek": ("$d", d.isocalendar()[1]),
+        "$isoWeekYear": ("$d", d.isocalendar()[0]),
+        "$week": ("$d", int(d.strftime("%U"))),
+        "$size": ("$arr", 3), "$reverseArray": ("$arr", [2, 1, 3]),
+        "$first": ("$arr", 3), "$last": ("$arr", 2),
+        "$isArray": ("$arr", True), "$isNumber": ("$x", True),
+        "$anyElementTrue": (["$bs"], True),
+        "$allElementsTrue": (["$bs"], False),
+        "$objectToArray": ("$m", [("a", 1), ("b", 2)]),
+        "$arrayToObject": ("$kv", {"a": 1, "b": 2}),
+        "$gt": (["$n", 3], True), "$gte": (["$n", 4], True),
+        "$lt": (["$n", 4], False), "$lte": (["$n", 4], True),
+        "$eq": (["$z", None], True), "$ne": (["$n", 5], True),
+        "$cmp": (["$n", "$q"], -1),
+        "$strcasecmp": (["$t", "MIXED CASE"], 0),
+        "$add": (["$n", "$x"], 1.5), "$subtract": (["$n", 1], 3),
+        "$multiply": (["$n", "$x"], -10.0), "$divide": (["$n", 8], 0.5),
+        "$mod": (["$q", "$n"], 3), "$pow": (["$n", 2], 16.0),
+        "$log": ([100, 10], 2.0), "$atan2": (["$f", 1], math.atan2(0.5, 1)),
+        "$in": ([1, "$arr"], True),
+        "$setDifference": (["$arr", "$ys"], [3, 1]),
+        "$setIsSubset": ([[1, 2], "$arr"], True),
+        "$ifNull": (["$z", "dflt"], "dflt"),
+        "$max": (["$n", "$q", 1], 7), "$min": (["$n", "$q", 1], 1),
+        "$concat": (["$t", "!"], "Mixed Case!"),
+        "$concatArrays": (["$arr", "$ys"], [3, 1, 2, 2, 5]),
+        "$setEquals": (["$arr", [2, 3, 1, 1]], True),
+        "$mergeObjects": (["$m", "$m2"], {"a": 1, "b": 20, "c": 30}),
+        "$and": ([True, {"$gt": ["$n", 1]}], True),
+        "$or": ([False, {"$lt": ["$n", 1]}], False),
+        "$setUnion": (["$arr", "$ys"], [3, 1, 2, 5]),
+        "$setIntersection": (["$arr", "$ys"], [2]),
+        "$bitAnd": (["$bits", "$bits2"], 12 & 10),
+        "$bitOr": (["$bits", "$bits2"], 12 | 10),
+        "$bitXor": (["$bits", "$bits2"], 12 ^ 10),
+        "$literal": ("$n", "$n"),
+        "$cond": ({"if": {"$gt": ["$n", 3]}, "then": "big",
+                   "else": "small"}, "big"),
+        "$switch": ({"branches": [
+            {"case": {"$lt": ["$n", 2]}, "then": "lo"},
+            {"case": {"$lt": ["$n", 6]}, "then": "mid"}],
+            "default": "hi"}, "mid"),
+        "$let": ({"vars": {"k": {"$multiply": ["$n", 2]}},
+                  "in": {"$add": ["$$k", 1]}}, 9),
+        "$map": ({"input": "$arr", "as": "v",
+                  "in": {"$multiply": ["$$v", 10]}}, [30, 10, 20]),
+        "$filter": ({"input": "$arr", "cond": {"$gt": ["$$this", 1]}},
+                    [3, 2]),
+        "$reduce": ({"input": "$arr", "initialValue": 0,
+                     "in": {"$add": ["$$value", "$$this"]}}, 6),
+        "$arrayElemAt": (["$arr", -1], 2),
+        "$slice": (["$arr", 1, 2], [1, 2]),
+        "$indexOfArray": (["$arr", 2], 2),
+        "$range": ([0, "$n"], [0, 1, 2, 3]),
+        "$sortArray": ({"input": "$arr", "sortBy": -1}, [3, 2, 1]),
+        "$zip": ({"inputs": ["$arr", "$ys"]}, [[3, 2], [1, 5]]),
+        "$sum": ("$arr", 6.0), "$avg": (["$n", "$q"], 5.5),
+        "$maxN": ({"n": 2, "input": "$arr"}, [3, 2]),
+        "$minN": ({"n": 2, "input": "$arr"}, [1, 2]),
+        "$firstN": ({"n": 2, "input": "$arr"}, [3, 1]),
+        "$lastN": ({"n": 2, "input": "$arr"}, [1, 2]),
+        "$median": ({"input": "$arr", "method": "approximate"}, 2.0),
+        "$percentile": ({"input": "$arr", "p": [0.5, 1.0],
+                         "method": "approximate"}, [2.0, 3.0]),
+        "$round": ([3.14159, 2], 3.14), "$trunc": ([3.14159, 2], 3.14),
+        "$substrCP": (["$s", 7, 5], "World"),
+        "$substr": (["$s", 7, 5], "World"),
+        "$substrBytes": (["$s", 7, 5], "World"),
+        "$split": (["$s", ", "], ["Hello", "World"]),
+        "$trim": ({"input": "$p", "chars": "x"}, "hi"),
+        "$ltrim": ({"input": "$p", "chars": "x"}, "hixx"),
+        "$rtrim": ({"input": "$p", "chars": "x"}, "xxhi"),
+        "$replaceAll": ({"input": "$p", "find": "x", "replacement": "y"},
+                        "yyhiyy"),
+        "$replaceOne": ({"input": "$p", "find": "x", "replacement": "y"},
+                        "yxhixx"),
+        "$indexOfCP": (["$s", "o"], 4),
+        "$indexOfBytes": (["$s", "World"], 7),
+        "$regexMatch": ({"input": "$s", "regex": "world",
+                         "options": "i"}, True),
+        "$regexFind": ({"input": "$s", "regex": "(o)r"},
+                       ("or", 8, ["o"])),
+        "$regexFindAll": ({"input": "$s", "regex": "l+"},
+                          [("ll", 2, []), ("l", 10, [])]),
+        "$convert": ({"input": "$num", "to": "int"}, 42),
+        "$dateFromString": ({"dateString": "$ds"}, day),
+        "$dateToString": ({"date": "$d", "format": "%Y-%m-%d"},
+                          "2024-03-10"),
+        "$dateAdd": ({"startDate": "$d", "unit": "day", "amount": 1},
+                     d + dt.timedelta(days=1)),
+        "$dateSubtract": ({"startDate": "$d", "unit": "day", "amount": 1},
+                          d - dt.timedelta(days=1)),
+        "$dateDiff": ({"startDate": {"$toDate": "$ds"}, "endDate": "$d",
+                       "unit": "hour"}, 14),
+        "$dateTrunc": ({"date": "$d", "unit": "day"}, day),
+        "$dateFromParts": ({"year": 2024, "month": 3, "day": "$n"},
+                           dt.datetime(2024, 3, 4)),
+        "$dateToParts": ({"date": "$d"}, (2024, 3, 10, 14, 35, 21, 250)),
+        "$getField": ({"field": "b", "input": "$m"}, 2),
+        "$setField": ({"field": "c", "input": "$m", "value": 3},
+                      {"a": 1, "b": 2, "c": 3}),
+        "$unsetField": ({"field": "a", "input": "$m"}, {"b": 2}),
+        "$meta": ("searchScore", 1.5),
+        "$rand": ({}, None),  # checked as a range below
+    }
+    for op, fn in [("$sin", math.sin), ("$cos", math.cos),
+                   ("$tan", math.tan), ("$asin", math.asin),
+                   ("$acos", math.acos), ("$atan", math.atan),
+                   ("$sinh", math.sinh), ("$cosh", math.cosh),
+                   ("$tanh", math.tanh), ("$asinh", math.asinh),
+                   ("$atanh", math.atanh)]:
+        cases[op] = ("$f", fn(0.5))
+    return cases
+
+
+_EXPR_CASES = _expr_cases()
+
+
+@pytest.fixture(scope="module")
+def expr_results(spark):
+    """Every case's value, computed in one select over _expr_row()."""
+    from maggma_spark.functions.criteria import compile_expr
+
+    df = spark.createDataFrame([_expr_row()], _EXPR_ROW_DDL)
+    ops = sorted(_EXPR_CASES)
+    row = df.select(*[
+        compile_expr({op: _EXPR_CASES[op][0]},
+                     lambda nm: df[nm]).alias(f"c{i}")
+        for i, op in enumerate(ops)]).first()
+    return dict(zip(ops, row))
+
+
+@pytest.mark.parametrize("op", sorted(_EXPR_CASES))
+def test_expr_operator_table(expr_results, op):
+    """One case per key of the operator table, and no key without
+    one: an operator cannot land untested."""
+    from maggma_spark.functions.criteria import _EXPR_OPS
+
+    assert set(_EXPR_CASES) == set(_EXPR_OPS)
+    got, want = expr_results[op], _EXPR_CASES[op][1]
+    if op == "$rand":
+        assert 0.0 <= got < 1.0
+    elif isinstance(want, float) or (
+            isinstance(want, list) and want
+            and isinstance(want[0], float)):
+        assert got == pytest.approx(want)
+    else:
+        assert got == want

@@ -33,10 +33,6 @@ ALLOWED = {
     "spark.maggma.graph.smallComponentsEdges":
         "small-graph connected-components fast path: x0.32-x0.73 on "
         "the dedup rows (SCALE.md round-11); 0 disables",
-    "spark.maggma.index.concurrentIngestWrites":
-        "opt-in overlapped ingest writes: x1.13-x1.19 at sf0.1 on 32 "
-        "cores, default off after the driver-run inversion "
-        "(SCALE.md round-13)",
 }
 
 _KEY = re.compile(r"spark\.maggma\.\S+")
@@ -54,5 +50,5 @@ def _engine_conf_keys() -> set:
 
 
 def test_engine_conf_surface_is_the_allowlist():
-    assert len(ALLOWED) == 7
+    assert len(ALLOWED) == 6
     assert _engine_conf_keys() == set(ALLOWED)

@@ -9,14 +9,10 @@ import ast
 import pathlib
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "maggma_spark"
-MAX_LINES = 450
+MAX_LINES = 430
 
 # "<path relative to maggma_spark>::<function>" -> reason
-ALLOWED = {
-    "functions/criteria.py::compile_expr":
-        "one flat dispatch over the Mongo expression operators; splitting "
-        "it is a separate change",
-}
+ALLOWED: dict = {}
 
 
 def _long_functions() -> dict:

@@ -139,10 +139,9 @@ def test_index_rebuild_crash_recovery(spark, tmp_path):
 
 def test_dedup_increment_concurrent_upsert_matches_sequential(
         spark, tmp_path):
-    """Round-12 (r11 verdict next #2): `upsert_into` overlaps the
-    signature append and the store upsert on two scheduler threads —
-    the end state (store contents, index count, survivors) must be
-    IDENTICAL to the sequential add_survivors + update form."""
+    """`upsert_into` appends the signatures and upserts the store in
+    one call: the end state (store contents, index count, survivors)
+    must be IDENTICAL to the separate add_survivors + update form."""
     from maggma_spark.sources.parquet import ParquetStore
 
     batch = _docs(spark, [
@@ -161,23 +160,7 @@ def test_dedup_increment_concurrent_upsert_matches_sequential(
                                    add_survivors=True)
     store_a.update(surv_a)
 
-    # concurrent form (round-13: conf-gated, default OFF — the r12
-    # driver run measured the overlap x0.59 slower under load, so
-    # overlapping writes is an explicit opt-in)
-    spark.conf.set("spark.maggma.index.concurrentIngestWrites", "true")
-    try:
-        idx_b = MinHashIndex(spark, str(tmp_path / "ib"),
-                             num_hashes=16, bands=4)
-        idx_b.build(_docs(spark, [(1, TEXTS["alpha"])]))
-        store_b = ParquetStore(spark, str(tmp_path / "cb"),
-                               key="doc_id")
-        surv_b = idx_b.dedup_increment(batch, jaccard_threshold=0.9,
-                                       add_survivors=True,
-                                       upsert_into=store_b)
-    finally:
-        spark.conf.unset("spark.maggma.index.concurrentIngestWrites")
-
-    # default (sequential) upsert_into form — same end state
+    # upsert_into form — same end state
     idx_d = MinHashIndex(spark, str(tmp_path / "id"),
                          num_hashes=16, bands=4)
     idx_d.build(_docs(spark, [(1, TEXTS["alpha"])]))
@@ -188,9 +171,8 @@ def test_dedup_increment_concurrent_upsert_matches_sequential(
 
     keys = lambda st: sorted(
         r["doc_id"] for r in st.query().collect())
-    assert keys(store_a) == keys(store_b) == keys(store_d) == [11, 13]
-    assert idx_a.count() == idx_b.count() == idx_d.count() == 3
-    assert sorted(r["doc_id"] for r in surv_b.collect()) == [11, 13]
+    assert keys(store_a) == keys(store_d) == [11, 13]
+    assert idx_a.count() == idx_d.count() == 3
     assert sorted(r["doc_id"] for r in surv_d.collect()) == [11, 13]
 
     # upsert_into WITHOUT add_survivors: store updated, index not

@@ -734,6 +734,32 @@ def test_parquet_schema_cache_sees_every_writer(spark, tmp_path, jobs_of):
     assert after == rows
 
 
+def test_parquet_store_keeps_column_from_later_sorting_file(spark, tmp_path):
+    """A column that another writer adds in a file sorting AFTER the
+    store's own files is read, and survives the next upsert's
+    rewrite. Inference from the first file alone dropped it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from maggma_spark.sources.parquet import ParquetStore
+
+    path = str(tmp_path / "late")
+    store = ParquetStore(spark, path, key="k")
+    store.update([{"k": i, "a": i * 10} for i in range(3)])
+    pq.write_table(pa.table({"k": pa.array([7], pa.int64()),
+                             "a": pa.array([70], pa.int64()),
+                             "c": pa.array(["seven"])}),
+                   os.path.join(path, "z-extra.parquet"))
+    assert "c" in store.df.columns
+
+    store.update([{"k": 1, "a": 11}])
+    on_disk = {r["k"]: r.asDict()
+               for r in spark.read.option("mergeSchema", "true")
+               .parquet(path).collect()}
+    assert on_disk[7]["c"] == "seven" and on_disk[1]["a"] == 11
+    assert set(on_disk) == {0, 1, 2, 7}
+
+
 def test_read_parquet_nanos_timestamps_exact(spark, tmp_path):
     """A pyarrow-written timestamp[ns] column (TIMESTAMP(NANOS)) reads
     back as the exactly truncated microseconds, also past 2^53 ns where
