@@ -1465,7 +1465,8 @@ def _unit_ms(unit, what: str = "range unit"):
 def _window_bounds(bounds) -> list:
     """A window doc's [lo, hi] bounds. Booleans raise: Python counts
     True as the int 1, and Mongo rejects non-numeric bounds."""
-    if any(isinstance(b, bool) for b in bounds):
+    if any(isinstance(b, bool) or not isinstance(b, (int, float))
+           and b not in ("unbounded", "current") for b in bounds):
         raise ValueError("window bounds must be numbers, 'unbounded' or "
                          f"'current', got {list(bounds)}")
     return list(bounds)
@@ -1496,12 +1497,18 @@ def _sort_axis(sort: dict, what: str) -> str:
     return field
 
 
+def _epoch_ms(field: str) -> Column:
+    """A timestamp sortBy field as exact integer epoch milliseconds (a
+    double epoch loses sub-ms bits at 2024-era magnitudes and shifts
+    range boundaries by 1 ms)."""
+    return F.unix_millis(F.col(field).cast("timestamp"))
+
+
 def _time_axis(field: str, ms) -> Column:
     """A sortBy field as a numeric axis: exact epoch-ms scaled to `ms`
     (a unit's width) for timestamps, the raw value without a unit."""
     if ms:
-        return (F.unix_millis(F.col(field).cast("timestamp"))
-                .cast("double") / F.lit(ms))
+        return _epoch_ms(field).cast("double") / F.lit(ms)
     return F.col(field).cast("double")
 
 
@@ -2790,12 +2797,9 @@ _MOMENT_PARTIALS = {
     "$stdDevPop": _STD_PARTIALS, "$stdDevSamp": _STD_PARTIALS,
     "$covariancePop": _COV_PARTIALS, "$covarianceSamp": _COV_PARTIALS}
 
-# plan kinds of _swf_plan that frame over the sortBy VALUE axis, and
-# the kinds whose frame is row-ordered (an empty sortBy raises)
+# unpartitioned plan kinds that frame over the sortBy VALUE axis
 _SWF_RANGE_KINDS = {"rfwd", "rbwd", "rfin", "pctl_rrun", "deriv_rrun",
                     "integ_rrun"}
-_SWF_SORTED_KINDS = {"rank", "firstlast", "ema", "fwd", "bwd", "self",
-                     "dfin", "pctl_run"}
 # kinds that read the broadcast carry frame joined on the range id
 _SWF_CARRIED_KINDS = {"rank", "fwd", "bwd", "rfwd", "rbwd", "self", "dfin",
                       "pctl_run", "pctl_rrun", "ema", "integ_run",
@@ -2848,8 +2852,7 @@ def _frame_shape(win: dict):
     """Classify a window doc: (axis, shape, bounds, fin). axis is
     "range" or "documents" (the default, whole frame); shape is "fwd"/
     "bwd" (running), "whole", "self" (["current", "current"]), "fin"
-    (numeric, lo <= hi on documents) or None; fin is _finite_bounds'
-    (lo, hi)."""
+    (numeric) or None; fin is _finite_bounds' (lo, hi)."""
     axis = "range" if "range" in win else "documents"
     bounds = _window_bounds(win.get(axis, ["unbounded", "unbounded"]))
     key = tuple(bounds)
@@ -2857,98 +2860,154 @@ def _frame_shape(win: dict):
         # next to an unbounded end, offset 0 is the current sort value
         key = tuple("current" if b == 0 else b for b in key)
     fin = _finite_bounds(bounds, axis == "documents")
-    shape = _FRAME_SHAPES.get(key)
-    if shape is None and fin and (axis == "range" or fin[0] <= fin[1]):
-        shape = "fin"
+    shape = _FRAME_SHAPES.get(key) or ("fin" if fin else None)
     return axis, shape, bounds, fin
 
 
-def _swf_plan_output(op: str, arg, win: dict, sort: dict) -> dict:
-    """One output's plan dict (see _swf_plan)."""
-    if op in _RANK_FNS:
-        return {"kind": "rank", "op": op}
-    if op == "$expMovingAvg":
-        return {"kind": "ema", "op": op, "alpha": _ema_alpha(arg),
-                "arg": arg["input"]}
+def _frame_offsets(p: dict, op: str) -> tuple:
+    """A planned frame's bounds on its window axis: "unbounded" kept,
+    "current" as 0, numbers scaled by the range `unit` to the integers
+    rowsBetween/rangeBetween take. An inverted frame raises: Spark
+    would answer it from an empty (or a differenced, negated) frame."""
+    scale = _unit_ms(p.get("unit")) or 1
+    offs = [b if b == "unbounded" else 0 if b == "current" else b * scale
+            for b in p["bounds"]]
+    if any(x != "unbounded" and not float(x).is_integer() for x in offs):
+        raise ValueError(f"{p['axis']} frame offsets {p['bounds']} must "
+                         "scale to integers on the window axis")
+    lo, hi = (x if x == "unbounded" else int(x) for x in offs)
+    if "unbounded" not in (lo, hi) and lo > hi:
+        raise ValueError(
+            f"{op} over the {p['axis']} frame {p['bounds']} is not "
+            "supported: its lower bound is above its upper bound")
+    return lo, hi
+
+
+# Mongo window operator -> plan family, the key of both paths' assembler
+# tables; another accumulator is "acc", an unknown operator None
+_SWF_FAMILIES = {
+    **{op: "rank" for op in _RANK_FNS},
+    **{op: "moment" for op in _MOMENT_PARTIALS}, "$count": "moment",
+    "$shift": "shift", "$locf": "locf", "$linearFill": "linearFill",
+    "$expMovingAvg": "ema", "$median": "pctl", "$percentile": "pctl",
+    "$derivative": "deriv", "$integral": "integ",
+    "$first": "firstlast", "$last": "firstlast"}
+# families Mongo runs without window bounds (the positional ones run
+# their own passes when unpartitioned)
+_POSITIONAL_FAMILIES = {"shift", "locf", "linearFill"}
+_WINDOWLESS_FAMILIES = _POSITIONAL_FAMILIES | {"rank"}
+
+
+def _window_plan(op: str, arg, win, sort: dict) -> dict:
+    """One output's plan (see _swf_plans)."""
+    family = _SWF_FAMILIES.get(op, "acc" if op in _ACCUMULATORS else None)
+    if win is not None and family in _WINDOWLESS_FAMILIES:
+        raise ValueError(f"{op} takes no window bounds")
+    win = win or {}
+    p = {"name": op, "family": family, "op": op, "arg": arg}
     if op == "$count":  # Mongo window $count == $sum of 1
-        op, arg = "$sum", 1
-    p = {"op": op, "arg": arg}
-    if op in ("$median", "$percentile"):
-        family = "pctl"
-        p = {"op": "$pctl", "arg": arg["input"], "scalar": op == "$median",
-             "ps": [0.5] if op == "$median" else [float(x) for x in arg["p"]]}
-    elif op in ("$derivative", "$integral"):
-        family = "deriv" if op == "$derivative" else "integ"
-        p = {"op": f"${family}", "arg": arg["input"],
-             "tunit": arg.get("unit")}
+        p.update(op="$sum", arg=1)
+    elif family == "ema":
+        p["alpha"], p["arg"] = _ema_alpha(arg), arg["input"]
+    elif family == "pctl":
+        p.update(op="$pctl", arg=arg["input"], scalar=op == "$median",
+                 ps=[0.5] if op == "$median"
+                 else [float(x) for x in arg["p"]])
+    elif family in ("deriv", "integ"):
+        p.update(op=f"${family}", arg=arg["input"], tunit=arg.get("unit"))
         _unit_ms(p["tunit"], f"{op} unit")
         _sort_axis(sort, op)
         if "range" not in win and "documents" not in win:
             raise ValueError(f"{op} requires a window")
-    elif op in ("$first", "$last"):
-        family = "firstlast"
-    elif op in _MOMENT_PARTIALS:
-        family = "moment"
-    elif op in _ACCUMULATORS:
+    elif family == "linearFill" and len(sort) != 1:
+        raise ValueError("$linearFill requires exactly one sortBy field")
+    p["axis"], p["shape"], p["bounds"], p["fin"] = _frame_shape(win)
+    if p["axis"] == "range":
+        p["unit"] = win.get("unit")
+        _sort_axis(sort, "a range window")
+    p["offsets"] = _frame_offsets(p, op)
+    if not sort and (family in _WINDOWLESS_FAMILIES | {"ema"} or
+                     p["axis"] == "documents" and p["shape"] != "whole"):
+        raise ValueError(f"{op} requires sortBy")
+    return p
+
+
+def _swf_plans(spec: dict, sort: dict) -> dict[str, dict]:
+    """Plan every $setWindowFields output from the spec and sortBy alone
+    (no DataFrame, no session), so every shape error raises before any
+    Spark work; both compiles read these plans. {out: plan}: "name" (the
+    Mongo operator), "family" (_SWF_FAMILIES), "op"/"arg" ($count is
+    $sum of 1; "$pctl"/"$deriv"/"$integ" name their families), the
+    frame's "axis"/"shape"/"bounds"/"fin" (_frame_shape), "offsets"
+    (_frame_offsets) and "unit" (range), plus "ps"/"scalar" ($median/
+    $percentile), "tunit" ($derivative/$integral), "alpha" (EMA)."""
+    plans: dict[str, dict] = {}
+    for out, odoc in spec["output"].items():
+        odoc = dict(odoc)
+        win = odoc.pop("window", None)
+        (op, arg), = odoc.items()
+        plans[out] = _window_plan(op, arg, win, sort)
+    return plans
+
+
+def _swf_kind(p: dict, sort: dict) -> dict:
+    """The unpartitioned view of a plan: its kind (the _SWF_FRAME_KINDS
+    entry of its family, frame axis and shape; see _swf_global) plus
+    the keys that kind's assembler reads — "dir" (fwd/bwd running
+    frames), "range"/"offsets" (finite range frames), "frame" (finite
+    row offsets, or the $first/$last bounds). A frame the range
+    scaffold cannot distribute raises and asks for partitionBy."""
+    op, family, axis = p["name"], p["family"], p["axis"]
+    if family == "rank":
+        return {"kind": "rank", "op": op}
+    if family == "ema":
+        return {"kind": "ema", "op": op, "alpha": p["alpha"],
+                "arg": p["arg"]}
+    if family == "acc":
         raise ValueError(f"unpartitioned {op} window is order-dependent "
                          "and not distributable; add partitionBy")
-    else:
+    if family not in _SWF_FRAME_KINDS:
         raise ValueError(f"unsupported unpartitioned window operator {op}"
                          " — add partitionBy")
-    axis, shape, bounds, fin = _frame_shape(win)
-    if axis == "range":
-        p["unit"] = win.get("unit")
-        scale = _unit_ms(p["unit"]) or 1
-    p["kind"] = kind = _SWF_FRAME_KINDS[family].get((axis, shape))
+    kind = _SWF_FRAME_KINDS[family].get((axis, p["shape"]))
     if kind is None:
         ok = [_SHAPE_NAMES[s] for (a, s) in _SWF_FRAME_KINDS[family]
               if a == axis]
         raise ValueError(
-            f"unpartitioned {op} over the {axis} frame {bounds} is not "
-            f"supported (supported: {', '.join(ok) or 'none'}) — add "
+            f"unpartitioned {op} over the {axis} frame {p['bounds']} is "
+            f"not supported (supported: {', '.join(ok) or 'none'}) — add "
             "partitionBy")
-    if shape in ("fwd", "bwd"):
-        p["dir"] = shape
+    if kind == "firstlast" and not sort:
+        raise ValueError(f"{op} requires sortBy")
+    q = {k: p[k] for k in ("op", "arg", "ps", "scalar", "tunit", "unit")
+         if k in p}
+    q["kind"] = kind
+    if p["shape"] in ("fwd", "bwd"):
+        q["dir"] = p["shape"]
     if kind == "dfin":
-        p["frame"] = fin
+        q["frame"] = p["fin"]
     elif kind == "firstlast":
-        p["frame"] = tuple(bounds)
+        q["frame"] = tuple(p["bounds"])
     elif kind == "rfin":
-        # rangeBetween takes long bounds: window-axis offsets (ms for
-        # unit frames, raw otherwise) must land on integers
-        alo, ahi = (float(b) * scale for b in fin)
-        if alo != int(alo) or ahi != int(ahi):
-            raise ValueError(f"range frame offsets {list(fin)} must scale "
-                             "to integers on the window axis")
-        p["range"], p["offsets"] = fin, (int(alo), int(ahi))
-    return p
+        q["range"], q["offsets"] = p["fin"], p["offsets"]
+    return q
+
+
+def _swf_kinds(plans: dict, sort: dict) -> dict[str, dict]:
+    """Unpartitioned kind plans (_swf_kind) of the framed outputs; the
+    positional families run their own passes (_swf_unpartitioned)."""
+    kinds = {o: _swf_kind(p, sort) for o, p in plans.items()
+             if p["family"] not in _POSITIONAL_FAMILIES}
+    ranged = [q for q in kinds.values() if q["kind"] in _SWF_RANGE_KINDS]
+    if len({q["unit"] is None for q in ranged}) > 1:
+        raise ValueError("cannot mix `unit` and plain numeric range "
+                         "windows over one sortBy")
+    return kinds
 
 
 def _swf_plan(spec: dict, sort: dict) -> dict[str, dict]:
-    """Plan every output of an unpartitioned $setWindowFields from the
-    stage spec and sortBy alone — no DataFrame, no session — so every
-    shape error raises before any Spark work. Returns {out: plan}:
-    "kind" picks the assembler (see _swf_global), "op"/"arg" are the
-    operator and its input, plus per kind "dir" (fwd/bwd running
-    frames), "unit" (range frames), "range"/"offsets" (finite range
-    frames and their window-axis offsets), "frame" (finite row offsets,
-    or the $first/$last bounds), "ps"/"scalar" ($median/$percentile),
-    "tunit" ($derivative/$integral) and "alpha" ($expMovingAvg)."""
-    plans: dict[str, dict] = {}
-    for out, odoc in spec["output"].items():
-        odoc = dict(odoc)
-        win = odoc.pop("window", {})
-        (op, arg), = odoc.items()
-        plans[out] = p = _swf_plan_output(op, arg, win, sort)
-        if p["kind"] in _SWF_SORTED_KINDS and not sort:
-            raise ValueError(f"{op} requires sortBy")
-    ranged = [p for p in plans.values() if p["kind"] in _SWF_RANGE_KINDS]
-    if ranged:
-        _sort_axis(sort, "a range window")
-        if len({p["unit"] is None for p in ranged}) > 1:
-            raise ValueError("cannot mix `unit` and plain numeric range "
-                             "windows over one sortBy")
-    return plans
+    """The unpartitioned kind plans of a stage spec."""
+    return _swf_kinds(_swf_plans(spec, sort), sort)
 
 
 def _quantile_grid(n: int) -> Column:
@@ -3048,7 +3107,7 @@ def _swf_value_columns(ranged: DataFrame, plans: dict, sort: dict,
         # exact integer epoch-ms axis for unit frames (a double epoch
         # loses sub-ms bits); the plan offsets are already in ms
         ranged = ranged.withColumn(
-            "__gw_ax", F.unix_millis(F.col(sort_field).cast("timestamp"))
+            "__gw_ax", _epoch_ms(sort_field)
             if units[0] is not None else F.col(sort_field).cast("double"))
     integs = [o for o, p in plans.items()
               if p["kind"] in ("integ_run", "integ_rrun", "integ_whole")]
@@ -3670,12 +3729,14 @@ def _swf_pctl_specs(pruns: dict, parts: list, presketch,
     return specs
 
 
-def _swf_global(df: DataFrame, spec: dict, sort: dict,
+def _swf_global(df: DataFrame, plans: dict, sort: dict, approx: bool,
                 bs: list = None, total: int = None) -> DataFrame:
     """Unpartitioned $setWindowFields WITHOUT the single-task global
     window: per-range windows over the range-partition scaffold,
     stitched by driver-folded broadcast carries (round history:
-    SCALE.md). Support matrix, by _swf_plan kind:
+    SCALE.md). `plans` are _swf_kinds' plans; `approx` is the
+    spark.maggma.windowPctl.method=approximate engine mode. Support
+    matrix, by kind:
 
     - $rank/$denseRank/$documentNumber (rank): per-range rank plus
       prior-range row/distinct offsets — the range partitioner
@@ -3704,13 +3765,7 @@ def _swf_global(df: DataFrame, spec: dict, sort: dict,
     accumulators ($push/$addToSet) raise and ask for partitionBy rather
     than silently funneling the data through one task."""
     spark = df.sparkSession
-    plans = _swf_plan(spec, sort)
     kinds = {p["kind"] for p in plans.values()}
-    # Mongo's window $median/$percentile only OFFER method "approximate";
-    # the default stays the exact (oracle bit-matchable) order-statistics
-    # path and the engine conf licenses the sketch path
-    approx = spark.conf.get(
-        "spark.maggma.windowPctl.method", "exact") == "approximate"
     need_sort = not kinds <= {"whole", "pctl_whole"}
     presketch = None
     if kinds & {"pctl_run", "pctl_rrun"} and need_sort and bs is None \
@@ -3769,322 +3824,250 @@ def _swf_global(df: DataFrame, spec: dict, sort: dict,
 
 
 def _set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
-    """$setWindowFields (Mongo 5.0 window functions) -> Spark Window.
+    """$setWindowFields (Mongo 5.0 window functions): every output is
+    planned first (_swf_plans), then assembled by its family. WITHOUT
+    partitionBy the naive compile is a single-task global sort; those
+    outputs run through _swf_unpartitioned (support matrix: _swf_global).
+    The partitioned support matrix, by family (_PW_ASSEMBLERS), each a
+    Spark Window over partitionBy + sortBy:
 
-    Supported output operators: $rank, $denseRank, $documentNumber, and
-    the accumulator family ($sum/$avg/$min/$max/$push) over a
-    `documents` frame of ["unbounded", "current"] (running) or
-    ["unbounded", "unbounded"] (whole partition, the default), or a
-    value-based `range` frame over the single sortBy field — numeric
-    offsets, "unbounded"/"current", and Mongo's date `unit` ranges
-    (millisecond..week compile to rangeBetween over the epoch-ms of a
-    timestamp sortBy; calendar units year/quarter/month have no fixed
-    width and raise).
+    - rank: $rank/$denseRank/$documentNumber; shift: $shift lead/lag
+      with `default`; locf/linearFill: last non-null over the running
+      frame, interpolation along the single sortBy field (either
+      direction). These reject a `window`.
+    - ema: $expMovingAvg, a per-partition pandas ewm kernel.
+    - deriv/integ: $derivative/$integral over any documents or range
+      frame (a window is required).
+    - pctl: $median/$percentile, exact interpolation over any frame;
+      running frames in the approximate engine mode run through
+      _partitioned_running_pctl_approx.
+    - moment/firstlast/acc: every accumulator over any documents frame
+      or value-range frame on the single ascending sortBy field
+      (numeric offsets, or a date `unit` millisecond..week over exact
+      epoch-ms); finite $sum/$avg/$stdDev*/$covariance* frames
+      difference growing frames (_pw_cum), never a sliding aggregate.
 
-    WITHOUT partitionBy the naive compile would be a single-task
-    global sort; that path routes through _swf_global's distributed
-    scaffold instead (see its docstring for the support matrix)."""
+    An inverted frame (lo > hi) raises on both paths."""
     from pyspark.sql import Window
-    from pyspark.sql.types import DecimalType
 
     sort = spec.get("sortBy") or {}
+    plans = _swf_plans(spec, sort)
+    # Mongo's window $median/$percentile only OFFER method "approximate";
+    # the default stays the exact (oracle bit-matchable) path and the
+    # engine conf licenses the sketch paths
+    approx = df.sparkSession.conf.get(
+        "spark.maggma.windowPctl.method", "exact") == "approximate"
     if "partitionBy" not in spec:
-        # $shift / $locf / $linearFill are positional, not framed —
-        # they split off into their own distributed passes ($shift:
-        # address-shift join on the global row number; $locf /
-        # $linearFill: _fill_global's carry machinery) and the rest
-        # routes through _swf_global's scaffold. Mongo forbids these
-        # outputs referencing each other, so sequential application
-        # over the input frame is exact.
-        fills: dict = {}
-        shifts: dict = {}
-        rest: dict = {}
-        for o, d in spec["output"].items():
-            dd = dict(d)
-            win = dd.pop("window", None)
-            (op, arg), = dd.items()
-            if op in ("$locf", "$linearFill", "$shift"):
-                if win is not None:
-                    raise ValueError(f"{op} takes no window bounds")
-                if op == "$shift":
-                    shifts[o] = arg
-                else:
-                    fills[o] = (op, arg)
-            else:
-                rest[o] = d
-        # pass order is by DESCENDING driver-action count: a later
-        # pass's actions re-execute every earlier pass's lineage, so
-        # the scaffold pass (3-5 actions) must not sit downstream of
-        # the single-action fill/shift joins; a non-trivial INPUT
-        # lineage is materialized once so those actions read blocks,
-        # not re-run upstream windows/joins (round-9)
-        out_df = _maybe_checkpoint_global_input(df)
-        # all passes of one $setWindowFields share the sortBy, so the
-        # range-split values are computed ONCE here (on the slimmest
-        # lineage) instead of once per pass
-        bs = None
-        if sort and (len([x for x in (rest, fills, shifts) if x])
-                     > 1 or fills or shifts):
-            from maggma_spark.functions.partitioning import (
-                range_boundaries,
-            )
-
-            n = int(out_df.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-            bs, pre_total = range_boundaries(
-                out_df, next(iter(sort)), n,
-                min_rows_per_range=_min_rows_per_range(
-                    out_df.sparkSession),
-                with_total=True)
-        else:
-            pre_total = None
-        if rest:
-            out_df = _swf_global(out_df, {**spec, "output": rest},
-                                 sort, bs=bs, total=pre_total)
-        if fills and not sort:
-            raise ValueError("$locf/$linearFill require sortBy")
-        if fills:
-            for o, (_op, arg) in fills.items():
-                out_df = out_df.withColumn(o, _value(out_df, arg))
-            fspec = {"output": {
-                o: {"method": ("locf" if op == "$locf" else "linear")}
-                for o, (op, _arg) in fills.items()}}
-        if fills and shifts and not _shift_reads_fill_outputs(
-                shifts, fills):
-            # fused path (round-12): one scaffold + one boundary
-            # aggregate for both families instead of two of each —
-            # the sequential form re-range-partitions the full-width
-            # fill output just to scaffold the shift pass
-            out_df = _fill_shift_global(out_df, fspec, shifts, sort,
-                                        bs=bs)
-        else:
-            if fills:
-                out_df = _fill_global(out_df, fspec, sort, bs=bs)
-            if shifts:
-                out_df = _shift_global(out_df, shifts, sort, bs=bs)
-        return out_df
+        return _swf_unpartitioned(df, plans, sort, approx)
+    for p in plans.values():
+        if p["family"] not in _PW_ASSEMBLERS:
+            raise ValueError(f"unsupported window operator {p['name']}")
     w = Window.partitionBy(_value(df, spec["partitionBy"]))
-    ordered = w.orderBy(*_order_cols(sort))
-
-    def build_frame(win, frame):
-        if "range" in win:
-            sf_field = _sort_axis(sort, "a range window")
-            ms = _unit_ms(win.get("unit"))
-            rlo, rhi = _window_bounds(win["range"])
-            scale = ms or 1
-            base = ordered
-            if ms:
-                # unix_millis is exact integer milliseconds — going
-                # through a double epoch loses sub-ms bits at 2024-era
-                # magnitudes and shifts range boundaries by 1 ms
-                epoch_ms = F.unix_millis(F.col(sf_field)
-                                         .cast("timestamp"))
-                base = w.orderBy(epoch_ms.asc())
-            lo = Window.unboundedPreceding if rlo == "unbounded" else \
-                Window.currentRow if rlo == "current" else rlo * scale
-            hi = Window.unboundedFollowing if rhi == "unbounded" else \
-                Window.currentRow if rhi == "current" else rhi * scale
-            return base.rangeBetween(lo, hi), rlo == "unbounded"
-        # Mongo documents bounds: "unbounded", "current", or integer
-        # row offsets (negative = preceding)
-        frame = _window_bounds(frame)
-        lo = Window.unboundedPreceding if frame[0] == "unbounded" \
-            else Window.currentRow if frame[0] == "current" \
-            else int(frame[0])
-        hi = Window.unboundedFollowing if frame[1] == "unbounded" \
-            else Window.currentRow if frame[1] == "current" \
-            else int(frame[1])
-        if (lo, hi) != (Window.unboundedPreceding,
-                        Window.unboundedFollowing) and not sort:
-            raise ValueError("a bounded documents window requires "
-                             "sortBy")
-        return ((ordered if sort else w).rowsBetween(lo, hi),
-                frame[0] == "unbounded")
-
-    def finite_desc(win, frame):
-        """(kind, lo, hi, axis) when the frame is finite with integral
-        bounds — the shape the growing-frame differencing handles —
-        else None (the caller keeps the direct sliding compile).
-        Callers run build_frame FIRST so its validation/raises stay
-        the single source of frame-shape errors."""
-        if "range" in win:
-            fin = _finite_bounds(win["range"], documents=False)
-            if fin is None:
-                return None
-            ms = _unit_ms(win.get("unit"))
-            alo, ahi = fin[0] * (ms or 1), fin[1] * (ms or 1)
-            if float(alo) != int(alo) or float(ahi) != int(ahi):
-                return None  # non-integral offsets: sliding path
-            (sf_field, _), = sort.items()
-            axis = (F.unix_millis(F.col(sf_field).cast("timestamp"))
-                    if ms else F.col(sf_field))
-            return ("range", int(alo), int(ahi), axis)
-        fin = _finite_bounds(frame, documents=True)
-        return ("rows", *fin, None) if fin else None
-
-    def finite_cum(fin):
-        if fin[0] == "rows":
-            return _growing_cum_rows(ordered, fin[1], fin[2])
-        return _growing_cum_range(w, fin[3], fin[1], fin[2])
-
-    running = ordered.rowsBetween(Window.unboundedPreceding,
-                                  Window.currentRow)
-    for out, odoc in spec["output"].items():
-        odoc = dict(odoc)
-        win = odoc.pop("window", {})
-        frame = win.get("documents", ["unbounded", "unbounded"])
-        (op, arg), = odoc.items()
-        if op in _RANK_FNS:
-            if not sort:
-                raise ValueError(f"{op} requires sortBy")
-            df = df.withColumn(out, _RANK_FNS[op]().over(ordered))
-            continue
-        if op == "$shift":
-            if not sort:
-                raise ValueError("$shift requires sortBy")
-            by = int(arg["by"])
-            v = _value(df, arg["output"])
-            dflt = arg.get("default")
-            fn = F.lead(v, by, dflt) if by >= 0 else F.lag(v, -by, dflt)
-            df = df.withColumn(out, fn.over(ordered))
-            continue
-        if op == "$locf":
-            if not sort:
-                raise ValueError("$locf requires sortBy")
-            df = df.withColumn(out, F.last(
-                _value(df, arg), ignorenulls=True).over(running))
-            continue
-        if op == "$linearFill":
-            lf_field = _sort_axis(sort, "$linearFill")
-            x = _time_axis(lf_field, None)
-            v = _value(df, arg).cast("double")
-            # a single ascending sortBy: the reverse scan is simply that
-            # field descending
-            rev_run = (w.orderBy(F.col(lf_field).desc())
-                       .rowsBetween(Window.unboundedPreceding,
-                                    Window.currentRow))
-            known_x = F.when(v.isNotNull(), x)
-            pv = F.last(v, ignorenulls=True).over(running)
-            px = F.last(known_x, ignorenulls=True).over(running)
-            nv = F.last(v, ignorenulls=True).over(rev_run)
-            nx = F.last(known_x, ignorenulls=True).over(rev_run)
-            interp = pv + F.when(nx != px,
-                                 (nv - pv) * (x - px) / (nx - px))
-            df = df.withColumn(out, F.coalesce(v, interp))
-            continue
-        if op == "$expMovingAvg":
-            df = _exp_moving_avg(df, spec["partitionBy"], sort, out, arg)
-            continue
-        if op == "$derivative":
-            if "range" not in win and "documents" not in win:
-                raise ValueError("$derivative requires a window")
-            t = _time_axis(_sort_axis(sort, "$derivative"),
-                           _unit_ms(arg.get("unit"), "$derivative unit"))
-            spec_w, _ = build_frame(win, frame)
-            v = _value(df, arg["input"]).cast("double")
-            dv = F.last(v, ignorenulls=False).over(spec_w) \
-                - F.first(v, ignorenulls=False).over(spec_w)
-            dt = F.last(t).over(spec_w) - F.first(t).over(spec_w)
-            df = df.withColumn(out, F.when(dt != 0, dv / dt))
-            continue
-        if op == "$integral":
-            if "range" not in win and "documents" not in win:
-                raise ValueError("$integral requires a window")
-            t = _time_axis(_sort_axis(sort, "$integral"),
-                           _unit_ms(arg.get("unit"), "$integral unit"))
-            spec_w, from_start = build_frame(win, frame)
-            v = _value(df, arg["input"]).cast("double")
-            # trapezoid term covering (t_{i-1}, t_i]; the frame's own
-            # first row's term spans OUTSIDE the window, so subtract it
-            # unless the frame starts unbounded (where it is null at
-            # the partition head and sum already skips it)
-            pair = ((v + F.lag(v).over(ordered)) / 2
-                    * (t - F.lag(t).over(ordered)))
-            total = F.sum(pair).over(spec_w)
-            if not from_start:
-                total = total - F.coalesce(
-                    F.first(pair, ignorenulls=False).over(spec_w),
-                    F.lit(0.0))
-            # a single-point (or head-of-partition) window integrates
-            # to 0, as in Mongo — the null sum means "no pair terms"
-            df = df.withColumn(out, F.coalesce(total, F.lit(0.0)))
-            continue
-        if op in ("$covariancePop", "$covarianceSamp"):
-            a, b = arg
-            fn = F.covar_pop if op == "$covariancePop" else F.covar_samp
-            spec_w, _ = build_frame(win, frame)
-            fin = finite_desc(win, frame)
-            if fin is not None:
-                df = df.withColumn(out, _frame_from_cum(
-                    op, _cov_pair(df, a, b), finite_cum(fin)))
-                continue
-            df = df.withColumn(out, fn(
-                _value(df, a).cast("double"),
-                _value(df, b).cast("double")).over(spec_w))
-            continue
-        if op == "$count":  # Mongo window $count == $sum of 1
-            op, arg = "$sum", 1
-        if op in ("$median", "$percentile"):
-            # Mongo 7.0 window forms: exact continuous interpolation
-            # (the expression-form deviation, DEVIATIONS §20d) over
-            # the partitioned frame; $percentile returns the array of
-            # requested quantiles like Mongo. Cost note: Spark
-            # re-scans the frame per row for percentile windows
-            # (O(w)/row), so an unbounded running frame is quadratic
-            # per partition at the EXACT default — the approximate
-            # engine mode below is the O(G)/row scale path for
-            # running frames (Mongo only offers method:"approximate")
-            runf = list(win.get("documents") or win.get("range") or [])
-            if runf in (["unbounded", "current"],
-                        ["current", "unbounded"]) and sort and \
-                    df.sparkSession.conf.get(
-                        "spark.maggma.windowPctl.method",
-                        "exact") == "approximate":
-                ps = [0.5] if op == "$median" else \
-                    [float(x) for x in arg["p"]]
-                df = _partitioned_running_pctl_approx(
-                    df, spec["partitionBy"], sort, out,
-                    arg["input"], ps, win, scalar=op == "$median")
-                continue
-            spec_w, _ = build_frame(win, frame)
-            v = _value(df, arg["input"]).cast("double")
-            ps = [0.5] if op == "$median" else \
-                [float(x) for x in arg["p"]]
-            pc = F.percentile(
-                v, F.array(*[F.lit(x) for x in ps])).over(spec_w)
-            df = df.withColumn(
-                out, F.element_at(pc, 1) if op == "$median" else pc)
-            continue
-        if op not in _ACCUMULATORS:
-            raise ValueError(f"unsupported window operator {op}")
-        spec_w, _ = build_frame(win, frame)
-        v = _value(df, arg)
-        fin = (finite_desc(win, frame)
-               if op in _INVERTIBLE_WINDOW_OPS else None)
-        if fin is not None and not (op == "$avg" and isinstance(
-                _agg_type(df, v), DecimalType)):
-            # growing-frame differencing (see _growing_cum_rows);
-            # decimal $avg keeps the sliding path so Spark's decimal
-            # average precision rules apply unchanged
-            col = _frame_from_cum(op, v, finite_cum(fin))
-            if op == "$sum":
-                # exact subtraction widens decimal sums by one digit;
-                # pin back to the direct aggregate's type
-                col = col.cast(_agg_type(df, F.sum(v)))
-            df = df.withColumn(out, col)
-            continue
-        col = _ACCUMULATORS[op](v).over(spec_w)
-        if op == "$sum":
-            # Mongo's window $sum is 0 over an empty/all-null frame;
-            # Spark's SUM is null — coalesce to the Mongo value
-            col = F.coalesce(col, F.lit(0))
-        df = df.withColumn(out, col)
+    ctx = {"w": w, "ordered": w.orderBy(*_order_cols(sort)), "sort": sort,
+           "by": spec["partitionBy"], "approx": approx}
+    for out, p in plans.items():
+        df = _PW_ASSEMBLERS[p["family"]](df, out, p, ctx)
     return df
+
+
+def _swf_unpartitioned(df: DataFrame, plans: dict, sort: dict,
+                       approx: bool) -> DataFrame:
+    """Unpartitioned $setWindowFields. $shift/$locf/$linearFill are
+    positional, not framed: they split off into their own distributed
+    passes ($shift: address-shift join on the global row number; $locf/
+    $linearFill: _fill_global's carry machinery) and the framed outputs
+    route through _swf_global's scaffold. Mongo forbids these outputs
+    referencing each other, so sequential application over the input
+    frame is exact."""
+    rest = _swf_kinds(plans, sort)
+    fills = {o: p for o, p in plans.items()
+             if p["family"] in ("locf", "linearFill")}
+    shifts = {o: p["arg"] for o, p in plans.items()
+              if p["family"] == "shift"}
+    # pass order is by DESCENDING driver-action count: a later pass's
+    # actions re-execute every earlier pass's lineage, so the scaffold
+    # pass (3-5 actions) runs first; a non-trivial INPUT lineage is
+    # materialized once so those actions read blocks (round-9), and the
+    # passes share ONE set of range-split values of the sortBy
+    out_df = _maybe_checkpoint_global_input(df)
+    bs = pre_total = None
+    if fills or shifts:
+        from maggma_spark.functions.partitioning import range_boundaries
+
+        n = int(out_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        bs, pre_total = range_boundaries(
+            out_df, next(iter(sort)), n,
+            min_rows_per_range=_min_rows_per_range(out_df.sparkSession),
+            with_total=True)
+    if rest:
+        out_df = _swf_global(out_df, rest, sort, approx, bs=bs,
+                             total=pre_total)
+    if fills:
+        for o, p in fills.items():
+            out_df = out_df.withColumn(o, _value(out_df, p["arg"]))
+        fspec = {"output": {
+            o: {"method": "locf" if p["family"] == "locf" else "linear"}
+            for o, p in fills.items()}}
+        if shifts and not _shift_reads_fill_outputs(shifts, fills):
+            # fused path (round-12): one scaffold + one boundary
+            # aggregate for both families instead of two of each — the
+            # sequential form re-range-partitions the full-width fill
+            # output just to scaffold the shift pass
+            return _fill_shift_global(out_df, fspec, shifts, sort, bs=bs)
+        out_df = _fill_global(out_df, fspec, sort, bs=bs)
+    if shifts:
+        out_df = _shift_global(out_df, shifts, sort, bs=bs)
+    return out_df
+
+
+def _pw_axis(p: dict, ctx: dict) -> Column:
+    """The value axis of a partitioned range frame: the single sortBy
+    field, or its exact epoch-ms under a `unit` (the plan offsets are
+    already in ms)."""
+    (field, _), = ctx["sort"].items()
+    return _epoch_ms(field) if p["unit"] else F.col(field)
+
+
+def _pw_frame(p: dict, ctx: dict):
+    """A plan's frame over the partition window: rowsBetween in the
+    sortBy order (documents), rangeBetween on _pw_axis (range)."""
+    from pyspark.sql import Window
+
+    lo, hi = p["offsets"]
+    lo = Window.unboundedPreceding if lo == "unbounded" else lo
+    hi = Window.unboundedFollowing if hi == "unbounded" else hi
+    if p["axis"] == "range":
+        return ctx["w"].orderBy(_pw_axis(p, ctx).asc()).rangeBetween(lo, hi)
+    return (ctx["ordered"] if ctx["sort"] else ctx["w"]).rowsBetween(lo, hi)
+
+
+def _pw_cum(p: dict, ctx: dict):
+    """cum(fn, expr) of a plan's finite frame as the difference of
+    growing frames (see _growing_cum_rows), or None when an end is
+    unbounded (or a range end is "current")."""
+    if p["fin"] is None:
+        return None
+    if p["axis"] == "range":
+        return _growing_cum_range(ctx["w"], _pw_axis(p, ctx), *p["offsets"])
+    return _growing_cum_rows(ctx["ordered"], *p["fin"])
+
+
+def _pw_rank(df: DataFrame, out: str, p: dict, ctx: dict) -> DataFrame:
+    return df.withColumn(out, _RANK_FNS[p["op"]]().over(ctx["ordered"]))
+
+
+def _pw_shift(df: DataFrame, out: str, p: dict, ctx: dict) -> DataFrame:
+    by, dflt = int(p["arg"]["by"]), p["arg"].get("default")
+    v = _value(df, p["arg"]["output"])
+    fn = F.lead(v, by, dflt) if by >= 0 else F.lag(v, -by, dflt)
+    return df.withColumn(out, fn.over(ctx["ordered"]))
+
+
+def _pw_fill(df: DataFrame, out: str, p: dict, ctx: dict) -> DataFrame:
+    """$locf: the last non-null value over the running frame.
+    $linearFill: interpolate between the previous and next known values
+    along the sortBy field; the next one is the last non-null over the
+    MIRRORED running frame, never Spark's unbounded-following frame."""
+    from pyspark.sql import Window
+
+    run = ctx["ordered"].rowsBetween(Window.unboundedPreceding,
+                                     Window.currentRow)
+    if p["family"] == "locf":
+        return df.withColumn(out, F.last(
+            _value(df, p["arg"]), ignorenulls=True).over(run))
+    (field, direction), = ctx["sort"].items()
+    x = _time_axis(field, None)
+    v = _value(df, p["arg"]).cast("double")
+    rev = (ctx["w"].orderBy(*_order_cols({field: -direction}))
+           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    known_x = F.when(v.isNotNull(), x)
+    pv = F.last(v, ignorenulls=True).over(run)
+    px = F.last(known_x, ignorenulls=True).over(run)
+    nv = F.last(v, ignorenulls=True).over(rev)
+    nx = F.last(known_x, ignorenulls=True).over(rev)
+    interp = pv + F.when(nx != px, (nv - pv) * (x - px) / (nx - px))
+    return df.withColumn(out, F.coalesce(v, interp))
+
+
+def _pw_edge(df: DataFrame, out: str, p: dict, ctx: dict) -> DataFrame:
+    """$derivative: the frame's end-point slope. $integral: trapezoid
+    pair terms summed over the frame. Row i's pair covers
+    (t_{i-1}, t_i], so the frame's first pair spans OUTSIDE the window
+    and is subtracted unless the frame starts unbounded (there it is
+    null at the partition head and the sum skips it); a single-point
+    window integrates to 0, as in Mongo."""
+    (field, _), = ctx["sort"].items()
+    t = _time_axis(field, _unit_ms(p["tunit"]))
+    v = _value(df, p["arg"]).cast("double")
+    frame = _pw_frame(p, ctx)
+    if p["family"] == "deriv":
+        dv = (F.last(v, ignorenulls=False).over(frame)
+              - F.first(v, ignorenulls=False).over(frame))
+        dt = F.last(t).over(frame) - F.first(t).over(frame)
+        return df.withColumn(out, F.when(dt != 0, dv / dt))
+    ordered = ctx["ordered"]
+    pair = (v + F.lag(v).over(ordered)) / 2 * (t - F.lag(t).over(ordered))
+    total = F.sum(pair).over(frame)
+    if p["bounds"][0] != "unbounded":
+        total = total - F.coalesce(
+            F.first(pair, ignorenulls=False).over(frame), F.lit(0.0))
+    return df.withColumn(out, F.coalesce(total, F.lit(0.0)))
+
+
+def _pw_pctl(df: DataFrame, out: str, p: dict, ctx: dict) -> DataFrame:
+    """$median/$percentile: exact continuous interpolation (the
+    expression-form deviation, DEVIATIONS §20d) over the frame; the
+    result is a scalar for $median, the array of requested quantiles
+    for $percentile. Spark re-scans the frame per row (O(w)/row), so an
+    unbounded running frame is quadratic per partition at the exact
+    default; the approximate engine mode is the O(G)/row scale path."""
+    if ctx["approx"] and p["shape"] in ("fwd", "bwd"):
+        return _partitioned_running_pctl_approx(
+            df, ctx["by"], ctx["sort"], out, p)
+    v = _value(df, p["arg"]).cast("double")
+    pc = F.percentile(v, F.array(*[F.lit(x) for x in p["ps"]])).over(
+        _pw_frame(p, ctx))
+    return df.withColumn(out, F.element_at(pc, 1) if p["scalar"] else pc)
+
+
+def _pw_acc(df: DataFrame, out: str, p: dict, ctx: dict) -> DataFrame:
+    """Accumulators over the plan's frame. Finite frames of the
+    invertible ones difference growing frames (_pw_cum); decimal $avg
+    keeps the sliding aggregate so Spark's decimal average precision
+    rules apply unchanged."""
+    from pyspark.sql.types import DecimalType
+
+    op = p["op"]
+    cum = _pw_cum(p, ctx) if op in _INVERTIBLE_WINDOW_OPS else None
+    if op in ("$covariancePop", "$covarianceSamp"):
+        a, b = p["arg"]
+        if cum is not None:
+            return df.withColumn(out, _frame_from_cum(
+                op, _cov_pair(df, a, b), cum))
+        fn = F.covar_pop if op == "$covariancePop" else F.covar_samp
+        return df.withColumn(out, fn(
+            _value(df, a).cast("double"),
+            _value(df, b).cast("double")).over(_pw_frame(p, ctx)))
+    v = _value(df, p["arg"])
+    if cum is not None and not (op == "$avg" and isinstance(
+            _agg_type(df, v), DecimalType)):
+        col = _frame_from_cum(op, v, cum)
+        if op == "$sum":
+            # exact subtraction widens decimal sums by one digit; pin
+            # back to the direct aggregate's type
+            col = col.cast(_agg_type(df, F.sum(v)))
+        return df.withColumn(out, col)
+    col = _ACCUMULATORS[op](v).over(_pw_frame(p, ctx))
+    if op == "$sum":
+        # Mongo's window $sum is 0 over an empty/all-null frame; Spark's
+        # SUM is null — coalesce to the Mongo value
+        col = F.coalesce(col, F.lit(0))
+    return df.withColumn(out, col)
 
 
 def _partitioned_running_pctl_approx(
         df: DataFrame, partition_by, sort: dict, out: str,
-        inp, ps: list, win: dict, scalar: bool) -> DataFrame:
+        p: dict) -> DataFrame:
     """PARTITIONED running $median/$percentile in the approximate
     engine mode (spark.maggma.windowPctl.method=approximate — Mongo's
     window forms only OFFER method:"approximate"): the exact compile
@@ -4100,10 +4083,10 @@ def _partitioned_running_pctl_approx(
     per group. O(G)/row, one extra shuffle (the sketch join), no
     Python in the per-row path.
 
-    Supports running frames only (['unbounded','current'] /
-    ['current','unbounded'], documents or single-sortBy value range);
-    reverse frames run mirrored running windows, never Spark's
-    unbounded-following frame."""
+    `p` is the output's plan (_swf_plans), a running frame
+    (['unbounded','current'] / ['current','unbounded'], documents or
+    single-sortBy value range); reverse frames run mirrored running
+    windows, never Spark's unbounded-following frame."""
     from pyspark.sql import Window
 
     spark = df.sparkSession
@@ -4111,7 +4094,7 @@ def _partitioned_running_pctl_approx(
         "spark.maggma.windowPctl.approxBuckets", "0")) or 32
     G = max(2, min(64, G))
     pexpr = _value(df, partition_by)
-    v = _value(df, inp).cast("double")
+    v = _value(df, p["arg"]).cast("double")
     tag = f"__pp_{out}"
     df = df.withColumn(f"{tag}_p", pexpr).withColumn(f"{tag}_v", v)
     grid = [i / G for i in range(1, G)]
@@ -4141,19 +4124,10 @@ def _partitioned_running_pctl_approx(
         F.col(f"{tag}_p").eqNullSafe(F.col(f"{tag}_pp"))
     ).drop(f"{tag}_pp")
 
-    frame = list(win.get("documents") or win.get("range"))
-    fwd = frame == ["unbounded", "current"]
-    if "range" in win:
-        if len(sort) != 1:
-            raise ValueError(
-                "range window requires exactly one sortBy field")
-        (sf_field, sdir), = sort.items()
-        if sdir <= 0:
-            raise ValueError("range windows require an ascending "
-                             "sortBy")
-        unit = win.get("unit")
-        axis = (F.unix_millis(F.col(sf_field).cast("timestamp"))
-                if unit else F.col(sf_field))
+    fwd = p["shape"] == "fwd"
+    if p["axis"] == "range":
+        (field, _), = sort.items()
+        axis = _epoch_ms(field) if p["unit"] else F.col(field)
         w = (Window.partitionBy(f"{tag}_p")
              .orderBy(axis.asc() if fwd else axis.desc())
              .rangeBetween(Window.unboundedPreceding, 0))
@@ -4206,6 +4180,7 @@ def _partitioned_running_pctl_approx(
     # alias, so the attribute form evaluates the ladder once per
     # (row, p)
     bcols = {}
+    ps = p["ps"]
     for pi, pv in enumerate(ps):
         q = F.lit(float(pv)) * (m - 1) + F.lit(1.0)
         # comparison ladder, not an array-filter HOF: higher-order
@@ -4229,27 +4204,24 @@ def _partitioned_running_pctl_approx(
         e_lo = F.element_at(edges, b + 1)
         e_hi = F.element_at(edges, b + 2)
         outs.append(F.when(m > 0, e_lo + frac * (e_hi - e_lo)))
-    col = outs[0] if scalar else F.array(*outs)
+    col = outs[0] if p["scalar"] else F.array(*outs)
     return df.withColumn(out, col).drop(
         f"{tag}_p", f"{tag}_v", f"{tag}_e", f"{tag}_j", f"{tag}_c",
         f"{tag}_m", *bcols)
 
 
-def _exp_moving_avg(df: DataFrame, partition_by, sort: dict,
-                    out: str, arg: dict) -> DataFrame:
+def _exp_moving_avg(df: DataFrame, out: str, p: dict,
+                    ctx: dict) -> DataFrame:
     """$expMovingAvg: sequentially-dependent (ewma_i depends on
     ewma_{i-1}), so no window aggregate expresses it — an Arrow
     applyInPandas kernel runs the recurrence per partition, sorted.
     The closed-form alternative (powers of 1/(1-alpha)) overflows for
     long series, so the sequential kernel is the robust shape; per-key
     history bounds each group exactly like the window operators."""
-    if not sort:
-        raise ValueError("$expMovingAvg requires sortBy")
-    alpha = _ema_alpha(arg)
-    tagged = (df.withColumn("__ew_p", _value(df, partition_by))
-              .withColumn("__ew_v", _value(df, arg["input"])
+    alpha, sort_items = p["alpha"], list(ctx["sort"].items())
+    tagged = (df.withColumn("__ew_p", _value(df, ctx["by"]))
+              .withColumn("__ew_v", _value(df, p["arg"])
                           .cast("double")))
-    sort_items = list(sort.items())
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}"
          for f in tagged.schema.fields] + [f"`{out}` double"])
@@ -4270,6 +4242,18 @@ def _exp_moving_avg(df: DataFrame, partition_by, sort: dict,
 
     return (tagged.groupBy("__ew_p").applyInPandas(kernel, out_schema)
             .drop("__ew_p", "__ew_v"))
+
+
+# partitioned output assemblers by plan family: (df, out, plan, ctx) ->
+# df with the output column; ctx holds the partition window "w", its
+# sortBy order "ordered", "sort", the partitionBy expression "by" and
+# the "approx" engine mode
+_PW_ASSEMBLERS = {
+    "rank": _pw_rank, "shift": _pw_shift, "locf": _pw_fill,
+    "linearFill": _pw_fill, "ema": _exp_moving_avg, "deriv": _pw_edge,
+    "integ": _pw_edge, "pctl": _pw_pctl, "moment": _pw_acc,
+    "firstlast": _pw_acc, "acc": _pw_acc,
+}
 
 
 _DENSIFY_UNITS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400,
@@ -4483,8 +4467,6 @@ def _shift_global(df: DataFrame, shifts: dict, sort: dict,
     collected the combined boundary aggregate; skip both here."""
     from pyspark.sql import Window
 
-    if not sort:
-        raise ValueError("$shift requires sortBy")
     spark = df.sparkSession
     wasc = Window.partitionBy("__gw_pid").orderBy("__gw_rn")
     if _work is None:
@@ -4709,8 +4691,6 @@ def _fill_shift_global(df: DataFrame, spec: dict, shifts: dict,
     per-range pass. Applies fill first, shift second — the same
     order, same expressions, same carry arithmetic as the sequential
     path (pinned by the oracle rows and the differential test)."""
-    if not sort:
-        raise ValueError("$shift requires sortBy")
     ranged, _wloc, _bs, _tot = _global_scaffold(df, sort, bs)
     work, sh_aggs = _shift_prep(ranged, shifts)
     methods = {out: odoc for out, odoc in spec["output"].items()

@@ -782,12 +782,20 @@ def _split(op: str, args: Any, c) -> Column:
     return F.split(c(s), re.escape(delim))
 
 
+# Mongo's default $trim set: NUL, space, \t \n \v \f \r and the
+# Unicode spaces U+00A0, U+1680, U+2000-U+200A, U+2028, U+2029, U+202F,
+# U+205F, U+3000
+_TRIM_WHITESPACE = "".join(map(chr, (
+    0x00, 0x20, *range(0x09, 0x0E), 0xA0, 0x1680, *range(0x2000, 0x200B),
+    0x2028, 0x2029, 0x202F, 0x205F, 0x3000)))
+
+
 def _trim(op: str, args: Any, c) -> Column:
     spec = args if isinstance(args, dict) else {"input": args}
     inp = c(spec["input"])
     chars = spec.get("chars")
     if chars is None:
-        return {"$trim": F.trim, "$ltrim": F.ltrim, "$rtrim": F.rtrim}[op](inp)
+        chars = _TRIM_WHITESPACE
     if not isinstance(chars, str) or not chars:
         raise ValueError(f"{op} chars must be a literal string")
     # Mongo trims ANY char in the set; re.escape leaves alphanumerics

@@ -507,6 +507,43 @@ def test_partitioned_window_rejects_boolean_bounds(spark):
                 "output": {"s": {"$sum": "$v", "window": win}}}}])
 
 
+def test_partitioned_window_rejects_inverted_frame_and_bounds(spark):
+    """An inverted frame used to answer from a differenced empty frame
+    (the partitioned $sum over documents [1, -1] returned -v), and a
+    window on $shift was silently ignored; both now raise from the
+    planner before any Spark work."""
+    from maggma_spark.functions.agg_pipeline import compile_pipeline
+
+    df = spark.createDataFrame([("a", i, float(i)) for i in range(4)],
+                               "g string, t int, v double")
+
+    def run(output):
+        return compile_pipeline(df, [{"$setWindowFields": {
+            "partitionBy": "$g", "sortBy": {"t": 1}, "output": output}}])
+
+    with pytest.raises(ValueError, match="lower bound is above"):
+        run({"s": {"$sum": "$v", "window": {"documents": [1, -1]}}})
+    with pytest.raises(ValueError, match="takes no window bounds"):
+        run({"s": {"$shift": {"output": "$v", "by": 1},
+                   "window": {"documents": [-1, 0]}}})
+
+
+def test_partitioned_linear_fill_descending_sort(spark):
+    """$linearFill interpolates along its single sortBy field in either
+    direction, like the unpartitioned path."""
+    from maggma_spark.functions.agg_pipeline import compile_pipeline
+
+    df = spark.createDataFrame(
+        [("a", 0, 0.0), ("a", 1, None), ("a", 3, None), ("a", 4, 8.0),
+         ("a", 5, None)], "g string, t int, v double")
+    for direction in (1, -1):
+        out = compile_pipeline(df, [{"$setWindowFields": {
+            "partitionBy": "$g", "sortBy": {"t": direction},
+            "output": {"f": {"$linearFill": "$v"}}}}]).collect()
+        assert {r["t"]: r["f"] for r in out} == {
+            0: 0.0, 1: 2.0, 3: 6.0, 4: 8.0, 5: None}
+
+
 def test_set_window_fields_range_frame(spark):
     """Value-based `range` window: sum over sortBy-field offsets
     [-2, 0] — rows within value distance 2, not row positions."""

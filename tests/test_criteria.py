@@ -834,6 +834,25 @@ def test_expr_unary_list_unwrap_and_trim_chars(spark):
         val({"$abs": [1, 2]})
 
 
+def test_expr_trim_default_whitespace(spark):
+    """$trim/$ltrim/$rtrim without `chars` strip Mongo's whitespace set
+    (NUL, \\t\\n\\v\\f\\r, space and the Unicode spaces), not only ' '."""
+    from maggma_spark.functions.criteria import compile_expr
+
+    df = spark.createDataFrame([(1,)], "k int")
+
+    def val(expr):
+        return df.select(compile_expr(
+            expr, lambda nm: df[nm]).alias("v")).first()["v"]
+
+    assert val({"$trim": {"input": "\thi\n"}}) == "hi"
+    assert val({"$trim": {"input": "\xa0hi"}}) == "hi"
+    assert val({"$trim": {"input": "\x00hi "}}) == "hi"
+    assert val({"$ltrim": {"input": "\u3000\u2002 hi\u2028"}}) \
+        == "hi\u2028"
+    assert val({"$rtrim": {"input": "\x0b hi\x0c\r\u205f"}}) == "\x0b hi"
+
+
 _EXPR_ROW_DDL = (
     "n bigint, q bigint, x double, f double, s string, u string, "
     "p string, t string, num string, ds string, z string, "

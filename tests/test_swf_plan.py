@@ -1,13 +1,19 @@
-"""The unpartitioned $setWindowFields planner (`_swf_plan`) is a pure
-function of the stage spec and sortBy: these tests run without a
-SparkSession. One table-driven case per plan kind, one case per
-shape error the planner raises (matched on message text)."""
+"""The $setWindowFields planner is a pure function of the stage spec and
+sortBy: these tests run without a SparkSession. `_swf_plans` is the one
+planner both compiles read; `_swf_plan` is its unpartitioned view (the
+scaffold kinds). One table-driven case per unpartitioned kind and per
+partitioned family, one case per shape error the planner raises
+(matched on message text)."""
 
 from __future__ import annotations
 
 import pytest
 
-from maggma_spark.functions.agg_pipeline import _swf_plan
+from maggma_spark.functions.agg_pipeline import (
+    _PW_ASSEMBLERS,
+    _swf_plan,
+    _swf_plans,
+)
 
 TS = {"t": 1}
 UNB, CUR = "unbounded", "current"
@@ -198,3 +204,124 @@ def test_plan_rejects_mixed_unit_ranges():
         "b": {"$sum": "$v", "window": {"range": [UNB, CUR]}}}}
     with pytest.raises(ValueError, match="cannot mix `unit`"):
         _swf_plan(spec, TS)
+
+
+def shared_one(odoc: dict, sort: dict = TS) -> dict:
+    return _swf_plans({"output": {"o": odoc}}, sort)["o"]
+
+
+DOCS_WHOLE = {"axis": "documents", "shape": "whole",
+              "bounds": [UNB, UNB], "fin": None, "offsets": (UNB, UNB)}
+DOCS_RUN = {"axis": "documents", "shape": "fwd", "bounds": [UNB, CUR],
+            "fin": None, "offsets": (UNB, 0)}
+
+# one case per partitioned family: the whole shared plan
+FAMILY_CASES = [
+    ("rank", {"$documentNumber": {}}, TS,
+     {"name": "$documentNumber", "family": "rank", "op": "$documentNumber",
+      "arg": {}, **DOCS_WHOLE}),
+    ("shift", {"$shift": {"output": "$v", "by": -2, "default": 0}}, TS,
+     {"name": "$shift", "family": "shift", "op": "$shift",
+      "arg": {"output": "$v", "by": -2, "default": 0}, **DOCS_WHOLE}),
+    ("locf", {"$locf": "$v"}, TS,
+     {"name": "$locf", "family": "locf", "op": "$locf", "arg": "$v",
+      **DOCS_WHOLE}),
+    ("linearFill", {"$linearFill": "$v"}, {"t": -1},
+     {"name": "$linearFill", "family": "linearFill", "op": "$linearFill",
+      "arg": "$v", **DOCS_WHOLE}),
+    ("ema", {"$expMovingAvg": {"input": "$v", "alpha": 0.25}}, TS,
+     {"name": "$expMovingAvg", "family": "ema", "op": "$expMovingAvg",
+      "arg": "$v", "alpha": 0.25, **DOCS_WHOLE}),
+    ("deriv", {"$derivative": {"input": "$v", "unit": "second"},
+               "window": {"range": [-2, CUR], "unit": "minute"}}, TS,
+     {"name": "$derivative", "family": "deriv", "op": "$deriv",
+      "arg": "$v", "tunit": "second", "axis": "range", "shape": None,
+      "bounds": [-2, CUR], "fin": None, "unit": "minute",
+      "offsets": (-120_000, 0)}),
+    ("integ", {"$integral": {"input": "$v"},
+               "window": {"documents": [-3, CUR]}}, TS,
+     {"name": "$integral", "family": "integ", "op": "$integ", "arg": "$v",
+      "tunit": None, "axis": "documents", "shape": "fin",
+      "bounds": [-3, CUR], "fin": (-3, 0), "offsets": (-3, 0)}),
+    ("pctl", {"$percentile": {"input": "$v", "p": [0.1, 0.9]},
+              "window": {"range": [UNB, 0]}}, TS,
+     {"name": "$percentile", "family": "pctl", "op": "$pctl", "arg": "$v",
+      "ps": [0.1, 0.9], "scalar": False, "axis": "range", "shape": "fwd",
+      "bounds": [UNB, 0], "fin": None, "unit": None, "offsets": (UNB, 0)}),
+    ("moment", {"$count": {}, "window": {"range": [-1.5, 2],
+                                         "unit": "hour"}}, TS,
+     {"name": "$count", "family": "moment", "op": "$sum", "arg": 1,
+      "axis": "range", "shape": "fin", "bounds": [-1.5, 2],
+      "fin": (-1.5, 2), "unit": "hour",
+      "offsets": (-5_400_000, 7_200_000)}),
+    ("firstlast", {"$first": "$v"}, {},
+     {"name": "$first", "family": "firstlast", "op": "$first",
+      "arg": "$v", **DOCS_WHOLE}),
+    ("acc", {"$push": "$v", "window": {"documents": [UNB, CUR]}}, TS,
+     {"name": "$push", "family": "acc", "op": "$push", "arg": "$v",
+      **DOCS_RUN}),
+]
+
+
+@pytest.mark.parametrize("odoc,sort,want",
+                         [c[1:] for c in FAMILY_CASES],
+                         ids=[c[0] for c in FAMILY_CASES])
+def test_shared_plan_families(odoc, sort, want):
+    assert shared_one(odoc, sort) == want
+
+
+def test_shared_plan_covers_every_partitioned_family():
+    assert {c[3]["family"] for c in FAMILY_CASES} == set(_PW_ASSEMBLERS)
+
+
+def test_unpartitioned_view_projects_the_shared_plan():
+    """`_swf_plan` keeps only the keys of its kind; the frame keys stay
+    in the shared plan."""
+    odoc = {"$sum": "$v", "window": {"documents": [-3, CUR]}}
+    assert plan_one(odoc) == {"kind": "dfin", "op": "$sum", "arg": "$v",
+                              "frame": (-3, 0)}
+    assert shared_one(odoc)["offsets"] == (-3, 0)
+
+
+WINDOWLESS = ["$rank", "$denseRank", "$documentNumber", "$shift", "$locf",
+              "$linearFill"]
+
+
+@pytest.mark.parametrize("op", WINDOWLESS)
+def test_windowless_operators_reject_window(op):
+    odoc = {op: {"output": "$v", "by": 1} if op == "$shift" else {},
+            "window": {"documents": [-1, 0]}}
+    with pytest.raises(ValueError, match=rf"\{op} takes no window bounds"):
+        shared_one(odoc)
+
+
+SHARED_ERROR_CASES = [
+    ("inverted_documents", {"$sum": "$v", "window": {"documents": [1, -1]}},
+     r"\$sum over the documents frame \[1, -1\] is not supported: its "
+     "lower bound is above its upper bound"),
+    ("inverted_documents_current",
+     {"$max": "$v", "window": {"documents": [2, CUR]}},
+     r"\$max over the documents frame \[2, 'current'\] is not supported"),
+    ("inverted_range", {"$avg": "$v", "window": {"range": [2, 1]}},
+     r"\$avg over the range frame \[2, 1\] is not supported: its lower "
+     "bound is above its upper bound"),
+    ("inverted_range_current",
+     {"$push": "$v", "window": {"range": [CUR, -1], "unit": "day"}},
+     r"\$push over the range frame \['current', -1\] is not supported"),
+    ("bound_string", {"$sum": "$v", "window": {"documents": ["first", 0]}},
+     "window bounds must be numbers"),
+    ("documents_fraction", {"$sum": "$v",
+                            "window": {"documents": [-1.5, 0]}},
+     "documents frame offsets .* must scale to integers"),
+    ("linear_fill_two_sorts", {"$linearFill": "$v"},
+     r"\$linearFill requires exactly one sortBy field"),
+]
+
+
+@pytest.mark.parametrize("odoc,match",
+                         [c[1:] for c in SHARED_ERROR_CASES],
+                         ids=[c[0] for c in SHARED_ERROR_CASES])
+def test_shared_plan_errors(odoc, match):
+    sort = {"t": 1, "u": 1} if "$linearFill" in odoc else TS
+    with pytest.raises(ValueError, match=match):
+        shared_one(odoc, sort)
