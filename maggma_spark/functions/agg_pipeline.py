@@ -813,33 +813,34 @@ def _vector_search(df: DataFrame, spec: dict) -> DataFrame:
             .limit(k))
 
 
-def _compile_search(df: DataFrame, spec: dict):
-    """Shared $search/$searchMeta compiler: returns (base, predicate,
-    score, helpers) — `base` is `df` with the helper columns added,
-    `helpers` their names, for the caller to drop after the filter/
-    score projection.
+# options that would silently change semantics if ignored raise
+_SEARCH_OPTIONS = {
+    "text": {"query", "path", "score", "fuzzy"},
+    "phrase": {"query", "path", "slop", "score"},
+    "equals": {"path", "value", "score"},
+    "range": {"path", "gt", "gte", "lt", "lte", "score"},
+    "exists": {"path", "score"},
+    "in": {"path", "value", "score"},
+    "wildcard": {"query", "path", "allowAnalyzedField", "score"},
+    "regex": {"query", "path", "allowAnalyzedField", "score"},
+    "autocomplete": {"query", "path", "tokenOrder", "score"},
+    "near": {"path", "origin", "pivot", "score"},
+    "compound": {"must", "mustNot", "should", "filter",
+                 "minimumShouldMatch"}}
+_SEARCH_GROUPS = ("must", "mustNot", "should", "filter")
 
-    Helper columns (round-13, guide §1.2 per-task work): the scoring
-    expressions reference the tokenized text and each term's fuzzy
-    tf count SEVERAL times (tf twice inside every bm25 term, the
-    token array once per term plus once for dl, the padded text once
-    per autocomplete token), and the higher-order filter/exists calls
-    are CodegenFallback — Catalyst neither fuses nor CSEs them, so
-    every reference re-tokenizes (and re-runs the per-token
-    levenshtein) per row. The compiler registers those subtrees as
-    named helper columns, added by two ``withColumns`` calls (level 2
-    references level 1), and references the columns instead.
-    Measured ×1.4 on the fuzzy-scoring scan fragment; values are
-    bit-identical (same trees, evaluated once).
+
+def _search_plan(spec: dict) -> dict:
+    """Session-free plan of a $search/$searchMeta operator spec: ONE
+    walk of the clause tree that normalizes paths, query terms, fuzzy
+    keys and phrases, rejects every option it does not model, and
+    registers the corpus statistics the scoring needs. Returns
+    {"root": clause, "len_paths", "term_reqs", "phrase_reqs"}: the
+    requirement lists are in walk order, which names the stats
+    aggregate's columns. Every error raises here, before any Spark job.
 
     Atlas lexical search (the reference compiles $text into Atlas
-    $search pipelines, reference:src/maggma/api/resource/utils.py:69-115)
-    re-expressed as the bm25_rank two-job shape (functions/text.py):
-    ONE corpus-stats aggregate (N, per-path length sums, per-term and
-    per-phrase document frequencies — scalar row, folded into literals)
-    and a pure-JVM scoring scan. No join, no shuffle; at 100 TB the
-    stats pass is one scan and scoring pipelines into whatever follows.
-
+    $search pipelines, reference:src/maggma/api/resource/utils.py:69-115).
     Operators: `text` (BM25 sum over query terms; `path` may be a
     string or list — list scores sum, predicate ORs), `phrase`
     (contiguous token sequence as one pseudo-term, slop unsupported),
@@ -849,17 +850,8 @@ def _compile_search(df: DataFrame, spec: dict):
     (Atlas pivot decay pivot/(pivot+dist); numeric or date origin,
     geo raises), and `compound` with must/mustNot/should/filter +
     minimumShouldMatch (defaults to 1 when only should clauses
-    constrain, as in Atlas). Non-scoring clauses (equals/range/exists/
-    in/wildcard/regex/autocomplete/filter) contribute Atlas's constant
-    score 1 / 0; every clause accepts `score: {boost: {value}}` /
-    `{constant: {value}}`. Phrase tf counts non-overlapping padded
-    occurrences in the normalized text — self-overlapping phrases
-    ("a a" in "a a a") undercount vs Lucene's sloppy counter."""
-    import math as _m
-
-    from maggma_spark.functions.text import normalized_text, tokens
-
-    K1, B = 1.2, 0.75
+    constrain, as in Atlas). Every clause but compound accepts
+    `score: {boost: {value}}` / `{constant: {value}}`."""
     spec = dict(spec)
     spec.pop("index", None)
     spec.pop("sort", None)  # consumed by _search
@@ -867,373 +859,435 @@ def _compile_search(df: DataFrame, spec: dict):
         raise ValueError(
             "$search takes exactly one operator (plus optional "
             "index/sort)")
-    ((op0, args0),) = spec.items()
+    plan: dict = {"len_paths": [], "term_reqs": [], "phrase_reqs": []}
+    ((op, args),) = spec.items()
+    plan["root"] = _search_clause_plan(op, args, plan)
+    return plan
 
-    def _paths(args):
-        p = args["path"]
-        return p if isinstance(p, list) else [p]
 
-    def _terms(args):
-        qs = args["query"]
-        qs = qs if isinstance(qs, list) else [qs]
-        out: list[str] = []
-        for q in qs:
-            for t in q.lower().split():
-                if t and t not in out:
-                    out.append(t)
-        return out
-
-    def _fuzzy_key(args):
-        """Normalized (maxEdits, prefixLength) for a text clause's
-        `fuzzy` option, or None. Atlas fuzzy: maxEdits 1|2 (default
-        2), prefixLength exact-prefix chars (default 0). maxExpansions
-        caps the INDEX's candidate-term expansion — with no index we
-        match every in-document token within the edit budget, a
-        superset of any capped expansion (DEVIATIONS §21). Lucene
-        measures Damerau-Levenshtein (transposition = 1 edit); Spark's
-        levenshtein counts it as 2 — documented there too."""
-        fz = args.get("fuzzy")
-        if fz is None:
-            return None
-        extra = set(fz) - {"maxEdits", "prefixLength", "maxExpansions"}
-        if extra:
-            raise ValueError(
-                f"$search text fuzzy options {sorted(extra)} are not "
-                "supported")
-        me = int(fz.get("maxEdits", 2))
-        if me not in (1, 2):
-            raise ValueError("fuzzy maxEdits must be 1 or 2")
-        return me, int(fz.get("prefixLength", 0))
-
-    def _fuzzy_tok(x, t, fzkey):
-        me, pl = fzkey
-        # threshold form short-circuits: -1 past the edit budget
-        cond = F.levenshtein(x, F.lit(t), me) != F.lit(-1)
-        if pl:
-            cond = cond & x.startswith(t[:pl])
-        return cond
-
-    def _tok_match(t, fzkey):
-        """One-arg element predicate for F.filter/F.exists. A real
-        closure, NOT a defaulted lambda: pyspark's higher-order
-        functions count the callable's parameters (defaults included)
-        and would pass the element INDEX into a default arg."""
-        if fzkey is None:
-            def m(x):
-                return x == F.lit(t)
-        else:
-            def m(x):
-                return _fuzzy_tok(x, t, fzkey)
-        return m
-
-    # ---- phase 1: walk the tree, register every stats requirement
-    term_reqs: list[tuple] = []              # (path, term, fuzzy_key)
-    phrase_reqs: list[tuple[str, str]] = []  # (path, normalized phrase)
-    len_paths: list[str] = []
-
-    def walk(op, args):
-        if op == "compound":
-            for key in ("must", "mustNot", "should", "filter"):
-                for sub in args.get(key, ()):
-                    ((o, a),) = sub.items()
-                    walk(o, a)
-            return
-        if op in ("text", "phrase"):
-            for p in _paths(args):
-                if p not in len_paths:
-                    len_paths.append(p)
-                if op == "text":
-                    fzkey = _fuzzy_key(args)
-                    for t in _terms(args):
-                        if (p, t, fzkey) not in term_reqs:
-                            term_reqs.append((p, t, fzkey))
-                else:
-                    ph = " ".join(args["query"].lower().split())
-                    if not ph:
-                        raise ValueError("phrase query must be non-empty")
-                    if (p, ph) not in phrase_reqs:
-                        phrase_reqs.append((p, ph))
-
-    walk(op0, args0)
-
-    def toks_of(p):
-        return tokens(normalized_text(_value(df, f"${p}")))
-
-    def padded_of(p):
-        return F.concat(F.lit(" "),
-                        normalized_text(_value(df, f"${p}")), F.lit(" "))
-
-    # helper-column registries. Level 1 holds the tokenized / padded
-    # text per path; level 2 holds per-(path, term, fuzzy) tf counts,
-    # whose exprs reference level-1 COLUMNS — so they apply as two
-    # consecutive withColumns calls. The stats aggregate below
-    # deliberately keeps the inline trees: it is ONE pass either way.
-    base_cols: dict = {}
-    tf_cols: dict = {}
-    _toks_names: dict = {}
-    _pad_names: dict = {}
-    _tf_names: dict = {}
-
-    def toks_ref(p):
-        nm = _toks_names.get(p)
-        if nm is None:
-            nm = f"__srch_toks_{len(_toks_names)}"
-            _toks_names[p] = nm
-            base_cols[nm] = toks_of(p)
-        return F.col(nm)
-
-    def pad_ref(p):
-        nm = _pad_names.get(p)
-        if nm is None:
-            nm = f"__srch_pad_{len(_pad_names)}"
-            _pad_names[p] = nm
-            base_cols[nm] = padded_of(p)
-        return F.col(nm)
-
-    def tf_ref(p, t, fzkey):
-        expr = F.size(F.filter(toks_ref(p), _tok_match(t, fzkey)))
-        key = (p, t, fzkey)
-        nm = _tf_names.get(key)
-        if nm is None:
-            nm = f"__srch_tf_{len(_tf_names)}"
-            _tf_names[key] = nm
-            tf_cols[nm] = expr
-        return F.col(nm)
-
-    stats = None
-    if len_paths:  # ONE driver action for every scoring constant
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for i, p in enumerate(len_paths):
-            aggs.append(F.sum(F.size(toks_of(p))).alias(f"len__{i}"))
-        for i, (p, t, fzkey) in enumerate(term_reqs):
-            if fzkey is None:
-                hit = F.array_contains(toks_of(p), t)
-            else:
-                hit = F.exists(toks_of(p), _tok_match(t, fzkey))
-            aggs.append(F.sum(hit.cast("long")).alias(f"df__{i}"))
-        for i, (p, ph) in enumerate(phrase_reqs):
-            aggs.append(F.sum(F.contains(padded_of(p),
-                                         F.lit(f" {ph} "))
-                              .cast("long")).alias(f"pdf__{i}"))
-        stats = df.agg(*aggs).first()
-
-    def bm25(path, tf, df_count):
-        n = stats["n"]
-        avgdl = (stats[f"len__{len_paths.index(path)}"] / n) if n else 1.0
-        idf = _m.log(1.0 + (n - df_count + 0.5) / (df_count + 0.5))
-        dl = F.size(toks_ref(path))
-        return F.lit(idf) * (
-            tf * (K1 + 1.0)
-            / (tf + K1 * (1.0 - B + B * dl / F.lit(avgdl))))
-
-    # options that would silently change semantics if ignored raise
-    _ALLOWED = {"text": {"query", "path", "score", "fuzzy"},
-                "phrase": {"query", "path", "slop", "score"},
-                "equals": {"path", "value", "score"},
-                "range": {"path", "gt", "gte", "lt", "lte", "score"},
-                "exists": {"path", "score"},
-                "in": {"path", "value", "score"},
-                "wildcard": {"query", "path", "allowAnalyzedField",
-                             "score"},
-                "regex": {"query", "path", "allowAnalyzedField", "score"},
-                "autocomplete": {"query", "path", "tokenOrder", "score"},
-                "near": {"path", "origin", "pivot", "score"},
-                "compound": {"must", "mustNot", "should", "filter",
-                             "minimumShouldMatch"}}
-
-    def _score_opt(score, args):
-        """Atlas per-clause `score` option: {boost: {value}} multiplies,
-        {constant: {value}} replaces. `boost.path`/`function` score
-        expressions are not modeled (raise)."""
-        opt = args.get("score")
-        if opt is None:
-            return score
-        if not isinstance(opt, dict) or len(opt) != 1:
-            raise ValueError("$search score takes exactly one of "
-                             "boost/constant")
-        ((kind, body),) = opt.items()
-        if kind == "boost" and set(body) == {"value"}:
-            return score * F.lit(float(body["value"]))
-        if kind == "constant" and set(body) == {"value"}:
-            return F.lit(float(body["value"]))
-        raise ValueError(
-            f"$search score option {kind!r} with keys "
-            f"{sorted(body)} is not supported (boost.value / "
-            "constant.value only)")
-
-    def _wildcard_like(q: str) -> str:
-        """Translate Atlas/Lucene wildcard (* ? with \\ escapes) to a
-        SQL LIKE pattern, escaping LIKE's own metacharacters."""
-        out, i = [], 0
-        while i < len(q):
-            c = q[i]
-            if c == "\\" and i + 1 < len(q):
-                nxt = q[i + 1]
-                out.append("\\" + nxt if nxt in "%_\\" else nxt)
-                i += 2
-                continue
-            if c == "*":
-                out.append("%")
-            elif c == "?":
-                out.append("_")
-            elif c in "%_":
-                out.append("\\" + c)
-            elif c == "\\":  # trailing lone backslash: match literally
-                out.append("\\\\")
-            else:
-                out.append(c)
-            i += 1
-        return "".join(out)
-
-    # ---- phase 2: compile each clause to (predicate, score)
-    def clause(op, args):
-        if op in _ALLOWED:
-            extra = set(args) - _ALLOWED[op]
-            if extra:
-                raise ValueError(
-                    f"$search {op} options {sorted(extra)} are not "
-                    "supported")
-        if op == "text":
-            fzkey = _fuzzy_key(args)
-            score = F.lit(0.0)
-            for p in _paths(args):
-                for t in _terms(args):
-                    tf = tf_ref(p, t, fzkey)
-                    score = score + bm25(p, tf, stats[
-                        f"df__{term_reqs.index((p, t, fzkey))}"])
-            return score > 0, _score_opt(score, args)
-        if op == "phrase":
-            if args.get("slop"):
-                raise ValueError("$search phrase slop is not supported")
-            ph = " ".join(args["query"].lower().split())
-            pad = f" {ph} "
-            score = F.lit(0.0)
-            for p in _paths(args):
-                padded = pad_ref(p)
-                tf = ((F.length(padded)
-                       - F.length(F.replace(padded, F.lit(pad))))
-                      / F.lit(len(pad))).cast("int")
-                score = score + bm25(p, tf, stats[
-                    f"pdf__{phrase_reqs.index((p, ph))}"])
-            return score > 0, _score_opt(score, args)
-        if op in ("equals", "range", "exists", "in"):
-            col = _value(df, "$" + args["path"])
-            if op == "equals":
-                pred = col == _lit(args["value"])
-            elif op == "exists":
-                pred = col.isNotNull()
-            elif op == "in":
-                pred = col.isin(list(args["value"]))
-            else:
-                pred = F.lit(True)
-                for key, cmp in (("gt", col.__gt__), ("gte", col.__ge__),
-                                 ("lt", col.__lt__), ("lte", col.__le__)):
-                    if key in args:
-                        pred = pred & cmp(_lit(args[key]))
-            return pred, F.when(
-                pred, _score_opt(F.lit(1.0), args)).otherwise(0.0)
-        if op in ("wildcard", "regex"):
-            # keyword semantics: the pattern matches the WHOLE raw
-            # field value (Atlas keyword-analyzer behavior);
-            # allowAnalyzedField's per-token matching against analyzer
-            # output is an index-internals behavior not modeled here
-            # (DEVIATIONS §21).
-            q = args["query"]
-            pred = F.lit(False)
-            for p in _paths(args):
-                col = _value(df, "$" + p).cast("string")
-                if op == "wildcard":
-                    pred = pred | col.like(_wildcard_like(q))
-                else:
-                    pred = pred | col.rlike(f"^(?:{q})$")
-            return pred, F.when(
-                pred, _score_opt(F.lit(1.0), args)).otherwise(0.0)
-        if op == "autocomplete":
-            # token-prefix match over the normalized text: " t" in the
-            # space-padded text <=> some token starts with t.
-            # tokenOrder "any" (default): every query token is a token
-            # prefix somewhere; "sequential": the tokens appear
-            # contiguously in order, last one as a prefix. Constant
-            # score (Atlas edgeGram scoring is index-internal).
-            ts = _terms(args)
-            if not ts:
-                raise ValueError("autocomplete query must be non-empty")
-            order = args.get("tokenOrder", "any")
-            if order not in ("any", "sequential"):
-                raise ValueError(f"autocomplete tokenOrder {order!r}")
-            pred = F.lit(False)
-            for p in _paths(args):
-                padded = pad_ref(p)
-                if order == "sequential":
-                    sub = F.contains(padded, F.lit(" " + " ".join(ts)))
-                else:
-                    sub = F.lit(True)
-                    for t in ts:
-                        sub = sub & F.contains(padded, F.lit(" " + t))
-                pred = pred | sub
-            return pred, F.when(
-                pred, _score_opt(F.lit(1.0), args)).otherwise(0.0)
-        if op == "near":
-            # Atlas's published decay: score = pivot / (pivot + dist).
-            # Numeric origin -> |x - origin|; date origin -> millisecond
-            # distance (pivot in ms). Geo points unsupported (raise;
-            # $geoNear disposition, DEVIATIONS §15).
-            origin, pivot = args["origin"], args["pivot"]
-            if isinstance(origin, dict):
-                raise ValueError("$search near geo origins are not "
-                                 "supported (DEVIATIONS §15)")
-            if not float(pivot) > 0:
-                raise ValueError("$search near pivot must be > 0")
-            score = F.lit(0.0)
-            pred = F.lit(False)
-            for p in _paths(args):
-                col = _value(df, "$" + p)
-                if isinstance(origin, str):  # ISO date string
-                    dist = F.abs(
-                        F.unix_millis(col.cast("timestamp"))
-                        - F.unix_millis(F.lit(origin).cast("timestamp")))
-                else:
-                    dist = F.abs(col - F.lit(origin))
-                here = col.isNotNull()
-                score = score + F.when(
-                    here,
-                    F.lit(float(pivot)) / (F.lit(float(pivot)) + dist)
-                ).otherwise(0.0)
-                pred = pred | here
-            return pred, _score_opt(score, args)
-        if op == "compound":
-            groups = {k: [clause(*next(iter(s.items())))
-                          for s in args.get(k, ())]
-                      for k in ("must", "mustNot", "should", "filter")}
-            pred = F.lit(True)
-            for p, _ in groups["must"] + groups["filter"]:
-                pred = pred & p
-            for p, _ in groups["mustNot"]:
-                pred = pred & ~F.coalesce(p, F.lit(False))
-            msm = args.get(
-                "minimumShouldMatch",
-                0 if (groups["must"] or groups["filter"]) else
-                (1 if groups["should"] else 0))
-            if groups["should"] and msm:
-                matched = sum(
-                    (F.coalesce(p, F.lit(False)).cast("int")
-                     for p, _ in groups["should"]), F.lit(0))
-                pred = pred & (matched >= msm)
-            score = F.lit(0.0)
-            for _, s in groups["must"]:
-                score = score + s
-            for p, s in groups["should"]:
-                score = score + F.when(
-                    F.coalesce(p, F.lit(False)), s).otherwise(0.0)
-            return pred, score
+def _search_clause_plan(op: str, args: dict, plan: dict) -> dict:
+    """One clause of _search_plan, its stats requirements appended to
+    `plan` (deduplicated, in walk order)."""
+    if op not in _SEARCH_OPTIONS:
         raise ValueError(f"unsupported $search operator {op!r}")
+    extra = set(args) - _SEARCH_OPTIONS[op]
+    if extra:
+        raise ValueError(
+            f"$search {op} options {sorted(extra)} are not supported")
+    c = {"op": op, "score": _search_score_plan(args.get("score"))}
+    if op == "compound":
+        c["groups"] = {k: [_search_clause_plan(*_one_item(s), plan)
+                           for s in args.get(k, ())]
+                       for k in _SEARCH_GROUPS}
+        c["msm"] = args.get(
+            "minimumShouldMatch",
+            0 if (c["groups"]["must"] or c["groups"]["filter"]) else
+            (1 if c["groups"]["should"] else 0))
+        return c
+    if op in ("equals", "exists", "in"):
+        c["path"], c["value"] = args["path"], args.get("value")
+        return c
+    if op == "range":
+        c["path"] = args["path"]
+        c["bounds"] = [(k, args[k]) for k in ("gt", "gte", "lt", "lte")
+                       if k in args]
+        return c
+    p = args["path"]
+    c["paths"] = p if isinstance(p, list) else [p]
+    if op == "near":
+        if isinstance(args["origin"], dict):
+            raise ValueError("$search near geo origins are not "
+                             "supported (DEVIATIONS §15)")
+        if not float(args["pivot"]) > 0:
+            raise ValueError("$search near pivot must be > 0")
+        c["origin"], c["pivot"] = args["origin"], float(args["pivot"])
+    elif op in ("wildcard", "regex"):
+        q = args["query"]
+        c["pattern"] = (_wildcard_like(q) if op == "wildcard"
+                        else f"^(?:{q})$")
+    elif op == "phrase":
+        if args.get("slop"):
+            raise ValueError("$search phrase slop is not supported")
+        c["phrase"] = " ".join(args["query"].lower().split())
+        if not c["phrase"]:
+            raise ValueError("phrase query must be non-empty")
+    else:  # text / autocomplete
+        c["terms"] = _search_terms(args["query"])
+        if op == "autocomplete":
+            if not c["terms"]:
+                raise ValueError("autocomplete query must be non-empty")
+            c["order"] = args.get("tokenOrder", "any")
+            if c["order"] not in ("any", "sequential"):
+                raise ValueError(f"autocomplete tokenOrder {c['order']!r}")
+        else:
+            c["fuzzy"] = _fuzzy_key(args.get("fuzzy"))
+    if op in ("text", "phrase"):
+        for p in c["paths"]:
+            _add_once(plan["len_paths"], p)
+            if op == "phrase":
+                _add_once(plan["phrase_reqs"], (p, c["phrase"]))
+            for t in c.get("terms", ()):
+                _add_once(plan["term_reqs"], (p, t, c["fuzzy"]))
+    return c
 
-    pred0, score0 = clause(op0, args0)
+
+def _one_item(d: dict) -> tuple:
+    ((k, v),) = d.items()
+    return k, v
+
+
+def _add_once(xs: list, x) -> None:
+    if x not in xs:
+        xs.append(x)
+
+
+def _search_terms(query) -> list:
+    """Lower-cased, de-duplicated whitespace tokens of a query string
+    or list of strings, in first-seen order."""
+    out: list = []
+    for q in query if isinstance(query, list) else [query]:
+        for t in q.lower().split():
+            _add_once(out, t)
+    return out
+
+
+def _fuzzy_key(fz) -> Optional[tuple]:
+    """Normalized (maxEdits, prefixLength) of a text clause's `fuzzy`
+    option, or None. Atlas fuzzy: maxEdits 1|2 (default 2),
+    prefixLength exact-prefix chars (default 0). maxExpansions caps the
+    INDEX's candidate-term expansion — with no index we match every
+    in-document token within the edit budget, a superset of any capped
+    expansion (DEVIATIONS §21). Lucene measures Damerau-Levenshtein
+    (transposition = 1 edit); Spark's levenshtein counts it as 2 —
+    documented there too."""
+    if fz is None:
+        return None
+    extra = set(fz) - {"maxEdits", "prefixLength", "maxExpansions"}
+    if extra:
+        raise ValueError(
+            f"$search text fuzzy options {sorted(extra)} are not "
+            "supported")
+    me = int(fz.get("maxEdits", 2))
+    if me not in (1, 2):
+        raise ValueError("fuzzy maxEdits must be 1 or 2")
+    return me, int(fz.get("prefixLength", 0))
+
+
+def _search_score_plan(opt) -> Optional[tuple]:
+    """Atlas per-clause `score` option as ("boost" | "constant", value),
+    or None. `boost.path`/`function` score expressions are not modeled
+    (raise)."""
+    if opt is None:
+        return None
+    if not isinstance(opt, dict) or len(opt) != 1:
+        raise ValueError("$search score takes exactly one of "
+                         "boost/constant")
+    ((kind, body),) = opt.items()
+    if kind in ("boost", "constant") and set(body) == {"value"}:
+        return kind, float(body["value"])
+    raise ValueError(
+        f"$search score option {kind!r} with keys "
+        f"{sorted(body)} is not supported (boost.value / "
+        "constant.value only)")
+
+
+def _score_opt(score: Column, opt: Optional[tuple]) -> Column:
+    """Apply a planned `score` option: boost multiplies, constant
+    replaces."""
+    if opt is None:
+        return score
+    kind, value = opt
+    return score * F.lit(value) if kind == "boost" else F.lit(value)
+
+
+def _wildcard_like(q: str) -> str:
+    """Translate Atlas/Lucene wildcard (* ? with \\ escapes) to a SQL
+    LIKE pattern, escaping LIKE's own metacharacters."""
+    out, i = [], 0
+    while i < len(q):
+        c = q[i]
+        if c == "\\" and i + 1 < len(q):
+            nxt = q[i + 1]
+            out.append("\\" + nxt if nxt in "%_\\" else nxt)
+            i += 2
+            continue
+        if c == "*":
+            out.append("%")
+        elif c == "?":
+            out.append("_")
+        elif c in "%_":
+            out.append("\\" + c)
+        elif c == "\\":  # trailing lone backslash: match literally
+            out.append("\\\\")
+        else:
+            out.append(c)
+        i += 1
+    return "".join(out)
+
+
+def _tok_match(t: str, fzkey: Optional[tuple]):
+    """One-arg element predicate for F.filter/F.exists: token == t, or
+    within the fuzzy edit budget (threshold levenshtein short-circuits:
+    -1 past it) sharing the exact prefix. A real closure, NOT a
+    defaulted lambda: pyspark's higher-order functions count the
+    callable's parameters (defaults included) and would pass the
+    element INDEX into a default arg."""
+    if fzkey is None:
+        def m(x):
+            return x == F.lit(t)
+    else:
+        me, pl = fzkey
+
+        def m(x):
+            cond = F.levenshtein(x, F.lit(t), me) != F.lit(-1)
+            if pl:
+                cond = cond & x.startswith(t[:pl])
+            return cond
+    return m
+
+
+def _search_tokens(df: DataFrame, p: str) -> Column:
+    from maggma_spark.functions.text import normalized_text, tokens
+
+    return tokens(normalized_text(_value(df, f"${p}")))
+
+
+def _search_padded(df: DataFrame, p: str) -> Column:
+    from maggma_spark.functions.text import normalized_text
+
+    return F.concat(F.lit(" "), normalized_text(_value(df, f"${p}")),
+                    F.lit(" "))
+
+
+def _search_stats(df: DataFrame, plan: dict):
+    """The bm25_rank two-job shape (functions/text.py): ONE corpus-stats
+    aggregate — N, per-path length sums, per-term and per-phrase
+    document frequencies, a scalar row folded into literals — then a
+    pure-JVM scoring scan. No join, no shuffle; at 100 TB the stats
+    pass is one scan. None (no action) when nothing scores by BM25.
+    The aggregate keeps the inline token trees: it is ONE pass either
+    way."""
+    if not plan["len_paths"]:
+        return None
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for i, p in enumerate(plan["len_paths"]):
+        aggs.append(F.sum(F.size(_search_tokens(df, p))).alias(f"len__{i}"))
+    for i, (p, t, fzkey) in enumerate(plan["term_reqs"]):
+        if fzkey is None:
+            hit = F.array_contains(_search_tokens(df, p), t)
+        else:
+            hit = F.exists(_search_tokens(df, p), _tok_match(t, fzkey))
+        aggs.append(F.sum(hit.cast("long")).alias(f"df__{i}"))
+    for i, (p, ph) in enumerate(plan["phrase_reqs"]):
+        aggs.append(F.sum(F.contains(_search_padded(df, p),
+                                     F.lit(f" {ph} ")).cast("long"))
+                    .alias(f"pdf__{i}"))
+    return df.agg(*aggs).first()
+
+
+class _SearchColumns:
+    """Helper columns of one $search compile (round-13, guide §1.2
+    per-task work): the scoring expressions reference the tokenized
+    text and each term's fuzzy tf count SEVERAL times (tf twice inside
+    every bm25 term, the token array once per term plus once for dl,
+    the padded text once per autocomplete token), and the higher-order
+    filter/exists calls are CodegenFallback — Catalyst neither fuses
+    nor CSEs them, so every reference would re-tokenize (and re-run
+    the per-token levenshtein) per row. Level 1 (`base`) holds the
+    tokenized / padded text per path; level 2 (`tfs`) the per-(path,
+    term, fuzzy) tf counts, whose exprs reference level-1 COLUMNS — so
+    they apply as two consecutive withColumns calls. Measured ×1.4 on
+    the fuzzy-scoring scan fragment; values are bit-identical (same
+    trees, evaluated once)."""
+
+    K1, B = 1.2, 0.75
+
+    def __init__(self, df: DataFrame, plan: dict, stats):
+        self.df, self.plan, self.stats = df, plan, stats
+        self.base: dict = {}
+        self.tfs: dict = {}
+        self._names: dict = {"toks": {}, "pad": {}, "tf": {}}
+
+    def _ref(self, kind: str, key, cols: dict, make) -> Column:
+        names = self._names[kind]
+        if key not in names:
+            names[key] = f"__srch_{kind}_{len(names)}"
+            cols[names[key]] = make()
+        return F.col(names[key])
+
+    def toks(self, p: str) -> Column:
+        return self._ref("toks", p, self.base,
+                         lambda: _search_tokens(self.df, p))
+
+    def pad(self, p: str) -> Column:
+        return self._ref("pad", p, self.base,
+                         lambda: _search_padded(self.df, p))
+
+    def tf(self, p: str, t: str, fzkey) -> Column:
+        return self._ref("tf", (p, t, fzkey), self.tfs, lambda: F.size(
+            F.filter(self.toks(p), _tok_match(t, fzkey))))
+
+    def bm25(self, path: str, tf: Column, stat: str) -> Column:
+        import math
+
+        n, df_count = self.stats["n"], self.stats[stat]
+        i = self.plan["len_paths"].index(path)
+        avgdl = (self.stats[f"len__{i}"] / n) if n else 1.0
+        idf = math.log(1.0 + (n - df_count + 0.5) / (df_count + 0.5))
+        dl = F.size(self.toks(path))
+        return F.lit(idf) * (
+            tf * (self.K1 + 1.0)
+            / (tf + self.K1 * (1.0 - self.B + self.B * dl / F.lit(avgdl))))
+
+
+def _search_text(c: dict, sc: _SearchColumns):
+    score = F.lit(0.0)
+    for p in c["paths"]:
+        for t in c["terms"]:
+            i = sc.plan["term_reqs"].index((p, t, c["fuzzy"]))
+            score = score + sc.bm25(p, sc.tf(p, t, c["fuzzy"]), f"df__{i}")
+    return score > 0, score
+
+
+def _search_phrase(c: dict, sc: _SearchColumns):
+    """Phrase tf counts non-overlapping padded occurrences in the
+    normalized text — self-overlapping phrases ("a a" in "a a a")
+    undercount vs Lucene's sloppy counter."""
+    pad = f" {c['phrase']} "
+    score = F.lit(0.0)
+    for p in c["paths"]:
+        padded = sc.pad(p)
+        tf = ((F.length(padded) - F.length(F.replace(padded, F.lit(pad))))
+              / F.lit(len(pad))).cast("int")
+        i = sc.plan["phrase_reqs"].index((p, c["phrase"]))
+        score = score + sc.bm25(p, tf, f"pdf__{i}")
+    return score > 0, score
+
+
+def _search_field(c: dict, sc: _SearchColumns):
+    """equals / range / exists / in: a constant-score predicate."""
+    col = _value(sc.df, "$" + c["path"])
+    if c["op"] == "equals":
+        return col == _lit(c["value"]), None
+    if c["op"] == "exists":
+        return col.isNotNull(), None
+    if c["op"] == "in":
+        return col.isin(list(c["value"])), None
+    pred = F.lit(True)
+    for key, v in c["bounds"]:
+        pred = pred & {"gt": col.__gt__, "gte": col.__ge__,
+                       "lt": col.__lt__, "lte": col.__le__}[key](_lit(v))
+    return pred, None
+
+
+def _search_pattern(c: dict, sc: _SearchColumns):
+    """wildcard / regex, keyword semantics: the pattern matches the
+    WHOLE raw field value (Atlas keyword-analyzer behavior);
+    allowAnalyzedField's per-token matching against analyzer output is
+    an index-internals behavior not modeled here (DEVIATIONS §21)."""
+    pred = F.lit(False)
+    for p in c["paths"]:
+        col = _value(sc.df, "$" + p).cast("string")
+        pred = pred | (col.like(c["pattern"]) if c["op"] == "wildcard"
+                       else col.rlike(c["pattern"]))
+    return pred, None
+
+
+def _search_autocomplete(c: dict, sc: _SearchColumns):
+    """Token-prefix match over the normalized text: " t" in the
+    space-padded text <=> some token starts with t. tokenOrder "any"
+    (default): every query token is a token prefix somewhere;
+    "sequential": the tokens appear contiguously in order, last one as
+    a prefix. Constant score (Atlas edgeGram scoring is
+    index-internal)."""
+    ts = c["terms"]
+    pred = F.lit(False)
+    for p in c["paths"]:
+        padded = sc.pad(p)
+        if c["order"] == "sequential":
+            sub = F.contains(padded, F.lit(" " + " ".join(ts)))
+        else:
+            sub = F.lit(True)
+            for t in ts:
+                sub = sub & F.contains(padded, F.lit(" " + t))
+        pred = pred | sub
+    return pred, None
+
+
+def _search_near(c: dict, sc: _SearchColumns):
+    """Atlas's published decay: score = pivot / (pivot + dist). Numeric
+    origin -> |x - origin|; date origin (ISO string) -> millisecond
+    distance (pivot in ms). Geo points raise in the plan ($geoNear
+    disposition, DEVIATIONS §15)."""
+    origin, pivot = c["origin"], F.lit(c["pivot"])
+    score, pred = F.lit(0.0), F.lit(False)
+    for p in c["paths"]:
+        col = _value(sc.df, "$" + p)
+        if isinstance(origin, str):
+            dist = F.abs(F.unix_millis(col.cast("timestamp"))
+                         - F.unix_millis(F.lit(origin).cast("timestamp")))
+        else:
+            dist = F.abs(col - F.lit(origin))
+        here = col.isNotNull()
+        score = score + F.when(here, pivot / (pivot + dist)).otherwise(0.0)
+        pred = pred | here
+    return pred, score
+
+
+def _search_compound(c: dict, sc: _SearchColumns):
+    groups = {k: [_search_expr(s, sc) for s in c["groups"][k]]
+              for k in _SEARCH_GROUPS}
+    pred = F.lit(True)
+    for p, _ in groups["must"] + groups["filter"]:
+        pred = pred & p
+    for p, _ in groups["mustNot"]:
+        pred = pred & ~F.coalesce(p, F.lit(False))
+    if groups["should"] and c["msm"]:
+        matched = sum((F.coalesce(p, F.lit(False)).cast("int")
+                       for p, _ in groups["should"]), F.lit(0))
+        pred = pred & (matched >= c["msm"])
+    score = F.lit(0.0)
+    for _, s in groups["must"]:
+        score = score + s
+    for p, s in groups["should"]:
+        score = score + F.when(F.coalesce(p, F.lit(False)), s).otherwise(0.0)
+    return pred, score
+
+
+_SEARCH_BUILDERS = {
+    "text": _search_text, "phrase": _search_phrase,
+    "equals": _search_field, "range": _search_field,
+    "exists": _search_field, "in": _search_field,
+    "wildcard": _search_pattern, "regex": _search_pattern,
+    "autocomplete": _search_autocomplete, "near": _search_near,
+    "compound": _search_compound}
+
+
+def _search_expr(c: dict, sc: _SearchColumns):
+    """(predicate, score) of a planned clause. Builders that return no
+    score are non-scoring: Atlas's constant score 1 / 0."""
+    pred, score = _SEARCH_BUILDERS[c["op"]](c, sc)
+    if score is None:
+        return pred, F.when(
+            pred, _score_opt(F.lit(1.0), c["score"])).otherwise(0.0)
+    return pred, _score_opt(score, c["score"])
+
+
+def _compile_search(df: DataFrame, spec: dict):
+    """Shared $search/$searchMeta compiler: returns (base, predicate,
+    score, helpers) — `base` is `df` with the helper columns added
+    (_SearchColumns), `helpers` their names, for the caller to drop
+    after the filter/score projection. Plan (_search_plan, no Spark),
+    then the one stats action (_search_stats), then the clause tree
+    through the _SEARCH_BUILDERS table."""
+    plan = _search_plan(spec)
+    sc = _SearchColumns(df, plan, _search_stats(df, plan))
+    pred, score = _search_expr(sc.plan["root"], sc)
     base = df
-    for cols in (base_cols, tf_cols):
+    for cols in (sc.base, sc.tfs):
         if cols:
             base = base.withColumns(cols)
-    return base, pred0, score0, [*base_cols, *tf_cols]
+    return base, pred, score, [*sc.base, *sc.tfs]
 
 
 def _search(df: DataFrame, spec: dict) -> DataFrame:
@@ -1256,6 +1310,19 @@ def _search(df: DataFrame, spec: dict) -> DataFrame:
                  for k, d in sort.items()]
         return out.orderBy(*order)
     return out.orderBy(F.col("__search_score").desc())
+
+
+def _facet_buckets(counts: DataFrame, order: Column,
+                   name: str) -> DataFrame:
+    """A facet's one-row `name` column: its (_id, count) rows collected
+    into one array of {_id, count} structs, sorted by `order` (a
+    leading struct field, dropped after the sort)."""
+    item = F.struct(order, F.col("_id").alias("_id"),
+                    F.col("count").alias("count"))
+    return counts.agg(F.transform(
+        F.sort_array(F.collect_list(item)),
+        lambda s: F.struct(s["_id"].alias("_id"),
+                           s["count"].alias("count"))).alias(name))
 
 
 def _search_meta(df: DataFrame, spec: dict) -> DataFrame:
@@ -1297,15 +1364,8 @@ def _search_meta(df: DataFrame, spec: dict) -> DataFrame:
                     .agg(F.count(F.lit(1)).alias("count"))
                     .orderBy(F.col("count").desc(), F.col("_id").asc())
                     .limit(nb))
-                item = F.struct(
-                    (-F.col("count")).alias("__neg"),
-                    F.col("_id").alias("_id"),
-                    F.col("count").alias("count"))
-                arr = F.sort_array(F.collect_list(item))
-                one = counts.agg(F.transform(
-                    arr, lambda s: F.struct(
-                        s["_id"].alias("_id"),
-                        s["count"].alias("count"))).alias(name))
+                one = _facet_buckets(
+                    counts, (-F.col("count")).alias("__neg"), name)
             elif ftype == "number":
                 bounds = list(fd["boundaries"])
                 if sorted(bounds) != bounds or len(bounds) < 2:
@@ -1332,14 +1392,7 @@ def _search_meta(df: DataFrame, spec: dict) -> DataFrame:
                     pos = (F.when(F.col("_id") == lbl, F.lit(i))
                            if pos is None
                            else pos.when(F.col("_id") == lbl, F.lit(i)))
-                item = F.struct(pos.alias("__pos"),
-                                F.col("_id").alias("_id"),
-                                F.col("count").alias("count"))
-                one = counts.agg(F.transform(
-                    F.sort_array(F.collect_list(item)),
-                    lambda s: F.struct(
-                        s["_id"].alias("_id"),
-                        s["count"].alias("count"))).alias(name))
+                one = _facet_buckets(counts, pos.alias("__pos"), name)
             else:
                 raise ValueError(
                     f"facet {name!r}: type must be string|number, "
@@ -1842,6 +1895,14 @@ def _pctl_bucket_count(total_rows: int, approx: bool,
     return max(2, min(64, requested or total_rows // 1024 + 2))
 
 
+def _approx_buckets(spark) -> int:
+    """The one reader of spark.maggma.windowPctl.approxBuckets: the
+    approximate paths' requested value-bucket count, 0 when unset (the
+    global paths then size by _pctl_bucket_count, the partitioned one
+    takes 32)."""
+    return int(spark.conf.get("spark.maggma.windowPctl.approxBuckets", "0"))
+
+
 def _equi_depth_splits(sketch: list, V: int) -> list:
     """<= V-1 ascending, de-duplicated bucket splits thinned from a
     sorted value sketch (equi-depth up to the sketch's own error)."""
@@ -2042,60 +2103,326 @@ def _folded_offsets(bucketed: DataFrame, nb: list, vdir: list,
                                         _offsets_schema(len(nb)))
 
 
-def _approx_bucket_prep(df: DataFrame, specs: list, srcs: list,
-                        vdir: list, vsketch: list, V: int):
-    """Head of the approximate global running-percentile kernel: thin
-    each input's value sketch to <=V-1 bucket splits (outer edges from
-    the value min/max), stamp a per-input integer bucket index on the
-    frame, and derive the per-range cumulative bucket offsets.
-    Everything lazy — no driver action."""
-    nv = len(srcs)
-    sp0_by_vi = {vi: next(sp for sp in specs if sp["vi"] == vi)
-                 for vi in range(nv)}
-    # round-12: all-or-nothing probe precomputation (see _swf_global)
-    pre_offsets = all(sp0_by_vi[vi].get("histcounts") is not None
-                      for vi in range(nv)) and nv > 0
+def _pctl_inputs(specs: list, V: int) -> list:
+    """Session-free input plan of the global running-percentile paths:
+    one record per shared input — outputs with one argkey share
+    buckets, histogram counts and kernel elements — in first-seen
+    order. A record holds the value column `src`, frame `mode` (rows |
+    range) and `dir`, the value-bucket `splits` (the probe's, else
+    thinned from the value sketch to <= V-1), the bucket count `nb`,
+    the precomputed bucket-index column `bcol` and per-range histogram
+    `hist` of the round-12 probe path (or None), the approximate
+    kernel's bucket `edges` (outer edges: the value min/max) and
+    `specs`, the (spec index, [p, ...]) pairs it answers."""
+    inputs: list = []
+    by_key: dict = {}
+    for si, sp in enumerate(specs):
+        if sp["argkey"] not in by_key:
+            by_key[sp["argkey"]] = len(inputs)
+            splits = (list(sp["vbs"]) if sp.get("vbs") is not None
+                      else _equi_depth_splits(sp.get("sketch"), V))
+            lo, hi = sp.get("lo"), sp.get("hi")
+            inputs.append({
+                "src": f"__gw_v_{sp['out']}", "mode": sp["mode"],
+                "dir": sp["dir"], "splits": splits, "nb": len(splits) + 1,
+                "bcol": sp.get("bcol"), "hist": sp.get("histcounts"),
+                "edges": [lo if lo is not None else 0.0] + splits
+                + [hi if hi is not None else 0.0],
+                "specs": []})
+        inputs[by_key[sp["argkey"]]]["specs"].append(
+            (si, [float(p) for p in sp["ps"]]))
+    return inputs
 
-    nb: list = []
-    edges_by_vi: dict = {}
-    out_df = df
-    for vi in range(nv):
-        sp0 = sp0_by_vi[vi]
-        if sp0.get("vbs") is not None:
-            vbs = list(sp0["vbs"])
+
+def _pctl_kernel_view(inputs: list) -> list:
+    """The input fields the pandas kernels read: the per-range
+    histograms stay on the driver, out of every task's closure."""
+    return [{k: inp[k] for k in ("mode", "dir", "nb", "edges", "specs")}
+            for inp in inputs]
+
+
+def _pctl_offsets(bucketed: DataFrame, inputs: list,
+                  exact: bool) -> DataFrame:
+    """Per-range CUMULATIVE prefix offsets of the percentile kernels:
+    cumulative across BOTH the range axis (fwd accumulates EARLIER
+    pids, bwd LATER pids) and the bucket axis. Prior/later pids hold
+    strictly smaller/larger keys (the scaffold's range partitioner
+    co-locates ties), so the offsets stitch every mode. Folded
+    driver-side when every input's histograms rode the boundary
+    aggregate (all-or-nothing: the caller attaches them to every spec
+    or to none), else distributed over the `__pq_b{vi}` columns of
+    `bucketed`. The exact path guards the bucket mass and broadcasts
+    the distributed fold."""
+    nb = [inp["nb"] for inp in inputs]
+    vdir = [inp["dir"] for inp in inputs]
+    if inputs and all(inp["hist"] is not None for inp in inputs):
+        return _local_offsets(bucketed.sparkSession,
+                              [inp["hist"] for inp in inputs], nb, vdir,
+                              guard=exact)
+    odf = _folded_offsets(bucketed, nb, vdir, guard=exact)
+    return F.broadcast(odf) if exact else odf
+
+
+def _pctl_keys(left, ax: str, any_range: bool) -> tuple:
+    """(g, ax, axn) of one kernel group: the global row numbers and, when
+    some input has a range frame, the sort axis `ax` as float64 plus
+    its Spark-side is-null mask (column `ax` + "n")."""
+    import pandas as pd
+
+    g = left["__pq_g"].to_numpy(dtype="int64")
+    if not any_range:
+        return g, None, None
+    return (g, pd.to_numeric(left[ax], errors="coerce")
+            .to_numpy(dtype="float64"), left[ax + "n"].to_numpy(dtype=bool))
+
+
+def _cum_buckets(left, right, vi: int, nb: int, order, gid, starts,
+                 chunk: int):
+    """The chunked cumulative-bucket traversal of both running-
+    percentile kernels, over input `vi` of one scaffold range in the
+    _pctl_group_traversal order (order, gid, starts). Yields (g0, g1,
+    sl, gl, ce) per chunk of at most `chunk` key-tie groups: sorted-row
+    slice `sl`, each row's group index within the chunk `gl`, and `ce`
+    (groups x nb), the cumulative bucket counts at the END of each
+    group — a row's frame runs to the end of its key-tie group — plus
+    the range's incoming offset (`right`, bucket-cumulative already;
+    zero for an empty offsets group). Per-chunk bincount histograms and
+    a carried base vector keep memory O(chunk x nb + rows)."""
+    import numpy as np
+    import pandas as pd
+
+    js = pd.to_numeric(left[f"__pq_b{vi}"], errors="coerce") \
+        .to_numpy(dtype="float64")[order]
+    off = (np.asarray(right[f"__pq_off{vi}"].iloc[0], dtype=np.int64)
+           if len(right) else np.zeros(nb, dtype=np.int64))
+    valid = ~np.isnan(js)
+    jsi = np.where(valid, js, 0).astype(np.int64)
+    G = len(starts)
+    base = np.zeros(nb, dtype=np.int64)  # raw counts so far
+    for g0 in range(0, G, chunk):
+        g1 = min(g0 + chunk, G)
+        sl = slice(int(starts[g0]), int(starts[g1]) if g1 < G else len(js))
+        gl = gid[sl] - g0
+        vm = valid[sl]
+        H = np.bincount(gl[vm] * nb + jsi[sl][vm],
+                        minlength=(g1 - g0) * nb).reshape(g1 - g0, nb)
+        Cg = H.cumsum(axis=0) + base
+        base = Cg[-1].copy()
+        yield g0, g1, sl, gl, Cg.cumsum(axis=1) + off
+
+
+def _rank_bucket(ce, q) -> tuple:
+    """(b, prior): the bucket holding target rank q[k] in row k of the
+    NONDECREASING cumulative bucket counts `ce`, clamped to the last
+    bucket, and the count of the buckets before it."""
+    import numpy as np
+
+    b = np.minimum((ce < q[:, None]).sum(axis=1), ce.shape[1] - 1)
+    prior = np.where(b > 0, np.take_along_axis(
+        ce, np.maximum(b - 1, 0)[:, None], axis=1)[:, 0], 0)
+    return b, prior
+
+
+# query-chunk fan of the exact selection: elements replicate to ~S/2
+# later g-chunks so a query-heavy bucket splits across S tasks instead
+# of funneling through one. S=1 was measured SLOWER at bench SF
+# (round-10: V x S groups also set the selection stage's parallelism —
+# 17 groups left half the cores idle), so the constant stays
+_PCTL_QUERY_CHUNKS = 4
+
+_PCTL_QUERY_FIELDS = (("vi", "int32"), ("b", "int32"), ("c", "int32"),
+                      ("g", "int64"), ("rank", "int64"), ("qid", "int64"),
+                      ("si", "int32"), ("pi", "int32"), ("side", "int32"),
+                      ("m", "int64"))
+_PCTL_ANSWER_FIELDS = (("qid", "int64"), ("si", "int32"), ("pi", "int32"),
+                       ("side", "int32"), ("val", "float64"),
+                       ("m", "int64"))
+_SPARK_OF_NUMPY = {"int32": "int", "int64": "long", "float64": "double"}
+
+
+def _pandas_schema(fields: tuple) -> str:
+    return ", ".join(f"{n} {_SPARK_OF_NUMPY[t]}" for n, t in fields)
+
+
+def _empty_frame(fields: tuple):
+    import pandas as pd
+
+    return pd.DataFrame({n: pd.Series(dtype=t) for n, t in fields})
+
+
+def _pctl_route(left, right, inputs: list, total_rows: int, chunk: int):
+    """Exact path, per scaffold range (`left`: pid, g, [ax, axn], bucket
+    indexes; `right`: the range's offsets): every row's target ranks —
+    floor/ceil of p*(m-1), plus one — as (bucket, residual-rank)
+    queries for _pctl_select, O(groups x V) in C, emitting only the
+    surviving queries (m > 0, hi != lo dedup). `g` of a query is the
+    comparison row number the selection sees: g is increasing within
+    every tie group, so max g over the frame = g at the tie end and
+    min g over the mirrored frame = g at the tie start; reverse inputs
+    mirror it (T1 - g)."""
+    import numpy as np
+    import pandas as pd
+
+    if not len(left):
+        return _empty_frame(_PCTL_QUERY_FIELDS)
+    g, ax, axn = _pctl_keys(left, "__pq_ax",
+                            any(i["mode"] == "range" for i in inputs))
+    T1, S = total_rows + 1, _PCTL_QUERY_CHUNKS
+    out = []
+    for vi, inp in enumerate(inputs):
+        order, gid, starts = _pctl_group_traversal(
+            g, ax, inp["mode"], inp["dir"], axn)
+        gs = g[order]
+        for g0, g1, sl, gl, ce in _cum_buckets(
+                left, right, vi, inp["nb"], order, gid, starts, chunk):
+            m_g = ce[:, -1]
+            if inp["mode"] == "rows":
+                gc_g = gs[sl] if inp["dir"] == "fwd" else T1 - gs[sl]
+            elif inp["dir"] == "fwd":
+                gc_g = gs[np.append(starts[g0 + 1:g1] - 1, sl.stop - 1)]
+            else:
+                gc_g = T1 - gs[starts[g0:g1]]
+            c_g = ((gc_g - 1) * S // total_rows).astype("int32")
+            for si, ps in inp["specs"]:
+                for pi, pv in enumerate(ps):
+                    r = pv * (m_g - 1).astype("float64")
+                    lo = np.floor(r).astype("int64")
+                    hi = np.ceil(r).astype("int64")
+                    for side, qarr in ((0, lo + 1), (1, hi + 1)):
+                        gm = m_g > 0
+                        if side == 1:
+                            # hi only differs when p*(m-1) is fractional
+                            # — skipping the duplicate halves query
+                            # volume (the assembly coalesces hi->lo)
+                            gm &= hi != lo
+                        if not gm.any():
+                            continue
+                        qv = qarr[gm]
+                        b, prior = _rank_bucket(ce[gm], qv)
+                        # group-level results -> per-row queries
+                        bf = np.zeros(g1 - g0, dtype=np.int64)
+                        bf[gm] = b
+                        rk = np.zeros(g1 - g0, dtype=np.int64)
+                        rk[gm] = qv - prior
+                        rm = gm[gl]
+                        gi = gl[rm]
+                        out.append(pd.DataFrame({
+                            "vi": np.int32(vi),
+                            "b": bf[gi].astype("int32"),
+                            "c": c_g[gi],
+                            "g": gc_g[gi],
+                            "rank": rk[gi],
+                            "qid": gs[sl][rm],
+                            "si": np.int32(si),
+                            "pi": np.int32(pi),
+                            "side": np.int32(side),
+                            "m": m_g[gi]}))
+    return (pd.concat(out, ignore_index=True) if out
+            else _empty_frame(_PCTL_QUERY_FIELDS))
+
+
+def _pctl_select(el, qr):
+    """Exact path, per (value bucket, g-chunk): vectorized offline prefix
+    selection (merge-sort tree over the value order, batched
+    wavelet-style descent): answer(q) = the q.rank-th smallest value
+    `v` among the elements `el` with g <= q.g. Each level stores, per
+    node, the SORTED g's of its left half; a query's left-count is one
+    searchsorted. Queries descend all levels in numpy batches —
+    per-unique-node searchsorted at shallow levels (few nodes),
+    gather+compare at deep levels (blocks <= 32 wide). O((n + q) log^2
+    n) in C, ~25x the throughput of the per-query Python Fenwick this
+    replaced (SCALE.md round-8)."""
+    import numpy as np
+    import pandas as pd
+
+    if not len(qr):
+        return _empty_frame(_PCTL_ANSWER_FIELDS)
+    vals = el["v"].to_numpy()
+    n = len(vals)
+    order = np.argsort(vals, kind="stable")
+    svals = vals[order]
+    P = 1 << max(1, (n - 1).bit_length() if n > 1 else 1)
+    gpad = np.full(P, np.iinfo(np.int64).max)
+    gpad[:n] = el["g"].to_numpy()[order]
+    left_sorted = [np.sort(gpad.reshape(-1, P >> lvl)[:, :P >> (lvl + 1)],
+                           axis=1)
+                   for lvl in range(P.bit_length() - 1)]
+    qg = qr["g"].to_numpy()
+    rank = qr["rank"].to_numpy().astype(np.int64)
+    node = np.zeros(len(qr), dtype=np.int64)
+    for ls in left_sorted:
+        cnt = np.empty(len(qr), dtype=np.int64)
+        if ls.shape[1] <= 32:
+            cnt[:] = (ls[node] <= qg[:, None]).sum(axis=1)
         else:
-            vbs = _equi_depth_splits(vsketch[vi], V)
-        nb.append(len(vbs) + 1)
-        lo = sp0.get("lo")
-        hi = sp0.get("hi")
-        edges_by_vi[vi] = [lo if lo is not None else 0.0] + vbs \
-            + [hi if hi is not None else 0.0]
-        if sp0.get("bcol") is not None:
-            # bucket index already materialized upstream (round-12
-            # probe path) — reuse it instead of re-evaluating the
-            # comparison ladder
-            out_df = out_df.withColumn(f"__pq_b{vi}",
-                                       F.col(sp0["bcol"]))
-            continue
-        out_df = out_df.withColumn(f"__pq_b{vi}",
-                                   _bucket_index(f"`{srcs[vi]}`", vbs))
-
-    if pre_offsets:
-        odf = _local_offsets(
-            df.sparkSession,
-            [sp0_by_vi[vi]["histcounts"] for vi in range(nv)],
-            nb, vdir, guard=False)
-    else:
-        odf = _folded_offsets(out_df, nb, vdir, guard=False)
-    return out_df, nb, edges_by_vi, odf
+            srt = np.argsort(node, kind="stable")
+            uniq, starts = np.unique(node[srt], return_index=True)
+            bounds = np.append(starts[1:], len(qr))
+            for u, st, en in zip(uniq, starts, bounds):
+                idx = srt[st:en]
+                cnt[idx] = np.searchsorted(ls[u], qg[idx], side="right")
+        goleft = rank <= cnt
+        node = node * 2 + np.where(goleft, 0, 1)
+        rank = np.where(goleft, rank, rank - cnt)
+    return pd.DataFrame({
+        "qid": qr["qid"].to_numpy().astype(np.int64),
+        "si": qr["si"].to_numpy().astype(np.int32),
+        "pi": qr["pi"].to_numpy().astype(np.int32),
+        "side": qr["side"].to_numpy().astype(np.int32),
+        "val": svals[np.minimum(node, n - 1)],
+        "m": qr["m"].to_numpy().astype(np.int64)})
 
 
-def _global_running_pctl_approx_kernel(
-        df: DataFrame, total_rows: int, specs: list, srcs: list,
-        vmode: list, vdir: list, vsketch: list, V: int) -> DataFrame:
+def _pctl_approx(left, right, inputs: list, any_range: bool, chunk: int):
+    """Approximate path, per scaffold range: each row's cumulative bucket
+    vector (_cum_buckets), the target rank q = p(m-1)+1's bucket
+    (_rank_bucket), and linear interpolation within the bucket's value
+    edges — one Float64 answer column `__pq_r{si}_{pi}` per (spec, p);
+    rows with an empty non-null prefix get null."""
+    import numpy as np
+    import pandas as pd
+
+    n_rows = len(left)
+    g, ax, axn = _pctl_keys(left, "__gw_ax", any_range)
+    cols = {"__pq_g": g}
+    for vi, inp in enumerate(inputs):
+        order, gid, starts = _pctl_group_traversal(
+            g, ax, inp["mode"], inp["dir"], axn)
+        e = np.asarray(inp["edges"], dtype="float64")
+        bufs = {(si, pi): np.empty(n_rows, dtype="float64")
+                for si, ps in inp["specs"] for pi in range(len(ps))}
+        mrow = np.empty(n_rows, dtype=np.int64)
+        for _g0, _g1, sl, gl, ce in _cum_buckets(
+                left, right, vi, inp["nb"], order, gid, starts, chunk):
+            m = ce[:, -1].astype("float64")
+            for si, ps in inp["specs"]:
+                for pi, p in enumerate(ps):
+                    q = p * (m - 1.0) + 1.0
+                    b, prior = _rank_bucket(ce, q)
+                    prior = prior.astype("float64")
+                    cnt = np.take_along_axis(ce, b[:, None], axis=1)[:, 0] \
+                        .astype("float64") - prior
+                    frac = np.where(cnt > 0,
+                                    (q - prior) / np.maximum(cnt, 1.0), 1.0)
+                    vals = e[b] + frac * (e[b + 1] - e[b])
+                    bufs[(si, pi)][sl] = vals[gl]
+            mrow[sl] = ce[gl, -1]
+        inv = np.empty(n_rows, dtype=np.int64)
+        inv[order] = np.arange(n_rows)
+        empt = mrow[inv] <= 0
+        for (si, pi), buf in bufs.items():
+            out = pd.array(buf[inv], dtype="Float64")
+            out[empt] = pd.NA  # empty non-null prefix -> null
+            cols[f"__pq_r{si}_{pi}"] = out
+    return pd.DataFrame(cols)
+
+
+def _global_running_pctl_approx(df: DataFrame, total_rows: int,
+                                specs: list, inputs: list) -> DataFrame:
     """Approximate global running $median/$percentile via ONE
-    vectorized numpy kernel per scaffold range (round-10), the single
-    physical form of spark.maggma.windowPctl.method=approximate.
+    vectorized numpy kernel per scaffold range (round-10, _pctl_approx),
+    the single physical form of spark.maggma.windowPctl.method=
+    approximate.
 
     The wide-frame SQL form it replaced spent its time in V cumulative
     window sums + a V-term interpolation ladder per target: at V=64
@@ -2105,12 +2432,11 @@ def _global_running_pctl_approx_kernel(
     at every probed size after round-11 (5k: 3.1 vs 2.6 s, 100k: 10.7
     vs 5.3, 2M: 13.6 vs 8.2), so it was deleted. Here the slim
     (pid, g, [ax], bucket-index) projection cogroups with the
-    per-range offsets; one applyInPandas kernel per range computes the
-    per-row cumulative bucket vector as a numpy onehot cumsum (SIMD,
-    not per-row-per-bucket aggregate updates), locates the target
-    rank's bucket vectorized, and interpolates within the bucket's
-    value edges — rank error bounded by the largest bucket's mass +
-    sketch error.
+    per-range offsets; the kernel computes the per-row cumulative
+    bucket vector (SIMD, not per-row-per-bucket aggregate updates),
+    locates the target rank's bucket vectorized, and interpolates
+    within the bucket's value edges — rank error bounded by the
+    largest bucket's mass + sketch error.
 
     A FUSED form (one applyInPandas over the FULL frame grouped by
     range id, offsets riding the __gw_rn == 1 rows, no cogroup and no
@@ -2119,124 +2445,37 @@ def _global_running_pctl_approx_kernel(
     costs more than the JVM-side join-back shuffle it saves — 50 s vs
     28 s at 10M, 36.8 s vs 20.9 s on the tied-range shape, a wash
     below 200k (SCALE.md round-11). The slim-projection
-    cogroup + join-back stays.
-
-    Forward/reverse and documents/range frames unify in the kernel:
-    one _pctl_group_traversal per input (explicit null-flag sort —
-    null keys are their own peer group, distinct from genuine IEEE
-    infinities; round-11), cumulative taken at each key-tie group
-    (range frames: ties by sort value enter each other's prefix;
-    rows frames: every group is one row). The traversal walks tie
-    groups in bounded chunks (bincount histogram + carried base
-    vector), so worker memory is O(chunk x V + rows) even when a
-    heavily-tied sortBy collapses millions of rows into one scaffold
-    range — see _pctl_group_traversal."""
-    import pandas as pd
-
-    nv = len(srcs)
-    out_df, nb, edges_by_vi, odf = _approx_bucket_prep(
-        df, specs, srcs, vdir, vsketch, V)
+    cogroup + join-back stays."""
+    out_df = df
+    for vi, inp in enumerate(inputs):
+        out_df = out_df.withColumn(
+            f"__pq_b{vi}",
+            # the probe path's bucket index is already materialized
+            F.col(inp["bcol"]) if inp["bcol"] is not None
+            else _bucket_index(f"`{inp['src']}`", inp["splits"]))
+    odf = _pctl_offsets(out_df, inputs, exact=False)
     out_df = out_df.withColumn(
         "__pq_g",
         (F.col("__gw_rn") + F.col("__gw_off_rows")).cast("long"))
-    any_range = "range" in vmode
+    any_range = any(inp["mode"] == "range" for inp in inputs)
+    bcols = [f"__pq_b{vi}" for vi in range(len(inputs))]
     slim = out_df.select(
         "__gw_pid", "__pq_g",
         *([F.col("__gw_ax"),
            F.col("__gw_ax").isNull().alias("__gw_axn")]
           if any_range else []),
-        *[f"__pq_b{vi}" for vi in range(nv)])
-
-    nb_l = list(nb)
-    vmode_l, vdir_l = list(vmode), list(vdir)
-    edges_l = [list(map(float, edges_by_vi[vi])) for vi in range(nv)]
-    spec_l = [(sp["vi"], [float(p) for p in sp["ps"]])
-              for sp in specs]
-    out_fields = [f"__pq_r{si}_{pi}"
-                  for si, (_vi, ps) in enumerate(spec_l)
-                  for pi in range(len(ps))]
+        *bcols)
     schema = "__pq_g long, " + ", ".join(
-        f"`{f}` double" for f in out_fields)
-
+        f"`__pq_r{si}_{pi}` double"
+        for si, sp in enumerate(specs) for pi in range(len(sp["ps"])))
+    kin = _pctl_kernel_view(inputs)
     # chunk size captured at PLAN time (driver) so tests can shrink it
     # and force multi-chunk traversals on small frames — read inside
     # the kernel it would resolve against the WORKER's unpatched module
     CH = _PCTL_KERNEL_CHUNK_GROUPS
 
     def kernel(left, right):
-        # one scaffold range: the chunked group-space traversal -> one
-        # Float64 answer column per (spec, p); `right` holds the
-        # range's incoming bucket-cumulative offsets (none for an
-        # empty offsets group)
-        import numpy as np
-
-        n_rows = len(left)
-        g = left["__pq_g"].to_numpy(dtype="int64")
-        ax = (pd.to_numeric(left["__gw_ax"], errors="coerce")
-              .to_numpy(dtype="float64") if any_range else None)
-        axn = (left["__gw_axn"].to_numpy(dtype=bool)
-               if any_range else None)
-        cols = {"__pq_g": g}
-        for vi in range(nv):
-            nbv = nb_l[vi]
-            j = pd.to_numeric(left[f"__pq_b{vi}"],
-                              errors="coerce").to_numpy(dtype="float64")
-            order, gid, starts = _pctl_group_traversal(
-                g, ax, vmode_l[vi], vdir_l[vi], axn)
-            js = j[order]
-            G = len(starts)
-            off = (np.asarray(right[f"__pq_off{vi}"].iloc[0],
-                              dtype=np.int64)
-                   if len(right) else np.zeros(nbv, dtype=np.int64))
-            valid = ~np.isnan(js)
-            jsi = np.where(valid, js, 0).astype(np.int64)
-            e = np.asarray(edges_l[vi], dtype="float64")
-            myspecs = [(si, ps) for si, (svi, ps) in enumerate(spec_l)
-                       if svi == vi]
-            bufs = {(si, pi): np.empty(n_rows, dtype="float64")
-                    for si, ps in myspecs for pi in range(len(ps))}
-            mrow = np.empty(n_rows, dtype=np.int64)
-            base = np.zeros(nbv, dtype=np.int64)  # raw counts so far
-            for g0 in range(0, G, CH):
-                g1 = min(g0 + CH, G)
-                r0 = int(starts[g0])
-                r1 = int(starts[g1]) if g1 < G else n_rows
-                K = g1 - g0
-                sl = slice(r0, r1)
-                gl = gid[sl] - g0
-                vm = valid[sl]
-                H = np.bincount(gl[vm] * nbv + jsi[sl][vm],
-                                minlength=K * nbv).reshape(K, nbv)
-                Cg = H.cumsum(axis=0) + base
-                base = Cg[-1].copy()
-                # a row's prefix runs to the END of its key-tie
-                # group; incoming offset is bucket-cumulative already
-                ce = Cg.cumsum(axis=1) + off
-                m = ce[:, -1].astype("float64")
-                kk = np.arange(K)
-                for si, ps in myspecs:
-                    for pi, p in enumerate(ps):
-                        q = p * (m - 1.0) + 1.0
-                        b = (ce < q[:, None]).sum(axis=1)
-                        np.minimum(b, nbv - 1, out=b)
-                        prior = np.where(
-                            b > 0, ce[kk, np.maximum(b - 1, 0)],
-                            0).astype("float64")
-                        cnt = ce[kk, b].astype("float64") - prior
-                        frac = np.where(
-                            cnt > 0,
-                            (q - prior) / np.maximum(cnt, 1.0), 1.0)
-                        vals = e[b] + frac * (e[b + 1] - e[b])
-                        bufs[(si, pi)][sl] = vals[gl]
-                mrow[sl] = ce[gl, -1]
-            inv = np.empty(n_rows, dtype=np.int64)
-            inv[order] = np.arange(n_rows)
-            empt = mrow[inv] <= 0
-            for (si, pi), buf in bufs.items():
-                out = pd.array(buf[inv], dtype="Float64")
-                out[empt] = pd.NA  # empty non-null prefix -> null
-                cols[f"__pq_r{si}_{pi}"] = out
-        return pd.DataFrame(cols)
+        return _pctl_approx(left, right, kin, any_range, CH)
 
     ans = (slim.groupBy("__gw_pid")
            .cogroup(odf.groupBy("__gw_pid"))
@@ -2252,8 +2491,7 @@ def _global_running_pctl_approx_kernel(
     # past the driver-safety cap (see _bounded_broadcast).
     ans = _bounded_broadcast(
         ans, total_rows, sum(len(sp["ps"]) for sp in specs))
-    res = out_df.drop(*[f"__pq_b{vi}" for vi in range(nv)]) \
-        .join(ans, on="__pq_g")
+    res = out_df.drop(*bcols).join(ans, on="__pq_g")
     for si, sp in enumerate(specs):
         outs = [F.col(f"__pq_r{si}_{pi}")
                 for pi in range(len(sp["ps"]))]
@@ -2263,48 +2501,46 @@ def _global_running_pctl_approx_kernel(
                       if c.startswith("__pq_")])
 
 
-def _global_running_pctl(df: DataFrame, total_rows: int,
-                         specs: list, approx: bool = False) -> DataFrame:
+def _global_running_pctl(df: DataFrame, total_rows: int, specs: list,
+                         V: int, approx: bool = False) -> DataFrame:
     """UNPARTITIONED running $median/$percentile (frame
     ["unbounded", "current"]) as distributed prefix order statistics
     — the last _swf_global raise (r7 verdict next #6). Exact
     continuous interpolation, never a single-task sort and never the
     O(prefix)/row sliding re-scan:
 
-    1. Bucket the VALUE domain into equi-depth ranges (thinned from
-       the value sketch the caller's probe or boundary aggregate
-       already collected — zero extra actions; boundaries baked as
-       literals).
+    1. Bucket the VALUE domain into equi-depth ranges (_pctl_inputs:
+       the probe's splits, or thinned to <= V-1 from the value sketch
+       the boundary aggregate already collected — zero extra actions;
+       boundaries baked as literals).
     2. Per-range value histograms fold to cumulative per-range bucket
-       offsets — driver-side into a LocalRelation when the histograms
-       rode the boundary aggregate (round-12), else distributed
-       (groupBy histogram -> single-partition numpy fold).
-    3. ONE cogroup numpy kernel per scaffold range (round-10) computes
-       each row's cumulative bucket vector and turns its target ranks
-       (floor/ceil of p*(m-1) per requested p) into (bucket,
-       residual-rank) queries. It works in key-tie GROUP space
-       through _pctl_group_traversal (explicit null-flag sort — null
-       keys distinct from genuine infinities; chunked bincount
-       histograms — O(chunk x V + rows) memory however tied the
-       sortBy). The SQL form it replaced (V x nv cumulative window
-       sums + an Arrow router) ran past codegen's field budget and
-       janino's method cap into interpreted eval and lost 96 vs 81 s
-       at 10M rows (SCALE.md round-10), so it was deleted.
-    4. A merge-sort-tree applyInPandas kernel per (value-bucket,
-       g-chunk) group selects the residual rank among that bucket's
-       elements with g <= query g. Elements replicate only to LATER
-       g-chunks (~S/2 copies), so a query-heavy quantile bucket
-       splits across S tasks instead of funneling the whole query
-       stream through one; per-task work is
+       offsets (_pctl_offsets).
+    3. ONE cogroup numpy kernel per scaffold range (round-10,
+       _pctl_route) computes each row's cumulative bucket vector and
+       turns its target ranks into (bucket, residual-rank) queries. It
+       works in key-tie GROUP space through _pctl_group_traversal
+       (explicit null-flag sort — null keys distinct from genuine
+       infinities; chunked bincount histograms — O(chunk x V + rows)
+       memory however tied the sortBy). The SQL form it replaced (V x
+       nv cumulative window sums + an Arrow router) ran past codegen's
+       field budget and janino's method cap into interpreted eval and
+       lost 96 vs 81 s at 10M rows (SCALE.md round-10), so it was
+       deleted.
+    4. A merge-sort-tree applyInPandas kernel (_pctl_select) per
+       (value-bucket, g-chunk) group selects the residual rank among
+       that bucket's elements with g <= query g. Elements replicate
+       only to LATER g-chunks (~S/2 copies), so a query-heavy quantile
+       bucket splits across S tasks instead of funneling the whole
+       query stream through one; per-task work is
        O((n/V + q/S) log^2(n/V)).
     5. Results join back by the unique global row number and
-       interpolate lo/hi in-expression.
+       interpolate lo/hi in-expression (_pctl_assemble).
 
     ALL pctl_run/pctl_rrun outputs of the $setWindowFields resolve in
-    THIS ONE pass (`specs` = [{out, ps, scalar, mode, argkey}, ...]);
-    outputs that share an input expression and frame mode share
-    buckets, histogram counts, and kernel elements. mode="rows" is
-    the documents frame (prefix by document order); mode="range" is
+    THIS ONE pass (`specs` = [{out, ps, scalar, mode, dir, argkey,
+    ...}, ...]); outputs that share an input expression and frame mode
+    share buckets, histogram counts, and kernel elements. mode="rows"
+    is the documents frame (prefix by document order); mode="range" is
     the running VALUE-RANGE frame — same machinery with cumulative
     counts taken at the end of each key-tie group and the last tie's
     g as the query row number, so ties by sort value enter each
@@ -2317,59 +2553,17 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
     exactly once, in the final join.
 
     `approx` (spark.maggma.windowPctl.method=approximate) swaps steps
-    3-5 for _global_running_pctl_approx_kernel's in-bucket
-    interpolation.
+    3-5 for _global_running_pctl_approx's in-bucket interpolation.
 
     Nulls contribute nothing (Mongo/DuckDB quantile semantics); rows
     with an empty non-null prefix emit null. Ties in the sort key
     follow the scaffold's deterministic rn, like every documents
     frame (DEVIATIONS §16)."""
-    import pandas as pd
-
-    spark = df.sparkSession
-    V = _pctl_bucket_count(total_rows, approx, int(spark.conf.get(
-        "spark.maggma.windowPctl.approxBuckets", "0")))
-    # query-chunk fan: elements replicate to ~S/2 later g-chunks so a
-    # query-heavy bucket splits across S tasks instead of funneling
-    # through one. S=1 was measured SLOWER at bench SF (round-10:
-    # V x S groups also set the selection stage's parallelism — 17
-    # groups left half the cores idle), so the constant stays
-    S = 4
-
-    # canonical value columns: outputs sharing an input expression
-    # AND a frame mode share buckets, histogram counts, and kernel
-    # elements
-    vidx: dict = {}
-    srcs: list = []
-    vmode: list = []
-    vdir: list = []
-    vsketch: list = []
-    vvbs: list = []       # round-12: probe-derived splits (or None)
-    vhist: list = []      # round-12: per-range bucket counts (or None)
-    vbcol: list = []      # round-12: precomputed bucket-index column
-    for sp in specs:
-        vi = vidx.setdefault(sp["argkey"], len(srcs))
-        if vi == len(srcs):
-            srcs.append(f"__gw_v_{sp['out']}")
-            vmode.append(sp["mode"])
-            vdir.append(sp["dir"])
-            vsketch.append(sp.get("sketch"))
-            vvbs.append(sp.get("vbs"))
-            vhist.append(sp.get("histcounts"))
-            vbcol.append(sp.get("bcol"))
-        sp["vi"] = vi
+    inputs = _pctl_inputs(specs, V)
     if approx:
-        # Mongo's window $median/$percentile only OFFER
-        # method:"approximate"; the engine conf licenses the
-        # in-bucket interpolation kernel
-        return _global_running_pctl_approx_kernel(
-            df, total_rows, specs, srcs, vmode, vdir, vsketch, V)
-    nv = len(srcs)
-    any_range = "range" in vmode
-    # all-or-nothing: the caller attaches probe-derived splits and
-    # boundary-aggregate histograms to every spec or to none
-    pre_offsets = all(h is not None for h in vhist) and nv > 0
-
+        return _global_running_pctl_approx(df, total_rows, specs, inputs)
+    nv = len(inputs)
+    any_range = any(inp["mode"] == "range" for inp in inputs)
     slim = df.select(
         "__gw_pid",
         (F.col("__gw_rn") + F.col("__gw_off_rows")).cast("long")
@@ -2377,13 +2571,13 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
         *([F.col("__gw_ax").alias("__pq_ax"),
            F.col("__gw_ax").isNull().alias("__pq_axn")]
           if any_range else []),
-        *[F.col(src).cast("double").alias(f"__pq_v{vi}")
-          for vi, src in enumerate(srcs)],
+        *[F.col(inp["src"]).cast("double").alias(f"__pq_v{vi}")
+          for vi, inp in enumerate(inputs)],
         # precomputed bucket indices (round-12 probe path) ride the
         # slim checkpoint so the ladder is evaluated once per row
         # total, not once per consumer
-        *[F.col(vbcol[vi]).alias(f"__pq_b{vi}")
-          for vi in range(nv) if vbcol[vi] is not None]) \
+        *[F.col(inp["bcol"]).alias(f"__pq_b{vi}")
+          for vi, inp in enumerate(inputs) if inp["bcol"] is not None]) \
         .localCheckpoint(eager=False)
     # ^ lineage truncation for the histogram/router/element branches:
     # measured round-9 against skipping it when the caller already
@@ -2397,173 +2591,19 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
     # building them per-term through the Column API cost ~27k py4j
     # roundtrips = 14 s of driver time for a two-output spec at V=32
     # (SCALE.md round-8).
-
-    # bucket boundaries: probe-derived splits when the caller ran the
-    # round-12 combined probe (spec["vbs"]), else thinned from the
-    # boundary aggregate's piggybacked 63-quantile sketch — either
-    # way balance is approximate, the histogram offsets stay exact
-    nb: list = []
     slb = slim
-    for vi in range(nv):
-        if vvbs[vi] is not None:
-            vbs = list(vvbs[vi])
-        else:
-            vbs = _equi_depth_splits(vsketch[vi], V)
-        nb.append(len(vbs) + 1)
-        if vbcol[vi] is not None:
-            continue  # __pq_b{vi} already rides the slim projection
-        slb = slb.withColumn(f"__pq_b{vi}",
-                             _bucket_index(f"__pq_v{vi}", vbs))
-
-    # per-range CUMULATIVE prefix offsets: cumulative across BOTH the
-    # range axis (fwd accumulates EARLIER pids, bwd LATER pids) and
-    # the bucket axis. Prior/later pids hold strictly smaller/larger
-    # keys (the scaffold's range partitioner co-locates ties), so the
-    # offsets stitch every mode.
-    if pre_offsets:
-        odf = _local_offsets(spark, vhist, nb, vdir, guard=True)
-    else:
-        odf = F.broadcast(_folded_offsets(slb, nb, vdir, guard=True))
-
-    plist = [(si, sp["vi"], pi, float(pv))
-             for si, sp in enumerate(specs)
-             for pi, pv in enumerate(sp["ps"])]
-    T1 = total_rows + 1
-    qschema = ("vi int, b int, c int, g long, rank long, qid long, "
-               "si int, pi int, side int, m long")
-    nbl2, vdl2, vml2 = list(nb), list(vdir), list(vmode)
-    # chunk size captured at PLAN time (driver) so tests can shrink it
-    # and force multi-chunk traversals on small frames — read inside
-    # the kernel it would resolve against the WORKER's unpatched module
-    CH2 = _PCTL_KERNEL_CHUNK_GROUPS
-    q_empty = pd.DataFrame({
-        "vi": pd.Series(dtype="int32"),
-        "b": pd.Series(dtype="int32"),
-        "c": pd.Series(dtype="int32"),
-        "g": pd.Series(dtype="int64"),
-        "rank": pd.Series(dtype="int64"),
-        "qid": pd.Series(dtype="int64"),
-        "si": pd.Series(dtype="int32"),
-        "pi": pd.Series(dtype="int32"),
-        "side": pd.Series(dtype="int32"),
-        "m": pd.Series(dtype="int64")})
+    for vi, inp in enumerate(inputs):
+        if inp["bcol"] is None:
+            slb = slb.withColumn(f"__pq_b{vi}",
+                                 _bucket_index(f"__pq_v{vi}", inp["splits"]))
+    odf = _pctl_offsets(slb, inputs, exact=True)
+    T1, S = total_rows + 1, _PCTL_QUERY_CHUNKS
+    kin = _pctl_kernel_view(inputs)
+    # chunk size captured at PLAN time (see _global_running_pctl_approx)
+    CH = _PCTL_KERNEL_CHUNK_GROUPS
 
     def route_kernel(left, right):
-        # per range: cumulative bucket vectors in key-tie group space,
-        # then three numpy primitives per (p, side) — cums is
-        # NONDECREASING along the bucket axis, so bucket =
-        # (cums < q).sum(axis=1) and prior = cums[bucket-1] —
-        # O(groups x V) in C, emitting only the surviving queries
-        # (m > 0, hi != lo dedup)
-        import numpy as np
-
-        n_rows = len(left)
-        if not n_rows:
-            return q_empty
-        g = left["__pq_g"].to_numpy(dtype="int64")
-        ax = (pd.to_numeric(left["__pq_ax"], errors="coerce")
-              .to_numpy(dtype="float64")
-              if "range" in vml2 else None)
-        axn = (left["__pq_axn"].to_numpy(dtype=bool)
-               if "range" in vml2 else None)
-        out = []
-        for vi in range(len(nbl2)):
-            nbv = nbl2[vi]
-            j = pd.to_numeric(left[f"__pq_b{vi}"],
-                              errors="coerce") \
-                .to_numpy(dtype="float64")
-            order, gid, starts = _pctl_group_traversal(
-                g, ax, vml2[vi], vdl2[vi], axn)
-            js = j[order]
-            gs = g[order]
-            G = len(starts)
-            off = (np.asarray(right[f"__pq_off{vi}"].iloc[0],
-                              dtype=np.int64)
-                   if len(right) else
-                   np.zeros(nbv, dtype=np.int64))
-            valid = ~np.isnan(js)
-            jsi = np.where(valid, js, 0).astype(np.int64)
-            myps = [(si, pi, pv) for si, pvi, pi, pv in plist
-                    if pvi == vi]
-            base = np.zeros(nbv, dtype=np.int64)
-            for g0 in range(0, G, CH2):
-                g1 = min(g0 + CH2, G)
-                r0 = int(starts[g0])
-                r1 = int(starts[g1]) if g1 < G else n_rows
-                K = g1 - g0
-                sl_ = slice(r0, r1)
-                gl = gid[sl_] - g0
-                vm = valid[sl_]
-                H = np.bincount(gl[vm] * nbv + jsi[sl_][vm],
-                                minlength=K * nbv).reshape(K, nbv)
-                Cg = H.cumsum(axis=0) + base
-                base = Cg[-1].copy()
-                # frame runs to the END of each key-tie group;
-                # incoming offset is bucket-cumulative already
-                ce = Cg.cumsum(axis=1) + off
-                m_g = ce[:, -1]
-                # the comparison row number the selection kernel
-                # sees: g is increasing within every tie group,
-                # so max g over the frame = g at the tie end and
-                # min g over the mirrored frame = g at the tie
-                # start
-                ends = np.empty(K, dtype=np.int64)
-                ends[:-1] = starts[g0 + 1:g1] - 1
-                ends[-1] = r1 - 1
-                if vml2[vi] == "rows":
-                    gc_g = (gs[sl_] if vdl2[vi] == "fwd"
-                            else T1 - gs[sl_])
-                elif vdl2[vi] == "fwd":
-                    gc_g = gs[ends]
-                else:
-                    gc_g = T1 - gs[starts[g0:g1]]
-                c_g = ((gc_g - 1) * S // total_rows) \
-                    .astype("int32")
-                qid_rows = gs[sl_]
-                for si, pi, pv in myps:
-                    r = pv * (m_g - 1).astype("float64")
-                    lo = np.floor(r).astype("int64")
-                    hi = np.ceil(r).astype("int64")
-                    for side, qarr in ((0, lo + 1), (1, hi + 1)):
-                        gm = m_g > 0
-                        if side == 1:
-                            # hi only differs when p*(m-1) is
-                            # fractional — skipping the duplicate
-                            # halves query volume (the assembly
-                            # coalesces hi->lo)
-                            gm &= hi != lo
-                        if not gm.any():
-                            continue
-                        qv = qarr[gm]
-                        b = (ce[gm] < qv[:, None]).sum(
-                            axis=1).astype("int64")
-                        prior = np.where(
-                            b > 0,
-                            np.take_along_axis(
-                                ce[gm],
-                                np.maximum(b - 1, 0)[:, None],
-                                axis=1)[:, 0],
-                            0)
-                        # group-level results -> per-row queries
-                        bf = np.zeros(K, dtype=np.int64)
-                        bf[gm] = b
-                        rk = np.zeros(K, dtype=np.int64)
-                        rk[gm] = qv - prior
-                        rm = gm[gl]
-                        gi = gl[rm]
-                        out.append(pd.DataFrame({
-                            "vi": np.int32(vi),
-                            "b": bf[gi].astype("int32"),
-                            "c": c_g[gi],
-                            "g": gc_g[gi],
-                            "rank": rk[gi],
-                            "qid": qid_rows[rm],
-                            "si": np.int32(si),
-                            "pi": np.int32(pi),
-                            "side": np.int32(side),
-                            "m": m_g[gi]}))
-        return (pd.concat(out, ignore_index=True)
-                if out else q_empty)
+        return _pctl_route(left, right, kin, total_rows, CH)
 
     queries = (slb.select(
         "__gw_pid", "__pq_g",
@@ -2571,23 +2611,23 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
         *[f"__pq_b{vi}" for vi in range(nv)])
         .groupBy("__gw_pid")
         .cogroup(odf.groupBy("__gw_pid"))
-        .applyInPandas(route_kernel, qschema))
+        .applyInPandas(route_kernel, _pandas_schema(_PCTL_QUERY_FIELDS)))
     # ONE scan + inline() instead of an nv-branch union (round-12):
     # the union form re-scanned the slim blocks once per input and
     # doubled the plan's branch count; inline(array(named_struct...))
     # emits every input's (vi, b, eg, ev) element row from a single
     # pass. bwd inputs mirror the element row number — the kernel is
     # direction-blind, it only needs element g <= query g on a
-    # consistent axis. The chunk explode replays chunk_of's exact
+    # consistent axis. The chunk explode replays _pctl_route's exact
     # arithmetic ((eg-1)*S / total is a fractional SQL division under
-    # floor, identical to the Column form it replaced).
+    # floor).
     structs = ", ".join(
         f"named_struct('vi', {vi}, 'b', __pq_b{vi}, "
         + ("'eg', cast(__pq_g as bigint), "
-           if vdir[vi] == "fwd"
+           if inp["dir"] == "fwd"
            else f"'eg', cast({T1} - __pq_g as bigint), ")
         + f"'ev', __pq_v{vi})"
-        for vi in range(nv))
+        for vi, inp in enumerate(inputs))
     elems = (slb.select(F.expr(f"inline(array({structs}))"))
              .filter(F.col("ev").isNotNull())
              .select("vi", "b",
@@ -2596,78 +2636,10 @@ def _global_running_pctl(df: DataFrame, total_rows: int,
                             "as c"),
                      F.col("eg").alias("g"),
                      F.col("ev").alias("v")))
-
-    empty = pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                          "si": pd.Series(dtype="int32"),
-                          "pi": pd.Series(dtype="int32"),
-                          "side": pd.Series(dtype="int32"),
-                          "val": pd.Series(dtype="float64"),
-                          "m": pd.Series(dtype="int64")})
-
-    def kernel(el, qr):
-        # Vectorized offline prefix selection (merge-sort tree over
-        # the value order, batched wavelet-style descent): answer(q) =
-        # the rank-th smallest value among elements with g <= q.g.
-        # Each level stores, per node, the SORTED g's of its left
-        # half; a query's left-count is one searchsorted. Queries
-        # descend all levels in numpy batches — per-unique-node
-        # searchsorted at shallow levels (few nodes), gather+compare
-        # at deep levels (blocks <= 32 wide). O((n + q) log^2 n) in C,
-        # ~25x the throughput of the per-query Python Fenwick this
-        # replaced (SCALE.md round-8).
-        import numpy as np
-
-        if not len(qr):
-            return empty
-        vals = el["v"].to_numpy()
-        n = len(vals)
-        order = np.argsort(vals, kind="stable")
-        svals = vals[order]
-        g_by_value = el["g"].to_numpy()[order]
-        P = 1 << max(1, (n - 1).bit_length() if n > 1 else 1)
-        gpad = np.full(P, np.iinfo(np.int64).max)
-        gpad[:n] = g_by_value
-        L = P.bit_length() - 1
-        left_sorted = []
-        for lvl in range(L):
-            block = P >> lvl
-            lh = gpad.reshape(-1, block)[:, : block // 2]
-            left_sorted.append(np.sort(lh, axis=1))
-
-        qg = qr["g"].to_numpy()
-        rank = qr["rank"].to_numpy().astype(np.int64)
-        node = np.zeros(len(qr), dtype=np.int64)
-        for lvl in range(L):
-            ls = left_sorted[lvl]
-            half = ls.shape[1]
-            cnt = np.empty(len(qr), dtype=np.int64)
-            if half <= 32:
-                cnt[:] = (ls[node] <= qg[:, None]).sum(axis=1)
-            else:
-                srt = np.argsort(node, kind="stable")
-                uniq, starts = np.unique(node[srt], return_index=True)
-                bounds = np.append(starts[1:], len(qr))
-                for u, st, en in zip(uniq, starts, bounds):
-                    idx = srt[st:en]
-                    cnt[idx] = np.searchsorted(ls[u], qg[idx],
-                                               side="right")
-            goleft = rank <= cnt
-            node = node * 2 + np.where(goleft, 0, 1)
-            rank = np.where(goleft, rank, rank - cnt)
-        return pd.DataFrame({
-            "qid": qr["qid"].to_numpy().astype(np.int64),
-            "si": qr["si"].to_numpy().astype(np.int32),
-            "pi": qr["pi"].to_numpy().astype(np.int32),
-            "side": qr["side"].to_numpy().astype(np.int32),
-            "val": svals[np.minimum(node, n - 1)],
-            "m": qr["m"].to_numpy().astype(np.int64)})
-
     kout = (elems.groupby("vi", "b", "c")
             .cogroup(queries.groupby("vi", "b", "c"))
-            .applyInPandas(
-                kernel,
-                "qid long, si int, pi int, side int, val double, "
-                "m long"))
+            .applyInPandas(_pctl_select,
+                           _pandas_schema(_PCTL_ANSWER_FIELDS)))
     return _pctl_assemble(df, specs, kout, total_rows)
 
 
@@ -3054,9 +3026,8 @@ def _swf_probe(df: DataFrame, plans: dict, sort: dict, approx: bool):
         if approx:
             aggs += [F.min(v).alias(f"__lo_{o}"), F.max(v).alias(f"__hi_{o}")]
     row = df.agg(*aggs).first()
-    V = _pctl_bucket_count(row["__n"], approx, int(spark.conf.get(
-        "spark.maggma.windowPctl.approxBuckets", "0")))
-    return {"row": row, "ak_rep": ak_rep,
+    V = _pctl_bucket_count(row["__n"], approx, _approx_buckets(spark))
+    return {"row": row, "ak_rep": ak_rep, "V": V,
             "bs": thin_boundaries(
                 sorted({x for x in (row["__bs"] or []) if x is not None}),
                 row["__n"], n_tgt, _min_rows_per_range(spark)),
@@ -3816,9 +3787,12 @@ def _swf_global(df: DataFrame, plans: dict, sort: dict, approx: bool,
     pruns = {o: p for o, p in plans.items()
              if p["kind"] in ("pctl_run", "pctl_rrun")}
     if pruns:
+        total_rows = sum(r["__rows"] for r in parts)
+        V = (presketch["V"] if presketch is not None else
+             _pctl_bucket_count(total_rows, approx, _approx_buckets(spark)))
         ranged = _global_running_pctl(
-            ranged, sum(r["__rows"] for r in parts),
-            _swf_pctl_specs(pruns, parts, presketch, approx), approx=approx)
+            ranged, total_rows,
+            _swf_pctl_specs(pruns, parts, presketch, approx), V, approx)
     return ranged.drop(*[c for c in ranged.columns
                          if c.startswith("__gw_")])
 
@@ -4089,10 +4063,7 @@ def _partitioned_running_pctl_approx(
     windows, never Spark's unbounded-following frame."""
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    G = int(spark.conf.get(
-        "spark.maggma.windowPctl.approxBuckets", "0")) or 32
-    G = max(2, min(64, G))
+    G = max(2, min(64, _approx_buckets(df.sparkSession) or 32))
     pexpr = _value(df, partition_by)
     v = _value(df, p["arg"]).cast("double")
     tag = f"__pp_{out}"

@@ -72,6 +72,40 @@ def _free_blocks(df: DataFrame) -> None:
     df.unpersist()
 
 
+def _min_label_components(a, b):
+    """Connected components of the undirected edge list (a[i], b[i]):
+    returns (uniq, comp), the sorted distinct node keys and each one's
+    component minimum key.
+
+    Vectorized min-label propagation (round-11): the Python dict
+    union-find spent ~3-5 us per find() — ~1 s at 50k edges, half the
+    small-graph path's budget. factorize(sort=True) maps node keys to
+    VALUE-ORDERED dense codes, so the component-minimum CODE is the
+    component-minimum KEY; each pass propagates the smaller endpoint
+    label across every edge (np.minimum.at) then pointer-jumps to full
+    compression — all C loops, O(E) per pass, converging in
+    O(log diameter) passes."""
+    import numpy as np
+    import pandas as pd
+
+    codes, uniq = pd.factorize(np.concatenate([a, b]), sort=True)
+    uniq = np.asarray(uniq)
+    E = len(a)
+    ea = codes[:E].astype(np.int64)
+    eb = codes[E:].astype(np.int64)
+    label = np.arange(len(uniq), dtype=np.int64)
+    while True:
+        before = label.copy()
+        mn = np.minimum(label[ea], label[eb])
+        np.minimum.at(label, ea, mn)
+        np.minimum.at(label, eb, mn)
+        nxt = label[label]
+        while not np.array_equal(nxt, label):
+            label, nxt = nxt, nxt[nxt]
+        if np.array_equal(before, label):
+            return uniq, uniq[label]
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "key_a",
@@ -154,7 +188,6 @@ def connected_components(
             # gate above already bounded the row count).
             sample = adj.toPandas()
             adj.unpersist()
-            import numpy as np
             import pandas as pd
 
             node_t = adj.schema["__a"].dataType
@@ -164,35 +197,10 @@ def connected_components(
                                  StructField("comp", node_t, False)])
             if not len(sample):
                 return spark.createDataFrame([], schema)
-            # vectorized min-label propagation (round-11): the Python
-            # dict union-find spent ~3-5 us per find() — ~1 s at 50k
-            # edges, half the fast path's budget. factorize(sort=True)
-            # maps node keys to VALUE-ORDERED dense codes, so the
-            # component-minimum CODE is the component-minimum KEY;
-            # each pass propagates the smaller endpoint label across
-            # every edge (np.minimum.at) then pointer-jumps to full
-            # compression — all C loops, O(E) per pass, converging in
-            # O(log diameter) passes.
-            codes, uniq = pd.factorize(np.concatenate(
-                [sample["__a"].to_numpy(), sample["__b"].to_numpy()]),
-                sort=True)
-            uniq = np.asarray(uniq)
-            E = len(sample)
-            ea = codes[:E].astype(np.int64)
-            eb = codes[E:].astype(np.int64)
-            label = np.arange(len(uniq), dtype=np.int64)
-            while True:
-                before = label.copy()
-                mn = np.minimum(label[ea], label[eb])
-                np.minimum.at(label, ea, mn)
-                np.minimum.at(label, eb, mn)
-                nxt = label[label]
-                while not np.array_equal(nxt, label):
-                    label, nxt = nxt, nxt[nxt]
-                if np.array_equal(before, label):
-                    break
+            uniq, comp = _min_label_components(
+                sample["__a"].to_numpy(), sample["__b"].to_numpy())
             return spark.createDataFrame(pd.DataFrame(
-                {"node": uniq, "comp": uniq[label]}), schema)
+                {"node": uniq, "comp": comp}), schema)
         # over-cap: truncate lineage for the fixpoint by checkpointing
         # FROM THE CACHE the gate count just materialized (the
         # checkpoint job reads blocks, not the upstream), then drop the

@@ -6718,7 +6718,7 @@ def search_compound_bm25(spark, sf):
 )
 def search_fuzzy_text(spark, sf):
     """Round-8 $search text `fuzzy` option (functions/agg_pipeline.py
-    ::_compile_search::_fuzzy_tok — r7 verdict next #8): the
+    ::_tok_match — r7 verdict next #8): the
     misspelled query 'sprk shufle' with maxEdits 1 + prefixLength 1
     matches real tokens within one edit ('spark', 'shuffle'), scored
     with the SAME BM25 as exact text — tf counts fuzzy-matching

@@ -42,6 +42,8 @@ ROWS = [
     "embedding_pq_topk",
     "local_clustering_coefficients",
     "search_fuzzy_text",
+    "search_compound_bm25",
+    "search_meta_facets",
     "media_perceptual_neardup",
     "pagerank_mass_conservation",
     "semantic_dedup_planted",

@@ -1886,6 +1886,35 @@ def test_search_stage(spark):
             "query": "a b", "path": "text", "slop": 2}}}])
 
 
+def test_search_invalid_specs_fail_before_any_job(spark, jobs_of):
+    """An unsupported $search option raises while planning, before the
+    corpus-stats aggregate runs: zero Spark jobs for each spec (every
+    one holds a BM25 clause, so a late check would run the stats job
+    first)."""
+    import pytest as _pt
+
+    from maggma_spark.functions.agg_pipeline import compile_pipeline
+
+    df = spark.createDataFrame([(1, "spark shuffle", 10), (2, "cat", 20)],
+                               "doc_id int, text string, n int")
+    text = {"query": "spark", "path": "text"}
+    bad = [
+        {"text": dict(text, synonyms="words")},
+        {"phrase": {"query": "spark shuffle", "path": "text", "slop": 2}},
+        {"compound": {"must": [{"text": text}],
+                      "should": [{"autocomplete": {
+                          "query": "sp", "path": "text",
+                          "tokenOrder": "bogus"}}]}},
+        {"text": dict(text, score={"boost": {"path": "n"}})},
+    ]
+    for spec in bad:
+        def run(spec=spec):
+            with _pt.raises(ValueError):
+                compile_pipeline(df, [{"$search": spec}])
+        _, jobs = jobs_of(run)
+        assert jobs == [], (spec, jobs)
+
+
 def test_search_meta_facets_and_unwind_index(spark):
     """$searchMeta facet collector (string top-N by count desc / _id
     asc, number boundary buckets + default, operator prefilter, exact

@@ -492,3 +492,52 @@ def test_graph_lookup_one_driver_action_per_round(spark, monkeypatch):
     assert loop_calls == ["count"] * len(loop_calls), calls
     assert 2 <= len(loop_calls) <= 4, calls
     assert rows == {"a": ["b", "c"], "b": ["c"], "c": []}
+
+
+def _union_find_components(edges):
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def test_min_label_components_matches_union_find():
+    """The small-graph path's numpy min-label propagation, without a
+    session: equal to a Python union-find (root = component minimum)
+    on random graphs, and correct on the empty, self-loop-only and
+    string-key cases."""
+    import numpy as np
+
+    from maggma_spark.operators.graph import _min_label_components
+
+    def labels(edges, dtype):
+        a = np.asarray([e[0] for e in edges], dtype=dtype)
+        b = np.asarray([e[1] for e in edges], dtype=dtype)
+        uniq, comp = _min_label_components(a, b)
+        assert list(uniq) == sorted(uniq)
+        return dict(zip(uniq.tolist(), comp.tolist()))
+
+    rng = random.Random(11)
+    for trial in range(30):
+        n = rng.randrange(1, 60)
+        edges = [(rng.randrange(n), rng.randrange(n))
+                 for _ in range(rng.randrange(1, 2 * n + 2))]
+        assert labels(edges, np.int64) == _union_find_components(edges), \
+            trial
+    assert labels([], np.int64) == {}
+    assert labels([(3, 3), (1, 1)], np.int64) == {1: 1, 3: 3}
+    words = [("pear", "apple"), ("fig", "kiwi"), ("kiwi", "date"),
+             ("plum", "plum")]
+    assert labels(words, object) == {
+        "apple": "apple", "pear": "apple", "date": "date", "fig": "date",
+        "kiwi": "date", "plum": "plum"}
