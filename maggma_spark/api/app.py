@@ -30,18 +30,16 @@ def serve_query(store, operators: list[QueryOperator], request_params: dict,
     DataFrame chain, return a JSON-shaped response dict. This is what a
     FastAPI route delegates to.
 
-    `total_doc` is counted on a second driver thread while the page
-    collects, so the two Spark actions overlap instead of running one
-    after the other. The thread is a `pyspark.InheritableThread`: the
-    count's jobs carry the caller's job group and tags. A failure of
-    either action is raised after both have finished."""
+    `total_doc` is counted on a second driver thread, started before
+    the page frame is built, so the count (one job, `store.count`)
+    overlaps the whole page path: the read, the criteria, projection
+    and sort compiles, the operators' post_process and the collect.
+    The thread is a `pyspark.InheritableThread`: the count's jobs carry
+    the caller's job group and tags. A failure of the page is raised
+    after the count has finished; a failure of the count, after the
+    page."""
     fragments = [op.query(**request_params) for op in operators]
     params = merge_queries(fragments)
-    df = execute_store_params(store, params)
-    for op in operators:  # post-hoc DataFrame transforms before serving
-        df = op.post_process(df, params)
-    limit = params.get("limit") or max_rows
-    page = df.limit(min(limit, max_rows))
     total: dict = {}
 
     def count() -> None:
@@ -53,6 +51,11 @@ def serve_query(store, operators: list[QueryOperator], request_params: dict,
     counter = InheritableThread(target=count)
     counter.start()
     try:
+        df = execute_store_params(store, params)
+        for op in operators:  # post-hoc DataFrame transforms before serving
+            df = op.post_process(df, params)
+        limit = params.get("limit") or max_rows
+        page = df.limit(min(limit, max_rows))
         rows = [r.asDict(recursive=True) for r in page.collect()]
     finally:
         counter.join()

@@ -874,9 +874,11 @@ def _search_clause_plan(op: str, args: dict, plan: dict) -> dict:
     if extra:
         raise ValueError(
             f"$search {op} options {sorted(extra)} are not supported")
+    if op != "compound" and "path" not in args:
+        raise ValueError(f"$search {op} clause {args!r} has no path")
     c = {"op": op, "score": _search_score_plan(args.get("score"))}
     if op == "compound":
-        c["groups"] = {k: [_search_clause_plan(*_one_item(s), plan)
+        c["groups"] = {k: [_search_clause_plan(*_one_clause(k, s), plan)
                            for s in args.get(k, ())]
                        for k in _SEARCH_GROUPS}
         c["msm"] = args.get(
@@ -931,9 +933,13 @@ def _search_clause_plan(op: str, args: dict, plan: dict) -> dict:
     return c
 
 
-def _one_item(d: dict) -> tuple:
-    ((k, v),) = d.items()
-    return k, v
+def _one_clause(group: str, clause: dict) -> tuple:
+    if not isinstance(clause, dict) or len(clause) != 1:
+        raise ValueError(
+            f"$search compound {group} clause {clause!r} must hold "
+            "exactly one operator")
+    ((op, args),) = clause.items()
+    return op, args
 
 
 def _add_once(xs: list, x) -> None:

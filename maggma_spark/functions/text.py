@@ -116,18 +116,6 @@ def normalized_text(text: Column | str) -> Column:
     return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
-def char_shingles(text: Column | str, n: int = 5) -> Column:
-    """Array of overlapping character n-grams of the normalized text
-    (distinct). JVM-side: sequence + transform + substring."""
-    norm = normalized_text(text)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1))),
-            lambda i: norm.substr(i, F.lit(n)),
-        )
-    )
-
-
 def word_shingles(text: Column | str, n: int = 3) -> Column:
     """Array of word n-grams (distinct)."""
     toks = tokens(normalized_text(text))

@@ -66,17 +66,6 @@ def exact_dedup(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """k minhash values per doc: min over shingles of seed-perturbed
-    xxhash64. Pure JVM higher-order functions."""
-    return F.array(*[
-        F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i)))
-        )
-        for i in range(num_hashes)
-    ])
-
-
 def _minhash_batch_mapper(key_col: str, text_col: str, num_hashes: int,
                           bands: int, shingle_words: int):
     """Arrow-batched shingle->minhash->band kernel, fully vectorized.
@@ -453,32 +442,6 @@ def _ngram_jaccard_lsh_fallback(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash64(toks: Column) -> Column:
-    """64-bit SimHash of a token array: per-bit majority vote over
-    xxhash64(token). The token-hash array is computed once; each of the
-    64 bit tests is a static mask expression (JVM-side, codegen-able):
-    bit b is set iff more than half the token hashes have bit b set."""
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    n = F.size(toks)
-
-    def bit_set(h: Column, b: int) -> Column:
-        if b == 63:  # sign bit of a signed long
-            return h < 0
-        return h.bitwiseAND(F.lit(1 << b).cast("long")) != 0
-
-    def pred_for(b: int):
-        return lambda h: bit_set(h, b)
-
-    sig = F.lit(0).cast("long")
-    for b in range(64):
-        count = F.size(F.filter(hashes, pred_for(b)))
-        bit_val = F.lit(-(1 << 63) if b == 63 else (1 << b)).cast("long")
-        sig = sig.bitwiseOR(
-            F.when(count * 2 > n, bit_val).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
 
 
 def _simhash_batch_mapper(key_col: str, text_col: str):

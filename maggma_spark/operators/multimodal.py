@@ -61,15 +61,6 @@ def decode_image(payload: bytes) -> list[float]:
     return image_features(payload)
 
 
-def decode_audio(payload: bytes) -> list[float]:
-    """Default audio decoder-to-features: REAL stdlib `wave` decode
-    (8/16/32-bit PCM WAV) -> 8-dim amplitude/zero-crossing features.
-    Inject `decoder=` for other containers/codecs."""
-    from maggma_spark.operators.codecs import audio_features
-
-    return audio_features(payload)
-
-
 def deterministic_fake_decoder(payload: bytes) -> list[float]:
     """Deterministic stand-in 'decoder': derives an 8-dim feature from the
     byte content alone. Lets the full Spark plumbing run end-to-end in

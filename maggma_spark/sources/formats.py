@@ -101,6 +101,9 @@ class FormatStore(ParquetStore):
     def _save(self, writer, path: str) -> None:
         writer.options(**self.write_options).format(self.format).save(path)
 
+    def _writes_parquet(self) -> bool:
+        return self.format == "parquet"
+
     def _dataset_size_bytes(self) -> int:
         if "://" in self.path:
             return super()._dataset_size_bytes()

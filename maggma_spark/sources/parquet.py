@@ -34,6 +34,7 @@ from typing import Any, Optional, Sequence, Union
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from maggma_spark.operators.merge import (
     remove_matching,
@@ -55,6 +56,8 @@ _SCHEMA_CACHE_ENTRIES = 256
 # path -> (fingerprint, reader-side schema, ns-timestamp columns)
 _schema_cache: "OrderedDict[str, tuple]" = OrderedDict()
 _schema_lock = threading.Lock()
+# held while a miss infers (see _infer)
+_infer_lock = threading.Lock()
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -130,6 +133,10 @@ def _nanos_ts_cols(files: Sequence[tuple]) -> list[str]:
     return out
 
 
+def _fingerprint(spark: SparkSession, files: tuple) -> tuple:
+    return files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+
+
 def _cached_schema(path: str, fingerprint: tuple) -> Optional[tuple]:
     with _schema_lock:
         entry = _schema_cache.get(path)
@@ -183,27 +190,24 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     list are kept per path, keyed on a fingerprint of every file under
     the path (name, size, mtime) plus the session confs that change
     inference. Any write — this store, another instance, pyarrow, an
-    outside process — changes the listing, so the next read infers
-    again, once. Rows and DataFrames are never cached. A miss infers
-    with `mergeSchema`: Spark's default reads the first file's footer
-    only, so a column that another writer adds in a file sorting
-    later would be invisible, and the next `ParquetStore.update`
-    would rewrite the store without it. Merging still runs one job.
+    outside process — changes the listing, so the next read misses,
+    unless the write was this process's own `ParquetStore._rewrite`,
+    which records its files and schema as it writes (`_remember_write`).
+    Rows and DataFrames are never cached. A miss infers with
+    `mergeSchema`: Spark's default reads the first file's footer only,
+    so a column that another writer adds in a file sorting later would
+    be invisible, and the next `ParquetStore.update` would rewrite the
+    store without it. Merging still runs one job.
 
-    ns columns are read as int64 (`nanosAsLong`) then truncated to
-    microseconds — the same truncation DuckDB/Arrow apply when casting
-    ns->us."""
+    ns columns are read as int64 then truncated to microseconds — the
+    same truncation DuckDB/Arrow apply when casting ns->us."""
     files = _listing(spark, path)
-    fingerprint = None if files is None else (
-        files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    fingerprint = None if files is None else _fingerprint(spark, files)
     hit = None if fingerprint is None else _cached_schema(path, fingerprint)
-    schema, ns_cols = hit or (None, _nanos_ts_cols(files or ()))
-    if ns_cols:
-        spark.conf.set(_NANOS_AS_LONG, "true")
-    df = (spark.read.option("mergeSchema", "true") if schema is None
-          else spark.read.schema(schema)).parquet(path)
-    if hit is None and fingerprint is not None:
-        _remember_schema(path, fingerprint, df.schema, ns_cols)
+    if hit is None:
+        df, ns_cols = _infer(spark, path, files, fingerprint)
+    else:
+        df, ns_cols = spark.read.schema(hit[0]).parquet(path), hit[1]
     for c in ns_cols:
         # ns -> us MUST be exact INTEGER division: epoch nanoseconds
         # (~1.7e18) exceed double's 2^53 exact range, so a float
@@ -215,6 +219,70 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         df = df.withColumn(
             c, F.timestamp_micros(F.expr(f"{ident} div 1000")))
     return df
+
+
+def _infer(spark: SparkSession, path: str, files: Optional[tuple],
+           fingerprint: Optional[tuple]) -> tuple:
+    """A cache miss: (inferred DataFrame, ns columns). Misses run one at
+    a time, so threads that miss on the same listing together (the page
+    and count threads of a REST read) infer it once: a thread that
+    waited finds the schema the first one recorded.
+
+    ns columns need `nanosAsLong` while the footers are converted; the
+    conf is set for the inference only and then restored, because the
+    scan reads them through the inferred schema, where they are
+    already `long`."""
+    with _infer_lock:
+        hit = None if fingerprint is None else _cached_schema(path, fingerprint)
+        if hit is not None:
+            return spark.read.schema(hit[0]).parquet(path), hit[1]
+        ns_cols = _nanos_ts_cols(files or ())
+        prior = spark.conf.get(_NANOS_AS_LONG, None) if ns_cols else None
+        if ns_cols:
+            spark.conf.set(_NANOS_AS_LONG, "true")
+        try:
+            df = spark.read.option("mergeSchema", "true").parquet(path)
+        finally:
+            if ns_cols and prior is None:
+                spark.conf.unset(_NANOS_AS_LONG)
+            elif ns_cols:
+                spark.conf.set(_NANOS_AS_LONG, prior)
+        if fingerprint is not None:
+            _remember_schema(path, fingerprint, df.schema, ns_cols)
+        return df, ns_cols
+
+
+def _reader_schema(dt):
+    """The schema a parquet read of Spark-written files returns for a
+    frame written with `dt`: Spark stores the writer's schema in the
+    footer and reads it back with every field nullable, array elements
+    and map values included (`StructType.asNullable`)."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _reader_schema(f.dataType),
+                                       True, f.metadata) for f in dt])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_reader_schema(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_reader_schema(dt.keyType),
+                       _reader_schema(dt.valueType), True)
+    return dt
+
+
+def _remember_write(spark: SparkSession, path: str, staged: str,
+                   files: tuple, schema) -> None:
+    """Write-through: `files` is the listing of a complete Spark parquet
+    write of a frame with `schema` to `staged`, which was then renamed
+    to `path`. A rename keeps names (below the root), sizes and mtimes,
+    so the listing re-rooted at `path` is what the next read of `path`
+    lists; that read then takes `schema` without an inference job. Any
+    later write changes the listing, so an outside writer is still
+    seen. Spark never writes TIMESTAMP(NANOS), so there are no ns
+    columns."""
+    root, staged = path.rstrip("/"), staged.rstrip("/")
+    moved = tuple((root + f[len(staged):], size, mtime)
+                  for f, size, mtime in files)
+    _remember_schema(path, _fingerprint(spark, moved),
+                     _reader_schema(schema), [])
 
 
 def zorder_key(df: DataFrame, cols: Sequence[str], bits: int = 6) -> Column:
@@ -312,9 +380,20 @@ class ParquetStore(SparkStore):
             return
         staging = self.path.rstrip("/") + ".__staging"
         self._save(writer(df), staging)
+        # write-through: list the staged files before the swap (see
+        # _remember_write); a partitioned layout's read schema adds the
+        # partition columns, typed by inference from the directory names
+        files = (None if self.partition_by or not self._writes_parquet()
+                 else _listing(self.spark, staging))
         if os.path.exists(self.path):
             shutil.rmtree(self.path)
         os.replace(staging, self.path)
+        if files is not None:
+            _remember_write(self.spark, self.path, staging, files, df.schema)
+
+    def _writes_parquet(self) -> bool:
+        """Whether `_save` writes parquet, which `read_parquet` reads."""
+        return True
 
     def _save(self, writer, path: str) -> None:
         """Single funnel for physical writes — FormatStore overrides this

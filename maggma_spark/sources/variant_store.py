@@ -33,7 +33,7 @@ from typing import Any, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from maggma_spark.functions.criteria import compile_criteria
-from maggma_spark.store import SparkStore
+from maggma_spark.store import SparkStore, count_rows
 
 DOC = "__doc"
 _STRUCTURAL = ("$expr", "$jsonSchema", "$text", "$where")
@@ -155,7 +155,7 @@ class VariantJSONStore(SparkStore):
         df = self.df
         if criteria:
             df = df.filter(self._pred(criteria))
-        return df.count()
+        return count_rows(df)
 
     def distinct(self, field: str, criteria: Optional[dict] = None) -> list:
         rows = (

@@ -15,9 +15,10 @@ Scale notes (100 TB design):
   compose into one job. `query_docs` exposes the reference's
   Iterator[dict] surface via `toLocalIterator` (streams one partition at
   a time; does not OOM the driver).
-- `count` with no criteria reads parquet footer metadata only (Spark's
-  row-count fast path) — the analog of `estimated_document_count`
-  (reference:src/maggma/stores/mongolike.py:281-285).
+- `count` is one job with no exchange (`count_rows`); with no criteria
+  a parquet scan reads footer row counts only — the analog of
+  `estimated_document_count` (reference:src/maggma/stores/mongolike.py:
+  281-285).
 - `groupby` uses hash aggregation with map-side partial aggregation; the
   docs-list form (`collect_list(struct(*))`) is only for the faithful
   contract surface — analytical callers should aggregate columns instead.
@@ -32,7 +33,7 @@ import datetime as _dt
 from enum import IntEnum
 from typing import Any, Callable, Iterator, Optional, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType
 
 from maggma_spark.functions.criteria import (
@@ -63,6 +64,15 @@ def _sort_columns(sort: Optional[dict], tiebreak: Optional[list[str]] = None) ->
         if t not in seen:
             cols.append(F.col(t).asc())
     return cols
+
+
+def count_rows(df: DataFrame) -> int:
+    """Rows of `df` in one Spark job. `DataFrame.count` is an aggregate,
+    and under AQE that is two jobs: the partial counts' shuffle-map
+    stage, then the final count. Counting the rows of the empty
+    projection's physical plan needs no exchange, and a parquet scan
+    with no columns reads only row-group footers."""
+    return df.select()._jdf.queryExecution().toRdd().count()
 
 
 class SparkStore:
@@ -270,12 +280,12 @@ class SparkStore:
                     _re.search(r"\(\d+\) (?:Batch)?Scan\b", plan))}
 
     def count(self, criteria: Optional[dict] = None) -> int:
-        """reference:src/maggma/stores/mongolike.py:259-285 — the
-        no-criteria case is Spark's metadata-only count fast path."""
+        """reference:src/maggma/stores/mongolike.py:259-285 — one Spark
+        job (`count_rows`)."""
         df = self.df
         if criteria:
             df = df.filter(compile_criteria(criteria, schema=df.schema))
-        return df.count()
+        return count_rows(df)
 
     def distinct_df(self, field: str, criteria: Optional[dict] = None) -> DataFrame:
         """Distinct values as a one-column DataFrame; array fields
@@ -470,12 +480,6 @@ class SparkStore:
         raise NotImplementedError(
             f"{type(self).__name__} is an in-session view; only "
             "path/table-backed stores serialize to pipeline specs")
-
-    def as_view(self, spark: Optional[SparkSession] = None, name: Optional[str] = None) -> str:
-        """Register as a temp view for spark.sql access."""
-        vname = name or self.name
-        self.df.createOrReplaceTempView(vname)
-        return vname
 
     def __repr__(self) -> str:
         return f"{type(self).__name__}(name={self.name!r}, key={self.key!r})"

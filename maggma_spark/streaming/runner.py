@@ -116,9 +116,8 @@ def dedup_ingest_sink(
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         # upsert_into routes the survivor upsert through
-        # dedup_increment so it overlaps the signature append on a
-        # second scheduler thread (round-12) — the two writes touch
-        # disjoint paths and read only checkpointed frames
+        # dedup_increment, which runs it after the signature append
+        # and takes the store's micro-batch `_small_new` merge
         index.dedup_increment(
             batch_df, jaccard_threshold=jaccard_threshold,
             add_survivors=True, upsert_into=target_store)

@@ -52,9 +52,12 @@ ROWS = [
     "window_unit_range_trailing_day",
 ]
 
-# ids that differ between runs of one plan: expression ids (name#12L),
-# physical plan ids, and RDD ids (a localCheckpoint scans one)
-_VOLATILE_IDS = ((re.compile(r"#\d+"), "#N"),
+# ids that differ between runs of one plan: lambda variable names
+# (pyspark numbers them from a counter global to the JVM, so x_5 depends
+# on which rows ran before), expression ids (name#12L), physical plan
+# ids, and RDD ids (a localCheckpoint scans one)
+_VOLATILE_IDS = ((re.compile(r"(lambda \w+)_\d+#\d+"), r"\1_N"),
+                 (re.compile(r"#\d+"), "#N"),
                  (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
                  (re.compile(r"RDD\[\d+\]"), "RDD[N]"))
 

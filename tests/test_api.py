@@ -228,3 +228,55 @@ def test_serve_query_failures_surface_and_join(spark, store):
     with pytest.raises(Exception, match="page failed"):
         serve_query(slow, [FailingPage(["n"])], {"n_min": "3"})
     assert set(threading.enumerate()) <= alive
+
+
+@pytest.fixture
+def parquet_store(spark, tmp_path):
+    from maggma_spark.sources.parquet import ParquetStore
+
+    store = ParquetStore(spark, str(tmp_path / "served"), key="task_id")
+    store.update([{"task_id": f"t{i}", "n": i} for i in range(10)])
+    return store
+
+
+def test_serve_query_warm_read_runs_two_jobs(parquet_store, jobs_of):
+    """A warm REST read with criteria is the page's job plus the count's
+    one: `store.count` has no exchange, and the first read after the
+    store's own write needs no schema inference."""
+    ops = [NumericQuery(["n"]), SortQuery(), PaginationQuery()]
+    params = {"n_min": "3", "_sort_fields": "-n", "_limit": 2}
+    for _ in range(2):  # the first read after the write is warm too
+        resp, jobs = jobs_of(lambda: serve_query(parquet_store, ops, params))
+        assert resp == {"data": [{"task_id": "t9", "n": 9},
+                                 {"task_id": "t8", "n": 8}],
+                        "meta": {"total_doc": 7}}
+        assert len(jobs) == 2
+
+
+def test_store_count_runs_one_job(parquet_store, store, jobs_of):
+    for st, crit, want in ((parquet_store, {"n": {"$gte": 4}}, 6),
+                           (parquet_store, None, 10),
+                           (store, {"n": {"$lt": 3}}, 3)):
+        n, jobs = jobs_of(lambda: st.count(crit))
+        assert n == want and len(jobs) == 1
+
+
+def test_serve_query_page_build_failure_joins_count(spark, parquet_store):
+    """The count starts before the page frame is built, so a page that
+    fails while it is being built (an unknown sort field, a
+    post_process that raises) still joins the count thread."""
+    import threading
+
+    class RaisingPostProcess(NumericQuery):
+        def post_process(self, df, params):
+            raise KeyError("post_process failed")
+
+    alive = set(threading.enumerate())
+    with pytest.raises(Exception, match="nope"):
+        serve_query(parquet_store, [NumericQuery(["n"]), SortQuery()],
+                    {"n_min": "3", "_sort_fields": "nope"})
+    assert set(threading.enumerate()) <= alive
+    with pytest.raises(KeyError, match="post_process failed"):
+        serve_query(parquet_store, [RaisingPostProcess(["n"])],
+                    {"n_min": "3"})
+    assert set(threading.enumerate()) <= alive

@@ -47,3 +47,18 @@ def test_normalize_keeps_plan_content():
         normalize("hashpartitioning(k#1, 16)")
     assert normalize("(3) Window") != normalize("(4) Window")
     assert normalize("Output [2]: [a#1]") != normalize("Output [3]: [a#1]")
+
+
+def test_normalize_lambda_variables():
+    """pyspark numbers lambda variables from a JVM-wide counter, so the
+    same plan reads x_5 or x_1 depending on the rows captured before
+    it; both normalize to x_N. Parameter names still differ."""
+    normalize = _normalize()
+    later = ("filter(toks#12, lambdafunction(StartsWith(lambda x_5#1004, s), "
+             "lambda x_5#1004, false)), lambda acc_12#7")
+    first = ("filter(toks#3, lambdafunction(StartsWith(lambda x_1#98, s), "
+             "lambda x_1#98, false)), lambda acc_2#99")
+    assert normalize(later) == normalize(first) == (
+        "filter(toks#N, lambdafunction(StartsWith(lambda x_N, s), "
+        "lambda x_N, false)), lambda acc_N")
+    assert normalize("lambda x_1#2") != normalize("lambda y_1#2")

@@ -1,6 +1,7 @@
-"""Session-free tests of the $search planner (_search_plan): one case
-per operator, one per option error, and the corpus-stats requirements
-it registers in walk order."""
+"""Tests of the $search planner (_search_plan): one case per operator,
+one per option or clause-shape error, and the corpus-stats requirements
+it registers in walk order. All but the last are session-free; the last
+checks that a malformed clause fails before any Spark job."""
 
 from __future__ import annotations
 
@@ -104,7 +105,41 @@ def test_search_plan_compound_and_requirements():
                    "should": [{"autocomplete": {
                        "query": "a", "path": "t",
                        "tokenOrder": "bogus"}}]}}, "tokenOrder"),
+    ({"compound": {"should": [{"text": {"query": "a", "path": "t"},
+                               "exists": {"path": "t"}}]}},
+     "compound should clause .* exactly one operator"),
+    ({"compound": {"filter": [{}]}},
+     "compound filter clause \\{\\} must hold exactly one operator"),
+    ({"text": {"query": "a"}}, "text clause .* has no path"),
+    ({"phrase": {"query": "a b"}}, "phrase clause .* has no path"),
+    ({"compound": {"must": [{"range": {"gte": 1}}]}},
+     "range clause \\{'gte': 1\\} has no path"),
+    ({"compound": {"filter": [{"equals": {"value": 1}}]}},
+     "equals clause .* has no path"),
 ])
 def test_search_plan_errors(spec, match):
     with pytest.raises(ValueError, match=match):
         _search_plan(spec)
+
+
+
+@pytest.mark.parametrize("bad", [
+    {"text": {"query": "a", "path": "t"}, "exists": {"path": "t"}},
+    {"text": {"query": "a"}},
+    {"range": {"gte": 1}},
+])
+def test_search_malformed_clauses_fail_before_any_job(spark, jobs_of, bad):
+    """A malformed clause beside a BM25 clause is a planning error
+    naming the clause: compiling the stage runs no Spark job (a late
+    check would run the corpus-stats aggregate first)."""
+    from maggma_spark.functions.agg_pipeline import compile_pipeline
+
+    df = spark.createDataFrame([(1, "a b", 3)], "k long, t string, n long")
+    spec = {"compound": {"must": [{"text": {"query": "a", "path": "t"}}],
+                         "should": [bad]}}
+
+    def run():
+        with pytest.raises(ValueError, match="clause"):
+            compile_pipeline(df, [{"$search": spec}])
+    _, jobs = jobs_of(run)
+    assert jobs == []

@@ -661,16 +661,19 @@ def test_parquet_small_new_merge_matches_window_merge(spark, tmp_path):
 
 def test_parquet_schema_cache_unchanged_path_launches_no_job(
         spark, tmp_path, jobs_of):
-    """The first read of a path infers its schema (one job); a second
-    read of the unchanged path takes the cached schema and launches
-    none, for local paths and for URIs (Hadoop FileSystem listing)."""
+    """The first read of a path infers its schema (one job), unless the
+    store's own local write recorded it (write-through, no job); a
+    second read of the unchanged path takes the cached schema and
+    launches none, for local paths and for URIs (Hadoop FileSystem
+    listing). A URI write records nothing, so its next read infers."""
     from maggma_spark.sources.parquet import ParquetStore
 
-    for path in (str(tmp_path / "local"), "file://" + str(tmp_path / "uri")):
+    for path, first_jobs in ((str(tmp_path / "local"), 0),
+                             ("file://" + str(tmp_path / "uri"), 1)):
         store = ParquetStore(spark, path, key="k")
         store.update([{"k": 1, "a": 10}, {"k": 2, "a": 20}])
         first, jobs = jobs_of(lambda: store.df)
-        assert len(jobs) == 1, path
+        assert len(jobs) == first_jobs, path
         second, jobs = jobs_of(lambda: store.df)
         assert jobs == [], path
         assert second.schema == first.schema
@@ -678,15 +681,16 @@ def test_parquet_schema_cache_unchanged_path_launches_no_job(
         # a write through the URI path changes its Hadoop listing too
         store.update([{"k": 3, "b": "x"}])
         third, jobs = jobs_of(lambda: store.df)
-        assert len(jobs) == 1, path
+        assert len(jobs) == first_jobs, path
         assert "b" in third.columns and third.count() == 3
 
 
 def test_parquet_schema_cache_sees_every_writer(spark, tmp_path, jobs_of):
     """Every kind of write changes the file listing, so the first
-    store's next read infers the new schema and rows — exactly one
-    inference job — whoever wrote: a second store instance, pyarrow,
-    remove_docs, compact."""
+    store's next read sees the new schema and rows, whoever wrote: a
+    second store instance, pyarrow, remove_docs, compact. A write
+    through a ParquetStore of this process records its schema (no
+    job); any other writer costs exactly one inference job."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -697,9 +701,11 @@ def test_parquet_schema_cache_sees_every_writer(spark, tmp_path, jobs_of):
     store.update([{"k": i, "a": i * 10} for i in range(4)])
     store.df  # warm the cache
 
-    def next_read():
+    def next_read(n_jobs):
         df, jobs = jobs_of(lambda: store.df)
-        assert len(jobs) == 1
+        assert len(jobs) == n_jobs
+        assert df.schema == spark.read.option(
+            "mergeSchema", "true").parquet(path).schema
         rows = {r["k"]: r.asDict() for r in df.collect()}
         again, jobs = jobs_of(lambda: store.df)
         assert jobs == [] and again.schema == df.schema
@@ -707,7 +713,7 @@ def test_parquet_schema_cache_sees_every_writer(spark, tmp_path, jobs_of):
 
     # 1. a second store instance on the same path adds column b
     ParquetStore(spark, path, key="k").update([{"k": 9, "b": "nine"}])
-    cols, rows = next_read()
+    cols, rows = next_read(0)
     assert "b" in cols and rows[9]["b"] == "nine" and rows[0]["a"] == 0
 
     # 2. pyarrow adds a file with the known columns plus a new one, c.
@@ -718,20 +724,140 @@ def test_parquet_schema_cache_sees_every_writer(spark, tmp_path, jobs_of):
                              "b": pa.array([None], pa.string()),
                              "c": pa.array([2.5])}),
                    os.path.join(path, "0-extra.parquet"))
-    cols, rows = next_read()
+    cols, rows = next_read(1)
     assert cols == spark.read.parquet(path).columns
     assert rows[20]["c"] == 2.5 and rows[0]["c"] is None
     assert rows[0]["a"] == 0 and rows[9]["b"] == "nine"
 
     # 3. remove_docs through the first store
     store.remove_docs({"k": {"$in": [0, 20]}})
-    cols, rows = next_read()
+    cols, rows = next_read(0)
     assert set(rows) == {1, 2, 3, 9}
 
     # 4. compact rewrites the same rows into new files
     store.compact()
-    cols, after = next_read()
+    cols, after = next_read(0)
     assert after == rows
+
+
+def _fresh_schema(spark, path):
+    return spark.read.option("mergeSchema", "true").parquet(path).schema
+
+
+def test_write_through_schema_equals_fresh_inference(spark, tmp_path,
+                                                     jobs_of):
+    """The schema `_rewrite` records for its own write is the one a
+    fresh mergeSchema inference returns, so the first `store.df` after
+    update, remove_docs and compact runs no job — for flat, nested,
+    timestamp and ns-origin stores, and a parquet FormatStore."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (ArrayType, LongType, MapType,
+                                   StringType, StructField, StructType,
+                                   TimestampNTZType, TimestampType)
+
+    from maggma_spark.sources.formats import FormatStore
+    from maggma_spark.sources.parquet import ParquetStore
+
+    t0 = dt.datetime(2024, 1, 2, 3, 4, 5, 123456)
+    nested = StructType([
+        StructField("k", LongType(), False),
+        StructField("s", StructType([
+            StructField("x", LongType(), False),
+            StructField("tags", ArrayType(StringType(), False))])),
+        StructField("m", MapType(StringType(), LongType(), False)),
+        StructField("lu", TimestampType()),
+        StructField("ntz", TimestampNTZType())])
+    cases = {
+        "flat": lambda: [{"k": i, "a": i * 1.5, "b": f"v{i}"}
+                         for i in range(6)],
+        "nested": lambda: spark.createDataFrame(
+            [(i, (i, [f"t{i}"]), {"m": i}, t0, t0) for i in range(6)],
+            nested),
+    }
+    stores = {name: ParquetStore(spark, str(tmp_path / name), key="k")
+              for name in cases}
+    stores["format_parquet"] = FormatStore(
+        spark, str(tmp_path / "format_parquet"), format="parquet", key="k")
+    cases["format_parquet"] = cases["flat"]
+    # ns origin: a pyarrow timestamp[ns] file, rewritten by the store
+    ns_path = tmp_path / "ns_origin"
+    ns_path.mkdir()
+    pq.write_table(pa.table({
+        "k": pa.array(range(6), pa.int64()),
+        "ts": pa.array([1_700_000_000_123_456_789 + i for i in range(6)],
+                       pa.timestamp("ns"))}), str(ns_path / "part-0.parquet"))
+    stores["ns_origin"] = ParquetStore(spark, str(ns_path), key="k")
+    cases["ns_origin"] = lambda: [{"k": 9, "ts": t0}]
+
+    for name, store in stores.items():
+        for write in (lambda: store.update(cases[name]()),
+                      lambda: store.remove_docs({"k": {"$in": [1]}}),
+                      lambda: store.compact()):
+            write()
+            df, jobs = jobs_of(lambda: store.df)
+            assert jobs == [], name
+            assert df.schema == _fresh_schema(spark, store.path), name
+        assert sorted(r["k"] for r in store.df.collect()) == (
+            [0, 2, 3, 4, 5, 9] if name == "ns_origin" else [0, 2, 3, 4, 5])
+
+
+def test_write_through_records_nothing_it_cannot_know(spark, tmp_path,
+                                                      jobs_of):
+    """A partitioned store (dynamic and static rewrites), a URI path and
+    a non-parquet FormatStore record nothing: the partitioned and URI
+    reads infer once after each write and still read every row."""
+    from maggma_spark.sources import parquet as pqs
+    from maggma_spark.sources.formats import FormatStore
+    from maggma_spark.sources.parquet import ParquetStore
+
+    docs = [{"k": i, "p": i % 2, "a": i * 10} for i in range(6)]
+    part = ParquetStore(spark, str(tmp_path / "part"), key="k",
+                        partition_by=["p"])
+    uri = ParquetStore(spark, "file://" + str(tmp_path / "uri"), key="k")
+    for store in (part, uri):
+        for write, keys in ((lambda: store.update(docs), range(6)),
+                            (lambda: store.remove_docs({"k": 0}),
+                             range(1, 6))):
+            write()
+            df, jobs = jobs_of(lambda: store.df)
+            assert len(jobs) == 1, store.path
+            assert sorted(r["k"] for r in df.collect()) == list(keys)
+    js = FormatStore(spark, str(tmp_path / "js"), format="json", key="k")
+    js.update(docs)
+    assert js.path not in pqs._schema_cache
+    assert js.count() == 6
+
+
+def test_write_through_then_outside_writer_infers_once(spark, tmp_path,
+                                                       jobs_of):
+    """A pyarrow file written between the store's write and the next
+    read is seen, with one inference job; the REST read that meets the
+    miss (page and count threads both read the store) infers once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from maggma_spark.api.app import serve_query
+    from maggma_spark.api.query_ops import NumericQuery, SortQuery
+    from maggma_spark.sources.parquet import ParquetStore
+
+    path = str(tmp_path / "outside")
+    store = ParquetStore(spark, path, key="k")
+    store.update([{"k": i, "a": i} for i in range(5)])
+    pq.write_table(pa.table({"k": pa.array([7], pa.int64()),
+                             "a": pa.array([7], pa.int64())}),
+                   os.path.join(path, "z-outside.parquet"))
+    # a sorted page is one job over any number of files
+    ops, params = [NumericQuery(["a"]), SortQuery()], {"a_min": "3",
+                                                       "_sort_fields": "k"}
+    resp, jobs = jobs_of(lambda: serve_query(store, ops, params))
+    assert [d["k"] for d in resp["data"]] == [3, 4, 7]
+    assert resp["meta"]["total_doc"] == 3
+    assert len(jobs) == 3  # one inference, the page, the count
+    _, jobs = jobs_of(lambda: serve_query(store, ops, params))
+    assert len(jobs) == 2
 
 
 def test_parquet_store_keeps_column_from_later_sorting_file(spark, tmp_path):
@@ -758,6 +884,51 @@ def test_parquet_store_keeps_column_from_later_sorting_file(spark, tmp_path):
                .parquet(path).collect()}
     assert on_disk[7]["c"] == "seven" and on_disk[1]["a"] == 11
     assert set(on_disk) == {0, 1, 2, 7}
+
+
+def test_concurrent_misses_infer_once(spark, tmp_path, jobs_of):
+    """More reader threads than cores miss on one listing together
+    (a pyarrow file, so nothing was recorded): they run one inference
+    job between them and all read the same schema and rows."""
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import InheritableThread
+
+    from maggma_spark.sources.parquet import read_parquet
+
+    path = tmp_path / "stampede"
+    path.mkdir()
+    pq.write_table(pa.table({"k": pa.array(range(50), pa.int64()),
+                             "v": pa.array([f"v{i}" for i in range(50)])}),
+                   str(path / "part-0.parquet"))
+    out, errors = [], []
+
+    def read():
+        try:
+            out.append(read_parquet(spark, str(path)).schema)
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    def stampede():
+        threads = [InheritableThread(target=read) for _ in range(12)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+
+    _, jobs = jobs_of(stampede)
+    assert errors == [] and len(out) == 12
+    assert len(jobs) == 1
+    assert all(s == out[0] for s in out)
+    assert read_parquet(spark, str(path)).count() == 50
 
 
 def test_read_parquet_nanos_timestamps_exact(spark, tmp_path):
@@ -798,6 +969,41 @@ def test_read_parquet_int96_leaves_session_conf_unset(spark, tmp_path):
     assert isinstance(df.schema["ts"].dataType, TimestampType)
     assert df.count() == 3
     assert spark.conf.get(key, None) is None
+
+
+def test_read_parquet_ns_store_leaves_session_conf_unchanged(spark,
+                                                            tmp_path):
+    """nanosAsLong is set for a miss's inference only: whatever the
+    session held before (unset, "false") it holds after the read, and
+    the scan, which runs after the restore, still reads values past
+    2^53 ns exactly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from maggma_spark.sources.parquet import read_parquet
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = [2 ** 53 + 1_999, 2 ** 62 + 3_999, 5_000]
+    for prior in (None, "false"):
+        path = tmp_path / f"ns-{prior}"
+        path.mkdir()
+        pq.write_table(pa.table({"i": list(range(len(ns))),
+                                 "ts": pa.array(ns, pa.timestamp("ns"))}),
+                       str(path / "part-0.parquet"))
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+        try:
+            for _ in range(2):  # miss, then cache hit
+                df = read_parquet(spark, str(path))
+                assert spark.conf.get(key, None) == prior
+                got = {r["i"]: r["us"] for r in df.select(
+                    "i", F.unix_micros("ts").alias("us")).collect()}
+                assert got == {i: v // 1000 for i, v in enumerate(ns)}
+        finally:
+            spark.conf.unset(key)
 
 
 def test_schema_cache_bounded_and_consistent_under_threads():
